@@ -28,3 +28,20 @@ def graph(spark, sf_dir):
     g = PropertyGraph.from_tables(spark, sf_dir)
     # cache: many tests reuse the same small graph
     return PropertyGraph(vertices=g.vertices.cache(), edges=g.edges.cache())
+
+
+@pytest.fixture
+def shuffle_regime(monkeypatch):
+    """Force every superstep loop out of the broadcast regime: no broadcast
+    hints, and the edge side is laid out on its join key before the first
+    superstep."""
+    from torcdb_spark import analytics
+
+    monkeypatch.setattr(analytics, "_BCAST_ROWS", 0)
+
+
+def call_with_fixtures(fn, request):
+    """Call a test function with its fixtures resolved from ``request``."""
+    import inspect
+
+    fn(**{a: request.getfixturevalue(a) for a in inspect.signature(fn).parameters})

@@ -1,6 +1,7 @@
 """DataFrame-Pregel analytics tests on tiny graphs with known answers."""
 
 import pytest
+from conftest import call_with_fixtures
 
 from torcdb_spark.analytics import (
     bfs_distances,
@@ -578,3 +579,26 @@ def test_hits_integer_matches_python_replay_and_float_ranking(spark):
     )
     float_order = sorted(fa, key=lambda v: (-fa[v], v))
     assert int_order == float_order
+
+
+# The tests above of the loops that run on analytics._supersteps, run
+# again in the forced shuffle regime.
+SHUFFLE_PARITY = (
+    "test_connected_components",
+    "test_bfs_distances",
+    "test_pagerank_sums_to_n",
+    "test_pagerank_cycle_uniform",
+    "test_shortest_paths_relaxation",
+    "test_cc_doubling_matches_label_propagation",
+    "test_personalized_pagerank_properties",
+    "test_hits_matches_numpy_power_iteration",
+    "test_betweenness_matches_pure_python_brandes",
+    "test_betweenness_integer_grid_matches_pure_python",
+    "test_label_propagation_matches_pure_python",
+    "test_lpa_small_core_finisher_matches_distributed",
+)
+
+
+@pytest.mark.parametrize("name", SHUFFLE_PARITY)
+def test_shuffle_regime_parity(name, request, shuffle_regime):
+    call_with_fixtures(globals()[name], request)

@@ -10,9 +10,9 @@ REPO = Path(__file__).resolve().parents[1]
 
 
 def _inventory():
-    from torcdb_spark.queries import DRIVER_PRIORITY, oracle_sql, queries
+    from torcdb_spark.queries import oracle_sql, queries, staleness_head
 
-    return queries(), oracle_sql(), DRIVER_PRIORITY
+    return queries(), oracle_sql(), staleness_head(50)
 
 
 def test_readme_counts_match_inventory():
@@ -33,61 +33,16 @@ def test_readme_counts_match_inventory():
 
 
 def test_driver_gate_head_is_50_registered_oracled():
-    from torcdb_spark.queries import HEAD_ROWS_ONLY
-
     qs, oracles, head = _inventory()
     assert len(head) == 50, "driver gate head must pin exactly 50 slots"
-    assert len(set(head)) == 50, "duplicate names in DRIVER_PRIORITY"
+    assert len(set(head)) == 50, "duplicate names in the gate head"
     missing = [n for n in head if n not in qs]
-    assert not missing, f"DRIVER_PRIORITY names not registered: {missing}"
-    # Every head entry carries an exact oracle unless it is explicitly
-    # documented rows-only (HEAD_ROWS_ONLY — the driver still records a
-    # rows/schema row for those).
-    unoracled = [n for n in head if n not in oracles and n not in HEAD_ROWS_ONLY]
-    assert not unoracled, (
-        f"driver gate head entries without an exact oracle: {unoracled}"
-    )
-    stale = [n for n in HEAD_ROWS_ONLY if n in oracles or n not in head]
-    assert not stale, f"HEAD_ROWS_ONLY entries oracled or not in head: {stale}"
+    assert not missing, f"head names not registered: {missing}"
+    unoracled = [n for n in head if n not in oracles]
+    assert not unoracled, f"head entries without an exact oracle: {unoracled}"
     # queries()/oracle_sql() iteration order must actually lead with the head
     assert list(qs)[:50] == head
-    head_oracled = [n for n in head if n in oracles]
-    assert list(oracles)[: len(head_oracled)] == head_oracled
-
-
-def test_head_follows_staleness_policy():
-    """Round 9+ rotation policy: the head must be exactly the 50 declared
-    queries with the OLDEST driver signal (never-checked first) under the
-    committed CORRECTNESS_r{K}.json artifacts up to ROTATION_BASIS_ROUND —
-    so each round's head is a deterministic function of the recorded
-    driver history, and signal freshness is guaranteed to improve (a
-    checked query can't re-enter the head until everything staler has
-    had its turn)."""
-    import glob
-    import re as _re
-
-    from torcdb_spark.queries import (
-        DRIVER_PRIORITY,
-        ROTATION_BASIS_ROUND,
-        staleness_head,
-    )
-
-    assert DRIVER_PRIORITY == staleness_head(50), (
-        "DRIVER_PRIORITY diverges from the staleness ranking — re-run "
-        "staleness_head(50) and paste its result"
-    )
-    rounds = [
-        int(_re.search(r"r(\d+)", p).group(1))
-        for p in glob.glob(str(REPO / "CORRECTNESS_r*.json"))
-    ]
-    # The basis must track the newest committed driver record; `- 1`
-    # tolerates the in-flight round the driver appends AFTER the head was
-    # staged (its record lands in the same commit as the next session's
-    # starting tree), while still forcing a bump every round.
-    assert ROTATION_BASIS_ROUND >= max(rounds) - 1, (
-        "ROTATION_BASIS_ROUND is stale: bump it to the latest "
-        "CORRECTNESS_r{K}.json round and re-derive DRIVER_PRIORITY"
-    )
+    assert list(oracles)[:50] == head
 
 
 def test_every_query_name_unique_and_callable():

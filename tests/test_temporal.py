@@ -3,6 +3,8 @@ sequential Dijkstra-style replay, plus journey-validity properties."""
 
 import heapq
 
+import pytest
+from conftest import call_with_fixtures
 from pyspark.sql import functions as F
 
 from torcdb_spark.analytics import temporal_min_arrival
@@ -56,3 +58,11 @@ def test_temporal_vs_static_reachability(spark):
     reached = {r["id"] for r in temporal_min_arrival(df, seeds).collect()}
     static = {1, 2, 3, 4, 5, 6}  # ignoring time, 5 IS reachable
     assert reached == static - {5}
+
+
+@pytest.mark.parametrize(
+    "name",
+    ("test_temporal_arrival_matches_replay", "test_temporal_vs_static_reachability"),
+)
+def test_shuffle_regime_parity(name, request, shuffle_regime):
+    call_with_fixtures(globals()[name], request)

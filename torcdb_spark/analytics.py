@@ -6,17 +6,50 @@ the Spark way — iterative message-passing expressed as DataFrame joins, the
 same dataflow GraphX/Pregel runs, but staying in Spark SQL so Catalyst/AQE
 optimize each superstep and no RDD serialization is paid.
 
-Superstep = messages (vertices ⋈ edges) → aggregate by dst → update state.
-Each iteration ``localCheckpoint``s the state DataFrame: without it the
-lineage/plan doubles per iteration and the job dies at scale long before
-memory does (SURVEY §7.4, the #1 Spark-specific risk for iterative graph
-work). Edges are re-used across supersteps — persist() once; at cluster
-scale, bucket the edge table by src so the per-superstep join co-locates.
+Superstep = messages (state ⋈ edges) → combine by destination → update
+state. pagerank, personalized_pagerank, connected_components,
+bfs_distances, shortest_paths, label_propagation, hits,
+temporal_min_arrival and both phases of betweenness_sampled run on ONE
+kernel, ``_supersteps`` (the Pregelix shape: a superstep is one dataflow
+whose join plan follows a row count). A loop supplies only:
+
+- its edge frame, the column that frame is joined on, its initial state,
+  and a row count of that state it computed anyway (None if it counts
+  nothing);
+- ``step(i, state, edges, bc)``: superstep i's message, combine and update
+  expressions, wrapping every small join side in ``bc``;
+- optionally ``probe(state)`` → ``(rows, halt)``: ONE action over the
+  freshly checkpointed state, returning the new regime row count (None:
+  unchanged) and whether the loop has reached its fixpoint;
+- ``max_iter`` and its checkpoint cadence.
+
+The kernel owns the rest:
+
+- the regime: ``bc(df, rows=None)`` broadcasts ``df`` while the row count
+  (the latest probe's, or the one given) is at most ``_BCAST_ROWS``, so a
+  superstep probes the edge side map-side and never shuffles it; without
+  a count no hint is given and AQE plans the joins;
+- leaving the broadcast regime lays the edge side out ONCE on its join key
+  (``_relayout_edges``), so later supersteps shuffle only the state;
+- a LAZY localCheckpoint at the cadence: lineage stays bounded (without
+  it the plan doubles per superstep — SURVEY §7.4, the #1 Spark-specific
+  risk for iterative graph work), and the probe is the action that
+  materializes it, so a superstep costs ONE job; with no probe the blocks
+  materialize inside the next superstep's or the caller's job;
+- ``max_iter`` and the halt test (the probe's halt, or an empty state);
+- releasing a persisted edge frame on exit, first materializing the final
+  state against it when no probe already has (unless the caller keeps the
+  frame for a later phase).
+
+Below a ``local_threshold``, the decomposition operators finish in ONE
+task instead: ``_finish_local`` runs a sequential kernel (union-find,
+Tarjan, Kruskal, Luby, ...) over the edge rows inside a single
+mapInPandas, returning exactly what the distributed loop computes.
 """
 
 from __future__ import annotations
 
-import itertools
+import functools
 import os
 
 from pyspark.sql import DataFrame
@@ -36,10 +69,8 @@ def _relayout_edges(e: DataFrame, key: str) -> DataFrame:
     the same way can share one exchange"): persist the loop's edge side
     pre-partitioned on its join key, so EVERY superstep's state⋈edges
     reuses the persisted HashPartitioning and only the (small) state frame
-    shuffles per superstep — the edge side is exchange-free inside the
-    loop body. Called once, when a loop leaves (or starts outside) the
-    broadcast regime; in the broadcast regime the edge side never shuffles
-    at all and the up-front repartition would be pure cost."""
+    shuffles per superstep. In the broadcast regime the edge side never
+    shuffles at all and the up-front repartition would be pure cost."""
     out = e.repartition(F.col(key)).persist()
     e.unpersist()  # no-op when e was never persisted
     return out
@@ -52,37 +83,15 @@ def _checkpointed(df: DataFrame) -> DataFrame:
 def _ck_lazy(df: DataFrame) -> DataFrame:
     """LAZY localCheckpoint: the first action over the returned frame
     materializes (and persists) the checkpoint blocks as a side effect
-    of computing it. Pairing this with the superstep's convergence/count
-    probe fuses what was two blocking jobs per superstep — an eager
-    materialization pass plus a probe pass over the materialized blocks
-    — into ONE pass over the data. Lineage truncation and the persisted
-    blocks are identical to the eager form (same RDD, same storage
-    level); only the job cadence changes. On a cluster this halves the
-    full passes over superstep state (guide §1.2: remove passes first).
-    A lazy checkpoint with NO explicit probe materializes inside its
-    first consumer's job — correct, and cheaper still, whenever the
-    loop needs no datum from it on the driver."""
+    of computing it. Paired with a count or convergence probe, that is
+    ONE pass over the data where an eager checkpoint plus the probe would
+    be two blocking jobs; lineage truncation and the persisted blocks are
+    identical to the eager form."""
     return df.localCheckpoint(eager=False)
 
 
-def _ck_lazy_nostats(df: DataFrame) -> DataFrame:
-    """Lazy variant of ``_checkpointed_nostats``: the same stats barrier
-    (LogicalRDD rebuilt without the geometric sizeInBytes rewrite), with
-    materialization deferred to the caller's probe action."""
-    ck = df.localCheckpoint(eager=False)
-    try:
-        jdf = ck._jdf
-        spark = ck.sparkSession
-        new_jdf = spark._jsparkSession.internalCreateDataFrame(
-            jdf.queryExecution().toRdd(), jdf.schema(), False
-        )
-        return DataFrame(new_jdf, spark)
-    except Exception:  # pragma: no cover — internal API moved; degrade
-        return ck
-
-
-def _checkpointed_nostats(df: DataFrame) -> DataFrame:
-    """Eager localCheckpoint + STATS BARRIER for high-fan iterative loops.
+def _stats_barrier(df: DataFrame) -> DataFrame:
+    """Lazy localCheckpoint + STATS BARRIER for high-fan iterative loops.
 
     Spark 4's ``localCheckpoint`` propagates the original plan's
     estimated statistics into the resulting LogicalRDD
@@ -95,13 +104,13 @@ def _checkpointed_nostats(df: DataFrame) -> DataFrame:
     Borůvka round 3 took 104 s of pure stats arithmetic; jstack pinned
     Thread-3 in SizeInBytesOnlyStatsPlanVisitor → BigInteger).
 
-    The barrier rebuilds the DataFrame over the ALREADY-CHECKPOINTED
-    RDD without the stats rewrite, resetting sizeInBytes to the default.
-    Cost: compile-time auto-broadcast won't fire for these frames — fine
-    in the loops that use this, because AQE's runtime join selection
-    (enabled session-wide) decides from ACTUAL shuffle sizes, which the
-    stats default doesn't affect."""
-    ck = df.localCheckpoint(eager=True)
+    The barrier rebuilds the DataFrame over the checkpointed RDD without
+    the stats rewrite, resetting sizeInBytes to the default. Cost:
+    compile-time auto-broadcast won't fire for these frames — fine in the
+    loops that use this, because AQE's runtime join selection decides from
+    ACTUAL shuffle sizes, and the counted loops hint broadcasts
+    explicitly."""
+    ck = df.localCheckpoint(eager=False)
     try:
         jdf = ck._jdf
         spark = ck.sparkSession
@@ -111,6 +120,87 @@ def _checkpointed_nostats(df: DataFrame) -> DataFrame:
         return DataFrame(new_jdf, spark)
     except Exception:  # pragma: no cover — internal API moved; degrade
         return ck
+
+
+def _supersteps(edges: DataFrame, key: str, state: DataFrame,
+                rows: int | None, step, max_iter: int | None, probe=None,
+                every: int = 1, checkpoint=_ck_lazy, release: bool = True):
+    """Run one superstep loop under the contract in the module docstring
+    → (final state, whether the halt test fired, the edge frame it ran
+    on). ``max_iter=None`` runs until the halt test fires;
+    ``release=False`` leaves the edge frame persisted for a later phase."""
+    relaid = False
+
+    def bc(df: DataFrame, n: int | None = None) -> DataFrame:
+        n = rows if n is None else n
+        return df if n is None or n > _BCAST_ROWS else F.broadcast(df)
+
+    halted = rows == 0
+    i = 0
+    while not halted and (max_iter is None or i < max_iter):
+        if rows is not None and rows > _BCAST_ROWS and not relaid:
+            edges, relaid = _relayout_edges(edges, key), True
+        state = step(i, state, edges, bc)
+        i += 1
+        if i % every == 0 or i == max_iter:
+            state = checkpoint(state)
+            if probe is not None:
+                n, halted = probe(state)
+                rows = rows if n is None else n
+    if release and edges.is_cached:
+        if probe is None and i:
+            state.count()
+        edges.unpersist()
+    return state, halted, edges
+
+
+def _unchanged(state: DataFrame):
+    """Probe for updates that flag ``_changed``: halt once no row changed
+    (max over an empty frame is NULL, which halts too)."""
+    return None, not state.agg(F.max(F.col("_changed").cast("int"))).first()[0]
+
+
+def _finish_local(df: DataFrame, cols, kernel, schema: str) -> DataFrame:
+    """Single-task finisher: ``kernel`` gets every ``cols`` row of ``df``
+    as a list of tuples inside ONE mapInPandas task and returns the
+    result rows, typed by the DDL ``schema`` (``{id}`` stands for the type
+    of ``cols[0]``). Once a problem fits one task, log-many distributed
+    rounds of fixed job overhead cost more than the whole remainder; the
+    work runs inside an executor task."""
+    names = [f.split()[0] for f in schema.split(",")]
+
+    def run(batches):
+        import pandas as pd
+
+        rows = []
+        for b in batches:
+            rows.extend(zip(*(b[c].tolist() for c in cols)))
+        return iter([pd.DataFrame.from_records(list(kernel(rows)), columns=names)])
+
+    return df.select(*cols).repartition(1).mapInPandas(
+        run, schema.format(id=dict(df.dtypes)[cols[0]])
+    )
+
+
+def _vertices(e: DataFrame, a: str = "src", b: str = "dst") -> DataFrame:
+    """Distinct endpoint ids of an edge frame → (id)."""
+    return (
+        e.select(F.col(a).alias("id"))
+        .unionByName(e.select(F.col(b).alias("id")))
+        .dropDuplicates(["id"])
+    )
+
+
+def _symmetric(edges: DataFrame, src_col: str, dst_col: str, a: str = "a",
+               b: str = "b", loops: bool = True) -> DataFrame:
+    """Both orientations of every edge as distinct (a, b) rows;
+    ``loops=False`` drops self-loops."""
+    out = edges.select(F.col(src_col).alias(a), F.col(dst_col).alias(b)).unionByName(
+        edges.select(F.col(dst_col).alias(a), F.col(src_col).alias(b))
+    )
+    if not loops:
+        out = out.where(F.col(a) != F.col(b))
+    return out.dropDuplicates([a, b])
 
 
 def pagerank(
@@ -130,97 +220,79 @@ def pagerank(
     changes, so folding it into the checkpointed state removes two
     ``state ⋈ out_deg`` joins per superstep (contribution and dangling
     detection become narrow projections of cached state). Per superstep the
-    plan is then: edges ⋈ contribs (one shuffle) → sum by dst (one shuffle)
-    → left join back to state (one shuffle), plus a 1-row dangling
-    aggregate over the cached state broadcast into the update.
+    plan is then: edges ⋈ contribs → sum by dst → left join back to state,
+    plus a 1-row dangling aggregate over the cached state broadcast into
+    the update.
 
-    ``checkpoint_interval``: supersteps between eager localCheckpoints.
-    Every materialization is a full job barrier; chaining k supersteps
-    into one job amortizes that overhead (measured ~2× at interval 5 on
-    the full fixture edge graph) while lineage depth stays bounded at k.
-    The arithmetic is identical either way — only job cadence changes."""
+    ``checkpoint_interval``: supersteps between localCheckpoints. Chaining
+    k supersteps into one job amortizes the barrier (measured ~2× at
+    interval 5 on the full fixture edge graph) while lineage depth stays
+    bounded at k. The arithmetic is identical either way — only job
+    cadence changes."""
     # no persist: e is a narrow projection of its (columnar) source — a
     # re-scan per superstep is cheaper than building Spark's in-memory
     # cache, and at 100 TB caching the edge set is not an option anyway
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .dropDuplicates(["id"])
-    )
+    verts = _vertices(e)
     out_deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
-    # lazy checkpoint: the vertex count below is the materializing action
     state = _ck_lazy(
         verts.join(out_deg, verts["id"] == out_deg["src"], "left")
         .select("id", F.lit(1.0).alias("rank"), "out_deg")
     )
     n = state.count()
-    # |contrib| = |V| every superstep; below the same threshold the other
-    # iterative operators use, broadcast it (and the dst-keyed message
-    # sums) so each superstep probes the edge scan map-side instead of
-    # shuffling |E| rows — the n we already count decides once for the
-    # whole run. Above the threshold the ordinary shuffle path stands
-    # (AQE re-plans it), which is the only viable shape at 100 TB anyway —
-    # with the edge side pre-partitioned on the join key ONCE, so every
-    # superstep shuffles only the |V|-row contribution frame, never |E|
-    # (guide §2.4; VERDICT r13 #6).
-    small = n <= _BCAST_ROWS
-    if not small:
-        e = _relayout_edges(e, "src")
-    for i in range(num_iter):
-        contrib = state.where(F.col("out_deg").isNotNull()).select(
+    return _pagerank_supersteps(
+        e, state, n, F.lit(1.0), n, num_iter, damping, checkpoint_interval
+    )
+
+
+def _pagerank_supersteps(
+    e, state, n, reset, mass, num_iter, damping, checkpoint_interval
+) -> DataFrame:
+    """The superstep body ``pagerank`` and ``personalized_pagerank``
+    share: state (id, [reset columns,] rank, out_deg) over ``n`` vertices;
+    ``reset`` is the per-vertex reset vector (1 everywhere, or the source
+    indicator) and ``mass`` its total, which the teleport and the dangling
+    mass return to:
+
+        rank' = (1-d)·reset + d·(Σ in-contributions + reset·dangling/mass)
+    """
+
+    def step(i, state, e, bc):
+        contrib = bc(state.where(F.col("out_deg").isNotNull()).select(
             F.col("id").alias("csrc"), (F.col("rank") / F.col("out_deg")).alias("c")
-        )
-        if small:
-            contrib = F.broadcast(contrib)
-        msgs = (
+        ))
+        msgs = bc(
             e.join(contrib, e["src"] == contrib["csrc"])
             .groupBy("dst")
             .agg(F.sum("c").alias("msum"))
         )
-        if small:
-            msgs = F.broadcast(msgs)
-        # dangling vertices contribute their rank uniformly; a 1-row
-        # aggregate over the cached state, broadcast into the update plan —
-        # a driver-side .first() here would serialize an extra action per
+        # a 1-row aggregate over the cached state, broadcast into the
+        # update — collecting it with .first() would cost an action per
         # superstep
         dangling = F.broadcast(
             state.where(F.col("out_deg").isNull())
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dang"))
         )
-        state = (
+        rank = F.lit(1 - damping) * reset + F.lit(damping) * (
+            F.coalesce(F.col("msum"), F.lit(0.0)) + reset * F.col("dang") / mass
+        )
+        return (
             state.join(msgs, state["id"] == msgs["dst"], "left")
             .crossJoin(dangling)
-            .select(
-                "id",
-                (
-                    F.lit(1 - damping)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("msum"), F.lit(0.0)) + F.col("dang") / n)
-                ).alias("rank"),
-                "out_deg",
-            )
+            .select(*[rank.alias(c) if c == "rank" else c for c in state.columns])
         )
-        if (i + 1) % checkpoint_interval == 0 or i == num_iter - 1:
-            # lazy: lineage still truncates at the same cadence, but the
-            # materialization rides the next superstep's dangling-mass
-            # broadcast (or the final action) instead of a blocking
-            # per-interval driver job (r13)
-            state = _ck_lazy(state)
-    if not small:
-        # materialize the superstep chain while the relaid edge cache is
-        # alive, then release it — the caller's action would otherwise
-        # run every superstep against an unpersisted edge layout
-        state.count()
-        e.unpersist()
+
+    state, _, _ = _supersteps(
+        e, "src", state, n, step, num_iter, every=checkpoint_interval
+    )
     return state.select("id", "rank")
 
 
 def _cc_union_find(rows):
-    """Sequential union-find over (a, b) pairs with union-toward-the-
-    smaller-root, so every root IS the minimum id of its component —
-    exactly the fixpoint the distributed label flood / star contraction
-    converge to. Works for any totally ordered id type (longs, 16-byte
+    """Sequential union-find over (a, b) pairs → sorted (id, component)
+    rows, with union-toward-the-smaller-root, so every root IS the minimum
+    id of its component — exactly the fixpoint the distributed label
+    flood / star contraction converge to. Works for any totally ordered id type (longs, 16-byte
     binary ids: Python bytes compare unsigned-lexicographically, same as
     Spark's BinaryType ordering)."""
     parent: dict = {}
@@ -239,33 +311,7 @@ def _cc_union_find(rows):
             if rb < ra:
                 ra, rb = rb, ra
             parent[rb] = ra
-    return {v: find(v) for v in parent}
-
-
-def _cc_finish_local(und: DataFrame, a_col: str, b_col: str) -> DataFrame:
-    """Small-core finisher for the CC operators (the _kruskal_local /
-    _tarjan_local discipline): once the edge set fits one task, log-many
-    more distributed rounds of fixed job overhead cost more than the
-    whole remainder. One repartition(1) mapInPandas runs the union-find;
-    the (id, component) result is IDENTICAL to the distributed fixpoint
-    (min id per component) by construction."""
-    id_t = dict(und.dtypes)[a_col]
-
-    def _finish(batches):
-        import pandas as pd
-
-        rows = []
-        for b in batches:
-            rows.extend(zip(b[a_col].tolist(), b[b_col].tolist()))
-        comp = _cc_union_find(rows)
-        items = sorted(comp.items())
-        return iter([pd.DataFrame(
-            {"id": [k for k, _ in items], "component": [v for _, v in items]}
-        )])
-
-    return und.select(a_col, b_col).repartition(1).mapInPandas(
-        _finish, f"id {id_t}, component {id_t}"
-    )
+    return sorted((v, find(v)) for v in parent)
 
 
 def connected_components(
@@ -277,78 +323,47 @@ def connected_components(
 ) -> DataFrame:
     """Undirected connected components via iterative label propagation
     (small-label-wins) → (id, component). Converges in O(diameter)
-    supersteps; each superstep is one join+min-aggregate."""
-    und = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .unionByName(
-            edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b"))
-        )
-        .dropDuplicates(["a", "b"])
-        .persist()
-    )
+    supersteps; each superstep is one join+min-aggregate, and the
+    ``_changed`` flag the update computes anyway is the convergence
+    probe."""
+    und = _symmetric(edges, src_col, dst_col).persist()
     state = (
         und.select(F.col("a").alias("id"))
         .dropDuplicates(["id"])
         .withColumn("component", F.col("id"))
     )
-    # |state| = |V| on every superstep (labels change, membership doesn't),
-    # so one up-front count decides the join strategy for the whole run:
-    # below the threshold the label table broadcasts and each superstep is
-    # a map-side pass over the cached edge set — no edge shuffle at all.
-    # Components of a 100 TB graph exceed the threshold and take the
-    # ordinary shuffle path, re-planned by AQE, with the undirected edge
-    # set pre-partitioned on the join key once so each superstep shuffles
-    # only the |V|-row label frame (guide §2.4; VERDICT r13 #6).
-    small = state.count() <= _BCAST_ROWS
-    # Small-core finisher: |V| ≤ the broadcast bar makes the edge-count
-    # check worth taking (the count materializes the persisted ``und``
-    # the first superstep would have paid for anyway — no extra pass);
-    # under the threshold one union-find task replaces the whole flood,
-    # with the identical min-id-per-component result. |V| > the bar
-    # implies |und| ≥ |V| > it too, so the 100 TB path never pays the
-    # probe and runs the flood unchanged.
-    if small and und.count() <= local_threshold:
-        out = _checkpointed(_cc_finish_local(und, "a", "b"))
+    n = state.count()
+    # Small-core finisher: |V| ≤ the broadcast bar makes the edge count
+    # worth taking (it materializes the persisted ``und`` the first
+    # superstep would have paid for anyway); under the threshold one
+    # union-find task replaces the whole flood, with the identical
+    # min-id-per-component result.
+    if n <= _BCAST_ROWS and und.count() <= local_threshold:
+        out = _checkpointed(_finish_local(
+            und, ("a", "b"), _cc_union_find, "id {id}, component {id}",
+        ))
         und.unpersist()
         return out
-    if not small:
-        und = _relayout_edges(und, "a")
-    for _ in range(max_iter):
-        s = F.broadcast(state) if small else state
-        nbr_min = (
+
+    def step(i, state, und, bc):
+        s = bc(state.select("id", "component"))
+        nbr_min = bc(
             und.join(s, und["a"] == s["id"])
             .groupBy("b")
             .agg(F.min("component").alias("nbr_component"))
         )
-        if small:
-            nbr_min = F.broadcast(nbr_min)
-        # Fold convergence detection into the update itself: the join that
-        # produces the new component already sees the old one, so a
-        # ``changed`` flag costs nothing extra. The checkpoint is LAZY and
-        # the convergence probe below is its materializing action, so the
-        # superstep costs exactly one job (r13: previously an eager
-        # checkpoint job plus a separate probe over the blocks).
         new_comp = F.least(
             F.col("component"),
             F.coalesce(F.col("nbr_component"), F.col("component")),
         )
-        new_state = _ck_lazy(
-            state.join(nbr_min, state["id"] == nbr_min["b"], "left").select(
-                "id",
-                new_comp.alias("component"),
-                (new_comp != F.col("component")).alias("_changed"),
-            )
+        return state.join(nbr_min, state["id"] == nbr_min["b"], "left").select(
+            "id",
+            new_comp.alias("component"),
+            (new_comp != F.col("component")).alias("_changed"),
         )
-        state = new_state.select("id", "component")
-        # ONE job: materializes the lazy checkpoint and evaluates the
-        # convergence probe in the same pass (max over empty → NULL →
-        # break, matching the old empty-frame behavior)
-        if not new_state.agg(
-            F.max(F.col("_changed").cast("int")).alias("c")
-        ).first()["c"]:
-            break
-    und.unpersist()
-    return state
+
+    state, _, _ = _supersteps(und, "a", state, n, step, max_iter, _unchanged)
+    return state.select("id", "component")
 
 
 def bfs_distances(
@@ -364,11 +379,13 @@ def bfs_distances(
     required by callers that interpret the result as an exact eccentricity
     (ifub_diameter): a depth-capped BFS silently truncates distances on
     graphs wider than the cap. Termination is structural either way: the
-    frontier is anti-joined against visited, so it empties in ≤V supersteps."""
-    # One materialization of the 2-column edge projection: every depth
-    # re-joins against it, and without the persist each superstep re-scans
-    # (and re-decodes) the full edge parquet — at depth d that is d full
-    # scans of the largest table in the graph.
+    frontier is anti-joined against visited, so it empties in ≤V supersteps.
+
+    The superstep state is the frontier; its count is the probe, and the
+    visited set accumulates beside it, broadcast while ITS count is under
+    the bar."""
+    # every depth re-joins the 2-column edge projection: persist it once
+    # instead of re-scanning the largest table in the graph per depth
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).persist()
@@ -378,61 +395,34 @@ def bfs_distances(
             "distance", F.lit(0)
         )
     )
-    frontier = visited.select("id")
-    # Checkpointing gives exact frontier/visited counts for free each depth,
-    # so the expansion join and the visited anti-join get an explicit
-    # broadcast hint while the build side is genuinely small — a
-    # narrow-frontier BFS then never shuffles the edge table at all. Past
-    # the threshold (frontier a large graph fraction), fall back to shuffle
-    # joins and let AQE re-plan from runtime sizes.
-    broadcast_threshold = _BCAST_ROWS
-    n_frontier = n_visited = visited.count()
-    depth_iter = (
-        itertools.count(1) if max_depth is None else range(1, max_depth + 1)
-    )
-    relaid = False
-    for depth in depth_iter:
-        if n_frontier > broadcast_threshold and not relaid:
-            # leaving the broadcast regime: pre-partition the edge cache
-            # on the join key once so the remaining depths shuffle only
-            # the frontier (guide §2.4; VERDICT r13 #6)
-            e = _relayout_edges(e, "src")
-            relaid = True
-        f = (
-            F.broadcast(frontier)
-            if n_frontier <= broadcast_threshold
-            else frontier
-        )
+    n_visited = visited.count()
+    depth = 0
+
+    def step(i, frontier, e, bc):
+        f = bc(frontier.select("id"))
         nxt = (
             f.join(e, f["id"] == e["src"])
             .select(F.col("dst").alias("id"))
             .dropDuplicates(["id"])
         )
-        seen = visited.select("id")
-        if n_visited <= broadcast_threshold:
-            seen = F.broadcast(seen)
-        # lazy checkpoint: the frontier count is the materializing action
-        # — one job per depth instead of checkpoint + count (r13)
-        nxt = _ck_lazy(nxt.join(seen, "id", "left_anti"))
-        n_frontier = nxt.count()
-        if n_frontier == 0:
-            break
-        # visited is a union of already-checkpointed frontiers — no
-        # per-depth re-checkpoint: eagerly copying the whole visited set per
-        # depth is O(V·depth) churn. But the union fan-in is CONSOLIDATED
-        # every 8 depths (lazy — the next depth's frontier count
-        # materializes it): depth-unbounded callers (ifub_diameter,
-        # eccentricity) would otherwise anti-join against a linearly
-        # growing union plan, O(depth²) block scans total.
-        visited = visited.unionByName(nxt.withColumn("distance", F.lit(depth)))
-        if depth % 8 == 0:
-            visited = _ck_lazy(visited)
-        n_visited += n_frontier
-        frontier = nxt
-    # Every per-depth frontier is already an eager localCheckpoint, so the
-    # returned union plan no longer references the edge cache — safe to
-    # release here rather than leaking blocks into the caller's session.
-    e.unpersist()
+        seen = bc(visited.select("id"), n_visited)
+        return nxt.join(seen, "id", "left_anti").withColumn("distance", F.lit(i + 1))
+
+    def probe(frontier):
+        nonlocal visited, n_visited, depth
+        n = frontier.count()
+        depth += 1
+        if n:
+            # visited is a union of checkpointed frontiers, consolidated
+            # every 8 depths (lazily: the next probe materializes it) so
+            # unbounded callers do not anti-join a linearly growing union
+            visited = visited.unionByName(frontier)
+            if depth % 8 == 0:
+                visited = _ck_lazy(visited)
+            n_visited += n
+        return n, n == 0
+
+    _supersteps(e, "src", visited, n_visited, step, max_depth, probe)
     return visited
 
 
@@ -518,25 +508,23 @@ def shortest_paths(
     """Weighted single-source(-set) shortest paths → (id, dist): Pregel
     min-plus relaxation (the distributed Bellman-Ford). Each superstep is
     one edges⋈state join + a min-aggregate per destination + a min-merge
-    into the state; convergence is detected from a ``_changed`` flag
-    computed inside the merge (same one-heavy-job discipline as
-    connected_components). Non-negative weights REQUIRED (min-plus
+    into the state; the probe counts the state and reads the ``_changed``
+    flag the merge computes. Non-negative weights REQUIRED (min-plus
     relaxation with a bounded iteration count silently under-relaxes
     around negative cycles) — enforced with one filter-pushdown probe job
     before iterating. Converges in O(longest shortest path hops)
     supersteps."""
-    # Persist the weighted projection: unlike pagerank's 2-column case the
-    # weight is often a computed expression over wide source columns (e.g.
-    # a property-map lookup), so each superstep would otherwise re-scan the
-    # full edge source AND re-evaluate the extraction — the guard probe
-    # below doubles as the materialization job.
+    # Persist the weighted projection: the weight is often a computed
+    # expression over wide source columns (e.g. a property-map lookup),
+    # so each superstep would otherwise re-scan the full edge source AND
+    # re-evaluate the extraction — the guard probe below doubles as the
+    # materialization job.
     e = edges.select(
         F.col(src_col).alias("esrc"),
         F.col(dst_col).alias("edst"),
         F.col(weight_col).cast("double").alias("w"),
     ).persist()
-    # One cheap guard job: scans the (now cached) projection once; limit(1)
-    # stops at the first offender.
+    # limit(1) stops at the first offender
     bad = e.where(F.col("w") < 0).limit(1).collect()
     if bad:
         raise ValueError(
@@ -549,58 +537,36 @@ def shortest_paths(
         .dropDuplicates(["id"])
         .withColumn("dist", F.lit(0.0))
     )
-    # Same conditional-broadcast discipline as bfs_distances: while the
-    # reached set is small (seeded SSSP stays small for many supersteps),
-    # broadcasting the state keeps the relaxation join MAP-SIDE — the full
-    # edge set is never shuffled. Past the threshold, fall back to shuffle
-    # joins and let AQE re-plan. The state count is a cheap scan of the
-    # just-checkpointed blocks.
-    broadcast_threshold = _BCAST_ROWS
-    n_state = state.count()
-    relaid = False
-    for _ in range(max_iter):
-        if n_state > broadcast_threshold and not relaid:
-            # leaving the broadcast regime: pre-partition the edge cache
-            # on the join key once so the remaining relaxation rounds
-            # shuffle only the state frame (guide §2.4; VERDICT r13 #6)
-            e = _relayout_edges(e, "esrc")
-            relaid = True
-        s = F.broadcast(state) if n_state <= broadcast_threshold else state
+
+    def step(i, state, e, bc):
+        s = bc(state.select("id", "dist"))
         msgs = (
             s.join(e, s["id"] == e["esrc"])
             .groupBy(F.col("edst").alias("mid"))
             .agg(F.min(F.col("dist") + F.col("w")).alias("mdist"))
         )
         merged = state.join(msgs, state["id"] == msgs["mid"], "full_outer")
-        new_id = F.coalesce(F.col("id"), F.col("mid"))
-        new_dist = F.least(
-            F.coalesce(F.col("dist"), F.lit(float("inf"))),
-            F.coalesce(F.col("mdist"), F.lit(float("inf"))),
-        )
         improved = F.col("id").isNull() | (
             F.col("mdist").isNotNull() & (F.col("mdist") < F.col("dist"))
         )
-        new_state = _ck_lazy(
-            merged.select(
-                new_id.alias("id"),
-                new_dist.alias("dist"),
-                improved.alias("_changed"),
-            )
+        return merged.select(
+            F.coalesce(F.col("id"), F.col("mid")).alias("id"),
+            F.least(
+                F.coalesce(F.col("dist"), F.lit(float("inf"))),
+                F.coalesce(F.col("mdist"), F.lit(float("inf"))),
+            ).alias("dist"),
+            improved.alias("_changed"),
         )
-        state = new_state.select("id", "dist")
-        # ONE job per superstep (r13): the count + convergence probe is
-        # the lazy checkpoint's materializing action — previously eager
-        # checkpoint, count, and changed-probe were three blocking jobs
-        probe = new_state.agg(
+
+    def probe(state):
+        p = state.agg(
             F.count(F.lit(1)).alias("n"),
             F.max(F.col("_changed").cast("int")).alias("c"),
         ).first()
-        n_state = probe["n"]
-        if not probe["c"]:
-            break
-    # state is an eager localCheckpoint — it no longer references e's cache
-    e.unpersist()
-    return state
+        return p["n"], not p["c"]
+
+    state, _, _ = _supersteps(e, "esrc", state, state.count(), step, max_iter, probe)
+    return state.select("id", "dist")
 
 
 def k_core(
@@ -624,16 +590,7 @@ def k_core(
     Pregel loops."""
     if k < 1:
         raise ValueError(f"k_core requires k >= 1, got {k}")
-    und = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .unionByName(
-            edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b"))
-        )
-        .where(F.col("a") != F.col("b"))
-        .dropDuplicates(["a", "b"])
-    )
-    # lazy checkpoints throughout the peel loop: each round's count is
-    # the materializing action — one job per round instead of two (r13)
+    und = _symmetric(edges, src_col, dst_col, loops=False)
     live = _ck_lazy(und)
     n_edges = live.count()
     for _ in range(max_iter):
@@ -720,10 +677,7 @@ def shortest_path_pair(
                 "parent",
             )
         )
-        # ONE job per level (r13): frontier count + target-found probe
-        # fused into the lazy checkpoint's materializing action
-        # (previously: eager checkpoint + count + found-count + an eager
-        # re-checkpoint of the visited union = four jobs per level).
+        # frontier count + target-found probe in one job
         probe = nxt.agg(
             F.count(F.lit(1)).alias("n"),
             F.max((F.col("id") == bytes(dst_id)).cast("int")).alias("f"),
@@ -731,13 +685,8 @@ def shortest_path_pair(
         n_new = probe["n"]
         if n_new == 0:
             break
-        # visited is a union of already-checkpointed frontiers — no
-        # per-level re-checkpoint (same discipline as bfs_distances), but
-        # CONSOLIDATED every 8 levels: without the periodic cut, level L's
-        # anti-join re-reads all L prior frontier block-sets (O(L²) total
-        # block scans) and the union plan grows linearly — fine shallow,
-        # degrading on high-diameter graphs. The consolidation checkpoint
-        # is lazy: the next level's probe is its materializing action.
+        # visited: union of checkpointed frontiers, consolidated every 8
+        # levels (as in bfs_distances)
         visited = visited.unionByName(nxt)
         if dist % 8 == 0:
             visited = _ck_lazy(visited)
@@ -790,16 +739,7 @@ def connected_components_doubling(
     collision is the accepted trade for not materializing set-difference
     per round.
     """
-    e = (
-        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .unionByName(
-            edges.select(
-                F.col(dst_col).alias("u"), F.col(src_col).alias("v")
-            ).where(F.col("u") != F.col("v"))
-        )
-        .dropDuplicates(["u", "v"])
-    )
+    e = _symmetric(edges, src_col, dst_col, "u", "v", loops=False)
     all_vertices = e.select(F.col("u").alias("id")).dropDuplicates(["id"])
 
     def star(cur: DataFrame, large: bool) -> DataFrame:
@@ -837,18 +777,13 @@ def connected_components_doubling(
         ).first()
         return (r["n"], r["h"])
 
-    # lazy checkpoints: the checksum aggregate IS the materializing
-    # action, so each alternation round costs one job instead of an
-    # eager-checkpoint job plus the checksum job (r13)
     cur = _ck_lazy(e)
     prev_sig = checksum(cur)
-    # Small-core finisher (the _kruskal_local/_tarjan_local discipline):
-    # the initial checksum already carries |E|, so the decision is free.
-    # Under the threshold one union-find task replaces the whole
-    # alternation loop with the identical min-id-per-component result;
-    # a 100 TB edge set takes the star-contraction path unchanged.
+    # small-core finisher: the initial checksum already carries |E|
     if prev_sig[0] <= local_threshold:
-        return _cc_finish_local(cur, "u", "v")
+        return _finish_local(
+            cur, ("u", "v"), _cc_union_find, "id {id}, component {id}"
+        )
     for _ in range(max_rounds):
         cur = _ck_lazy(star(star(cur, large=True), large=False))
         sig = checksum(cur)
@@ -884,11 +819,10 @@ def personalized_pagerank(
     primitive (LDBC-style "people you may know" ranks FOF candidates by
     exactly this).
 
-    Same superstep shape and checkpoint cadence as ``pagerank``; the only
-    structural difference is the reset term: a broadcast membership flag
-    (semi-join-derived 0/1 column folded into the state) replaces the
-    uniform 1/N. Dangling mass also returns to the sources — rank stays
-    conserved at |S| total so disconnected vertices converge to exactly 0.
+    ``pagerank``'s superstep body with the source indicator (a 0/1 column
+    folded into the state) as the reset vector. Dangling mass also returns
+    to the sources — rank stays conserved at |S| total so disconnected
+    vertices converge to exactly 0.
 
     ``prune_unreachable`` (default True) first restricts the graph to the
     ``num_iter``-hop OUT-reachable set of the sources — EXACT, because
@@ -902,10 +836,6 @@ def personalized_pagerank(
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     id_pre = "id" if "id" in sources.columns else sources.columns[0]
     if prune_unreachable:
-        # lineage here is at most num_iter joins deep and each frontier is
-        # a narrow id set — persist (lazy, reused twice) beats the eager
-        # localCheckpoint job barrier that dominates wall time in the main
-        # loop's long-lived state
         # One LAZY plan for the whole k-hop reachability: num_iter chained
         # frontier-hop joins unioned and distinct-ed, materialized by a
         # single checkpoint job. No per-hop driver probes — in local mode
@@ -929,16 +859,14 @@ def personalized_pagerank(
                 .persist()
             )
             levels.append(frontier)
-        reach = levels[0]
-        for lvl in levels[1:]:
-            reach = reach.unionByName(lvl)
-        reach = _checkpointed(reach.dropDuplicates(["id"]))
+        reach = _checkpointed(
+            functools.reduce(DataFrame.unionByName, levels).dropDuplicates(["id"])
+        )
         for lvl in levels[1:]:
             lvl.unpersist()
         # materialize the (small) pruned edge set ONCE — every superstep
-        # job would otherwise re-evaluate the semi-joins over the full
-        # edge table. Lazy: the seed-count probe below materializes it
-        # through the state build (r13).
+        # would otherwise re-evaluate the semi-joins over the full edge
+        # table. Lazy: the count below materializes it through the state.
         e = _ck_lazy(
             base.join(
                 F.broadcast(reach.withColumnRenamed("id", "src")),
@@ -948,13 +876,8 @@ def personalized_pagerank(
                 "dst", "left_semi",
             )
         )
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .dropDuplicates(["id"])
-    )
-    id_c = "id" if "id" in sources.columns else sources.columns[0]
-    src_ids = sources.select(F.col(id_c).alias("id")).dropDuplicates(["id"])
+    verts = _vertices(e)
+    src_ids = sources.select(F.col(id_pre).alias("id")).dropDuplicates(["id"])
     out_deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
     state = _ck_lazy(
         verts.join(out_deg, verts["id"] == out_deg["src"], "left")
@@ -969,48 +892,17 @@ def personalized_pagerank(
             "out_deg",
         )
     )
-    # one job: materializes state (and, through it, the lazy pruned edge
-    # checkpoint above) while computing the seed count (r13)
-    n_src = state.where(F.col("is_src") == 1).count()
+    # one job: the vertex and seed counts materialize the state (and,
+    # through it, the lazy pruned edge checkpoint above)
+    counts = state.agg(F.count(F.lit(1)), F.sum("is_src")).first()
     if prune_unreachable:
         base.unpersist()
-    if n_src == 0:
+    if not counts[1]:
         raise ValueError("personalized_pagerank requires a non-empty source set")
-    for i in range(num_iter):
-        contrib = state.where(F.col("out_deg").isNotNull()).select(
-            F.col("id").alias("csrc"),
-            (F.col("rank") / F.col("out_deg")).alias("c"),
-        )
-        msgs = (
-            e.join(contrib, e["src"] == contrib["csrc"])
-            .groupBy("dst")
-            .agg(F.sum("c").alias("msum"))
-        )
-        dangling = F.broadcast(
-            state.where(F.col("out_deg").isNull())
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dang"))
-        )
-        state = (
-            state.join(msgs, state["id"] == msgs["dst"], "left")
-            .crossJoin(dangling)
-            .select(
-                "id",
-                "is_src",
-                (
-                    F.col("is_src")
-                    * (F.lit(1 - damping) + F.lit(damping) * F.col("dang") / n_src)
-                    + F.lit(damping) * F.coalesce(F.col("msum"), F.lit(0.0))
-                ).alias("rank"),
-                "out_deg",
-            )
-        )
-        if (i + 1) % checkpoint_interval == 0 or i == num_iter - 1:
-            # lazy: lineage still truncates at the same cadence, but the
-            # materialization rides the next superstep's dangling-mass
-            # broadcast (or the final action) instead of a blocking
-            # per-interval driver job (r13)
-            state = _ck_lazy(state)
-    return state.select("id", "rank")
+    return _pagerank_supersteps(
+        e, state, counts[0], F.col("is_src"), counts[1], num_iter, damping,
+        checkpoint_interval,
+    )
 
 
 def hits(
@@ -1023,84 +915,58 @@ def hits(
 
     Power iteration on the unweighted adjacency: auth ← Aᵀ·hub,
     hub ← A·auth, each half-step followed by an L2 normalization so the
-    scores converge to the principal singular vectors of A. The
-    normalizer is a 1-row aggregate broadcast into the update — same
-    no-driver-roundtrip pattern as pagerank's dangling mass.
-
-    Each half-step's message merge is an eager localCheckpoint: the state
-    feeds THREE consumers per half (the norm aggregate, the next half's
-    message join, and the next half's state join), so without the barrier
-    every consumer re-derives the whole superstep chain and the plan cost
-    compounds ~4× per iteration (measured 27 s → 3 s at 3 iterations on
-    the 600k-edge fixture supply graph). State is |V| rows — the
-    checkpoints are cheap; the edge re-scan per half-step is the same
-    deliberate trade as pagerank.
+    scores converge to the principal singular vectors of A. Each half-step
+    is one superstep; the normalizer is a 1-row aggregate over the
+    checkpointed half, broadcast into the next half — the pattern of
+    pagerank's dangling mass, and the
+    broadcast is what materializes the lazy checkpoint. The state feeds
+    three consumers per half (the norm, the next message join and the next
+    state join), so the per-half checkpoint keeps each from re-deriving
+    the chain (measured 27 s → 3 s at 3 iterations on the 600k-edge
+    fixture supply graph). HITS counts nothing, so AQE plans its joins.
 
     Deterministic for a fixed iteration count (floating-point fixpoint →
     declared rows-only for the driver gate; pytest checks exact agreement
     with a dense numpy power iteration on a constructed graph)."""
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .dropDuplicates(["id"])
-    )
+    verts = _vertices(e)
     state = _ck_lazy(
         verts.select("id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth"))
     )
-    for _i in range(num_iter):
-        # auth half-step: sum of incoming hubs, then L2-normalize
-        a_msgs = (
-            e.join(
-                state.select(F.col("id").alias("_s"), "hub"),
-                e["src"] == F.col("_s"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("hub").alias("_a"))
+
+    def l2(state, col):
+        norm = F.broadcast(
+            state.agg(F.sqrt(F.sum(F.col(col) * F.col(col))).alias("_n"))
         )
-        # lazy: the L2-norm broadcast aggregate right below is the
-        # materializing action — one job per half-step instead of an
-        # eager checkpoint plus the norm job (r13)
-        half = _ck_lazy(
-            state.join(a_msgs, state["id"] == a_msgs["dst"], "left").select(
-                "id", "hub", F.coalesce(F.col("_a"), F.lit(0.0)).alias("auth")
-            )
+        scaled = F.when(F.col("_n") > 0, F.col(col) / F.col("_n")).otherwise(
+            F.lit(0.0)
         )
-        a_norm = F.broadcast(
-            half.agg(F.sqrt(F.sum(F.col("auth") * F.col("auth"))).alias("_an"))
+        return state.crossJoin(norm).select(
+            "id", *[scaled.alias(c) if c == col else c for c in ("hub", "auth")]
         )
-        state = half.crossJoin(a_norm).select(
-            "id",
-            "hub",
-            F.when(F.col("_an") > 0, F.col("auth") / F.col("_an"))
-            .otherwise(F.lit(0.0))
-            .alias("auth"),
+
+    def step(i, state, e, bc):
+        # even i: auth ← Aᵀ·hub; odd i: hub ← A·auth — each from the
+        # previous half's column, normalized first
+        new, old, key, out = (
+            ("auth", "hub", "src", "dst") if i % 2 == 0
+            else ("hub", "auth", "dst", "src")
         )
-        # hub half-step: sum of outgoing auths, then L2-normalize
-        h_msgs = (
-            e.join(
-                state.select(F.col("id").alias("_d"), "auth"),
-                e["dst"] == F.col("_d"),
-            )
-            .groupBy("src")
-            .agg(F.sum("auth").alias("_h"))
+        if i:
+            state = l2(state, old)
+        msgs = (
+            e.join(state.select(F.col("id").alias("_k"), old), e[key] == F.col("_k"))
+            .groupBy(out)
+            .agg(F.sum(old).alias("_m"))
         )
-        half2 = _ck_lazy(
-            state.join(h_msgs, state["id"] == h_msgs["src"], "left").select(
-                "id", F.coalesce(F.col("_h"), F.lit(0.0)).alias("hub"), "auth"
-            )
+        upd = F.coalesce(F.col("_m"), F.lit(0.0))
+        return state.join(msgs, state["id"] == msgs[out], "left").select(
+            "id", *[upd.alias(c) if c == new else c for c in ("hub", "auth")]
         )
-        h_norm = F.broadcast(
-            half2.agg(F.sqrt(F.sum(F.col("hub") * F.col("hub"))).alias("_hn"))
-        )
-        state = half2.crossJoin(h_norm).select(
-            "id",
-            F.when(F.col("_hn") > 0, F.col("hub") / F.col("_hn"))
-            .otherwise(F.lit(0.0))
-            .alias("hub"),
-            "auth",
-        )
-    return state
+
+    state, _, _ = _supersteps(e, "src", state, None, step, 2 * num_iter)
+    return l2(state, "hub") if num_iter else state
+
 
 def betweenness_sampled(
     edges: DataFrame,
@@ -1124,9 +990,8 @@ def betweenness_sampled(
 
     Forward phase = the multi-source BFS shape of ``bfs_distances`` with a
     σ-accumulating message sum; backward phase walks the recorded BFS
-    levels deepest-first, one join per level. All levels are eager
-    localCheckpoints (the lineage discipline every iterative operator here
-    uses).
+    levels deepest-first, one join per level. Both phases run on
+    ``_supersteps``.
 
     ``scale``: when set, dependency accumulation runs on a FIXED INTEGER
     GRID instead of doubles — σ stays the exact BIGINT path count and the
@@ -1152,67 +1017,58 @@ def betweenness_sampled(
             one.alias("sigma"),
         )
     )
-    # The (s, v) state tables are k-bounded while the edge set is the
-    # whole graph: when a level is small enough, broadcast IT so every
-    # superstep is a map-side probe of the cached edge blocks instead of
-    # re-shuffling |E| rows per depth. The level size is already material
-    # (each level is an eager localCheckpoint), so the count that decides
-    # is a cheap scan of local blocks, and the same count doubles as the
-    # convergence probe.
-    bcast_rows = _BCAST_ROWS
-
-    def _maybe_bcast(df: DataFrame, n_rows: int) -> DataFrame:
-        return F.broadcast(df) if n_rows <= bcast_rows else df
-
-    levels = [lvl0]
-    level_sizes = [lvl0.count()]
+    # Forward phase: one superstep per BFS level, probed by its count.
+    # The (s, v) levels are k-bounded while the edge set is the whole
+    # graph, so a small level broadcasts and the edge blocks are probed
+    # map-side; the edge layout is kept for the backward phase, which
+    # joins on the same key.
+    levels, sizes = [lvl0], [lvl0.count()]
     visited = lvl0.select("s", "v")
-    relaid = False
-    for _d in range(1, max_depth + 1):
-        if level_sizes[-1] > bcast_rows and not relaid:
-            # leaving the broadcast regime: pre-partition the edge cache
-            # on the join key once — both the remaining forward levels
-            # and the whole backward phase join on e["es"], so each then
-            # shuffles only the (s, v) level frame (guide §2.4)
-            e = _relayout_edges(e, "es")
-            relaid = True
-        frontier = _maybe_bcast(levels[-1], level_sizes[-1])
+
+    def forward(i, level, e, bc):
+        frontier = bc(level)
         msgs = (
             frontier
             .join(e, frontier["v"] == e["es"])
             .select("s", F.col("ed").alias("v"), "sigma")
         )
         agg = msgs.groupBy("s", "v").agg(F.sum("sigma").alias("sigma"))
-        # lazy checkpoint: the level count below is the materializing
-        # action — one job per forward level instead of two (r13)
-        new = _ck_lazy(agg.join(visited, ["s", "v"], "left_anti"))
-        n_new = new.count()
-        if n_new == 0:
-            break
-        levels.append(new)
-        level_sizes.append(n_new)
-        visited = visited.unionByName(new.select("s", "v"))
-    # backward accumulation, deepest level first (its delta is 0)
+        return agg.join(visited, ["s", "v"], "left_anti")
+
+    def probe(level):
+        nonlocal visited
+        n = level.count()
+        if n:
+            levels.append(level)
+            sizes.append(n)
+            visited = visited.unionByName(level.select("s", "v"))
+        return n, n == 0
+
+    _, _, e = _supersteps(
+        e, "es", lvl0, sizes[0], forward, max_depth, probe, release=False
+    )
+    # Backward phase: one superstep per level, deepest first (its delta
+    # is 0); no probe, so the final count materializes the whole chain
+    # before the edge cache is released.
     zero = F.lit(0).cast("long") if scale else F.lit(0.0)
-    delta = levels[-1].select("s", "v", zero.alias("delta"))
-    acc = [delta]
-    for li in range(len(levels) - 2, -1, -1):
-        succ = (
+    per_succ = (
+        F.expr(f"(sigma * ({scale} + delta)) div sw")
+        if scale
+        else F.col("sigma") / F.col("sw") * (F.lit(1.0) + F.col("delta"))
+    )
+    acc = []
+
+    def backward(i, delta, e, bc):
+        acc.append(delta)
+        li = len(levels) - 2 - i
+        succ = bc(
             levels[li + 1]
             .select("s", F.col("v").alias("w"), F.col("sigma").alias("sw"))
-            .join(
-                delta.select("s", F.col("v").alias("w"), "delta"),
-                ["s", "w"],
-            )
+            .join(delta.select("s", F.col("v").alias("w"), "delta"), ["s", "w"]),
+            sizes[li + 1],
         )
-        succ = _maybe_bcast(succ, level_sizes[li + 1])
         cur = levels[li]
-        cur_b = _maybe_bcast(cur, level_sizes[li])
-        per_succ = (
-            F.expr(f"(sigma * ({scale} + delta)) div sw")
-            if scale
-            else F.col("sigma") / F.col("sw") * (F.lit(1.0) + F.col("delta"))
-        )
+        cur_b = bc(cur, sizes[li])
         contrib = (
             cur_b.join(e, cur_b["v"] == e["es"])
             .select("s", "v", "sigma", F.col("ed").alias("w"))
@@ -1220,27 +1076,17 @@ def betweenness_sampled(
             .groupBy("s", "v")
             .agg(F.sum(per_succ).alias("_c"))
         )
-        # lazy checkpoint with NO probe: each backward level's delta
-        # materializes inside its consumer (the next level's contrib
-        # join / the final accumulation) while still truncating lineage
-        # — the per-level blocking checkpoint job disappears (r13)
-        delta = _ck_lazy(
+        return (
             cur.select("s", "v")
-            .join(_maybe_bcast(contrib, level_sizes[li]), ["s", "v"], "left")
+            .join(bc(contrib, sizes[li]), ["s", "v"], "left")
             .select("s", "v", F.coalesce(F.col("_c"), zero).alias("delta"))
         )
-        acc.append(delta)
-    res = acc[0]
-    for part in acc[1:]:
-        res = res.unionByName(part)
-    # The backward loop has no probe action, so none of its lazy deltas
-    # have materialized yet — unpersisting e here would make the caller's
-    # action re-derive the deduped edge projection once per backward
-    # level. One count materializes the whole delta chain (each level's
-    # checkpoint persists as a side effect) against the live edge cache.
-    if len(acc) > 1:
-        acc[-1].count()
-    e.unpersist()
+
+    delta, _, _ = _supersteps(
+        e, "es", levels[-1].select("s", "v", zero.alias("delta")), None,
+        backward, len(levels) - 1,
+    )
+    res = functools.reduce(DataFrame.unionByName, acc + [delta])
     return (
         res.where(F.col("v") != F.col("s"))
         .groupBy(F.col("v").alias("id"))
@@ -1249,8 +1095,8 @@ def betweenness_sampled(
 
 
 def _lpa_local(pairs, max_iter):
-    """Sequential synchronous LPA — the small-core finisher for
-    ``label_propagation``. IDENTICAL update rule (votes from the
+    """Sequential synchronous LPA → sorted (id, community) rows — the
+    small-core finisher for ``label_propagation``. IDENTICAL update rule (votes from the
     PREVIOUS state, most-frequent label, ties to the smallest), so both
     paths produce the same assignment (pytest-pinned)."""
     nbrs: dict = {}
@@ -1273,7 +1119,7 @@ def _lpa_local(pairs, max_iter):
                 cnt[c] = cnt.get(c, 0) + 1
             new[v] = min(cnt, key=lambda c: (-cnt[c], c))
         comm = new
-    return comm
+    return sorted(comm.items())
 
 
 def label_propagation(
@@ -1299,51 +1145,16 @@ def label_propagation(
     Scale shape per superstep: one edge⋈state join, one (vertex, label)
     count aggregate (map-side combinable), one struct-min argmax per
     vertex — two bounded-key shuffles over |E| and |V|-sized frames, no
-    corpus-wide window, no driver state. Below the same broadcast
-    threshold ``connected_components`` uses, the |V|-sized label table
-    broadcasts and each superstep is a map-only pass over the cached
-    edge set."""
-    und = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .unionByName(
-            edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b"))
-        )
-        .dropDuplicates(["a", "b"])
-        .persist()
-    )
-    # small-core finisher (the MIS/coloring/k-truss/SCC discipline):
-    # max_iter supersteps of fixed job overhead on a one-task graph cost
-    # more than the whole problem — run the IDENTICAL synchronous update
-    # sequentially in one partition (both paths pytest-pinned equal).
-    n_edges = und.count()
-    if n_edges <= local_threshold:
-        id_t = dict(und.dtypes)["a"]
-
-        def _finish_lpa(batches):
-            import pandas as pd
-
-            def norm(x):
-                # binary vertex ids arrive as (unhashable) bytearrays
-                return bytes(x) if isinstance(x, (bytes, bytearray)) else x
-
-            pairs = []
-            for b_ in batches:
-                pairs.extend(
-                    (norm(x), norm(y))
-                    for x, y in zip(b_["a"].tolist(), b_["b"].tolist())
-                )
-            comm = _lpa_local(pairs, max_iter)
-            items = sorted(comm.items())
-            return iter([pd.DataFrame(
-                {"id": [k for k, _ in items],
-                 "community": [v for _, v in items]}
-            )])
-
-        # eager checkpoint (the CC-finisher discipline): the kernel runs
-        # against the live edge cache; without it the caller's action
-        # would re-derive the (scan+union+dedup) projection post-unpersist
-        out = _checkpointed(und.repartition(1).mapInPandas(
-            _finish_lpa, f"id {id_t}, community {id_t}"
+    corpus-wide window, no collected state. There is no probe: the fixed
+    ``max_iter`` supersteps run as one lazy chain, checkpointed every
+    superstep (pagerank's interval-2 cadence measured 40% slower here)."""
+    und = _symmetric(edges, src_col, dst_col).persist()
+    if und.count() <= local_threshold:
+        # eager checkpoint: the kernel runs against the live edge cache
+        out = _checkpointed(_finish_local(
+            und, ("a", "b"),
+            lambda rows: _lpa_local(rows, max_iter),
+            "id {id}, community {id}",
         ))
         und.unpersist()
         return out
@@ -1352,42 +1163,24 @@ def label_propagation(
         .dropDuplicates(["id"])
         .withColumn("community", F.col("id"))
     )
-    small = state.count() <= _BCAST_ROWS
-    if not small:
-        und = _relayout_edges(und, "a")
-    for it in range(max_iter):
-        s = F.broadcast(state) if small else state
+
+    def step(i, state, und, bc):
+        s = bc(state)
         votes = (
             und.join(s, und["a"] == s["id"])
             .groupBy(F.col("b").alias("v"), F.col("community").alias("lbl"))
             .agg(F.count("*").alias("cnt"))
         )
-        winner = votes.groupBy("v").agg(
+        winner = bc(votes.groupBy("v").agg(
             F.min(F.struct((-F.col("cnt")).alias("nc"), F.col("lbl")))["lbl"]
             .alias("new_community")
+        ))
+        return state.join(winner, state["id"] == winner["v"], "left").select(
+            "id",
+            F.coalesce("new_community", "community").alias("community"),
         )
-        if small:
-            winner = F.broadcast(winner)
-        # checkpoint EVERY superstep (pagerank's interval-2 cadence was
-        # tried and measured 40% slower here: the broadcast of a
-        # NON-CHECKPOINTED state recomputes the chained superstep once
-        # for the broadcast exchange and again for the join's left side
-        # — a LAZY checkpoint does not have that failure mode: its first
-        # compute persists the blocks every later consumer reads, so the
-        # r13 lazy form keeps the cadence while dropping the blocking
-        # per-superstep materialization job)
-        state = _ck_lazy(
-            state.join(winner, state["id"] == winner["v"], "left").select(
-                "id",
-                F.coalesce("new_community", "community").alias("community"),
-            )
-        )
-    # The loop has no per-superstep probe, so nothing above has run yet —
-    # unpersisting here would make the caller's first action re-derive the
-    # (scan + union + dedup-shuffle) edge projection once per superstep.
-    # Materialize the chain while the cache is alive, then release it.
-    state.count()
-    und.unpersist()
+
+    state, _, _ = _supersteps(und, "a", state, state.count(), step, max_iter)
     return state
 
 
@@ -1495,15 +1288,9 @@ def boruvka_mst(
         )
         .where(F.col("u") != F.col("v"))
     )
-    verts = (
-        e0.select(F.col("u").alias("id"))
-        .unionByName(e0.select(F.col("v").alias("id")))
-        .dropDuplicates(["id"])
-    )
-    # lazy checkpoints: round 0's keyed-edge count materializes comp,
-    # cand and keyed in one job instead of three eager barriers (r13)
-    comp = _ck_lazy_nostats(verts.select("id", F.col("id").alias("comp")))
-    cand = _ck_lazy_nostats(e0)
+    verts = _vertices(e0, "u", "v")
+    comp = _stats_barrier(verts.select("id", F.col("id").alias("comp")))
+    cand = _stats_barrier(e0)
     chosen = None
     for _r in range(max_rounds):
         # re-key candidate edges to current components, drop internals
@@ -1513,45 +1300,20 @@ def boruvka_mst(
             cand.join(cu, "u").join(cv, "v")
             .where(F.col("cu") != F.col("cv"))
         )
-        keyed = _ck_lazy_nostats(keyed)
+        keyed = _stats_barrier(keyed)
         n_keyed = keyed.count()
         if n_keyed == 0:
             break
-        # small-core finisher (the SCC/_tarjan_local discipline): once
-        # the inter-component edge set fits one task, log-many more
-        # distributed rounds of fixed job overhead cost more than the
-        # whole remainder — finish with sequential Kruskal under the
-        # SAME (w, u, v) order (strict total order ⇒ the forest is
-        # unique, so both paths choose identical edges).
-        # threshold sizing: 1M (u,v,w,cu,cv) rows ≈ 40 MB — one task's
+        # small-core finisher: sequential Kruskal under the SAME (w, u, v)
+        # order (strict total order ⇒ the forest is unique, so both paths
+        # choose identical edges). Threshold sizing: 1M (u,v,w,cu,cv) rows ≈ 40 MB — one task's
         # working set; a 100 TB edge set runs distributed rounds until
         # contraction shrinks the inter-component remainder under it
         if n_keyed <= local_threshold:
-            id_t = dict(keyed.dtypes)["u"]
-
-            def _finish_mst(batches):
-                import pandas as pd
-
-                rows = []
-                for b in batches:
-                    rows.extend(zip(
-                        b["u"].tolist(), b["v"].tolist(), b["w"].tolist(),
-                        b["cu"].tolist(), b["cv"].tolist(),
-                    ))
-                got = _kruskal_local(rows)
-                return iter([pd.DataFrame(
-                    {
-                        "u": [g[0] for g in got],
-                        "v": [g[1] for g in got],
-                        "w": [g[2] for g in got],
-                    }
-                )])
-
-            tail = _ck_lazy_nostats(
-                keyed.select("u", "v", "w", "cu", "cv")
-                .repartition(1)
-                .mapInPandas(_finish_mst, f"u {id_t}, v {id_t}, w double")
-            )
+            tail = _stats_barrier(_finish_local(
+                keyed, ("u", "v", "w", "cu", "cv"), _kruskal_local,
+                "u {id}, v {id}, w double",
+            ))
             chosen = tail if chosen is None else chosen.unionByName(tail)
             break
         # Edge cleaning (standard Borůvka reduction): between two
@@ -1604,7 +1366,7 @@ def boruvka_mst(
         )
         # lazy: the accumulated forest materializes through its next
         # consumer (the following round's union or the final select)
-        chosen = _ck_lazy_nostats(chosen)
+        chosen = _stats_barrier(chosen)
         # pointer graph: c -> other; break 2-cycles toward the smaller id
         ptr = picked.select("c", F.col("other").alias("p"))
         # 2-cycle break: if a.p = b and b.p = a, the larger points to the
@@ -1622,10 +1384,10 @@ def boruvka_mst(
         # frame itself, so convergence costs one isEmpty on the local
         # checkpoint blocks — not extra joins (the original two-join
         # probe tripled the job count and dominated wall time).
-        ptr = _ck_lazy_nostats(ptr)
+        ptr = _stats_barrier(ptr)
         for _j in range(64):
             nxt = ptr.select(F.col("c").alias("jc"), F.col("p").alias("jp"))
-            jumped = _ck_lazy_nostats(
+            jumped = _stats_barrier(
                 ptr.join(nxt, ptr["p"] == nxt["jc"], "left").select(
                     "c",
                     F.coalesce(F.col("jp"), F.col("p")).alias("p"),
@@ -1635,8 +1397,7 @@ def boruvka_mst(
                     ).alias("moved"),
                 )
             )
-            # ONE job per jump: the moved-probe materializes the lazy
-            # checkpoint (max over empty → NULL → done, as before)
+            # max over empty → NULL → done
             done = not bool(
                 jumped.agg(F.max(F.col("moved").cast("int")).alias("m"))
                 .first()["m"]
@@ -1646,7 +1407,7 @@ def boruvka_mst(
                 break
         # fold vertex components through the round's pointer map (lazy:
         # the next round's keyed-edge count materializes it)
-        comp = _ck_lazy_nostats(
+        comp = _stats_barrier(
             comp.join(
                 ptr.select(F.col("c").alias("comp"), "p"), "comp", "left"
             ).select("id", F.coalesce(F.col("p"), F.col("comp")).alias("comp"))
@@ -1678,8 +1439,8 @@ def boruvka_mst(
 
 
 def _tarjan_local(pairs):
-    """Iterative Tarjan over an in-memory edge list → {vertex: min-id of
-    its SCC}. The single-partition finisher for
+    """Iterative Tarjan over an in-memory edge list → (vertex, min-id of
+    its SCC) rows. The single-partition finisher for
     ``strongly_connected_components`` — runs inside one task, never on
     the driver."""
     import collections
@@ -1731,7 +1492,7 @@ def _tarjan_local(pairs):
             if work:
                 u, _ = work[-1]
                 low[u] = min(low[u], low[v])
-    return out
+    return list(out.items())
 
 
 def strongly_connected_components(
@@ -1763,23 +1524,18 @@ def strongly_connected_components(
        m. At minimum the SCC of the globally-min active id peels each
        round, so the loop terminates; DAG-ish periphery goes via trim.
 
-    Every superstep is a LAZY localCheckpoint (lineage discipline,
-    module docstring) whose materializing action is the loop probe that
-    follows it — one job per superstep instead of two (r13). Worst case (a long path of singleton SCCs)
-    costs O(path) trim passes — the known bound of this family; real
+    Every superstep is a lazy localCheckpoint probed by the loop test
+    that follows it. Worst case (a long path of singleton SCCs) costs
+    O(path) trim passes — the known bound of this family; real
     web/navigation graphs resolve in a few rounds. Self-loops are
     stripped from propagation (a self-loop never changes an SCC).
     """
     e_all = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).dropDuplicates(["src", "dst"])
-    verts = (
-        e_all.select(F.col("src").alias("id"))
-        .unionByName(e_all.select(F.col("dst").alias("id")))
-        .dropDuplicates(["id"])
-    )
-    active_e = _ck_lazy_nostats(e_all.where(F.col("src") != F.col("dst")))
-    active_v = _ck_lazy_nostats(verts)
+    verts = _vertices(e_all)
+    active_e = _stats_barrier(e_all.where(F.col("src") != F.col("dst")))
+    active_v = _stats_barrier(verts)
     done_parts: list[DataFrame] = []
     # The stats barrier (mandatory here: the per-round label self-joins
     # would otherwise explode the checkpoint size estimates geometrically,
@@ -1810,7 +1566,7 @@ def strongly_connected_components(
         satisfies F==B (e.g. a directed cycle longer than ~2*max_prop
         peels only its min-id vertex), and removing that subset severs
         the SCC so trim then mislabels the rest as singletons."""
-        lab = _ck_lazy_nostats(
+        lab = _stats_barrier(
             vs.select("id", F.col("id").alias("f"), F.col("id").alias("b"))
         )
         converged = False
@@ -1833,7 +1589,7 @@ def strongly_connected_components(
             )
             new_f = F.least(F.col("f"), F.coalesce(F.col("nf"), F.col("f")))
             new_b = F.least(F.col("b"), F.coalesce(F.col("nb"), F.col("b")))
-            step = _ck_lazy_nostats(
+            step = _stats_barrier(
                 lab.join(_b(fmsg), lab["id"] == fmsg["src"], "left")
                 .join(_b(bmsg), lab["id"] == bmsg["dst"], "left")
                 .select(
@@ -1870,29 +1626,9 @@ def strongly_connected_components(
             )
         )
         if core.count() <= local_threshold:
-            id_t = dict(active_e.dtypes)["src"]
-
-            def _finish(batches):
-                import pandas as pd
-
-                pairs = []
-                for b in batches:
-                    pairs.extend(zip(b["src"].tolist(), b["dst"].tolist()))
-                comp = _tarjan_local(pairs)
-                yield pd.DataFrame(
-                    {
-                        "id": list(comp.keys()),
-                        "scc_id": list(comp.values()),
-                    }
-                )
-
-            done_parts.append(
-                _ck_lazy_nostats(
-                    core.repartition(1).mapInPandas(
-                        _finish, f"id {id_t}, scc_id {id_t}"
-                    )
-                )
-            )
+            done_parts.append(_stats_barrier(_finish_local(
+                core, ("src", "dst"), _tarjan_local, "id {id}, scc_id {id}"
+            )))
             break
         # 2. trim singleton SCCs (no in- or no out-edge in the active
         # set). One checkpoint per pass: the cyclic flag is computed with
@@ -1911,7 +1647,7 @@ def strongly_connected_components(
                 .dropDuplicates(["id"])
                 .withColumn("_i", F.lit(True))
             )
-            flagged = _ck_lazy_nostats(
+            flagged = _stats_barrier(
                 active_v.join(_b(has_out), "id", "left")
                 .join(_b(has_in), "id", "left")
                 .select(
@@ -1933,7 +1669,7 @@ def strongly_connected_components(
             ).join(_b(active_v), active_e["dst"] == active_v["id"], "left_semi")
         if active_v.isEmpty():
             break
-        active_e = _ck_lazy_nostats(active_e)
+        active_e = _stats_barrier(active_e)
         # 3. fused forward/backward min-label fixpoint on the cyclic core
         fb, fb_converged = _propagate_fb(active_e, active_v)
         if not fb_converged:
@@ -1948,16 +1684,16 @@ def strongly_connected_components(
                 " scc_ids."
             )
         # 4. peel complete SCCs where F == B
-        peeled = _ck_lazy_nostats(
+        peeled = _stats_barrier(
             fb.where(F.col("f") == F.col("b")).select(
                 "id", F.col("f").alias("scc_id")
             )
         )
         done_parts.append(peeled)
-        active_v = _ck_lazy_nostats(
+        active_v = _stats_barrier(
             active_v.join(_b(peeled), "id", "left_anti")
         )
-        active_e = _ck_lazy_nostats(
+        active_e = _stats_barrier(
             active_e.join(_b(peeled), active_e["src"] == peeled["id"], "left_anti")
             .join(_b(peeled), active_e["dst"] == peeled["id"], "left_anti")
         )
@@ -1974,10 +1710,7 @@ def strongly_connected_components(
             )
     if not done_parts:
         return verts.limit(0).withColumn("scc_id", F.col("id"))
-    out = done_parts[0]
-    for p in done_parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return functools.reduce(DataFrame.unionByName, done_parts)
 
 
 def _luby_local(pairs):
@@ -2018,8 +1751,9 @@ def _luby_local(pairs):
 
 
 def _greedy_color_local(pairs):
-    """Sequential greedy coloring in fixed md5-priority order — exactly
-    what Jones-Plassmann computes; the coloring small-core finisher."""
+    """Sequential greedy coloring in fixed md5-priority order → sorted
+    (id, color) rows — exactly what Jones-Plassmann computes; the
+    coloring small-core finisher."""
     import hashlib
 
     adj = {}
@@ -2039,7 +1773,7 @@ def _greedy_color_local(pairs):
         while c in used:
             c += 1
         colors[v] = c
-    return colors
+    return sorted(colors.items())
 
 
 def maximal_independent_set(
@@ -2083,39 +1817,15 @@ def maximal_independent_set(
             10,
         ).cast("long")
 
-    sym = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .unionByName(
-            edges.select(
-                F.col(dst_col).alias("a"), F.col(src_col).alias("b")
-            ).where(F.col("a") != F.col("b"))
-        )
-        .distinct()
-    )
-    # small-core finisher (the SCC/_tarjan_local discipline): below the
-    # threshold the whole graph is one task's work, and 3+ Luby rounds of
-    # distributed fixed job overhead cost more than the entire problem —
-    # run the IDENTICAL algorithm sequentially in one partition. Both
-    # paths select the same set (md5 priorities; pytest-pinned).
-    sym = _ck_lazy(sym)
+    sym = _ck_lazy(_symmetric(edges, src_col, dst_col, loops=False))
+    # small-core finisher: the IDENTICAL algorithm sequentially (md5
+    # priorities; both paths select the same set, pytest-pinned)
     if sym.count() <= local_threshold:
-        id_t = dict(sym.dtypes)["a"]
-
-        def _finish_mis(batches):
-            import pandas as pd
-
-            pairs = []
-            for b in batches:
-                pairs.extend(zip(b["a"].tolist(), b["b"].tolist()))
-            return iter([pd.DataFrame({"id": sorted(_luby_local(pairs))})])
-
-        return sym.repartition(1).mapInPandas(_finish_mis, f"id {id_t}")
-    active_v = _ck_lazy(
-        sym.select(F.col("a").alias("id"))
-        .unionByName(sym.select(F.col("b").alias("id")))
-        .distinct()
-    )
+        return _finish_local(
+            sym, ("a", "b"),
+            lambda rows: [(v,) for v in sorted(_luby_local(rows))], "id {id}",
+        )
+    active_v = _ck_lazy(_vertices(sym, "a", "b"))
     active_e = sym
     mis_parts: list[DataFrame] = []
     for rnd in range(1, max_rounds + 1):
@@ -2149,10 +1859,10 @@ def maximal_independent_set(
                 selected.withColumnRenamed("id", "a"), "a"
             ).select(F.col("b").alias("id"))
         ).distinct()
-        active_v = _ck_lazy_nostats(
+        active_v = _stats_barrier(
             active_v.join(removed, "id", "left_anti")
         )
-        active_e = _ck_lazy_nostats(
+        active_e = _stats_barrier(
             active_e.join(active_v.withColumnRenamed("id", "a"), "a")
             .join(active_v.withColumnRenamed("id", "b"), "b")
             .select("a", "b")
@@ -2169,10 +1879,7 @@ def maximal_independent_set(
             )
     if not mis_parts:  # empty / self-loop-only graph
         return sym.select(F.col("a").alias("id")).limit(0)
-    out = mis_parts[0]
-    for p in mis_parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return functools.reduce(DataFrame.unionByName, mis_parts)
 
 
 def greedy_coloring(
@@ -2205,36 +1912,14 @@ def greedy_coloring(
             F.substring(F.md5(col.cast("string")), 1, 15), 16, 10
         ).cast("long")
 
-    sym = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .unionByName(
-            edges.select(
-                F.col(dst_col).alias("a"), F.col(src_col).alias("b")
-            ).where(F.col("a") != F.col("b"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
+    sym = _symmetric(edges, src_col, dst_col, loops=False).localCheckpoint(
+        eager=True
     )
     # small-core finisher: sequential greedy in priority order IS the
     # JP fixed-priority result (same md5 order; pytest-pinned equal)
     if sym.count() <= local_threshold:
-        id_t = dict(sym.dtypes)["a"]
-
-        def _finish_color(batches):
-            import pandas as pd
-
-            pairs = []
-            for b in batches:
-                pairs.extend(zip(b["a"].tolist(), b["b"].tolist()))
-            colors = _greedy_color_local(pairs)
-            ids = sorted(colors)
-            return iter([pd.DataFrame(
-                {"id": ids, "color": [colors[i] for i in ids]}
-            )])
-
-        return sym.repartition(1).mapInPandas(
-            _finish_color, f"id {id_t}, color long"
+        return _finish_local(
+            sym, ("a", "b"), _greedy_color_local, "id {id}, color long"
         )
     uncolored = _ck_lazy(
         sym.select(F.col("a").alias("id")).distinct()
@@ -2291,7 +1976,7 @@ def greedy_coloring(
         parts.append(assigned)
         # lazy union of checkpointed parts — no extra eager job
         colored = colored.unionByName(assigned)
-        uncolored = _ck_lazy_nostats(
+        uncolored = _stats_barrier(
             uncolored.join(assigned, "id", "left_anti")
         )
     else:
@@ -2304,10 +1989,7 @@ def greedy_coloring(
                 " remaining; raise max_rounds or local_threshold —"
                 " the coloring would be partial."
             )
-    out = parts[0]
-    for p_ in parts[1:]:
-        out = out.unionByName(p_)
-    return out
+    return functools.reduce(DataFrame.unionByName, parts)
 
 
 def temporal_min_arrival(
@@ -2333,14 +2015,16 @@ def temporal_min_arrival(
     sf0.1 navigation graph); relaxing a pair is then
     ``array_min(filter(ts_arr, t > arr))`` — the first usable departure
     after the source's arrival. Each superstep relaxes ONLY pairs whose
-    source arrival changed last round (new arrivals can appear nowhere
-    else), min-merges into the state, and derives the next frontier in
-    the same aggregate; convergence = empty frontier (one probe per
-    round, against the already-checkpointed frame). Arrival times only
-    decrease and are bounded below, so the fixpoint exists; rounds ≤ the
-    longest shortest journey's hop count. Raises RuntimeError if
-    ``max_iter`` is hit before the fixpoint — parity with the oracle's
-    recursive closure must never silently truncate.
+    source arrival changed last superstep (new arrivals can appear nowhere
+    else), min-merges into the state, and flags the next delta in the
+    same aggregate. Two relaxations share one checkpoint (the state is
+    vocabulary-sized, so plan depth is cheap and the job count halves);
+    the probe halts when the delta is empty. It counts nothing, so AQE
+    plans its joins. Arrival times
+    only decrease and are bounded below, so the fixpoint exists; rounds ≤
+    the longest shortest journey's hop count. Raises RuntimeError if
+    ``max_iter`` rounds end before the fixpoint — parity with the
+    oracle's recursive closure must never silently truncate.
 
     All-integer state (epoch micros), so the fixpoint is engine-exact
     and a recursive-CTE oracle replays it value-for-value."""
@@ -2355,11 +2039,13 @@ def temporal_min_arrival(
         .agg(F.array_sort(F.collect_set("tsm")).alias("_ts"))
         .localCheckpoint(eager=True)
     )
-    def step(
-        arrival: DataFrame, delta: DataFrame
-    ) -> tuple[DataFrame, DataFrame]:
+
+    def step(i, arrival, packed, bc):
+        delta = bc(arrival.where(F.col("_changed")).select(
+            F.col("id").alias("src"), "arr"
+        ))
         relaxed = (
-            packed.join(delta.withColumnRenamed("id", "src"), "src")
+            packed.join(delta, "src")
             .select(
                 F.col("dst").alias("id"),
                 F.array_min(
@@ -2370,7 +2056,7 @@ def temporal_min_arrival(
             .groupBy("id")
             .agg(F.min("_cand").alias("arr"))
         )
-        merged = (
+        return (
             arrival.select("id", "arr", F.lit(True).alias("_old"))
             .unionByName(
                 relaxed.select("id", "arr", F.lit(False).alias("_old"))
@@ -2393,33 +2079,23 @@ def temporal_min_arrival(
                 .alias("_changed"),
             )
         )
-        return merged, merged.where(F.col("_changed")).select("id", "arr")
 
     arrival = _ck_lazy(
-        seeds.select(F.col("id"), F.lit(neg_inf).cast("long").alias("arr"))
-        .distinct()
+        seeds.select(
+            F.col("id"),
+            F.lit(neg_inf).cast("long").alias("arr"),
+            F.lit(True).alias("_changed"),
+        ).distinct()
     )
-    delta = arrival
-    delta_nonempty = not delta.isEmpty()
-    for _ in range(max_iter):
-        if not delta_nonempty:
-            return arrival.select("id", "arr")
-        # TWO relaxations fuse into one lazy plan per checkpoint round:
-        # the state frame is vocabulary-sized, so plan depth is cheap and
-        # halving the per-round job count halves local-mode wall time.
-        # The checkpoint is lazy and the frontier-emptiness probe is its
-        # materializing action — one job per round, not two (r13).
-        mid, delta_mid = step(arrival, delta)
-        merged, _ = step(mid.select("id", "arr"), delta_mid)
-        arrival = _ck_lazy_nostats(merged)
-        delta = arrival.where(F.col("_changed")).select("id", "arr")
-        delta_nonempty = bool(
-            arrival.agg(F.max(F.col("_changed").cast("int")).alias("c"))
-            .first()["c"]
+    arrival, halted, _ = _supersteps(
+        packed, "src", arrival, None, step, 2 * max_iter, _unchanged,
+        every=2, checkpoint=_stats_barrier,
+    )
+    if not halted:
+        raise RuntimeError(
+            f"temporal_min_arrival did not converge in {max_iter} supersteps"
         )
-    raise RuntimeError(
-        f"temporal_min_arrival did not converge in {max_iter} supersteps"
-    )
+    return arrival.select("id", "arr")
 
 
 def _ktruss_local(pairs, k):
@@ -2460,7 +2136,6 @@ def k_truss(
     below threshold now stays below it forever). Deterministic; exact
     agreement with a sequential replay is pytest-proven
     (tests/test_temporal.py sibling suite tests/test_ktruss.py)."""
-    # lazy checkpoint: the edge count is the materializing action (r13)
     e = _ck_lazy(
         edges.select(
             F.least(F.col(src_col), F.col(dst_col)).alias("a"),
@@ -2471,24 +2146,11 @@ def k_truss(
     )
     thresh = k - 2
     n = e.count()
-    # small-core finisher (the SCC/_tarjan_local discipline): a fixpoint
-    # of wedge joins on a one-task graph is all fixed job overhead
+    # small-core finisher: identical fixpoint, peeling order cannot matter
     if n <= local_threshold:
-        id_t = dict(e.dtypes)["a"]
-
-        def _finish_truss(batches):
-            import pandas as pd
-
-            pairs = []
-            for b in batches:
-                pairs.extend(zip(b["a"].tolist(), b["b"].tolist()))
-            kept = sorted(_ktruss_local(pairs, k))
-            return iter([pd.DataFrame(
-                {"a": [p[0] for p in kept], "b": [p[1] for p in kept]}
-            )])
-
-        return e.repartition(1).mapInPandas(
-            _finish_truss, f"a {id_t}, b {id_t}"
+        return _finish_local(
+            e, ("a", "b"), lambda rows: sorted(_ktruss_local(rows, k)),
+            "a {id}, b {id}",
         )
     for _ in range(max_rounds):
         if n == 0:
@@ -2514,7 +2176,7 @@ def k_truss(
             .groupBy("a", "b")
             .agg(F.count("*").alias("_sup"))
         )
-        kept = _ck_lazy_nostats(
+        kept = _stats_barrier(
             e.join(sup, ["a", "b"], "left")
             .where(F.coalesce(F.col("_sup"), F.lit(0)) >= thresh)
             .select("a", "b")
@@ -2573,39 +2235,18 @@ def double_sweep_diameter(
     O(V) BFS sweeps exact diameter needs; THE scalable first question
     ("how wide is this graph?") asked of any new 100 TB edge set."""
     sym = _ck_lazy(
-        edges.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-        ).unionByName(
-            edges.select(
-                F.col(dst_col).alias("src"), F.col(src_col).alias("dst")
-            )
-        ).where(F.col("src") != F.col("dst")).distinct()
+        _symmetric(edges, src_col, dst_col, "src", "dst", loops=False)
     )
-    # small-core finisher: two BFS fixpoints of fixed job overhead cost
-    # more than a one-task sweep below the threshold (same discipline as
-    # MIS/coloring/k-truss/MST; both paths pytest-pinned equal)
+    # small-core finisher (both paths pytest-pinned equal)
     if sym.count() <= local_threshold:
         # orderBy before limit: without it the seed subset (and hence
         # the sweep-1 start) would depend on partition order.
         first = seed.columns[0]
         seed_ids = [r[0] for r in seed.orderBy(first).limit(1000).collect()]
-
-        def _finish_sweep(batches):
-            import pandas as pd
-
-            pairs = []
-            for b in batches:
-                pairs.extend(zip(b["src"].tolist(), b["dst"].tolist()))
-            e1, lb, pid = _double_sweep_local(pairs, seed_ids)
-            return iter([pd.DataFrame(
-                {"sweep1_ecc": [e1], "diameter_lb": [lb],
-                 "peripheral_id": [pid]}
-            )])
-
-        id_t = dict(sym.dtypes)["src"]
-        return sym.repartition(1).mapInPandas(
-            _finish_sweep,
-            f"sweep1_ecc long, diameter_lb long, peripheral_id {id_t}",
+        return _finish_local(
+            sym, ("src", "dst"),
+            lambda rows: [_double_sweep_local(rows, seed_ids)],
+            "sweep1_ecc long, diameter_lb long, peripheral_id {id}",
         )
     d1 = bfs_distances(sym, seed, max_depth=max_depth)
     far1 = (
@@ -2733,32 +2374,14 @@ def ifub_diameter(
     and budget semantics) runs sequentially in one task (pytest-pinned
     equal on path/star/tripartite fixtures, both paths)."""
     sym = _ck_lazy(
-        edges.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-        ).unionByName(
-            edges.select(
-                F.col(dst_col).alias("src"), F.col(src_col).alias("dst")
-            )
-        ).where(F.col("src") != F.col("dst")).distinct()
+        _symmetric(edges, src_col, dst_col, "src", "dst", loops=False)
     )
     if sym.count() <= local_threshold:
         first = seed.columns[0]
         seed_ids = [r[0] for r in seed.orderBy(first).limit(1000).collect()]
-
-        def _finish_ifub(batches):
-            import pandas as pd
-
-            pairs = []
-            for b_ in batches:
-                pairs.extend(zip(b_["src"].tolist(), b_["dst"].tolist()))
-            lb, ub, exact, nb = _ifub_local(pairs, seed_ids, max_ecc_bfs)
-            return iter([pd.DataFrame(
-                {"diameter_lb": [lb], "diameter_ub": [ub],
-                 "exact": [bool(exact)], "n_bfs": [nb]}
-            )])
-
-        return sym.repartition(1).mapInPandas(
-            _finish_ifub,
+        return _finish_local(
+            sym, ("src", "dst"),
+            lambda rows: [_ifub_local(rows, seed_ids, max_ecc_bfs)],
             "diameter_lb long, diameter_ub long, exact boolean, n_bfs long",
         )
 
@@ -2857,12 +2480,7 @@ def pagerank_fixedpoint(
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).dropDuplicates(["src", "dst"]).localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .dropDuplicates(["id"])
-        .localCheckpoint(eager=True)
-    )
+    nodes = _vertices(e).localCheckpoint(eager=True)
     deg = e.groupBy("src").agg(F.count("*").alias("deg"))
     base = int(scale * (damp_den - damp_num) // damp_den)
     if seeds is not None:

@@ -23,10 +23,6 @@ def shuffle_count(df: DataFrame) -> int:
     return explain_str(df, "simple").count("Exchange")
 
 
-def has_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in explain_str(df, "simple")
-
-
 def assert_pushed_filters(df: DataFrame, fragment: str) -> None:
     """Assert a filter fragment appears in PushedFilters of some scan."""
     plan = explain_str(df, "formatted")

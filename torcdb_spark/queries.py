@@ -655,68 +655,24 @@ def x_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # The driver's correctness gate evaluates the FIRST 50 entries of queries()
-# in iteration order (observed: CORRECTNESS_r01/r02 each hold exactly the
-# first 50 registrations).  DRIVER_PRIORITY pins those 50 slots.
-#
-# ROTATION POLICY (round 9+): OLDEST DRIVER ROW FIRST.  With every §2
-# operator long green and (after this round) every declared query carrying
-# at least one driver record, the head's job flips from coverage to
-# FRESHNESS: each round re-checks the queries whose last driver signal is
-# oldest, so a regression in any long-green query is caught within a
-# bounded number of rounds instead of never (the rotate-forward blind
-# spot).  The selection is mechanical — staleness_head() ranks the
-# declared inventory by (last round recorded in CORRECTNESS_r{K}.json for
-# K <= ROTATION_BASIS_ROUND, name) and takes 50 — and
-# tests/test_docs_counts.py::test_head_follows_staleness_policy asserts
-# this list IS that ranking, so future heads self-select: bump
-# ROTATION_BASIS_ROUND to the round the driver just recorded, re-run the
-# test, and paste the list it expects.
-#
-# FRESHNESS BOUND (honest arithmetic, VERDICT r12 "what's missing"
-# #2): with N declared queries cycling through a 50-slot head, a
-# query's driver record can be at most ceil(N/50) + 1 rounds old
-# (the +1 covers the round in which new never-checked registrations
-# consume head slots).  At N=317 that is 8 rounds — the earlier
-# "<= 5 rounds" phrasing was written at N~250 and became
-# arithmetically unsatisfiable as the inventory grew.  To keep the
-# real bound tight, new-query registrations per round are capped at
-# (50 − stale backlog): this round registers 4 new queries against a
-# 13-query r6 backlog, so the head clears ALL of r6 and 33 of the 50
-# r7 entries.
-#
-# ROUND-13 HEAD (VERDICT r12 ask #2, ROTATION_BASIS_ROUND=12) = the
-# 4 never-checked round-13 additions (av2 snappy Avro, jl2
-# multi-member .jsonl.gz, m26 Opus packet TOC census, pm2 parquet
-# page census), then the 13 queries whose last driver record is r6
-# (7 TPC-H shapes q2/q6-q9/q17/q19-q21 and 4 streaming jobs — the
-# freshness-slip block the r12 VERDICT flagged), then the 33 oldest
-# r7 entries by name.  After this round no driver record is older
-# than r7.  Everything not listed keeps its registration order after
-# slot 50 and stays covered by the local exact-value gate
-# (tests/test_oracle_parity.py, 3 SFs, every round).
-ROTATION_BASIS_ROUND = 12
+# in iteration order, so the order leads with staleness_head(50).
 
 
-def staleness_head(n: int = 50, basis: int | None = None) -> list[str]:
-    """The rotation policy as code: rank every declared query by the last
-    round it appeared in a CORRECTNESS_r{K}.json driver record (K <= basis;
-    never-checked sorts first as -1), tie-break by name, take the top n.
-    DRIVER_PRIORITY must equal staleness_head(50) — pinned by
-    tests/test_docs_counts.py — so each round's head is a deterministic
-    function of the committed driver artifacts, not editorial choice."""
+def staleness_head(n: int = 50) -> list[str]:
+    """The n oracled queries checked longest ago: rank every query with a
+    DuckDB oracle by the newest round that lists it in a committed
+    CORRECTNESS_r{K}.json (never recorded sorts first as -1), tie-break by
+    name. Computed at call time, so each new CORRECTNESS record rotates
+    the head with no edit here."""
     import glob as _glob
     import json as _json
     import os as _os
     import re as _re
 
-    if basis is None:
-        basis = ROTATION_BASIS_ROUND
     repo = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
     last: dict[str, int] = {}
     for p in _glob.glob(_os.path.join(repo, "CORRECTNESS_r*.json")):
         r = int(_re.search(r"r(\d+)", _os.path.basename(p)).group(1))
-        if r > basis:
-            continue
         try:
             with open(p) as f:
                 rec = _json.load(f)
@@ -724,76 +680,11 @@ def staleness_head(n: int = 50, basis: int | None = None) -> list[str]:
             continue
         for name in rec:
             last[name] = max(last.get(name, -1), r)
-    return sorted(_QUERIES, key=lambda nm: (last.get(nm, -1), nm))[:n]
-
-
-DRIVER_PRIORITY: list[str] = [
-    # -- never driver-checked: the round-13 additions (name-sorted,
-    # -- the -1 tie-break) --
-    "av2_snappy_avro_ingest",
-    "jl2_jsonl_gz_ingest",
-    "m26_opus_packet_census",
-    "pm2_page_census",
-    # -- last driver record: round 6 --
-    "q17_small_quantity_avg_yearly",
-    "q19_or_predicate_revenue",
-    "q20_bulk_shippers",
-    "q21_last_shipper_wait",
-    "q2_min_cost_supplier",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_profit_by_nation_year",
-    "st_events_dedup_stream",
-    "st_events_tumbling_stream",
-    "st_stateful_totals",
-    "st_stream_static_join",
-    # -- last driver record: round 7 --
-    "cdc3_content_chunks",
-    "cv1_conversation_assembly",
-    "d10_chunking",
-    "d11_redact_pii",
-    "d15_bm25_rank",
-    "d17_vocab_oov",
-    "e11_matryoshka_topk",
-    "e9_hard_negatives",
-    "fe1_feature_hash_embed",
-    "g_gremlin_sack",
-    "g_gremlin_value_stats",
-    "h2_html_extract",
-    "l1_link_graph",
-    "ldbc_is_like_friends",
-    "ldbc_is_like_msg_content",
-    "ldbc_is_like_msg_creator",
-    "ldbc_is_like_msg_forum",
-    "ldbc_is_like_profile",
-    "ldbc_is_like_recent_msgs",
-    "ldbc_is_like_replies",
-    "lp1_adamic_adar",
-    "m10_gif_animation",
-    "m2_frame_sample",
-    "m5_audio_spectral",
-    "m8_video_frames",
-    "m9_gif_roundtrip",
-    "p1_clean_corpus",
-    "pca1_embedding_covariance",
-    "q_aqp_sampled_revenue",
-    "q_date_parts",
-    "q_exists_subquery",
-    "q_having",
-    "q_hll_mergeable_sketch",
-]
-
-# Head entries that ship WITHOUT a DuckDB oracle by documented design (the
-# driver records a rows/schema-only row for these; every one is exact-
-# tested in pytest against a pure-Python/numpy replay, and ALL have
-# a driver-hashed structural twin — see README).  test_docs_counts pins
-# every other head entry to an exact oracle.
-HEAD_ROWS_ONLY: frozenset[str] = frozenset()
+    return sorted(_ORACLES, key=lambda nm: (last.get(nm, -1), nm))[:n]
 
 
 def _priority_order(mapping: dict[str, object]) -> dict[str, object]:
-    head = {n: mapping[n] for n in DRIVER_PRIORITY if n in mapping}
+    head = {n: mapping[n] for n in staleness_head(50) if n in mapping}
     tail = {n: v for n, v in mapping.items() if n not in head}
     return {**head, **tail}
 

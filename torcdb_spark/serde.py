@@ -62,14 +62,6 @@ def decode_value(s: str):
     return v
 
 
-def encode_long_as_int_preference(v: int) -> str:
-    """Force LONG encoding regardless of magnitude (the reference keeps the
-    writer's declared type; use this when a schema says long)."""
-    if not (LONG_MIN <= v <= LONG_MAX):
-        raise ValueError(f"out of 64-bit range: {v}")
-    return f"l:{v}"
-
-
 def _prefixed(payload: str) -> str:
     return f"{len(payload)}|{payload}"
 
