@@ -581,6 +581,43 @@ def test_hits_integer_matches_python_replay_and_float_ranking(spark):
     assert int_order == float_order
 
 
+def test_hits_integer_zero_iterations_returns_the_start(spark):
+    from torcdb_spark.analytics import hits, hits_integer
+
+    edges = spark.createDataFrame([(1, 10), (2, 10), (2, 11)], "src long, dst long")
+    got = {r.id: (r.hub, r.auth) for r in hits_integer(edges, num_iter=0).collect()}
+    assert got == {v: (1, 1) for v in (1, 2, 10, 11)}
+    assert {r.id: (r.hub, r.auth) for r in hits(edges, num_iter=0).collect()} == got
+
+
+def test_k_core_raises_when_max_iter_runs_out(spark):
+    from torcdb_spark.analytics import k_core
+
+    # path a-b-c-d: the 2-core is empty, but one peel only strips the ends
+    path = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "d")], "src string, dst string"
+    )
+    assert k_core(path, 2).count() == 0
+    with pytest.raises(RuntimeError):
+        k_core(path, 2, max_iter=1)
+
+
+def test_cc_doubling_distributed_path_and_round_budget(spark):
+    from torcdb_spark.analytics import connected_components_doubling
+
+    # path 1..9 plus a pair 20-21, with the single-task finisher disabled
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 9)] + [(20, 21)], "src long, dst long"
+    )
+    got = {
+        r.id: r.component
+        for r in connected_components_doubling(edges, local_threshold=0).collect()
+    }
+    assert got == {**{i: 1 for i in range(1, 10)}, 20: 20, 21: 20}
+    with pytest.raises(RuntimeError):
+        connected_components_doubling(edges, max_rounds=1, local_threshold=0)
+
+
 # The tests above of the loops that run on analytics._supersteps, run
 # again in the forced shuffle regime.
 SHUFFLE_PARITY = (
@@ -596,6 +633,14 @@ SHUFFLE_PARITY = (
     "test_betweenness_integer_grid_matches_pure_python",
     "test_label_propagation_matches_pure_python",
     "test_lpa_small_core_finisher_matches_distributed",
+    "test_k_core_peels_tails_and_keeps_cycles",
+    "test_k_core_raises_when_max_iter_runs_out",
+    "test_shortest_path_pair_reconstructs_exact_path",
+    "test_shortest_path_pair_directed_respects_direction",
+    "test_cc_doubling_distributed_path_and_round_budget",
+    "test_pagerank_fixedpoint_matches_python_replay",
+    "test_hits_integer_matches_python_replay_and_float_ranking",
+    "test_hits_integer_zero_iterations_returns_the_start",
 )
 
 

@@ -1,5 +1,8 @@
 """k-truss peeling (analytics.k_truss) vs a sequential replay."""
 
+import pytest
+from conftest import call_with_fixtures
+
 from torcdb_spark.analytics import k_truss
 
 
@@ -201,3 +204,8 @@ def test_ifub_local_honors_probe_budget(spark):
     assert dict(loc.asDict()) == dict(dist.asDict())
     assert loc["n_bfs"] <= 4
     assert loc["diameter_lb"] <= 6 <= loc["diameter_ub"]
+
+
+@pytest.mark.parametrize("name", ("test_k_truss_matches_replay",))
+def test_shuffle_regime_parity(name, request, shuffle_regime):
+    call_with_fixtures(globals()[name], request)

@@ -4,6 +4,9 @@ defining properties (independence, maximality)."""
 
 import hashlib
 
+import pytest
+from conftest import call_with_fixtures
+
 
 def _pri(v, rnd):
     key = f"{v}" if rnd is None else f"{v}:{rnd}"
@@ -128,3 +131,11 @@ def test_coloring_is_proper_and_total(spark):
     for a, b in EDGES:
         if a != b:
             assert got[a] != got[b]   # proper
+
+
+@pytest.mark.parametrize(
+    "name",
+    ("test_coloring_matches_sequential_replay", "test_coloring_is_proper_and_total"),
+)
+def test_shuffle_regime_parity(name, request, shuffle_regime):
+    call_with_fixtures(globals()[name], request)

@@ -2,6 +2,9 @@
 identical (w, src, dst) tie-break — exact edge-set equality
 (analytics.py boruvka_mst)."""
 
+import pytest
+from conftest import call_with_fixtures
+
 from torcdb_spark.analytics import boruvka_mst
 
 
@@ -75,3 +78,8 @@ def test_mst_random_graph_matches_kruskal(spark):
             if x % 3 == 0:
                 edges.append((u, v, float(x % 7)))
     _run(spark, edges)
+
+
+@pytest.mark.parametrize("name", ("test_mst_random_graph_matches_kruskal",))
+def test_shuffle_regime_parity(name, request, shuffle_regime):
+    call_with_fixtures(globals()[name], request)

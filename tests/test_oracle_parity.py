@@ -110,6 +110,19 @@ SHUFFLE_QUERIES = (
     "g_lpa_communities",
     "l2_domain_pagerank",
     "g_betweenness",
+    "g_kcore",
+    "g_path_pair",
+    "ldbc_ic_like_weighted_path",
+    "g_cc_doubling",
+    "e16_semantic_dedup_exact",
+    "g_ktruss",
+    "gc1_graph_coloring",
+    "scc1_navigation_core",
+    "g_mst",
+    "g_mst2_kruskal_witness",
+    "g_pr3_fixedpoint",
+    "g_ppr2_fixedpoint",
+    "g_hits2_integer",
 )
 
 

@@ -95,3 +95,8 @@ def test_distributed_path_matches_tarjan(spark, edges):
 def test_empty_graph(spark):
     df = spark.createDataFrame([], "src long, dst long")
     assert strongly_connected_components(df).count() == 0
+
+
+@pytest.mark.parametrize("edges", CASES)
+def test_shuffle_regime_parity(spark, edges, shuffle_regime):
+    test_distributed_path_matches_tarjan(spark, edges)

@@ -7,15 +7,27 @@ same dataflow GraphX/Pregel runs, but staying in Spark SQL so Catalyst/AQE
 optimize each superstep and no RDD serialization is paid.
 
 Superstep = messages (state ⋈ edges) → combine by destination → update
-state. pagerank, personalized_pagerank, connected_components,
-bfs_distances, shortest_paths, label_propagation, hits,
-temporal_min_arrival and both phases of betweenness_sampled run on ONE
-kernel, ``_supersteps`` (the Pregelix shape: a superstep is one dataflow
-whose join plan follows a row count). A loop supplies only:
+state. Every single-state superstep loop runs on ONE kernel,
+``_supersteps`` (the Pregelix shape: a superstep is one dataflow whose
+join plan follows a row count):
 
-- its edge frame, the column that frame is joined on, its initial state,
-  and a row count of that state it computed anyway (None if it counts
-  nothing);
+- a vertex state over a fixed edge frame: pagerank and
+  personalized_pagerank (one body, ``_pagerank_supersteps``),
+  pagerank_fixedpoint, connected_components, bfs_distances, the forward
+  BFS of shortest_path_pair (both share ``_Visited``, the visited-union
+  probe), shortest_paths, label_propagation, hits and hits_integer (one
+  body, ``_hits_supersteps``), temporal_min_arrival, greedy_coloring,
+  SCC's fused forward/backward label propagation, and both phases of
+  betweenness_sampled;
+- ``edges=None``: the state IS the shrinking edge set, so there is no
+  edge frame to lay out or release — k_core, k_truss,
+  connected_components_doubling and Borůvka's pointer doubling.
+
+A loop supplies only:
+
+- its edge frame (or None), the column that frame is joined on, its
+  initial state, and a row count of that state it computed anyway (None
+  if it counts nothing);
 - ``step(i, state, edges, bc)``: superstep i's message, combine and update
   expressions, wrapping every small join side in ``bc``;
 - optionally ``probe(state)`` → ``(rows, halt)``: ONE action over the
@@ -26,9 +38,12 @@ whose join plan follows a row count). A loop supplies only:
 The kernel owns the rest:
 
 - the regime: ``bc(df, rows=None)`` broadcasts ``df`` while the row count
-  (the latest probe's, or the one given) is at most ``_BCAST_ROWS``, so a
-  superstep probes the edge side map-side and never shuffles it; without
-  a count no hint is given and AQE plans the joins;
+  (the latest probe's, or the one given) passes ``_fits``, so a superstep
+  probes the edge side map-side and never shuffles it; without a count
+  no hint is given and AQE plans the joins. ``_fits`` is the one place
+  ``_BCAST_ROWS`` is compared: the kernel, connected_components' finisher
+  guard, SCC's trim/peel joins and e16 (queries.py) all decide through
+  it (``_bc``);
 - leaving the broadcast regime lays the edge side out ONCE on its join key
   (``_relayout_edges``), so later supersteps shuffle only the state;
 - a LAZY localCheckpoint at the cadence: lineage stays bounded (without
@@ -37,9 +52,18 @@ The kernel owns the rest:
   materializes it, so a superstep costs ONE job; with no probe the blocks
   materialize inside the next superstep's or the caller's job;
 - ``max_iter`` and the halt test (the probe's halt, or an empty state);
+  the loops with a fixpoint raise RuntimeError when ``max_iter`` runs out
+  before it, rather than return a truncated result;
 - releasing a persisted edge frame on exit, first materializing the final
   state against it when no probe already has (unless the caller keeps the
   frame for a later phase).
+
+Three round loops stay hand-written: maximal_independent_set's Luby
+rounds and the outer rounds of strongly_connected_components and
+boruvka_mst. Their state is two frames that both shrink (active vertices
+and active edges), and SCC's and Borůvka's rounds also hold a finisher
+test and a nested superstep loop; fitting them to the kernel would either
+grow its contract or stop their edge side from shrinking.
 
 Below a ``local_threshold``, the decomposition operators finish in ONE
 task instead: ``_finish_local`` runs a sequential kernel (union-find,
@@ -122,32 +146,43 @@ def _stats_barrier(df: DataFrame) -> DataFrame:
         return ck
 
 
-def _supersteps(edges: DataFrame, key: str, state: DataFrame,
+def _fits(rows: int | None) -> bool:
+    """THE broadcast-regime predicate, the one place ``_BCAST_ROWS`` is
+    compared: a frame bounded by ``rows`` rows broadcasts iff the count
+    is known and at most the bar."""
+    return rows is not None and rows <= _BCAST_ROWS
+
+
+def _bc(df: DataFrame, rows: int | None) -> DataFrame:
+    """``df`` with a broadcast hint iff ``_fits(rows)``; without a count
+    no hint is given and AQE plans the join."""
+    return F.broadcast(df) if _fits(rows) else df
+
+
+def _supersteps(edges: DataFrame | None, key: str | None, state: DataFrame,
                 rows: int | None, step, max_iter: int | None, probe=None,
                 every: int = 1, checkpoint=_ck_lazy, release: bool = True):
     """Run one superstep loop under the contract in the module docstring
     → (final state, whether the halt test fired, the edge frame it ran
-    on). ``max_iter=None`` runs until the halt test fires;
-    ``release=False`` leaves the edge frame persisted for a later phase."""
-    relaid = False
-
-    def bc(df: DataFrame, n: int | None = None) -> DataFrame:
-        n = rows if n is None else n
-        return df if n is None or n > _BCAST_ROWS else F.broadcast(df)
-
+    on). ``edges=None``: the state is itself the (shrinking) edge set, so
+    there is nothing to lay out or release. ``max_iter=None`` runs until
+    the halt test fires; ``release=False`` leaves the edge frame
+    persisted for a later phase."""
+    relaid = edges is None
     halted = rows == 0
     i = 0
     while not halted and (max_iter is None or i < max_iter):
-        if rows is not None and rows > _BCAST_ROWS and not relaid:
+        if not relaid and rows is not None and not _fits(rows):
             edges, relaid = _relayout_edges(edges, key), True
-        state = step(i, state, edges, bc)
+        state = step(i, state, edges,
+                     lambda df, n=None: _bc(df, rows if n is None else n))
         i += 1
         if i % every == 0 or i == max_iter:
             state = checkpoint(state)
             if probe is not None:
                 n, halted = probe(state)
                 rows = rows if n is None else n
-    if release and edges.is_cached:
+    if release and edges is not None and edges.is_cached:
         if probe is None and i:
             state.count()
         edges.unpersist()
@@ -158,6 +193,46 @@ def _unchanged(state: DataFrame):
     """Probe for updates that flag ``_changed``: halt once no row changed
     (max over an empty frame is NULL, which halts too)."""
     return None, not state.agg(F.max(F.col("_changed").cast("int"))).first()[0]
+
+
+def _stable(prev, sig=lambda df: (df.count(),)):
+    """Probe for a state that only shrinks: ``sig(state)`` → a signature
+    whose first field is the row count (one action; by default just the
+    count); halt once the signature repeats the previous one (``prev``
+    before the first superstep) or no row is left."""
+
+    def probe(state):
+        nonlocal prev
+        s = sig(state)
+        halted, prev = s == prev or not s[0], s
+        return s[0], halted
+
+    return probe
+
+
+class _Visited:
+    """A frontier search's visited set and its probe. The set is the union
+    of the checkpointed frontiers, consolidated every 8 depths (lazily:
+    the next probe materializes it) so unbounded searches do not anti-join
+    a linearly growing union. ``probe`` counts the new frontier and halts
+    on an empty one, or, given ``found`` (a boolean column), on a
+    frontier holding a matching row — in the same job. ``rows``: the
+    seed's row count when the caller knows it (else one job counts it)."""
+
+    def __init__(self, seed: DataFrame, found=None, rows: int | None = None):
+        self.df, self.found, self.depth, self.hit = _ck_lazy(seed), found, 0, False
+        self.rows = self.df.count() if rows is None else rows
+
+    def probe(self, frontier):
+        hit = F.lit(False) if self.found is None else self.found
+        n, hit = frontier.agg(F.count(F.lit(1)), F.max(hit.cast("int"))).first()
+        self.depth, self.hit = self.depth + 1, bool(hit)
+        if n:
+            self.df = self.df.unionByName(frontier)
+            if self.depth % 8 == 0:
+                self.df = _ck_lazy(self.df)
+            self.rows += n
+        return n, not n or self.hit
 
 
 def _finish_local(df: DataFrame, cols, kernel, schema: str) -> DataFrame:
@@ -338,7 +413,7 @@ def connected_components(
     # superstep would have paid for anyway); under the threshold one
     # union-find task replaces the whole flood, with the identical
     # min-id-per-component result.
-    if n <= _BCAST_ROWS and und.count() <= local_threshold:
+    if _fits(n) and und.count() <= local_threshold:
         out = _checkpointed(_finish_local(
             und, ("a", "b"), _cc_union_find, "id {id}, component {id}",
         ))
@@ -390,13 +465,11 @@ def bfs_distances(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).persist()
     id_c = "id" if "id" in sources.columns else sources.columns[0]
-    visited = _ck_lazy(
+    vis = _Visited(
         sources.select(F.col(id_c).alias("id")).dropDuplicates(["id"]).withColumn(
             "distance", F.lit(0)
         )
     )
-    n_visited = visited.count()
-    depth = 0
 
     def step(i, frontier, e, bc):
         f = bc(frontier.select("id"))
@@ -405,25 +478,11 @@ def bfs_distances(
             .select(F.col("dst").alias("id"))
             .dropDuplicates(["id"])
         )
-        seen = bc(visited.select("id"), n_visited)
+        seen = bc(vis.df.select("id"), vis.rows)
         return nxt.join(seen, "id", "left_anti").withColumn("distance", F.lit(i + 1))
 
-    def probe(frontier):
-        nonlocal visited, n_visited, depth
-        n = frontier.count()
-        depth += 1
-        if n:
-            # visited is a union of checkpointed frontiers, consolidated
-            # every 8 depths (lazily: the next probe materializes it) so
-            # unbounded callers do not anti-join a linearly growing union
-            visited = visited.unionByName(frontier)
-            if depth % 8 == 0:
-                visited = _ck_lazy(visited)
-            n_visited += n
-        return n, n == 0
-
-    _supersteps(e, "src", visited, n_visited, step, max_depth, probe)
-    return visited
+    _supersteps(e, "src", vis.df, vis.rows, step, max_depth, vis.probe)
+    return vis.df
 
 
 def triangle_count(edges: DataFrame, src_col: str = "src", dst_col: str = "dst") -> DataFrame:
@@ -584,35 +643,27 @@ def k_core(
     on a path but few tens on real skewed graphs).
 
     Superstep = one groupBy (degree count) + two semi-joins (induce the
-    subgraph on surviving vertices); the edge frontier only SHRINKS, so
-    each superstep re-checkpoints the smaller edge set and the cost decays
-    geometrically on typical graphs. Same lineage discipline as the other
-    Pregel loops."""
+    subgraph on surviving vertices); the state is the edge set itself,
+    which only SHRINKS, so superstep cost decays geometrically on typical
+    graphs. The probe is its count; the loop halts once a peel removes
+    nothing, and raises RuntimeError if ``max_iter`` runs out first."""
     if k < 1:
         raise ValueError(f"k_core requires k >= 1, got {k}")
-    und = _symmetric(edges, src_col, dst_col, loops=False)
-    live = _ck_lazy(und)
-    n_edges = live.count()
-    for _ in range(max_iter):
-        if n_edges == 0:
-            break
+    live = _ck_lazy(_symmetric(edges, src_col, dst_col, loops=False))
+    n = live.count()
+
+    def step(i, live, _, bc):
         deg = live.groupBy("a").agg(F.count("*").alias("degree"))
-        keep = deg.where(F.col("degree") >= k).select("a")
-        # |keep| <= |V| <= n_edges (known from the previous checkpoint):
-        # under the threshold both induced-subgraph semi-joins probe the
-        # broadcast survivor set map-side instead of shuffling the edge
-        # frontier twice per peel round
-        if n_edges <= 1_000_000:
-            keep = F.broadcast(keep)
-        nxt = _ck_lazy(
-            live.join(keep, "a", "left_semi").join(
-                keep.select(F.col("a").alias("b")), "b", "left_semi"
-            )
+        keep = bc(deg.where(F.col("degree") >= k).select("a"))
+        return live.join(keep, "a", "left_semi").join(
+            keep.select(F.col("a").alias("b")), "b", "left_semi"
         )
-        n_next = nxt.count()
-        if n_next == n_edges:
-            break
-        live, n_edges = nxt, n_next
+
+    live, halted, _ = _supersteps(
+        None, None, live, n, step, max_iter, _stable((n,))
+    )
+    if not halted:
+        raise RuntimeError(f"k_core did not converge in {max_iter} peels")
     return live.groupBy(F.col("a").alias("id")).agg(
         F.count("*").cast("long").alias("degree")
     ).where(F.col("degree") >= k)
@@ -644,67 +695,43 @@ def shortest_path_pair(
     Returns (step, id) ordered src→dst; empty when no path within
     ``max_depth``.
     """
+    spark = edges.sparkSession
+    if bytes(src_id) == bytes(dst_id):
+        return spark.createDataFrame([(0, bytes(src_id))], "step int, id binary")
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     if not directed:
         e = e.unionByName(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         ).dropDuplicates(["src", "dst"])
-    e = e.persist()
-
-    spark = edges.sparkSession
-    visited = _checkpointed(
+    vis = _Visited(
         spark.createDataFrame(
             [(bytes(src_id), 0, None)], "id binary, dist int, parent binary"
-        )
+        ),
+        found=F.col("id") == bytes(dst_id),
+        rows=1,
     )
-    frontier = visited.select("id")
-    found = bytes(src_id) == bytes(dst_id)
-    dist = 0
-    while not found and dist < max_depth:
-        dist += 1
-        expanded = (
-            F.broadcast(frontier)
-            .join(e, frontier["id"] == e["src"])
+
+    def step(i, frontier, e, bc):
+        f = bc(frontier.select("id"))
+        return (
+            f.join(e, f["id"] == e["src"])
             .groupBy(F.col("dst").alias("nid"))
             .agg(F.min("src").alias("parent"))
+            .join(vis.df.select(F.col("id").alias("nid")), "nid", "left_anti")
+            .select(F.col("nid").alias("id"), F.lit(i + 1).alias("dist"), "parent")
         )
-        nxt = _ck_lazy(
-            expanded.join(
-                visited.select(F.col("id").alias("nid")), "nid", "left_anti"
-            ).select(
-                F.col("nid").alias("id"),
-                F.lit(dist).alias("dist"),
-                "parent",
-            )
-        )
-        # frontier count + target-found probe in one job
-        probe = nxt.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max((F.col("id") == bytes(dst_id)).cast("int")).alias("f"),
-        ).first()
-        n_new = probe["n"]
-        if n_new == 0:
-            break
-        # visited: union of checkpointed frontiers, consolidated every 8
-        # levels (as in bfs_distances)
-        visited = visited.unionByName(nxt)
-        if dist % 8 == 0:
-            visited = _ck_lazy(visited)
-        found = bool(probe["f"])
-        frontier = nxt.select("id")
-    e.unpersist()
-    if not found:
+
+    _supersteps(e.persist(), "src", vis.df, vis.rows, step, max_depth, vis.probe)
+    if not vis.hit:
         return spark.createDataFrame([], "step int, id binary")
-    # backward walk: <= dist 1-row lookups against the distributed state;
+    # backward walk: <= depth 1-row lookups against the distributed state;
     # only the O(depth) path itself reaches the driver
     path = [bytes(dst_id)]
-    cur = bytes(dst_id)
-    for _ in range(dist):
-        row = visited.where(F.col("id") == cur).select("parent").first()
+    for _ in range(vis.depth):
+        row = vis.df.where(F.col("id") == path[-1]).select("parent").first()
         if row is None or row["parent"] is None:
             break
-        cur = bytes(row["parent"])
-        path.append(cur)
+        path.append(bytes(row["parent"]))
     path.reverse()
     return spark.createDataFrame(
         [(i, v) for i, v in enumerate(path)], "step int, id binary"
@@ -737,7 +764,7 @@ def connected_components_doubling(
     Convergence: edge-multiset checksum (count + sum of xxhash64) stable
     across one full alternation; stopping early on a (2^-64) checksum
     collision is the accepted trade for not materializing set-difference
-    per round.
+    per round. Raises RuntimeError if ``max_rounds`` runs out first.
     """
     e = _symmetric(edges, src_col, dst_col, "u", "v", loops=False)
     all_vertices = e.select(F.col("u").alias("id")).dropDuplicates(["id"])
@@ -778,18 +805,21 @@ def connected_components_doubling(
         return (r["n"], r["h"])
 
     cur = _ck_lazy(e)
-    prev_sig = checksum(cur)
+    sig = checksum(cur)
     # small-core finisher: the initial checksum already carries |E|
-    if prev_sig[0] <= local_threshold:
+    if sig[0] <= local_threshold:
         return _finish_local(
             cur, ("u", "v"), _cc_union_find, "id {id}, component {id}"
         )
-    for _ in range(max_rounds):
-        cur = _ck_lazy(star(star(cur, large=True), large=False))
-        sig = checksum(cur)
-        if sig == prev_sig:
-            break
-        prev_sig = sig
+    cur, halted, _ = _supersteps(
+        None, None, cur, sig[0],
+        lambda i, cur, _, bc: star(star(cur, large=True), large=False),
+        max_rounds, _stable(sig, checksum),
+    )
+    if not halted:
+        raise RuntimeError(
+            f"connected_components_doubling did not converge in {max_rounds} rounds"
+        )
     # converged edges are star arms (v -> center=min of component)
     centers = cur.select(F.col("u").alias("id"), F.col("v").alias("component"))
     comp = (
@@ -918,54 +948,62 @@ def hits(
     scores converge to the principal singular vectors of A. Each half-step
     is one superstep; the normalizer is a 1-row aggregate over the
     checkpointed half, broadcast into the next half — the pattern of
-    pagerank's dangling mass, and the
-    broadcast is what materializes the lazy checkpoint. The state feeds
-    three consumers per half (the norm, the next message join and the next
-    state join), so the per-half checkpoint keeps each from re-deriving
-    the chain (measured 27 s → 3 s at 3 iterations on the 600k-edge
-    fixture supply graph). HITS counts nothing, so AQE plans its joins.
+    pagerank's dangling mass, and the broadcast is what materializes the
+    lazy checkpoint. A half feeds both the norm and the next message
+    join, so the per-half checkpoint keeps each from re-deriving the
+    chain (measured 27 s → 3 s at 3 iterations on the 600k-edge fixture
+    supply graph). HITS counts nothing, so AQE plans its joins.
 
     Deterministic for a fixed iteration count (floating-point fixpoint →
     declared rows-only for the driver gate; pytest checks exact agreement
     with a dense numpy power iteration on a constructed graph)."""
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    verts = _vertices(e)
-    state = _ck_lazy(
-        verts.select("id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth"))
-    )
+    return _hits_supersteps(e, F.lit(1.0), num_iter, normalize=True)
 
-    def l2(state, col):
-        norm = F.broadcast(
-            state.agg(F.sqrt(F.sum(F.col(col) * F.col(col))).alias("_n"))
-        )
-        scaled = F.when(F.col("_n") > 0, F.col(col) / F.col("_n")).otherwise(
-            F.lit(0.0)
-        )
-        return state.crossJoin(norm).select(
-            "id", *[scaled.alias(c) if c == col else c for c in ("hub", "auth")]
-        )
+
+def _hits_supersteps(e, one, num_iter, normalize) -> DataFrame:
+    """The superstep body ``hits`` and ``hits_integer`` share → (id, hub,
+    auth) over the vertices of ``e``, starting from ``one`` everywhere.
+    The state is the latest half-step's scores (id, s), held only for the
+    vertices that received any; each half first L2-normalizes the
+    previous half's scores when ``normalize``. The last hub half holds
+    every source and the last auth half every destination, so one full
+    join of the two at the end covers every vertex, with 0 where a
+    vertex has no out- (in-) edge."""
+    if not num_iter:
+        return _vertices(e).select("id", one.alias("hub"), one.alias("auth"))
+
+    def l2(df):
+        if not normalize:
+            return df
+        norm = F.broadcast(df.agg(F.sqrt(F.sum(F.col("s") * F.col("s"))).alias("_n")))
+        scaled = F.when(F.col("_n") > 0, F.col("s") / F.col("_n")).otherwise(F.lit(0.0))
+        return df.crossJoin(norm).select("id", scaled.alias("s"))
+
+    prev = None  # the input of the latest half: the auth scores at the end
 
     def step(i, state, e, bc):
-        # even i: auth ← Aᵀ·hub; odd i: hub ← A·auth — each from the
-        # previous half's column, normalized first
-        new, old, key, out = (
-            ("auth", "hub", "src", "dst") if i % 2 == 0
-            else ("hub", "auth", "dst", "src")
-        )
-        if i:
-            state = l2(state, old)
-        msgs = (
-            e.join(state.select(F.col("id").alias("_k"), old), e[key] == F.col("_k"))
-            .groupBy(out)
-            .agg(F.sum(old).alias("_m"))
-        )
-        upd = F.coalesce(F.col("_m"), F.lit(0.0))
-        return state.join(msgs, state["id"] == msgs[out], "left").select(
-            "id", *[upd.alias(c) if c == new else c for c in ("hub", "auth")]
+        nonlocal prev
+        # even i: auth ← Aᵀ·hub; odd i: hub ← A·auth
+        key, out = ("src", "dst") if i % 2 == 0 else ("dst", "src")
+        prev = l2(state) if i else state
+        return (
+            e.join(prev.select(F.col("id").alias("_k"), "s"), e[key] == F.col("_k"))
+            .groupBy(F.col(out).alias("id"))
+            .agg(F.sum("s").alias("s"))
         )
 
-    state, _, _ = _supersteps(e, "src", state, None, step, 2 * num_iter)
-    return l2(state, "hub") if num_iter else state
+    start = e.select(F.col("src").alias("id"), one.alias("s")).dropDuplicates(["id"])
+    hub, _, _ = _supersteps(e, "src", start, None, step, 2 * num_iter)
+    return (
+        l2(hub).withColumnRenamed("s", "hub")
+        .join(prev.withColumnRenamed("s", "auth"), "id", "full")
+        .select(
+            "id",
+            F.coalesce(F.col("hub"), F.lit(0)).alias("hub"),
+            F.coalesce(F.col("auth"), F.lit(0)).alias("auth"),
+        )
+    )
 
 
 def betweenness_sampled(
@@ -1381,30 +1419,22 @@ def boruvka_mst(
             ).otherwise(F.col("p")).alias("p"),
         )
         # Pointer doubling to the root. The moved flag rides the jump
-        # frame itself, so convergence costs one isEmpty on the local
+        # frame itself, so convergence costs one aggregate over the
         # checkpoint blocks — not extra joins (the original two-join
         # probe tripled the job count and dominated wall time).
-        ptr = _stats_barrier(ptr)
-        for _j in range(64):
+        def jump(i, ptr, _, bc):
             nxt = ptr.select(F.col("c").alias("jc"), F.col("p").alias("jp"))
-            jumped = _stats_barrier(
-                ptr.join(nxt, ptr["p"] == nxt["jc"], "left").select(
-                    "c",
-                    F.coalesce(F.col("jp"), F.col("p")).alias("p"),
-                    (
-                        F.col("jp").isNotNull()
-                        & (F.col("jp") != F.col("p"))
-                    ).alias("moved"),
-                )
+            return ptr.join(nxt, ptr["p"] == nxt["jc"], "left").select(
+                "c",
+                F.coalesce(F.col("jp"), F.col("p")).alias("p"),
+                (F.col("jp").isNotNull() & (F.col("jp") != F.col("p")))
+                .alias("_changed"),
             )
-            # max over empty → NULL → done
-            done = not bool(
-                jumped.agg(F.max(F.col("moved").cast("int")).alias("m"))
-                .first()["m"]
-            )
-            ptr = jumped.select("c", "p")
-            if done:
-                break
+
+        ptr, _, _ = _supersteps(
+            None, None, _stats_barrier(ptr), None, jump, 64, _unchanged,
+            checkpoint=_stats_barrier,
+        )
         # fold vertex components through the round's pointer map (lazy:
         # the next round's keyed-edge count materializes it)
         comp = _stats_barrier(
@@ -1524,10 +1554,11 @@ def strongly_connected_components(
        m. At minimum the SCC of the globally-min active id peels each
        round, so the loop terminates; DAG-ish periphery goes via trim.
 
-    Every superstep is a lazy localCheckpoint probed by the loop test
-    that follows it. Worst case (a long path of singleton SCCs) costs
-    O(path) trim passes — the known bound of this family; real
-    web/navigation graphs resolve in a few rounds. Self-loops are
+    The stats barrier is mandatory here: the per-round label self-joins
+    would otherwise explode the checkpoint size estimates geometrically
+    (the Borůvka failure mode). Worst case (a long path of singleton
+    SCCs) costs O(path) trim passes — the known bound of this family;
+    real web/navigation graphs resolve in a few rounds. Self-loops are
     stripped from propagation (a self-loop never changes an SCC).
     """
     e_all = edges.select(
@@ -1537,75 +1568,41 @@ def strongly_connected_components(
     active_e = _stats_barrier(e_all.where(F.col("src") != F.col("dst")))
     active_v = _stats_barrier(verts)
     done_parts: list[DataFrame] = []
-    # The stats barrier (mandatory here: the per-round label self-joins
-    # would otherwise explode the checkpoint size estimates geometrically,
-    # the Borůvka failure mode) also disables compile-time auto-broadcast,
-    # so the small-side joins get explicit hints behind the same counted
-    # threshold the other iterative operators use. Every build side below
-    # is bounded by |active vertices|, which only shrinks.
-    small = active_v.count() <= _BCAST_ROWS
+    # every small join side below is bounded by |active vertices|
+    n_v = active_v.count()
 
-    def _b(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df
-
-    def _propagate_fb(ev: DataFrame, vs: DataFrame) -> DataFrame:
-        """Both min-label fixpoints at once → (id, f, b): f = min id the
-        vertex REACHES (flows against edge direction: v adopts its
-        out-neighbors' f), b = min id REACHING it (flows with edge
-        direction). The two propagations are independent, so fusing them
-        halves the supersteps — rounds = max(diam_F, diam_B), one
-        checkpoint per round. (Pointer-jumping f[v] ← f[f[v]] was tried
-        and does NOT help here: on a near-cycle core every label stays
-        at its own id until the min wave arrives, so the jump target is
-        the vertex itself — measured no round reduction for 2 extra
-        joins/round. The small-core finisher below is what bounds the
-        superstep count instead.)
-
-        Returns (labels, converged). A non-converged label frame MUST
-        NOT be peeled: with partial propagation only part of an SCC
-        satisfies F==B (e.g. a directed cycle longer than ~2*max_prop
-        peels only its min-id vertex), and removing that subset severs
-        the SCC so trim then mislabels the rest as singletons."""
-        lab = _stats_barrier(
-            vs.select("id", F.col("id").alias("f"), F.col("id").alias("b"))
+    def step(i, lab, ev, bc):
+        # both min-label fixpoints at once: f = min id the vertex REACHES
+        # (flows against edge direction: v adopts its out-neighbors' f),
+        # b = min id REACHING it. They are independent, so fusing them
+        # halves the supersteps (rounds = max(diam_F, diam_B)). Pointer
+        # jumping f[v] ← f[f[v]] does NOT help here: on a near-cycle core
+        # every label stays at its own id until the min wave arrives
+        # (measured: no round reduction for 2 extra joins per round).
+        fmsg = (
+            ev.join(bc(lab.select(F.col("id").alias("_fid"), "f")),
+                    ev["dst"] == F.col("_fid"))
+            .groupBy("src")
+            .agg(F.min("f").alias("nf"))
         )
-        converged = False
-        for _ in range(max_prop):
-            fmsg = (
-                ev.join(
-                    _b(lab.select(F.col("id").alias("_fid"), "f")),
-                    ev["dst"] == F.col("_fid"),
-                )
-                .groupBy("src")
-                .agg(F.min("f").alias("nf"))
+        bmsg = (
+            ev.join(bc(lab.select(F.col("id").alias("_bid"), "b")),
+                    ev["src"] == F.col("_bid"))
+            .groupBy("dst")
+            .agg(F.min("b").alias("nb"))
+        )
+        new_f = F.least(F.col("f"), F.coalesce(F.col("nf"), F.col("f")))
+        new_b = F.least(F.col("b"), F.coalesce(F.col("nb"), F.col("b")))
+        return (
+            lab.join(bc(fmsg), lab["id"] == fmsg["src"], "left")
+            .join(bc(bmsg), lab["id"] == bmsg["dst"], "left")
+            .select(
+                "id",
+                new_f.alias("f"),
+                new_b.alias("b"),
+                ((new_f != F.col("f")) | (new_b != F.col("b"))).alias("_changed"),
             )
-            bmsg = (
-                ev.join(
-                    _b(lab.select(F.col("id").alias("_bid"), "b")),
-                    ev["src"] == F.col("_bid"),
-                )
-                .groupBy("dst")
-                .agg(F.min("b").alias("nb"))
-            )
-            new_f = F.least(F.col("f"), F.coalesce(F.col("nf"), F.col("f")))
-            new_b = F.least(F.col("b"), F.coalesce(F.col("nb"), F.col("b")))
-            step = _stats_barrier(
-                lab.join(_b(fmsg), lab["id"] == fmsg["src"], "left")
-                .join(_b(bmsg), lab["id"] == bmsg["dst"], "left")
-                .select(
-                    "id",
-                    new_f.alias("f"),
-                    new_b.alias("b"),
-                    (
-                        (new_f != F.col("f")) | (new_b != F.col("b"))
-                    ).alias("_chg"),
-                )
-            )
-            lab = step.select("id", "f", "b")
-            if step.where(F.col("_chg")).isEmpty():
-                converged = True
-                break
-        return lab, converged
+        )
 
     for _outer in range(max_outer):
         if active_v.isEmpty():
@@ -1648,8 +1645,8 @@ def strongly_connected_components(
                 .withColumn("_i", F.lit(True))
             )
             flagged = _stats_barrier(
-                active_v.join(_b(has_out), "id", "left")
-                .join(_b(has_in), "id", "left")
+                active_v.join(_bc(has_out, n_v), "id", "left")
+                .join(_bc(has_in, n_v), "id", "left")
                 .select(
                     "id",
                     (
@@ -1664,15 +1661,20 @@ def strongly_connected_components(
                 break
             done_parts.append(trimmed)
             active_v = flagged.where(F.col("_cyc")).select("id")
+            live = _bc(active_v, n_v)
             active_e = active_e.join(
-                _b(active_v), active_e["src"] == active_v["id"], "left_semi"
-            ).join(_b(active_v), active_e["dst"] == active_v["id"], "left_semi")
+                live, active_e["src"] == live["id"], "left_semi"
+            ).join(live, active_e["dst"] == live["id"], "left_semi")
         if active_v.isEmpty():
             break
         active_e = _stats_barrier(active_e)
         # 3. fused forward/backward min-label fixpoint on the cyclic core
-        fb, fb_converged = _propagate_fb(active_e, active_v)
-        if not fb_converged:
+        fb, converged, _ = _supersteps(
+            active_e, "src",
+            active_v.select("id", F.col("id").alias("f"), F.col("id").alias("b")),
+            n_v, step, max_prop, _unchanged, checkpoint=_stats_barrier,
+        )
+        if not converged:
             # Peeling from truncated labels silently splits SCCs (only
             # the min-id part of a long cycle satisfies F==B) — fail
             # loudly instead, matching k_truss/temporal_min_arrival.
@@ -1690,12 +1692,11 @@ def strongly_connected_components(
             )
         )
         done_parts.append(peeled)
-        active_v = _stats_barrier(
-            active_v.join(_b(peeled), "id", "left_anti")
-        )
+        gone = _bc(peeled, n_v)
+        active_v = _stats_barrier(active_v.join(gone, "id", "left_anti"))
         active_e = _stats_barrier(
-            active_e.join(_b(peeled), active_e["src"] == peeled["id"], "left_anti")
-            .join(_b(peeled), active_e["dst"] == peeled["id"], "left_anti")
+            active_e.join(gone, active_e["src"] == gone["id"], "left_anti")
+            .join(gone, active_e["dst"] == gone["id"], "left_anti")
         )
     else:
         # max_outer exhausted without a break: any still-active vertices
@@ -1903,9 +1904,10 @@ def greedy_coloring(
     unique, C ≤ Δ+1, and a trivial sequential replay verifies it
     exactly (tests/test_mis.py::test_coloring_*).
 
-    Per round: one uncolored-neighbor min join (am I the local
-    priority minimum?), one colored-neighbor mex aggregate, two
-    anti-join shrinks; state checkpoints with the stats barrier."""
+    The state is (id, color), color NULL while the vertex is uncolored.
+    Per round: one uncolored-neighbor min join (am I the local priority
+    minimum?), one colored-neighbor mex aggregate and one merge into the
+    state; the probe counts the NULLs."""
 
     def pri(col: Column) -> Column:
         return F.conv(
@@ -1921,22 +1923,13 @@ def greedy_coloring(
         return _finish_local(
             sym, ("a", "b"), _greedy_color_local, "id {id}, color long"
         )
-    uncolored = _ck_lazy(
-        sym.select(F.col("a").alias("id")).distinct()
-    )
-    colored = uncolored.limit(0).withColumn(
-        "color", F.lit(0).cast("long")
-    ).select("id", "color")
-    parts: list[DataFrame] = []
-    for _ in range(max_rounds):
-        if uncolored.isEmpty():
-            break
-        unc_a = uncolored.withColumnRenamed("id", "a")
-        unc_b = uncolored.withColumnRenamed("id", "b")
+
+    def step(i, state, sym, bc):
+        unc = state.where(F.col("color").isNull()).select("id")
         # blocked: an uncolored neighbor with smaller (pri, id) exists
         blocked = (
-            sym.join(unc_a, "a")
-            .join(unc_b, "b")
+            sym.join(unc.withColumnRenamed("id", "a"), "a")
+            .join(unc.withColumnRenamed("id", "b"), "b")
             .where(
                 F.struct(pri(F.col("b")).alias("p"), F.col("b").alias("i"))
                 < F.struct(pri(F.col("a")).alias("p"), F.col("a").alias("i"))
@@ -1944,52 +1937,47 @@ def greedy_coloring(
             .select(F.col("a").alias("id"))
             .distinct()
         )
-        ready = uncolored.join(blocked, "id", "left_anti")
+        ready = unc.join(blocked, "id", "left_anti")
         # mex over colored neighbors: smallest color in 1..deg+1 not used
-        nbr_colors = (
+        used = (
             sym.join(ready.withColumnRenamed("id", "a"), "a")
             .join(
-                colored.withColumnRenamed("id", "b"), "b"
+                state.where(F.col("color").isNotNull())
+                .withColumnRenamed("id", "b"), "b"
             )
             .groupBy(F.col("a").alias("id"))
             .agg(F.collect_set("color").alias("_used"))
         )
-        assigned = (
-            ready.join(nbr_colors, "id", "left")
-            .select(
-                "id",
-                F.array_min(
-                    F.array_except(
-                        F.sequence(
-                            F.lit(1),
-                            F.coalesce(F.size("_used"), F.lit(0)) + 1,
-                        ).cast("array<long>"),
-                        F.coalesce(
-                            F.col("_used"),
-                            F.array().cast("array<long>"),
-                        ),
-                    )
-                ).alias("color"),
+        mex = F.array_min(
+            F.array_except(
+                F.sequence(
+                    F.lit(1), F.coalesce(F.size("_used"), F.lit(0)) + 1
+                ).cast("array<long>"),
+                F.coalesce(F.col("_used"), F.array().cast("array<long>")),
             )
         )
-        assigned = _ck_lazy(assigned)
-        parts.append(assigned)
-        # lazy union of checkpointed parts — no extra eager job
-        colored = colored.unionByName(assigned)
-        uncolored = _stats_barrier(
-            uncolored.join(assigned, "id", "left_anti")
+        assigned = ready.join(used, "id", "left").select("id", mex.alias("_new"))
+        return state.join(assigned, "id", "left").select(
+            "id", F.coalesce(F.col("color"), F.col("_new")).alias("color")
         )
-    else:
-        # max_rounds exhausted: uncolored vertices would vanish from
-        # the output, violating the documented totality — fail loudly.
-        if not uncolored.isEmpty():
-            raise RuntimeError(
-                "greedy_coloring: Jones-Plassmann loop exhausted"
-                f" max_rounds={max_rounds} with uncolored vertices"
-                " remaining; raise max_rounds or local_threshold —"
-                " the coloring would be partial."
-            )
-    return functools.reduce(DataFrame.unionByName, parts)
+
+    def probe(state):
+        return None, not state.where(F.col("color").isNull()).count()
+
+    state, halted, _ = _supersteps(
+        sym, "a",
+        sym.select(F.col("a").alias("id"), F.lit(None).cast("long").alias("color"))
+        .dropDuplicates(["id"]),
+        None, step, max_rounds, probe, checkpoint=_stats_barrier,
+    )
+    if not halted:
+        raise RuntimeError(
+            "greedy_coloring: Jones-Plassmann loop exhausted"
+            f" max_rounds={max_rounds} with uncolored vertices"
+            " remaining; raise max_rounds or local_threshold —"
+            " the coloring would be partial."
+        )
+    return state
 
 
 def temporal_min_arrival(
@@ -2152,9 +2140,8 @@ def k_truss(
             e, ("a", "b"), lambda rows: sorted(_ktruss_local(rows, k)),
             "a {id}, b {id}",
         )
-    for _ in range(max_rounds):
-        if n == 0:
-            return e
+
+    def step(i, e, _, bc):
         u = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
         v = e.select(F.col("a").alias("y"), F.col("b").alias("z"))
         tri = (
@@ -2176,29 +2163,36 @@ def k_truss(
             .groupBy("a", "b")
             .agg(F.count("*").alias("_sup"))
         )
-        kept = _stats_barrier(
+        return (
             e.join(sup, ["a", "b"], "left")
             .where(F.coalesce(F.col("_sup"), F.lit(0)) >= thresh)
             .select("a", "b")
         )
-        n_new = kept.count()
-        if n_new == n:
-            return kept
-        e, n = kept, n_new
-    raise RuntimeError(f"k_truss did not converge in {max_rounds} rounds")
+
+    e, halted, _ = _supersteps(
+        None, None, e, n, step, max_rounds, _stable((n,)), checkpoint=_stats_barrier
+    )
+    if not halted:
+        raise RuntimeError(f"k_truss did not converge in {max_rounds} rounds")
+    return e
 
 
-def _double_sweep_local(pairs, seed_ids):
-    """Sequential double sweep — the diameter small-core finisher
-    (identical BFS levels and (distance, id) tie-breaks)."""
+def _sweep_local(pairs, seed_ids):
+    """The sequential double sweep both diameter finishers start with
+    (identical BFS levels and (distance, id) tie-breaks to the distributed
+    sweeps): BFS from the seeds to the farthest vertex a, then from a to
+    ITS farthest vertex b → (bfs, sweep-1 eccentricity, a, the distances
+    from a, b), or None on an edgeless graph. ``bfs(srcs)`` → {vertex:
+    hops} over the undirected simple graph of ``pairs``."""
     from collections import deque
 
     adj = {}
     for a, b in pairs:
-        if a == b:
-            continue
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
+        if a != b:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+    if not adj:
+        return None
 
     def bfs(srcs):
         dist = {s: 0 for s in srcs if s in adj}
@@ -2211,11 +2205,43 @@ def _double_sweep_local(pairs, seed_ids):
                     dq.append(v)
         return dist
 
-    d1 = bfs(set(seed_ids))
-    far1 = max(d1, key=lambda v: (d1[v], -v))
-    d2 = bfs({far1})
-    far2 = max(d2, key=lambda v: (d2[v], -v))
-    return d1[far1], d2[far2], far2
+    def far(d):
+        return max(d, key=lambda v: (d[v], -v))
+
+    d0 = bfs(set(seed_ids))
+    a = far(d0)
+    d_a = bfs({a})
+    return bfs, d0[a], a, d_a, far(d_a)
+
+
+def _diameter_start(edges, seed, src_col, dst_col, local_threshold, kernel, schema):
+    """The diameter operators' shared preamble → (symmetrized edges, the
+    small-core finisher's frame or None): at or below ``local_threshold``
+    edge rows, ``kernel(pairs, seed_ids)`` computes the one result row
+    inside one task."""
+    sym = _ck_lazy(
+        _symmetric(edges, src_col, dst_col, "src", "dst", loops=False)
+    )
+    if sym.count() > local_threshold:
+        return sym, None
+    # orderBy before limit: without it the seed subset (and hence the
+    # sweep-1 start) would depend on partition order.
+    seed_ids = [r[0] for r in seed.orderBy(seed.columns[0]).limit(1000).collect()]
+    return sym, _finish_local(
+        sym, ("src", "dst"), lambda rows: [kernel(rows, seed_ids)], schema
+    )
+
+
+def _farthest(d: DataFrame) -> DataFrame:
+    """The farthest row of a ``bfs_distances`` result, ties by min id."""
+    return d.orderBy(F.desc("distance"), F.asc("id")).limit(1)
+
+
+def _double_sweep_row(pairs, seed_ids):
+    """The double-sweep finisher's row: (sweep1_ecc, diameter_lb,
+    peripheral_id)."""
+    _, ecc1, _, d_a, b = _sweep_local(pairs, seed_ids)
+    return ecc1, d_a[b], b
 
 
 def double_sweep_diameter(
@@ -2234,34 +2260,20 @@ def double_sweep_diameter(
     ``bfs_distances`` runs — 2·O(diameter) supersteps — instead of the
     O(V) BFS sweeps exact diameter needs; THE scalable first question
     ("how wide is this graph?") asked of any new 100 TB edge set."""
-    sym = _ck_lazy(
-        _symmetric(edges, src_col, dst_col, "src", "dst", loops=False)
+    sym, local = _diameter_start(
+        edges, seed, src_col, dst_col, local_threshold, _double_sweep_row,
+        "sweep1_ecc long, diameter_lb long, peripheral_id {id}",
     )
-    # small-core finisher (both paths pytest-pinned equal)
-    if sym.count() <= local_threshold:
-        # orderBy before limit: without it the seed subset (and hence
-        # the sweep-1 start) would depend on partition order.
-        first = seed.columns[0]
-        seed_ids = [r[0] for r in seed.orderBy(first).limit(1000).collect()]
-        return _finish_local(
-            sym, ("src", "dst"),
-            lambda rows: [_double_sweep_local(rows, seed_ids)],
-            "sweep1_ecc long, diameter_lb long, peripheral_id {id}",
-        )
-    d1 = bfs_distances(sym, seed, max_depth=max_depth)
-    far1 = (
-        d1.orderBy(F.desc("distance"), F.asc("id")).limit(1)
-        .localCheckpoint(eager=True)
+    if local is not None:
+        return local
+    far1 = _farthest(bfs_distances(sym, seed, max_depth=max_depth)).localCheckpoint(
+        eager=True
     )
-    ecc1 = far1.select(F.col("distance").alias("sweep1_ecc"))
-    d2 = bfs_distances(sym, far1.select("id"), max_depth=max_depth)
-    far2 = d2.orderBy(F.desc("distance"), F.asc("id")).limit(1)
-    return (
-        ecc1.crossJoin(
-            far2.select(
-                F.col("distance").alias("diameter_lb"),
-                F.col("id").alias("peripheral_id"),
-            )
+    far2 = _farthest(bfs_distances(sym, far1.select("id"), max_depth=max_depth))
+    return far1.select(F.col("distance").alias("sweep1_ecc")).crossJoin(
+        far2.select(
+            F.col("distance").alias("diameter_lb"),
+            F.col("id").alias("peripheral_id"),
         )
     )
 
@@ -2274,39 +2286,11 @@ def _ifub_local(pairs, seed_ids, max_ecc_bfs):
     remaining budget cannot fully cover is skipped whole, never probed
     partway) as the distributed loop, so both paths return the same
     bounds for the same ``max_ecc_bfs`` — no separate default here."""
-    from collections import deque
-
-    adj = {}
-    for a, b in pairs:
-        if a == b:
-            continue
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    if not adj:
+    sweep = _sweep_local(pairs, seed_ids)
+    if sweep is None:
         return 0, 0, True, 0
-
-    def bfs(srcs):
-        dist = {s: 0 for s in srcs if s in adj}
-        dq = deque(dist)
-        while dq:
-            u = dq.popleft()
-            for v in adj[u]:
-                if v not in dist:
-                    dist[v] = dist[u] + 1
-                    dq.append(v)
-        return dist
-
-    n_bfs = 0
-    # double sweep: seed -> a (farthest, ties by min id) -> b
-    d0 = bfs(set(seed_ids))
-    n_bfs += 1
-    a = max(d0, key=lambda v: (d0[v], -v))
-    d_a = bfs({a})
-    n_bfs += 1
-    b = max(d_a, key=lambda v: (d_a[v], -v))
-    lb = d_a[b]
-    d_b = bfs({b})
-    n_bfs += 1
+    bfs, _, a, d_a, b = sweep
+    lb, d_b = d_a[b], bfs({b})
     # midpoint of the a-b shortest path: on-path (d_a+d_b == d(a,b))
     # at level d(a,b)//2 from a, ties by min id
     half = lb // 2
@@ -2316,7 +2300,7 @@ def _ifub_local(pairs, seed_ids, max_ecc_bfs):
     ]
     w = min(on_path) if on_path else a
     d_w = bfs({w})
-    n_bfs += 1
+    n_bfs = 4  # from the seeds, a, b and w
     ecc_w = max(d_w.values())
     lb = max(lb, ecc_w)
     ub = 2 * ecc_w
@@ -2373,35 +2357,23 @@ def ifub_diameter(
     edges the IDENTICAL algorithm (same seeds, midpoint, fringe order,
     and budget semantics) runs sequentially in one task (pytest-pinned
     equal on path/star/tripartite fixtures, both paths)."""
-    sym = _ck_lazy(
-        _symmetric(edges, src_col, dst_col, "src", "dst", loops=False)
+    sym, local = _diameter_start(
+        edges, seed, src_col, dst_col, local_threshold,
+        lambda rows, ids: _ifub_local(rows, ids, max_ecc_bfs),
+        "diameter_lb long, diameter_ub long, exact boolean, n_bfs long",
     )
-    if sym.count() <= local_threshold:
-        first = seed.columns[0]
-        seed_ids = [r[0] for r in seed.orderBy(first).limit(1000).collect()]
-        return _finish_local(
-            sym, ("src", "dst"),
-            lambda rows: [_ifub_local(rows, seed_ids, max_ecc_bfs)],
-            "diameter_lb long, diameter_ub long, exact boolean, n_bfs long",
-        )
+    if local is not None:
+        return local
 
     def _ecc_and_far(srcs: DataFrame):
         d = bfs_distances(sym, srcs, max_depth=None)
-        far = (
-            d.orderBy(F.desc("distance"), F.asc("id")).limit(1)
-            .localCheckpoint(eager=True)
-        )
-        r = far.collect()[0]
+        r = _farthest(d).localCheckpoint(eager=True).collect()[0]
         return d, int(r["distance"]), r["id"]
 
-    n_bfs = 0
     _, _, a = _ecc_and_far(seed.select(F.col(seed.columns[0]).alias("id")))
-    n_bfs += 1
     spark = edges.sparkSession
     d_a, lb, b = _ecc_and_far(spark.createDataFrame([(a,)], ["id"]))
-    n_bfs += 1
     d_b, _, _ = _ecc_and_far(spark.createDataFrame([(b,)], ["id"]))
-    n_bfs += 1
     half = lb // 2
     mid = (
         d_a.alias("x")
@@ -2416,7 +2388,7 @@ def ifub_diameter(
     )
     w = mid[0]["id"] if mid else a
     d_w, ecc_w, _ = _ecc_and_far(spark.createDataFrame([(w,)], ["id"]))
-    n_bfs += 1
+    n_bfs = 4  # from the seeds, a, b and w
     d_w = _checkpointed(d_w)
     lb = max(lb, ecc_w)
     ub = 2 * ecc_w
@@ -2480,30 +2452,33 @@ def pagerank_fixedpoint(
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).dropDuplicates(["src", "dst"]).localCheckpoint(eager=True)
-    nodes = _vertices(e).localCheckpoint(eager=True)
-    deg = e.groupBy("src").agg(F.count("*").alias("deg"))
+    nodes = _vertices(e)
     base = int(scale * (damp_den - damp_num) // damp_den)
+    on = F.lit(True)
     if seeds is not None:
         # personalized variant: start mass and teleport land ONLY on the
         # seed set (PPR semantics) — same integer update otherwise
-        seed_ids = seeds.select(F.col(seeds.columns[0]).alias("id"))
-        is_seed = nodes.join(seed_ids, "id", "left_semi").withColumn(
-            "_b", F.lit(base).cast("long")
-        ).withColumn("_r0", F.lit(scale).cast("long"))
-        base_df = nodes.join(is_seed.select("id", "_b", "_r0"), "id", "left")
-        ranks = base_df.select(
-            "id", F.coalesce(F.col("_r0"), F.lit(0)).cast("long").alias("rank_fp")
+        nodes = nodes.join(
+            seeds.select(F.col(seeds.columns[0]).alias("id"), F.lit(True).alias("_s"))
+            .dropDuplicates(["id"]),
+            "id", "left",
         )
-        bases = base_df.select(
-            "id", F.coalesce(F.col("_b"), F.lit(0)).cast("long").alias("_base")
-        ).localCheckpoint(eager=True)
-    else:
-        ranks = nodes.withColumn("rank_fp", F.lit(scale).cast("long"))
-        bases = nodes.withColumn("_base", F.lit(base).cast("long"))
-    for _ in range(num_iter):
+        on = F.col("_s").isNotNull()
+    deg = e.groupBy("src").agg(F.count("*").alias("deg"))
+    # the state carries the constant base and out-degree beside the rank
+    # (pagerank's out_deg fold): one edge join per round
+    state = _ck_lazy(
+        nodes.join(deg, nodes["id"] == deg["src"], "left").select(
+            "id",
+            F.when(on, F.lit(base)).otherwise(0).cast("long").alias("_base"),
+            F.when(on, F.lit(scale)).otherwise(0).cast("long").alias("rank_fp"),
+            "deg",
+        )
+    )
+
+    def step(i, state, e, bc):
         contrib = (
-            e.join(ranks.withColumnRenamed("id", "src"), "src")
-            .join(deg, "src")
+            e.join(state.select(F.col("id").alias("src"), "rank_fp", "deg"), "src")
             .select(
                 "dst",
                 F.floor(
@@ -2514,20 +2489,16 @@ def pagerank_fixedpoint(
             .groupBy("dst")
             .agg(F.sum("c").alias("in_sum"))
         )
-        ranks = (
-            bases.join(
-                contrib.withColumnRenamed("dst", "id"), "id", "left"
-            )
-            .select(
-                "id",
-                (
-                    F.col("_base")
-                    + F.coalesce(F.col("in_sum"), F.lit(0))
-                ).cast("long").alias("rank_fp"),
-            )
-            .localCheckpoint(eager=True)
+        return state.join(contrib, state["id"] == contrib["dst"], "left").select(
+            "id",
+            "_base",
+            (F.col("_base") + F.coalesce(F.col("in_sum"), F.lit(0)))
+            .cast("long").alias("rank_fp"),
+            "deg",
         )
-    return ranks
+
+    state, _, _ = _supersteps(e, "src", state, None, step, num_iter)
+    return state.select("id", "rank_fp")
 
 
 def hits_integer(
@@ -2537,7 +2508,7 @@ def hits_integer(
     dst_col: str = "dst",
 ) -> DataFrame:
     """HITS hubs/authorities WITHOUT per-round normalization →
-    (id, hub_i, auth_i) integer scores after ``num_iter`` mutual-
+    (id, hub, auth) integer scores after ``num_iter`` mutual-
     reinforcement rounds — the hash-checkable witness for the float
     ``hits`` (g_hits_parts, rows-only): starting from all-ones,
     a'(v) = Σ_{u→v} h(u) and h'(u) = Σ_{u→v} a'(v) are pure BIGINT
@@ -2546,39 +2517,12 @@ def hits_integer(
     witness checks the same ranking the production operator serves,
     with an unrolled-CTE oracle replaying every score exactly. Bounded:
     scores grow ≤ (max_deg²)^iter — two rounds on a degree-10⁴ graph
-    stay < 2⁶³ with orders of magnitude to spare."""
+    stay < 2⁶³ with orders of magnitude to spare.
+
+    ``hits``' superstep body over the de-duplicated edges, with a BIGINT
+    all-ones start and no L2 step; a vertex without out-edges (in-edges)
+    scores hub (auth) 0, and ``num_iter=0`` returns the start."""
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).dropDuplicates(["src", "dst"]).localCheckpoint(eager=True)
-    hubs = (
-        e.select(F.col("src").alias("id"))
-        .dropDuplicates(["id"])
-        .withColumn("h", F.lit(1).cast("long"))
-    )
-    auths = None
-    for _ in range(num_iter):
-        auths = (
-            e.join(hubs.withColumnRenamed("id", "src"), "src")
-            .groupBy("dst")
-            .agg(F.sum("h").alias("a"))
-            .withColumnRenamed("dst", "id")
-            .localCheckpoint(eager=True)
-        )
-        hubs = (
-            e.join(auths.withColumnRenamed("id", "dst"), "dst")
-            .groupBy("src")
-            .agg(F.sum("a").alias("h"))
-            .withColumnRenamed("src", "id")
-            .localCheckpoint(eager=True)
-        )
-    return (
-        hubs.withColumnRenamed("id", "hid")
-        .join(
-            auths.withColumnRenamed("id", "hid"), "hid", "full"
-        )
-        .select(
-            F.col("hid").alias("id"),
-            F.coalesce(F.col("h"), F.lit(0)).cast("long").alias("hub"),
-            F.coalesce(F.col("a"), F.lit(0)).cast("long").alias("auth"),
-        )
-    )
+    return _hits_supersteps(e, F.lit(1).cast("long"), num_iter, normalize=False)

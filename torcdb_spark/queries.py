@@ -12207,9 +12207,8 @@ def e16_semantic_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the spread scan). Above the bar — a corpus too big to broadcast —
     # the shuffle join stands unchanged; the count is a free read of the
     # already-eager checkpoint, never a recompute.
-    from torcdb_spark.analytics import _BCAST_ROWS
-    if cells.count() <= _BCAST_ROWS:
-        b = F.broadcast(b)
+    from torcdb_spark.analytics import _bc
+    b = _bc(b, cells.count())
     denom = F.col("na") * F.col("nb")
     cos = F.when(denom != 0.0, dot(F.col("ra"), F.col("rb")) / denom)
     pairs = (
