@@ -1,16 +1,38 @@
 #!/usr/bin/env python
-"""Benchmark harness: times every declared query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"""Inventory benchmark: times every declared query, in sorted order, at
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 fixtures) on
+local[$SPARK_GRAFT_CPUS], min of $SPARK_GRAFT_BENCH_RUNS runs (default 2)
+each, through a noop sink after a warm-up.
 
-Execution is measured with a noop sink (full pipeline runs, nothing
-collected to the driver) after a JVM warm-up action, so timings reflect
-scan+shuffle+compute, not py4j materialization.
+Usage: python bench.py [--round N]
+
+No query is started once BUDGET_S seconds have passed since start; the
+queries never started are listed under ``incomplete`` and the record is
+written anyway.
+
+Record fields (bench_detail.json, its round archive bench_detail_rNN.json,
+and the first of the two stdout JSON lines):
+
+- ``metric``, ``value`` (sum of the timed seconds), ``unit``;
+- ``queries``: ``{name: seconds}``, -1.0 for a query that raised;
+- ``layers``: ``{name: {jobs, stages, task_s}}`` of the reported run: Spark
+  jobs and stages scheduled in the query's job group, and the summed
+  executor run time of those stages;
+- ``incomplete``: names never started because the budget ran out;
+- ``delta_vs_prev``: ``{name: seconds - previous seconds}`` and
+  ``prev_total``, against the previous bench_detail.json, only when that
+  record has the same ``sf``;
+- ``runs_per_query``, ``budget_s``, ``wall_s`` (the whole pass),
+  ``st_timing``, ``sf``.
+
+The last stdout line is a compact record of at most 1500 chars: the fixed
+fields, the scaling sentinels, as many incomplete names as fit, then the
+slowest queries.
 """
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import re
@@ -18,202 +40,108 @@ import sys
 import time
 
 import pandas as pd  # module-level: pandas_udf resolves stringified type hints
+from py4j.protocol import Py4JJavaError
 
-# Queries re-timed in a FRESH JVM (--isolate) EVERY run, in addition to
-# whatever the regression detector flags: the standing contention
-# sentinels (ivm2's r7 4.21 s → r8 0.83 s swing is the canonical example
-# — post-mortem: PERF_NOTES.md), plus the r9 watch-list cluster VERDICT
-# r9 ask #2 sends to clean-window arbitration (d21/d24/d23/d19/d7 — git
-# shows none of their code changed in r9; the isolate record decides
-# drift vs regression). g_pagerank_exact stays listed so its r9
-# burst-contaminated 27.5 s entry gets re-recorded (ask #4). In-suite vs
-# fresh-JVM is the arbiter between "suite got crowded" and "plan got
-# slower"; keeping these in the map every round makes the variance
-# visible instead of episodic.
-FORCE_ISOLATE = (
-    "g_pagerank_exact",
-    "e12_knn_graph",
-    "e8_semantic_dedup",
-    "g_path_pair",
-    "e11_matryoshka_topk",
-    "bl1_bloom_semijoin",
-    "ivm2_join_view_maintenance",
-    # r10 watch items (VERDICT r10 ask #2): e16/d26 elevated ~1.4-1.6x
-    # normalized two rounds running; e15's r10 isolated sample (9.595 s
-    # > its 7.64 s suite time) was burst-contaminated per the PERF_NOTES
-    # taxonomy, so it was never actually arbitrated — all three get
-    # clean-window min-of-3 samples this round.  (The r9 cluster
-    # d19/d21/d23/d24/d7 closed as drift in r10 and rotates out.)
-    "e16_semantic_dedup_exact",
-    "d26_containment_join",
-    "e15_pq_adc_exact",
-    # r10 streaming regression cluster: timed by micro-batch
-    # triggerExecution from r11 on (see _timed_run), so these isolated
-    # entries double as the before/after record for the methodology
-    # change VERDICT r10 ask #3 ordered.
-    "st_interval_join_stream",
-    "st_events_dedup_stream",
-    "st_stateful_totals",
-    # r11 open flag (VERDICT r11 ask #1): isolated 4.466 s vs ~1.2 s
-    # r8-r10 band with zero code change; gets BOTH estimators recorded
-    # every round until the band stabilizes.
-    "x_minhash_near_dups",
+REPO = os.path.dirname(os.path.abspath(__file__))
+
+# Wall seconds after which no further query is started. A full sf0.1 pass
+# takes ~1050 s on local[4]; the margin covers a slower host, and what is
+# left of the caller's timeout must cover the query running at expiry
+# (e16's slow mode is up to ~95 s per run).
+BUDGET_S = 1500.0
+
+COMPACT_CHARS = 1500
+
+# Pinned into the compact line before the slowest queries: runs at two core
+# counts are compared on the names both lines print, and two
+# top-by-slowness sets need not overlap.
+SENTINELS = (
+    "e16_semantic_dedup_exact", "ssj1_jaccard_join", "g_betweenness",
+    "d20_bpe_encode", "q9_profit_by_nation_year", "x_minhash_near_dups",
+    "m8_video_frames", "st_interval_join_stream",
 )
 
-# Estimator classes (VERDICT r11 "what's wrong" #3, mechanized): which
-# number is the query's steady-state cost when a flag needs arbitration.
-#   isolate   — scan/join-shaped work: a fresh JVM with an idle suite is
-#               the clean measurement; the in-suite value embeds whatever
-#               contention the suite created.  min-of-N fresh-JVM samples
-#               arbitrate (contention vs real regression).
-#   suite_min — superstep/JIT-bound work (dozens of tiny localCheckpoint
-#               stages, Python-worker warm state): a fresh JVM never
-#               reaches suite-warm JIT in N samples, so the fresh-JVM min
-#               OVER-reads (measured: e16 isolated 16.2 s vs 13.4 suite,
-#               e15 8.5 vs 4.4 — PERF_NOTES r11).  The in-suite min with
-#               extra recheck samples is the steady state.
-# Flags auto-close against the DECLARED estimator: bench_detail carries
-# both numbers plus the arbitrated one, so no prose arbitration is left.
-_SUITE_MIN_QUERIES = frozenset({
-    # iterative DataFrame-Pregel analytics (superstep loops)
-    "g_pagerank", "g_pagerank_exact", "g_pr3_fixedpoint",
-    "g_connected_components", "g_cc_doubling", "g_bfs_counts",
-    "g_shortest_paths", "g_betweenness", "g_bc2_integer_grid",
-    "g_lpa_communities", "g_lpa2_integer_votes", "g_hits_parts",
-    "g_hits2_integer", "g_ppr_recommend", "g_ppr2_fixedpoint",
-    "g_mst", "g_mst2_kruskal_witness", "g_kcore", "g_ktruss",
-    "g_diameter", "g_path_pair", "gc1_graph_coloring",
-    "mis1_independent_set", "scc1_navigation_core",
-    "tg1_temporal_reachability", "l2_domain_pagerank",
-    "gs2_random_walks", "gs3_node2vec_walks",
-    # iterative ML loops (per-round aggregates over many small stages)
-    "km2_kmeans_lloyd", "cl1_perceptron_train", "d18_bpe_merges",
-    "d20_bpe_encode",
-    # k-means-superstep-backed embedding pipelines (PERF_NOTES r11)
-    "e8_semantic_dedup", "e16_semantic_dedup_exact", "e15_pq_adc_exact",
-    # pandas-udf-dominated signature pass: in-suite min is 1.09-1.30 s
-    # across r8-r12 while fresh-JVM samples swing 1.39-4.47 s with the
-    # host window (PERF_NOTES r12) — the Python-worker warm-state case
-    "x_minhash_near_dups",
-})
+
+def _group_layers(spark, group: str) -> dict:
+    """Jobs, stages and summed executor run time (s) of one job group."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stage_ids: set[int] = set()
+    for j in jobs:
+        info = tracker.getJobInfo(j)
+        if info is not None:
+            stage_ids.update(info.stageIds)
+    store = jsc.statusStore()
+    run_ms = 0
+    for s in stage_ids:
+        try:
+            run_ms += store.lastStageAttempt(s).executorRunTime()
+        except Py4JJavaError:
+            # Past spark.ui.retainedStages the store evicts skipped stages
+            # (no completion time) first, even the current run's; a skipped
+            # stage ran no task.
+            pass
+    return {"jobs": len(jobs), "stages": len(stage_ids),
+            "task_s": round(run_ms / 1000.0, 3)}
 
 
-def estimator_for(name: str) -> str:
-    return "suite_min" if name in _SUITE_MIN_QUERIES else "isolate"
+def time_query(spark, name: str, fn, sf_dir: str, runs: int):
+    """Run ``fn(spark, sf_dir)`` into a noop sink ``runs`` times, each run in
+    its own job group; return ``(seconds, layers)`` of the fastest run.
 
-# Samples per query in the --isolate pass (min reported). VERDICT r9 ask
-# #2 asks for min-of-3 on the arbitration cluster; applying it to the
-# whole isolate pass keeps one estimator and makes the committed map
-# self-describing (the sample count is published in isolated_meta).
-ISOLATE_RUNS = 3
-
-
-def _calibrate(spark, sf_dir: str) -> float:
-    """Fixed calibration probe (VERDICT r9 ask #7): one mid-weight
-    scan+aggregate that never changes across rounds — lineitem grouped
-    by returnflag/status with sum/avg — timed min-of-3.  Run at suite
-    start and again at suite end; the ratio is the WITHIN-run ambient
-    drift factor this host exhibits (PERF_NOTES.md quantifies 8-10% per
-    suite pass at identical code), published in the bench JSON so raw
-    per-query seconds can be read against it."""
-    from pyspark.sql import functions as SF
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    probe = li.groupBy("l_returnflag", "l_linestatus").agg(
-        SF.sum("l_quantity"), SF.avg("l_extendedprice"),
-        SF.count("*"),
-    )
-    # one untimed execution first: the probe's own codegen compile and
-    # JIT state must not masquerade as drift (r10 run 1 measured
-    # cal_start 0.506 vs cal_end 0.163 purely from cold-start bias)
-    probe.write.format("noop").mode("overwrite").save()
-    best = None
-    for _ in range(3):
-        t0 = time.perf_counter()
-        probe.write.format("noop").mode("overwrite").save()
-        took = time.perf_counter() - t0
-        best = took if best is None else min(best, took)
-    return best
-
-
-def _task_time_ms(spark) -> float | None:
-    """Cumulative executor task time (ms) from the executor summaries.
-    Per-query DELTAS of this counter give task-time vs wall — the scaling
-    evidence sf0.1 wall clocks cannot show (VERDICT r13 "scale evidence
-    gap": 8-core ≈ 32-core for every query at this SF). A query whose
-    delta/wall ≈ 1 is serial no matter the core count; one at ≈ N is using
-    N cores. Additions-only instrumentation: the timed region is untouched
-    (status-store reads happen outside the timers). Reads ExecutorSummary
-    .totalDuration — ONE live object per executor, cumulative and never
-    evicted — NOT the per-stage list: iterating retained stages required
-    spark.ui.retainedStages to cover the whole run, and that retention
-    measurably slowed stage-heavy queries (17x on g_triangle_count). The
-    listener bus drains asynchronously, so a little tail task time can be
-    attributed to the next query — fine for a diagnostic ratio."""
-    try:
-        sc = spark.sparkContext
-        it = sc._jsc.sc().statusStore().executorList(False).iterator()
-        total = 0.0
-        while it.hasNext():
-            total += it.next().totalDuration()
-        return total
-    except Exception:
-        return None
-
-
-def _timed_run(fn, spark, sf_dir: str, name: str) -> float:
-    """One timed execution of a declared query.  st_* queries report
-    their summed micro-batch processing time (the StreamingQuery
-    progress durationMs.triggerExecution, via streaming.jobs
-    pop_drain_ms) instead of wall-clock (VERDICT r10 ask #3): a bounded
-    availableNow drain's wall is dominated by query startup + trigger
-    latency — the pure host-drift surface that made the st_* family
-    "regress" 2-3x as a block in r10 with zero code change.  Falls back
-    to wall-clock when no drain was recorded.  NOTE: this makes r11+
-    st_* numbers incomparable with <=r10 archives (they drop by the
-    startup cost); delta/regression flags treat them like any other
-    value, and PERF_NOTES documents the unit change."""
+    st_* queries report their summed micro-batch triggerExecution time
+    (streaming.jobs.pop_drain_ms) instead of wall, since an availableNow
+    drain's wall is mostly query startup; their micro-batch jobs run in the
+    stream's own job group, so their ``layers`` count only the driver side.
+    The session's cache is cleared afterwards: persisted operator frames
+    and checkpoint blocks otherwise pile up across the suite and slow its
+    tail."""
     from torcdb_spark.streaming.jobs import pop_drain_ms
 
-    pop_drain_ms()  # clear drains left by previous queries/runs
-    t0 = time.perf_counter()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    wall = time.perf_counter() - t0
-    if name.startswith("st_"):
-        ms = pop_drain_ms()
-        # every drain uses a fresh temp checkpoint, so finished queries'
-        # state-store providers can never be reused — but they stay
-        # loaded (plus a maintenance thread) until unloaded, and 100+
-        # drains per bench pass accumulate; stop() releases them all
-        try:
-            spark.sparkContext._jvm.org.apache.spark.sql.execution \
-                .streaming.state.StateStore.stop()
-        except Exception:
-            pass
-        if ms > 0:
-            return ms / 1000.0
-    return wall
+    sc = spark.sparkContext
+    best = None
+    try:
+        for _ in range(runs):
+            group = f"bench-{name}-{time.perf_counter_ns()}"
+            pop_drain_ms()
+            sc.setJobGroup(group, name)
+            try:
+                t0 = time.perf_counter()
+                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                took = time.perf_counter() - t0
+            finally:
+                sc.setJobGroup(None, None)
+            if name.startswith("st_"):
+                ms = pop_drain_ms()
+                # each drain leaves its state-store providers loaded
+                sc._jvm.org.apache.spark.sql.execution.streaming.state \
+                    .StateStore.stop()
+                if ms > 0:
+                    took = ms / 1000.0
+            if best is None or took < best[0]:
+                best = (took, _group_layers(spark, group))
+    finally:
+        spark.catalog.clearCache()
+        gc.collect()  # drop py4j refs so ContextCleaner can release blocks
+    return round(best[0], 3), best[1]
 
 
 def _warmup(spark, sf_dir: str) -> None:
-    # Warm-up (not counted), mirroring a production steady state:
-    # 1) JVM/codegen: every fixture table gets one full scan so first-touch
-    #    parquet footer reads / OS page-cache faults / codegen compiles are
-    #    paid here, not inside whichever query alphabetically hits the table
-    #    first (round 1's d1_dedup_exact "9.4 s anomaly" was exactly this:
-    #    first documents.parquet scan + whole-stage-codegen compile of the
-    #    regexp/xxhash pipeline — the warm operator runs in 0.4 s);
-    # 2) Python UDF workers: a one-row pandas_udf so the worker pool spawns
-    #    and imports numpy/pandas before any timed query;
-    # 3) graph handle: the one-time graph materialization is load/ingest
-    #    (the reference likewise loads LDBC data before measuring queries).
+    # Paid before any timed query: first scans of every table (footers,
+    # page cache, codegen), the Python UDF worker pool, and the one-time
+    # graph materialization (the reference also loads its data first).
+    from pyspark.sql.functions import col, pandas_udf
+
+    from torcdb_spark.graph import PropertyGraph
     from torcdb_spark.sources.tables import TABLE_NAMES
 
     for t in TABLE_NAMES:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").write.format("noop").mode(
             "overwrite"
         ).save()
-    from pyspark.sql.functions import col, pandas_udf
 
     def _warm_fn(v: pd.Series) -> pd.Series:
         return v * 1.0
@@ -222,555 +150,133 @@ def _warmup(spark, sf_dir: str) -> None:
     spark.range(64).repartition(64).select(_warm(col("id").cast("double"))).write.format(
         "noop"
     ).mode("overwrite").save()
-    from torcdb_spark.graph import PropertyGraph
-
     PropertyGraph.open(spark, sf_dir).edges.count()
 
 
-def _isolate_main(names: list[str]) -> None:
-    """--isolate mode: time ONLY the named queries in this (fresh)
-    process — same warm-up, same noop sink, same min-of-n estimator as
-    the main pass. A fresh JVM with an otherwise idle suite is the
-    arbiter between "the suite got crowded" (contention) and "the plan
-    got slower" (real regression); the main pass invokes this in a
-    subprocess for every regressed_vs_prev entry so the artifact itself
-    carries both numbers."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from torcdb_spark.session import get_spark
-    from torcdb_spark.queries import queries
-
-    spark = get_spark(app_name="torcdb_spark-bench-isolate")
-    spark.sparkContext.setLogLevel("ERROR")
-    t0 = time.perf_counter()
-    _warmup(spark, sf_dir)
-    # Calibration context for the isolate pass itself (VERDICT r12 ask
-    # #6): the same fixed probe the suite brackets itself with, run at
-    # isolate-pass start and end, plus a per-query offset clock — so a
-    # drift_factor >1 round can show WHEN each isolate sample ran
-    # relative to the slow window instead of asserting it.
-    cal_start = _calibrate(spark, sf_dir)
-    n_runs = max(
-        1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", str(ISOLATE_RUNS)))
-    )
-    qmap = dict(queries().items())
-    out: dict[str, float] = {}
-    t_offset: dict[str, float] = {}
-    for name in names:
-        if name not in qmap:
+def run_suite(spark, items, sf_dir: str, runs: int, deadline: float):
+    """Time each ``(name, fn)`` until ``time.monotonic()`` passes
+    ``deadline``; return ``(timings, layers, incomplete)``."""
+    timings: dict[str, float] = {}
+    layers: dict[str, dict] = {}
+    incomplete: list[str] = []
+    for name, fn in items:
+        if time.monotonic() >= deadline:
+            incomplete.append(name)
             continue
-        t_offset[name] = round(time.perf_counter() - t0, 1)
-        best = None
-        for _ in range(n_runs):
-            try:
-                took = _timed_run(qmap[name], spark, sf_dir, name)
-                best = took if best is None else min(best, took)
-            except Exception as exc:
-                best = -1.0
-                print(f"bench --isolate: {name} FAILED: {exc}",
-                      file=sys.stderr)
-                break
-        out[name] = round(best, 3)
-        spark.catalog.clearCache()
-    cal_end = _calibrate(spark, sf_dir)
-    # self-describing artifact (VERDICT r9 ask #4): the sample count
-    # rides along so a committed isolated value can be judged
-    print(json.dumps({
-        "timings": out, "samples": n_runs,
-        "cal": [round(cal_start, 3), round(cal_end, 3)],
-        "t_offset": t_offset,
-    }))
+        try:
+            timings[name], layers[name] = time_query(spark, name, fn, sf_dir, runs)
+        except Exception as exc:  # a failing query must not sink the bench
+            timings[name] = -1.0
+            print(f"bench: {name} FAILED: {exc}", file=sys.stderr)
+        print(f"bench: {name} {timings[name]}s", file=sys.stderr)
+        if len(timings) % 15 == 0:
+            spark.sparkContext._jvm.java.lang.System.gc()
+    return timings, layers, incomplete
+
+
+def delta_vs_prev(prev: dict, timings: dict[str, float], sf: float):
+    """``(delta_vs_prev, prev_total)`` against a previous record; empty when
+    it was taken at another scale."""
+    if prev.get("sf") != sf:
+        return {}, None
+    before = prev.get("queries", {})
+    delta = {
+        k: round(v - before[k], 3)
+        for k, v in timings.items()
+        if v >= 0 and before.get(k, -1) >= 0
+    }
+    return delta, prev.get("value")
+
+
+def compact_line(full: dict) -> str:
+    """The final stdout line, at most COMPACT_CHARS chars of JSON: the fixed
+    fields and the sentinels, then as many incomplete names, then as many of
+    the slowest queries, as fit."""
+    timings = full["queries"]
+    slowest = sorted((k for k, v in timings.items() if v >= 0),
+                     key=lambda k: -timings[k])
+    pinned = [k for k in SENTINELS if k in slowest]
+    compact = {
+        k: full[k] for k in ("metric", "value", "unit", "runs_per_query",
+                             "sf", "prev_total", "wall_s")
+    }
+    compact.update(
+        queries={k: timings[k] for k in dict.fromkeys(pinned + slowest)},
+        n_queries=len(timings), n_incomplete=len(full["incomplete"]),
+        incomplete=list(full["incomplete"]), detail="bench_detail.json",
+    )
+
+    def line() -> str:
+        return json.dumps(compact, separators=(",", ":"))
+
+    while len(line()) > COMPACT_CHARS and len(compact["queries"]) > len(pinned):
+        compact["queries"].popitem()
+    while len(line()) > COMPACT_CHARS:
+        compact["incomplete"].pop()
+    return line()
 
 
 def main() -> None:
-    if len(sys.argv) > 1 and sys.argv[1] == "--isolate":
-        _isolate_main(sys.argv[2:])
-        return
-    # --round N: label for the per-round archive (bench_detail_r{N}.json).
-    # Without it the round is inferred as max(BENCH_r{K})+1 — correct for
-    # the driver's in-round run, but a MANUAL re-run after the driver has
-    # written this round's BENCH_r{N} would mislabel the archive one round
-    # ahead (indistinguishable by file state); pass --round explicitly
-    # when re-running by hand.
+    start = time.monotonic()
+    # --round N labels the archive; by default it is the round after the
+    # newest BENCH_rNN.json, which is wrong for a re-run after that round's
+    # BENCH file was written.
     explicit_round = None
     if "--round" in sys.argv:
-        i = sys.argv.index("--round")
-        explicit_round = int(sys.argv[i + 1])
+        explicit_round = int(sys.argv[sys.argv.index("--round") + 1])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
+    runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
 
-    from torcdb_spark.session import get_spark
     from torcdb_spark.queries import queries
+    from torcdb_spark.session import get_spark
 
     spark = get_spark(app_name="torcdb_spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
     _warmup(spark, sf_dir)
-    cal_start = _calibrate(spark, sf_dir)
-
-    # n runs per query, min reported: a single sample conflates query work
-    # with JVM noise (GC pauses, first-compile of a new codegen class); the
-    # min of n>=2 is the steady-state cost a production cluster would see.
-    n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
-
-    timings: dict[str, float] = {}
-    parallelism: dict[str, float] = {}
-    suite_t0 = time.perf_counter()
-    query_t_offset: dict[str, float] = {}
-    cal_mid = None
-    q_items = sorted(queries().items())
-    for qi, (name, fn) in enumerate(q_items):
-        if qi == len(q_items) // 2:
-            # head/mid/tail calibration series (VERDICT r12 ask #6):
-            # three probes locate the slow window within the run
-            # instead of the two-point drift_factor asserting it
-            cal_mid = _calibrate(spark, sf_dir)
-        query_t_offset[name] = round(time.perf_counter() - suite_t0, 1)
-        best = None
-        task0 = _task_time_ms(spark)
-        wall0 = time.perf_counter()
-        for _ in range(n_runs):
-            try:
-                took = _timed_run(fn, spark, sf_dir, name)
-                best = took if best is None else min(best, took)
-            except Exception as exc:  # a failing query must not sink the bench
-                best = -1.0
-                print(f"bench: {name} FAILED: {exc}", file=sys.stderr)
-                break
-        task1 = _task_time_ms(spark)
-        wall_sum = time.perf_counter() - wall0
-        if task0 is not None and task1 is not None and wall_sum > 0 and best != -1.0:
-            parallelism[name] = round((task1 - task0) / 1000.0 / wall_sum, 2)
-        timings[name] = round(best, 3)
-        print(f"bench: {name} {timings[name]}s", file=sys.stderr)
-        # Session hygiene between queries: operator-level persists
-        # (both_edges, triangle orientation, q11/q15 self-joins, tfidf)
-        # and iterative localCheckpoint blocks otherwise accumulate across
-        # 100+ queries x n runs and degrade the tail of the run by 3-10x
-        # (measured: t8_degree_out 0.33s fresh vs 2.8s at position ~100).
-        # Within one query's n runs the caches still warm normally; the
-        # reported min is the steady per-query cost.
-        import gc
-
-        spark.catalog.clearCache()
-        gc.collect()  # drop py4j refs so ContextCleaner can release blocks
-        if qi % 15 == 14:
-            spark.sparkContext._jvm.java.lang.System.gc()
-
-    # Load the two comparison baselines BEFORE the recheck pass so
-    # preliminary flag candidates can be folded into it: a suite_min-class
-    # query arbitrates on its in-suite minimum, so the flagged set must
-    # receive extra suite samples (the slowest decile alone can miss a
-    # 1 s query that tripled).
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "bench_detail.json"
+    timings, layers, incomplete = run_suite(
+        spark, sorted(queries().items()), sf_dir, runs, start + BUDGET_S
     )
-    prev: dict[str, float] = {}
-    prev_total = None
+    spark.stop()
+
+    detail_path = os.path.join(REPO, "bench_detail.json")
     try:
         with open(detail_path) as f:
-            prev_full = json.load(f)
-        prev = {
-            k: v for k, v in prev_full.get("queries", {}).items() if v >= 0
-        }
-        prev_total = prev_full.get("value")
+            prev = json.load(f)
     except (OSError, ValueError):
-        pass
-    repo_dir_early = os.path.dirname(os.path.abspath(__file__))
-    prev_round: dict[str, float] = {}
-    prev_round_no = None
-    round_archives = sorted(
-        (int(mm.group(1)), fn)
-        for fn in os.listdir(repo_dir_early)
-        if (mm := re.match(r"bench_detail_r(\d+)\.json$", fn))
-    )
-    carryover: dict[str, dict] = {}
-    if round_archives:
-        prev_round_no, fn = round_archives[-1]
-        try:
-            with open(os.path.join(repo_dir_early, fn)) as f:
-                pr_full = json.load(f)
-            prev_round = {
-                k: v
-                for k, v in pr_full.get("queries", {}).items()
-                if v >= 0
-            }
-            # Open (closed: false) flags from the prior round carry
-            # over for re-arbitration (VERDICT r12 ask #1): a flag the
-            # estimator could not close in its own round gets fresh
-            # estimator-class samples THIS round — isolate-class joins
-            # the isolate pass, suite_min-class joins the recheck pass
-            # — and closes (or not) against its ORIGINAL baseline, so
-            # "likely environmental" becomes a recorded verdict
-            # instead of prose.
-            carryover = {
-                k: v
-                for k, v in pr_full.get("flags", {}).items()
-                if isinstance(v, dict) and not v.get("closed")
-            }
-        except (OSError, ValueError):
-            prev_round = {}
-
-    # Adaptive outlier re-measurement: transient host noise (microVM CPU
-    # steal lasting minutes) can inflate BOTH primary runs of whichever
-    # queries it overlaps — observed 1.3 s-warm queries recording 23 s.
-    # Re-run the slowest decile after the main pass (by then the noise
-    # window has usually moved) and keep the min; an honest minimum, same
-    # estimator, just more samples exactly where noise concentrates.
-    # PLUS every preliminary flag candidate (>=1.5x either baseline):
-    # suite_min-class flags arbitrate on this re-sampled in-suite min.
-    n_recheck = max(4, len(timings) // 10)
-    recheck = sorted(
-        (k for k, v in timings.items() if v >= 0),
-        key=lambda k: -timings[k],
-    )[:n_recheck]
-    prelim = {
-        k for k, v in timings.items()
-        if v >= 0 and (
-            (k in prev and v >= prev[k] * 1.5)
-            or (k in prev_round and v >= prev_round[k] * 1.5)
-        )
-    }
-    # suite_min-class carryover flags arbitrate on the re-sampled
-    # in-suite min: force them into the recheck pass even when this
-    # round's primary samples did not re-flag them
-    carry_suite = sorted(
-        k for k in carryover
-        if estimator_for(k) == "suite_min" and timings.get(k, -1) >= 0
-    )
-    recheck = list(dict.fromkeys([*recheck, *sorted(prelim), *carry_suite]))
-    qmap = dict(queries().items())
-    for name in recheck:
-        # The >2 s tail gets TWO recheck samples (effective min-of-4):
-        # iterative/embedding queries there show the largest run-to-run
-        # jitter and have generated every false regression flag so far —
-        # bounded extra wall time (~10 queries x ~3 s) buys flag stability.
-        extra = 2 if timings[name] > 2.0 else 1
-        for _ in range(extra):
-            try:
-                took = _timed_run(qmap[name], spark, sf_dir, name)
-                timings[name] = round(min(timings[name], took), 3)
-            except Exception as exc:
-                print(f"bench: recheck {name} FAILED: {exc}", file=sys.stderr)
-                break
-            spark.catalog.clearCache()
-            gc.collect()
-        print(f"bench: recheck {name} {timings[name]}s", file=sys.stderr)
-
-    # End-of-suite calibration re-run: cal_end / cal_start is the
-    # within-run drift this pass experienced (the suite runs queries in
-    # sorted order, so position is stable round-over-round and the
-    # factor mostly cancels in cross-round deltas — it is published so
-    # raw seconds are readable, and it widens the absolute-delta floor
-    # of the regression flags below).
-    cal_end = _calibrate(spark, sf_dir)
-    drift_factor = round(cal_end / cal_start, 3) if cal_start else 1.0
-
-    total = round(sum(t for t in timings.values() if t >= 0), 3)
-    # Per-query delta vs the previous recorded run (bench_detail.json from
-    # the last round, loaded above), so regressions surface in the artifact
-    # itself rather than in cross-round archaeology. Positive = slower.
-    # The prior ROUND's archive (bench_detail_r{K}.json) is compared too:
-    # comparing only against the working file masks round-over-round creep
-    # whenever an intra-round re-run lands in between (VERDICT r9 #2).
-    delta = {
-        k: round(v - prev[k], 3)
-        for k, v in timings.items()
-        if v >= 0 and k in prev
-    }
-    # Ambient drift vs per-query regression: a shared-host machine can be
-    # uniformly 1.3-2x slower between runs (observed round 7: median
-    # ratio 1.31 across ~240 UNCHANGED queries). The median cur/prev
-    # ratio estimates that environment factor; regressions are flagged
-    # RELATIVE to it, so a uniformly slow day doesn't spray false
-    # positives and a genuinely slower plan still stands out.
-    ratios = sorted(
-        timings[k] / prev[k]
-        for k in delta
-        if prev[k] > 0.05 and timings[k] >= 0
-    )
-    median_ratio = ratios[len(ratios) // 2] if ratios else 1.0
-    ambient = max(1.0, median_ratio)
-    # The biggest regressions (>=1.5x the ambient factor AND a >=0.5s
-    # absolute delta, widened by the measured within-run drift — ratio
-    # alone flags 0.1s->0.2s noise) get re-timed in a FRESH subprocess
-    # (--isolate): in-suite time vs fresh-JVM time distinguishes suite
-    # contention from a genuinely slower plan, in the artifact itself.
-    abs_floor = 0.5 * max(1.0, drift_factor)
-    regressed = {
-        k: [prev[k], timings[k]]
-        for k in sorted(delta, key=lambda k: -delta[k])[:5]
-        if timings[k] >= prev[k] * 1.5 * ambient and delta[k] >= abs_floor
-    }
-    # Same criteria against the prior ROUND's archive, with its own
-    # ambient estimate (the environment factor between driver rounds is
-    # independent of the one between working-file runs).
-    round_ratios = sorted(
-        timings[k] / prev_round[k]
-        for k in prev_round
-        if prev_round[k] > 0.05 and timings.get(k, -1) >= 0
-    )
-    round_median = (
-        round_ratios[len(round_ratios) // 2] if round_ratios else 1.0
-    )
-    round_ambient = max(1.0, round_median)
-    regressed_vs_round = {
-        k: [prev_round[k], timings[k]]
-        for k in sorted(
-            (k for k in prev_round if timings.get(k, -1) >= 0),
-            key=lambda k: prev_round[k] - timings[k],
-        )[:5]
-        if timings[k] >= prev_round[k] * 1.5 * round_ambient
-        and timings[k] - prev_round[k] >= abs_floor
-    }
-    isolated: dict[str, float] = {}
-    isolate_samples = None
-    isolated_cal = None
-    isolated_t_offset: dict[str, float] = {}
-    to_isolate = sorted(
-        set(regressed)
-        | set(regressed_vs_round)
-        | {q for q in FORCE_ISOLATE if q in timings}
-        | {k for k in carryover
-           if estimator_for(k) == "isolate" and timings.get(k, -1) >= 0}
-    )
-    if to_isolate and not os.environ.get("SPARK_GRAFT_NO_ISOLATE"):
-        import subprocess
-
-        try:
-            r = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--isolate",
-                 *to_isolate],
-                capture_output=True, text=True, timeout=2400,
-                cwd=os.path.dirname(os.path.abspath(__file__)),
-            )
-            payload = json.loads(r.stdout.strip().splitlines()[-1])
-            if isinstance(payload, dict) and "timings" in payload:
-                isolated = payload["timings"]
-                isolate_samples = payload.get("samples")
-                isolated_cal = payload.get("cal")
-                isolated_t_offset = payload.get("t_offset") or {}
-            else:  # pre-r10 shape
-                isolated = payload
-        except Exception as exc:
-            print(f"bench: isolate pass failed: {exc}", file=sys.stderr)
-
-    # Flag arbitration against the DECLARED estimator (VERDICT r11
-    # "what's wrong" #3, mechanized): each flag closes or stays open by
-    # comparing its estimator-class value — fresh-JVM isolated min for
-    # scan/join work, re-sampled in-suite min for superstep/JIT-bound
-    # work — against the same criterion that raised it.  "closed": true
-    # means contention/noise demonstrated by the declared estimator;
-    # false means the regression survived its own estimator and needs a
-    # plan audit, no prose arbitration in between.
-    flags: dict[str, dict] = {}
-    for k in sorted(set(regressed) | set(regressed_vs_round)):
-        est = estimator_for(k)
-        suite_v = timings.get(k)
-        iso_v = isolated.get(k)
-        arbitrated = (
-            iso_v
-            if est == "isolate" and iso_v is not None and iso_v >= 0
-            else suite_v
-        )
-        checks = []
-        if k in regressed:
-            base = regressed[k][0]
-            checks.append(
-                arbitrated < base * 1.5 * ambient
-                or arbitrated - base < abs_floor
-            )
-        if k in regressed_vs_round:
-            base = regressed_vs_round[k][0]
-            checks.append(
-                arbitrated < base * 1.5 * round_ambient
-                or arbitrated - base < abs_floor
-            )
-        flags[k] = {
-            "estimator": est,
-            "suite_min": suite_v,
-            "isolated": iso_v,
-            "arbitrated": arbitrated,
-            "vs_prev": regressed.get(k, [None])[0],
-            "vs_round": regressed_vs_round.get(k, [None])[0],
-            "closed": bool(checks) and all(checks),
-            "isolated_at": isolated_t_offset.get(k),
-        }
-    # Carryover re-arbitration (VERDICT r12 ask #1): every flag the
-    # prior round left open gets a verdict THIS round from fresh
-    # estimator-class samples against its ORIGINAL baseline — so a
-    # slow-window artifact closes mechanically one round later instead
-    # of staying "likely environmental" prose forever.
-    for k, old in carryover.items():
-        if k in flags:  # re-flagged on current data; that entry governs
-            flags[k]["carryover_from"] = prev_round_no
-            continue
-        est = estimator_for(k)
-        suite_v = timings.get(k)
-        iso_v = isolated.get(k)
-        arbitrated = (
-            iso_v
-            if est == "isolate" and iso_v is not None and iso_v >= 0
-            else suite_v
-        )
-        base = old.get("vs_round")
-        if base is None:
-            base = old.get("vs_prev")
-        flags[k] = {
-            "estimator": est,
-            "suite_min": suite_v,
-            "isolated": iso_v,
-            "arbitrated": arbitrated,
-            "vs_prev": old.get("vs_prev"),
-            "vs_round": old.get("vs_round"),
-            "closed": (
-                arbitrated is not None and arbitrated >= 0
-                and base is not None
-                and (arbitrated < base * 1.5 * round_ambient
-                     or arbitrated - base < abs_floor)
-            ),
-            "isolated_at": isolated_t_offset.get(k),
-            "carryover_from": prev_round_no,
-        }
-    estimator_tags = {k: estimator_for(k) for k in to_isolate}
-
+        prev = {}
+    delta, prev_total = delta_vs_prev(prev, timings, sf)
     full = {
         "metric": "total wall sec over declared query inventory",
-        "value": total,
+        "value": round(sum(t for t in timings.values() if t >= 0), 3),
         "unit": "sec",
         "queries": timings,
+        "layers": layers,
+        "incomplete": incomplete,
         "delta_vs_prev": delta,
         "prev_total": prev_total,
-        "median_ratio_vs_prev": round(median_ratio, 3),
-        "regressed_vs_round": regressed_vs_round,
-        "prev_round_compared": prev_round_no,
-        "median_ratio_vs_round": round(round_median, 3),
-        "isolated": isolated,
-        "isolate_samples": isolate_samples,
-        "estimator": estimator_tags,
-        "flags": flags,
-        # head/mid/tail calibration series + per-query start offsets
-        # (VERDICT r12 ask #6): enough context to LOCATE a slow window
-        # within the run — drift_factor stays end/start for continuity
-        "calibration_sec": [
-            round(cal_start, 3),
-            round(cal_mid, 3) if cal_mid is not None else None,
-            round(cal_end, 3),
-        ],
-        "query_t_offset": query_t_offset,
-        # task-time/wall ratio per query (≈ cores actually used): the
-        # scaling probe VERDICT r13 #7 asked for — serial stages are
-        # visible as ratio ≈ 1 even though sf0.1 wall is core-insensitive
-        "parallelism": parallelism,
-        "isolated_cal": isolated_cal,
-        "isolated_t_offset": isolated_t_offset,
-        "drift_factor": drift_factor,
-        "runs_per_query": n_runs,
-        # unit marker (r11+): st_* values are summed micro-batch
-        # triggerExecution seconds, not wall-clock — see _timed_run
+        "runs_per_query": runs,
+        "budget_s": BUDGET_S,
+        "wall_s": round(time.monotonic() - start, 1),
+        # st_* values are summed micro-batch triggerExecution seconds
         "st_timing": "micro-batch triggerExecution",
         "sf": sf,
     }
-    # The driver keeps only the last ~2000 chars of stdout and parses the
-    # final line as JSON; the full per-query dict (95+ entries, ~2.7 KB)
-    # overflows that window (BENCH_r02: "parsed": null).  So: full detail
-    # goes to a file + an early stdout line, and the FINAL line is a
-    # compact summary (slowest queries only) guaranteed to fit.
-    with open(detail_path, "w") as f:
-        json.dump(full, f)
-    # Archive the full per-query map per ROUND (bench_detail_r{N}.json,
-    # N inferred as max existing BENCH_r{K}+1 — the driver writes
-    # BENCH_r{N} only after this run), so cross-round per-query
-    # comparisons ("what was ivm2 at r6?") stop depending on the
-    # overwritten working file / git archaeology.
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
     rounds = [
         int(mm.group(1))
-        for fn in os.listdir(repo_dir)
+        for fn in os.listdir(REPO)
         if (mm := re.match(r"BENCH_r(\d+)\.json$", fn))
     ]
     round_no = explicit_round or ((max(rounds) + 1) if rounds else 1)
-    with open(
-        os.path.join(repo_dir, f"bench_detail_r{round_no:02d}.json"), "w"
-    ) as f:
-        json.dump(full, f)
-    # Regenerate PLAN_AUDIT.md from THIS run's top-10 (VERDICT r8 ask #2:
-    # the artifact went stale whenever plan_audit wasn't re-run by hand
-    # after a bench; wiring it here makes staleness impossible). Fresh
-    # subprocess after spark.stop() so the audit session owns the JVM
-    # memory; failure/timeout must not sink the bench record.
-    spark.stop()
-    if not os.environ.get("SPARK_GRAFT_NO_PLAN_AUDIT"):
-        import subprocess
-
-        try:
-            r = subprocess.run(
-                [sys.executable, os.path.join(repo_dir, "tools",
-                                              "plan_audit.py"), "10"],
-                capture_output=True, text=True, timeout=1200, cwd=repo_dir,
-            )
-            if r.returncode == 0:
-                print("bench: PLAN_AUDIT.md regenerated", file=sys.stderr)
-            else:  # don't claim a regenerated artifact on failure
-                print(
-                    "bench: plan audit FAILED "
-                    f"(rc={r.returncode}): {r.stderr.strip()[-400:]}",
-                    file=sys.stderr,
-                )
-        except Exception as exc:
-            print(f"bench: plan audit failed: {exc}", file=sys.stderr)
-    print(json.dumps(full))  # full record, for human/file consumers
-
-    slowest = dict(
-        sorted(
-            ((k, v) for k, v in timings.items() if v >= 0),
-            key=lambda kv: -kv[1],
-        )
-    )
-    compact = {
-        "metric": "total wall sec over declared query inventory",
-        "value": total,
-        "unit": "sec",
-        "queries": {},
-        "n_queries": len(timings),
-        "runs_per_query": n_runs,
-        "sf": sf,
-        "prev_total": prev_total,
-        "median_ratio_vs_prev": round(median_ratio, 3),
-        "regressed_vs_prev": regressed,
-        "regressed_vs_round": regressed_vs_round,
-        "isolated": isolated,
-        "isolate_samples": isolate_samples,
-        "flags": flags,
-        "drift_factor": drift_factor,
-        "detail": "bench_detail.json",
-    }
-    budget = 1500 - len(json.dumps(compact, separators=(",", ":")))
-    # Fixed scaling sentinels FIRST (VERDICT r13 #7): the driver benches
-    # at two core counts and intersects the printed per-query maps to
-    # build its scaling block — two top-12-by-slowness sets need not
-    # overlap across runs (r13: per_query came back empty), so a stable
-    # family-spanning subset is pinned into the compact line before the
-    # budget fills with the slowest queries.
-    sentinel_order = [
-        "e16_semantic_dedup_exact", "ssj1_jaccard_join", "g_betweenness",
-        "d20_bpe_encode", "q9_profit_by_nation_year", "x_minhash_near_dups",
-        "m8_video_frames", "st_interval_join_stream",
-    ]
-    for k in (*sentinel_order, *slowest):
-        if k in compact["queries"]:
-            continue
-        v = timings.get(k, -1.0)
-        if v < 0:
-            continue
-        entry = len(k) + 10
-        if budget - entry < 0:
-            if k in sentinel_order:
-                continue
-            break
-        compact["queries"][k] = v
-        budget -= entry
+    for path in (detail_path, os.path.join(REPO, f"bench_detail_r{round_no:02d}.json")):
+        with open(path, "w") as f:
+            json.dump(full, f)
+    # The full record, then the compact line: a reader that keeps only the
+    # tail of stdout parses the last line.
+    print(json.dumps(full))
     sys.stdout.flush()
-    print(json.dumps(compact, separators=(",", ":")))
+    print(compact_line(full))
 
 
 if __name__ == "__main__":

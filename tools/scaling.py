@@ -1,15 +1,18 @@
 #!/usr/bin/env python
-"""Scaling-slope artifact generator (VERDICT r8 ask #3): times the N most
-expensive queries of the latest bench record at ALL THREE fixture scale
-factors (sf0.001 / sf0.01 / sf0.1 — 100× row growth end-to-end) and
-reports the wall-time-vs-data log-log slope per query, converting the
-"fixed superstep overhead dominates at sf0.1" claim into evidence.
+"""Scaling slopes of the most expensive queries, written to SCALING.md.
 
-slope = log(t_sf0.1 / t_sf0.001) / log(100): ~0 means the cost is fixed
-overhead (bounded-core witnesses, iterative superstep scheduling), ~1
-means linear in the data, >1 is super-linear and gets a root-cause note.
+Usage:
+  python tools/scaling.py [N | name ...]   the N (default 10) slowest queries
+      of bench_detail.json, or the named ones, at sf0.001, sf0.01 and sf0.1
+  python tools/scaling.py --synth-decade   relational/graph queries at sf0.1
+      and at a key-shifted, text-free 10x replication of lineitem/orders
+  python tools/scaling.py --dedup-decade   the dedup family at 5k and 50k
+      hash-derived distinct-text documents
 
-Usage: python tools/scaling.py [N | name ...]   (writes SCALING.md)
+Each mode rewrites only its own section of SCALING.md. slope =
+log(t_big / t_small) / log(data ratio): ~0 means fixed overhead (bounded-core
+witnesses, superstep scheduling) dominates, ~1 linear in the data, >1
+super-linear. Every cell is min-of-2 through bench.py's ``time_query``.
 """
 
 from __future__ import annotations
@@ -18,205 +21,14 @@ import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SFS = ("0.001", "0.01", "0.1")
-
-
-def main() -> None:
-    from torcdb_spark.queries import queries
-    from torcdb_spark.session import get_spark
-
-    qs = queries()
-    args = sys.argv[1:]
-    if args and not args[0].isdigit():
-        names = args
-    else:
-        n = int(args[0]) if args else 10
-        with open(os.path.join(REPO, "bench_detail.json")) as f:
-            timings = json.load(f)["queries"]
-        names = [
-            k
-            for k, _ in sorted(timings.items(), key=lambda kv: -kv[1])
-            if k in qs and not k.startswith("st_")
-        ][:n]
-
-    spark = get_spark(app_name="torcdb_spark-scaling")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    from torcdb_spark.sources.tables import TABLE_NAMES, load_table
-
-    rows_at: dict[str, int] = {}
-    for sf in SFS:
-        sf_dir = f"/root/testdata/sf{sf}"
-        total = 0
-        for t in TABLE_NAMES:
-            total += spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
-        rows_at[sf] = total
-
-    import gc
-
-    result: dict[str, dict[str, float]] = {k: {} for k in names}
-    for sf in SFS:
-        sf_dir = f"/root/testdata/sf{sf}"
-        # per-SF warmup: pay footer reads / codegen outside the timings
-        for t in TABLE_NAMES:
-            load_table(spark, sf_dir, t).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        for name in names:
-            best = None
-            try:
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    qs[name](spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    took = time.perf_counter() - t0
-                    best = took if best is None else min(best, took)
-            except Exception as exc:
-                print(f"scaling: {name}@sf{sf} FAILED: {exc}",
-                      file=sys.stderr)
-                best = -1.0
-            result[name][sf] = round(best, 3)
-            spark.catalog.clearCache()
-            gc.collect()
-            print(f"scaling: {name}@sf{sf} {result[name][sf]}s",
-                  file=sys.stderr)
-
-    # Burst re-measurement (same mechanism as bench.py's recheck pass):
-    # the shared host delivers multi-second CPU-steal bursts that land on
-    # whichever cell is executing — observed ssj1@sf0.1 119 s vs 4.7 s in
-    # the same hour, g_betweenness@sf0.1 95 s on the immediate re-run. A
-    # cell is suspect when it exceeds 2× the same query's bench_detail
-    # suite record (sf0.1 anchor) or sits non-monotonically above the
-    # sf0.1 cell. Two sweeps, min kept — by the second sweep the burst
-    # window has usually moved.
-    bench: dict[str, float] = {}
-    try:
-        with open(os.path.join(REPO, "bench_detail.json")) as f:
-            bench = {
-                k: v for k, v in json.load(f)["queries"].items() if v > 0
-            }
-    except (OSError, ValueError, KeyError):
-        pass
-
-    def suspect(name: str, sf: str) -> bool:
-        t = result[name][sf]
-        if t < 0:
-            return False
-        if sf == "0.1" and bench.get(name, 0) > 0 and t > 2 * bench[name]:
-            return True
-        return sf != "0.1" and result[name]["0.1"] > 0 and (
-            t > 1.5 * result[name]["0.1"]
-        )
-
-    for sweep in range(2):
-        flagged = [
-            (name, sf)
-            for name in names
-            for sf in SFS
-            if suspect(name, sf)
-        ]
-        if not flagged:
-            break
-        for name, sf in flagged:
-            sf_dir = f"/root/testdata/sf{sf}"
-            try:
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    qs[name](spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    result[name][sf] = round(
-                        min(result[name][sf], time.perf_counter() - t0), 3
-                    )
-            except Exception as exc:
-                print(f"scaling: recheck {name}@sf{sf} FAILED: {exc}",
-                      file=sys.stderr)
-            spark.catalog.clearCache()
-            gc.collect()
-            print(
-                f"scaling: recheck[{sweep}] {name}@sf{sf} "
-                f"{result[name][sf]}s",
-                file=sys.stderr,
-            )
-
-    data_ratio = rows_at["0.1"] / rows_at["0.001"]
-    out = [
-        "# SCALING — wall-time slope of the most expensive queries across "
-        "sf0.001 → sf0.1",
-        "",
-        f"Generated by tools/scaling.py (min-of-2 per cell, noop sink, "
-        f"local[{spark.sparkContext.defaultParallelism}]). Fixture rows: "
-        + ", ".join(f"sf{sf}={rows_at[sf]:,}" for sf in SFS)
-        + f" ({data_ratio:.0f}× end-to-end).",
-        "",
-        "slope = log(t_sf0.1/t_sf0.001)/log(rows_sf0.1/rows_sf0.001): "
-        "**~0** = fixed overhead dominates (bounded-core witness or "
-        "superstep scheduling, NOT data volume); **~1** = linear in the "
-        "data; **>1** = super-linear (root-cause note below).",
-        "",
-        "| query | sf0.001 s | sf0.01 s | sf0.1 s | slope |",
-        "|---|---|---|---|---|",
-    ]
-    superlinear = []
-    for name in names:
-        r = result[name]
-        if min(r.values()) < 0:
-            out.append(f"| {name} | {r['0.001']} | {r['0.01']} | {r['0.1']} "
-                       "| (failed) |")
-            continue
-        slope = (
-            math.log(max(r["0.1"], 1e-3) / max(r["0.001"], 1e-3))
-            / math.log(data_ratio)
-        )
-        out.append(
-            f"| {name} | {r['0.001']} | {r['0.01']} | {r['0.1']} "
-            f"| {slope:.2f} |"
-        )
-        if slope > 1.05:
-            superlinear.append((name, slope))
-    out.append("")
-    if superlinear:
-        out.append("## Super-linear queries (need a root-cause note)")
-        out.append("")
-        for name, slope in superlinear:
-            out.append(f"- **{name}** (slope {slope:.2f})")
-        out.append("")
-    out.append(
-        "## Why no sf1 column (VERDICT r9 ask #8)\n\n"
-        "The driver provides fixtures only at sf0.001/0.01/0.1 — there "
-        "is no sf1 parquet to extend the series with. Synthesizing one "
-        "by replicating sf0.1 with shifted keys was considered and "
-        "rejected: replicated document TEXT corrupts exactly the "
-        "measurements that matter (the dedup/similarity family — d13, "
-        "d26, ssj1, m7b — would see every row gain 10 near-identical "
-        "twins, inflating candidate-pair counts quadratically inside "
-        "LSH buckets and measuring the synthetic duplication, not the "
-        "operator's scaling). For the families that DON'T share that "
-        "objection (relational aggregates, graph algorithms over keyed "
-        "edges) a key-shifted TEXT-FREE decade exists — see the "
-        "'Synthetic text-free decade' section (tools/scaling.py "
-        "--synth-decade).\n"
-    )
-    path = os.path.join(REPO, "SCALING.md")
-    synth_block = _read_synth_block(path)
-    with open(path, "w") as f:
-        f.write("\n".join(out) + "\n")
-        if synth_block:
-            f.write(synth_block)
-    print(f"wrote SCALING.md ({len(names)} queries)")
-
-
-# ---------------------------------------------------------------------------
-# Synthetic text-free scale decade (VERDICT r10 ask #6)
-# ---------------------------------------------------------------------------
-
+MAIN_MARK = "# SCALING"
 SYNTH_MARK = "## Synthetic text-free decade"
+DEDUP_MARK = "## Dedup-family synthetic decade"
 
 # Relational/graph queries whose inputs are the key-shifted fact tables
 # (lineitem/orders) and the graph built over them — NO document text,
@@ -237,17 +49,171 @@ SYNTH_QUERIES = (
 )
 
 
-def _read_synth_block(path: str) -> str:
-    """Return the marker-delimited synth-decade section of SCALING.md
-    (so the main regeneration preserves it, and the synth mode replaces
-    only its own block)."""
+def _session(app_name: str):
+    from torcdb_spark.session import get_spark
+
+    spark = get_spark(app_name=app_name)
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def _measure(spark, fns: dict, dirs: dict, tables, suspect) -> dict:
+    """``{name: {tag: seconds}}`` for every query in ``fns`` at every data
+    directory in ``dirs`` (tag -> path), -1.0 where the query raised. Each
+    directory's ``tables`` are scanned once before its cells are timed.
+
+    The shared host delivers multi-second CPU-steal bursts that land on
+    whichever cell is running (observed: ssj1@sf0.1 119 s vs 4.7 s in the
+    same hour). A cell for which ``suspect(name, row, tag)`` holds is re-timed, in
+    up to two sweeps, and keeps the min: by then the burst has usually
+    moved."""
+    from bench import time_query
+
+    def cell(name, tag, what):
+        try:
+            took = time_query(spark, name, fns[name], dirs[tag], 2)[0]
+        except Exception as exc:
+            print(f"scaling: {what}{name}@{tag} FAILED: {exc}", file=sys.stderr)
+            return -1.0
+        print(f"scaling: {what}{name}@{tag} {took}s", file=sys.stderr)
+        return took
+
+    result: dict[str, dict[str, float]] = {name: {} for name in fns}
+    for tag, path in dirs.items():
+        for t in tables:
+            spark.read.parquet(f"{path}/{t}.parquet").write.format("noop").mode(
+                "overwrite"
+            ).save()
+        for name in fns:
+            result[name][tag] = cell(name, tag, "")
+    for sweep in range(2):
+        flagged = [
+            (name, tag)
+            for name, row in result.items()
+            for tag in dirs
+            if row[tag] >= 0 and suspect(name, row, tag)
+        ]
+        if not flagged:
+            break
+        for name, tag in flagged:
+            took = cell(name, tag, f"recheck[{sweep}] ")
+            if took >= 0:
+                result[name][tag] = min(result[name][tag], took)
+    return result
+
+
+def _table(result: dict, small: str, big: str, ratio: float):
+    """Markdown rows ``| name | cells | slope |`` and ``{name: slope}``."""
+    rows, slopes = [], {}
+    for name, row in result.items():
+        cells = " | ".join(str(v) for v in row.values())
+        if min(row.values()) < 0:
+            rows.append(f"| {name} | {cells} | (failed) |")
+            continue
+        slopes[name] = math.log(
+            max(row[big], 1e-3) / max(row[small], 1e-3)
+        ) / math.log(ratio)
+        rows.append(f"| {name} | {cells} | {slopes[name]:.2f} |")
+    return rows, slopes
+
+
+def _write_section(mark: str, lines: list[str]) -> None:
+    """Replace the section of SCALING.md that starts with ``mark`` (up to the
+    next section mark, or the end) and keep the others, in mark order."""
+    path = os.path.join(REPO, "SCALING.md")
     try:
         with open(path) as f:
             txt = f.read()
     except OSError:
-        return ""
-    i = txt.find(SYNTH_MARK)
-    return txt[i:] if i >= 0 else ""
+        txt = ""
+    marks = (MAIN_MARK, SYNTH_MARK, DEDUP_MARK)
+    starts = sorted((i, m) for m in marks if (i := txt.find(m)) >= 0)
+    ends = [i for i, _ in starts[1:]] + [len(txt)]
+    sections = {m: txt[i:j] for (i, m), j in zip(starts, ends)}
+    sections[mark] = "\n".join(lines)
+    with open(path, "w") as f:
+        f.write("\n".join(sections[m].rstrip() + "\n" for m in marks if m in sections))
+    print(f"wrote SCALING.md section {mark!r}")
+
+
+def main() -> None:
+    from torcdb_spark.queries import queries
+    from torcdb_spark.sources.tables import TABLE_NAMES
+
+    qs = queries()
+    try:
+        with open(os.path.join(REPO, "bench_detail.json")) as f:
+            record = json.load(f)
+    except (OSError, ValueError):
+        record = {}
+    timings = record.get("queries", {})
+    args = sys.argv[1:]
+    if args and not args[0].isdigit():
+        names = args
+    else:
+        names = [
+            k
+            for k, _ in sorted(timings.items(), key=lambda kv: -kv[1])
+            if k in qs and not k.startswith("st_")
+        ][: int(args[0]) if args else 10]
+    # the bench record anchors the sf0.1 cells only when it was taken there
+    anchor = timings if record.get("sf") == 0.1 else {}
+
+    def suspect(name, row, sf):
+        if sf == "0.1":
+            return anchor.get(name, 0) > 0 and row[sf] > 2 * anchor[name]
+        return row["0.1"] > 0 and row[sf] > 1.5 * row["0.1"]
+
+    spark = _session("torcdb_spark-scaling")
+    dirs = {sf: f"/root/testdata/sf{sf}" for sf in SFS}
+    rows_at = {
+        sf: sum(spark.read.parquet(f"{d}/{t}.parquet").count() for t in TABLE_NAMES)
+        for sf, d in dirs.items()
+    }
+    result = _measure(spark, {n: qs[n] for n in names}, dirs, TABLE_NAMES, suspect)
+    data_ratio = rows_at["0.1"] / rows_at["0.001"]
+    rows, slopes = _table(result, "0.001", "0.1", data_ratio)
+    out = [
+        MAIN_MARK + " — wall-time slope of the most expensive queries across "
+        "sf0.001 → sf0.1",
+        "",
+        f"Generated by tools/scaling.py (min-of-2 per cell, noop sink, "
+        f"local[{spark.sparkContext.defaultParallelism}]). Fixture rows: "
+        + ", ".join(f"sf{sf}={rows_at[sf]:,}" for sf in SFS)
+        + f" ({data_ratio:.0f}× end-to-end).",
+        "",
+        "slope = log(t_sf0.1/t_sf0.001)/log(rows_sf0.1/rows_sf0.001): "
+        "**~0** = fixed overhead dominates (bounded-core witness or "
+        "superstep scheduling, NOT data volume); **~1** = linear in the "
+        "data; **>1** = super-linear (root-cause note below).",
+        "",
+        "| query | sf0.001 s | sf0.01 s | sf0.1 s | slope |",
+        "|---|---|---|---|---|",
+        *rows,
+        "",
+    ]
+    superlinear = [(n, s) for n, s in slopes.items() if s > 1.05]
+    if superlinear:
+        out += ["## Super-linear queries (need a root-cause note)", ""]
+        out += [f"- **{n}** (slope {s:.2f})" for n, s in superlinear]
+        out.append("")
+    out.append(
+        "## Why no sf1 column (VERDICT r9 ask #8)\n\n"
+        "The driver provides fixtures only at sf0.001/0.01/0.1 — there "
+        "is no sf1 parquet to extend the series with. Synthesizing one "
+        "by replicating sf0.1 with shifted keys was considered and "
+        "rejected: replicated document TEXT corrupts exactly the "
+        "measurements that matter (the dedup/similarity family — d13, "
+        "d26, ssj1, m7b — would see every row gain 10 near-identical "
+        "twins, inflating candidate-pair counts quadratically inside "
+        "LSH buckets and measuring the synthetic duplication, not the "
+        "operator's scaling). For the families that DON'T share that "
+        "objection (relational aggregates, graph algorithms over keyed "
+        "edges) a key-shifted TEXT-FREE decade exists — see the "
+        "'Synthetic text-free decade' section (tools/scaling.py "
+        "--synth-decade)."
+    )
+    _write_section(MAIN_MARK, out)
 
 
 def _build_synth_decade(spark, base_dir: str, out_dir: str) -> None:
@@ -296,90 +262,38 @@ def _build_synth_decade(spark, base_dir: str, out_dir: str) -> None:
 def synth_decade_main() -> None:
     """--synth-decade: extend the scaling series one decade past sf0.1
     for the relational/graph subset only, against a key-shifted
-    text-free 10x replication of lineitem/orders (VERDICT r10 ask #6).
-    Rewrites ONLY the synth section of SCALING.md."""
+    text-free 10x replication of lineitem/orders (VERDICT r10 ask #6)."""
     from torcdb_spark.queries import queries
-    from torcdb_spark.session import get_spark
-    from torcdb_spark.sources.tables import TABLE_NAMES, load_table
+    from torcdb_spark.sources.tables import TABLE_NAMES
 
     base_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.environ.get(
         "SPARK_GRAFT_SYNTH_DIR", "/tmp/torcdb_synth_sf1"
     )
-    spark = get_spark(app_name="torcdb_spark-synth-decade")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _session("torcdb_spark-synth-decade")
     if not os.path.exists(f"{out_dir}/lineitem.parquet"):
         print(f"synth-decade: building {out_dir} from {base_dir}",
               file=sys.stderr)
         _build_synth_decade(spark, base_dir, out_dir)
 
     qs = queries()
-    names = [n for n in SYNTH_QUERIES if n in qs]
-    import gc
-
-    fact_rows: dict[str, int] = {}
-    result: dict[str, dict[str, float]] = {k: {} for k in names}
-    for tag, sf_dir in (("sf0.1", base_dir), ("sf~1", out_dir)):
-        fact_rows[tag] = sum(
-            spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
+    dirs = {"sf0.1": base_dir, "sf~1": out_dir}
+    fact_rows = {
+        tag: sum(
+            spark.read.parquet(f"{d}/{t}.parquet").count()
             for t in ("lineitem", "orders")
         )
-        for t in TABLE_NAMES:  # per-dir warmup (footers, page cache)
-            load_table(spark, sf_dir, t).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        for name in names:
-            best = None
-            try:
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    qs[name](spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    took = time.perf_counter() - t0
-                    best = took if best is None else min(best, took)
-            except Exception as exc:
-                print(f"synth-decade: {name}@{tag} FAILED: {exc}",
-                      file=sys.stderr)
-                best = -1.0
-            result[name][tag] = round(best, 3)
-            spark.catalog.clearCache()
-            gc.collect()
-            print(f"synth-decade: {name}@{tag} {result[name][tag]}s",
-                  file=sys.stderr)
-
-    # burst re-measurement, same taxonomy as the main series: a sf~1
-    # cell is suspect when it exceeds 3x its own sf0.1 cell (a 10x data
-    # step with slope <=0.5 predicts <=3.2x) — two sweeps, min kept
-    for sweep in range(2):
-        flagged = [
-            n for n in names
-            if result[n]["sf~1"] > 0 and result[n]["sf0.1"] > 0
-            and result[n]["sf~1"] > 3 * result[n]["sf0.1"]
-        ]
-        if not flagged:
-            break
-        for name in flagged:
-            try:
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    qs[name](spark, out_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    result[name]["sf~1"] = round(
-                        min(result[name]["sf~1"],
-                            time.perf_counter() - t0), 3
-                    )
-            except Exception as exc:
-                print(f"synth-decade: recheck {name} FAILED: {exc}",
-                      file=sys.stderr)
-            spark.catalog.clearCache()
-            gc.collect()
-            print(f"synth-decade: recheck[{sweep}] {name} "
-                  f"{result[name]['sf~1']}s", file=sys.stderr)
-
+        for tag, d in dirs.items()
+    }
+    # a 10x data step with slope <=0.5 predicts <=3.2x
+    result = _measure(
+        spark, {n: qs[n] for n in SYNTH_QUERIES if n in qs}, dirs, TABLE_NAMES,
+        lambda name, row, tag: tag == "sf~1" and row["sf0.1"] > 0
+        and row[tag] > 3 * row["sf0.1"],
+    )
     ratio = fact_rows["sf~1"] / fact_rows["sf0.1"]
-    lines = [
+    rows, _ = _table(result, "sf0.1", "sf~1", ratio)
+    _write_section(SYNTH_MARK, [
         SYNTH_MARK + " (sf0.1 → key-shifted sf~1, VERDICT r10 ask #6)",
         "",
         f"Generated by `tools/scaling.py --synth-decade`: lineitem + "
@@ -397,45 +311,8 @@ def synth_decade_main() -> None:
         "",
         "| query | sf0.1 s | sf~1 s | slope (this decade) |",
         "|---|---|---|---|",
-    ]
-    for name in names:
-        r = result[name]
-        if min(r.values()) < 0:
-            lines.append(f"| {name} | {r['sf0.1']} | {r['sf~1']} "
-                         "| (failed) |")
-            continue
-        slope = (
-            math.log(max(r["sf~1"], 1e-3) / max(r["sf0.1"], 1e-3))
-            / math.log(ratio)
-        )
-        lines.append(
-            f"| {name} | {r['sf0.1']} | {r['sf~1']} | {slope:.2f} |"
-        )
-    lines.append("")
-    block = "\n".join(lines) + "\n"
-
-    path = os.path.join(REPO, "SCALING.md")
-    try:
-        with open(path) as f:
-            txt = f.read()
-    except OSError:
-        txt = ""
-    i = txt.find(SYNTH_MARK)
-    if i >= 0:  # replace only this block, preserve any later section
-        j = txt.find("\n## ", i + 1)
-        txt = txt[:i] + block + (txt[j + 1:] if j >= 0 else "")
-    else:
-        txt = txt.rstrip() + "\n\n" + block
-    with open(path, "w") as f:
-        f.write(txt)
-    print(f"wrote SCALING.md synth-decade section ({len(names)} queries)")
-
-
-# ---------------------------------------------------------------------------
-# Dedup-family synthetic decade (VERDICT r11 ask #6)
-# ---------------------------------------------------------------------------
-
-DEDUP_MARK = "## Dedup-family synthetic decade"
+        *rows,
+    ])
 
 
 def synth_documents(spark, n_docs: int):
@@ -510,85 +387,28 @@ def dedup_decade_main() -> None:
     text/dedup family against hash-derived DISTINCT-text corpora
     (5k → 50k docs, the same 10× ratio as the key-shifted decade) —
     both cells from the same generator so the slope isolates data
-    volume, not corpus shape.  Rewrites only its own SCALING.md block."""
-    import gc
-
-    from torcdb_spark.session import get_spark
-
+    volume, not corpus shape."""
     out_base = os.environ.get(
         "SPARK_GRAFT_SYNTH_DOCS_DIR", "/tmp/torcdb_synth_docs"
     )
-    spark = get_spark(app_name="torcdb_spark-dedup-decade")
-    spark.sparkContext.setLogLevel("ERROR")
-    sizes = {"5k": 5_000, "50k": 50_000}
+    spark = _session("torcdb_spark-dedup-decade")
     dirs = {}
-    for tag, n in sizes.items():
-        d = os.path.join(out_base, tag)
-        dirs[tag] = d
-        if not os.path.exists(f"{d}/documents.parquet"):
-            print(f"dedup-decade: building {d} ({n} docs)",
+    for tag, n in (("5k", 5_000), ("50k", 50_000)):
+        dirs[tag] = os.path.join(out_base, tag)
+        if not os.path.exists(f"{dirs[tag]}/documents.parquet"):
+            print(f"dedup-decade: building {dirs[tag]} ({n} docs)",
                   file=sys.stderr)
             synth_documents(spark, n).repartition(32).write.mode(
                 "overwrite"
-            ).parquet(f"{d}/documents.parquet")
+            ).parquet(f"{dirs[tag]}/documents.parquet")
 
-    targets = _dedup_decade_targets()
-    result: dict[str, dict[str, float]] = {n: {} for n, _ in targets}
-    for tag in ("5k", "50k"):
-        sf_dir = dirs[tag]
-        spark.read.parquet(f"{sf_dir}/documents.parquet").write.format(
-            "noop"
-        ).mode("overwrite").save()  # warm footers/page cache
-        for name, fn in targets:
-            best = None
-            try:
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    fn(spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    took = time.perf_counter() - t0
-                    best = took if best is None else min(best, took)
-            except Exception as exc:
-                print(f"dedup-decade: {name}@{tag} FAILED: {exc}",
-                      file=sys.stderr)
-                best = -1.0
-            result[name][tag] = round(best, 3)
-            spark.catalog.clearCache()
-            gc.collect()
-            print(f"dedup-decade: {name}@{tag} {result[name][tag]}s",
-                  file=sys.stderr)
-
-    # burst re-measurement, same taxonomy as the synth decade
-    for sweep in range(2):
-        flagged = [
-            n for n, _ in targets
-            if result[n]["50k"] > 0 and result[n]["5k"] > 0
-            and result[n]["50k"] > 3 * result[n]["5k"] * 3.33
-        ]
-        if not flagged:
-            break
-        fmap = dict(targets)
-        for name in flagged:
-            try:
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    fmap[name](spark, dirs["50k"]).write.format(
-                        "noop"
-                    ).mode("overwrite").save()
-                    result[name]["50k"] = round(
-                        min(result[name]["50k"],
-                            time.perf_counter() - t0), 3
-                    )
-            except Exception as exc:
-                print(f"dedup-decade: recheck {name} FAILED: {exc}",
-                      file=sys.stderr)
-            spark.catalog.clearCache()
-            gc.collect()
-            print(f"dedup-decade: recheck[{sweep}] {name} "
-                  f"{result[name]['50k']}s", file=sys.stderr)
-
-    lines = [
+    result = _measure(
+        spark, dict(_dedup_decade_targets()), dirs, ("documents",),
+        lambda name, row, tag: tag == "50k" and row["5k"] > 0
+        and row[tag] > 3 * row["5k"] * 3.33,
+    )
+    rows, _ = _table(result, "5k", "50k", 10.0)
+    _write_section(DEDUP_MARK, [
         DEDUP_MARK + " (5k → 50k distinct-text docs, VERDICT r11 ask #6)",
         "",
         "Generated by `tools/scaling.py --dedup-decade`: both cells use "
@@ -603,35 +423,8 @@ def dedup_decade_main() -> None:
         "",
         "| target | 5k docs s | 50k docs s | slope (this decade) |",
         "|---|---|---|---|",
-    ]
-    for name, _ in targets:
-        r = result[name]
-        if min(r.values()) < 0:
-            lines.append(f"| {name} | {r['5k']} | {r['50k']} | (failed) |")
-            continue
-        slope = (
-            math.log(max(r["50k"], 1e-3) / max(r["5k"], 1e-3))
-            / math.log(10.0)
-        )
-        lines.append(f"| {name} | {r['5k']} | {r['50k']} | {slope:.2f} |")
-    lines.append("")
-    block = "\n".join(lines) + "\n"
-
-    path = os.path.join(REPO, "SCALING.md")
-    try:
-        with open(path) as f:
-            txt = f.read()
-    except OSError:
-        txt = ""
-    i = txt.find(DEDUP_MARK)
-    if i >= 0:
-        j = txt.find("\n## ", i + 1)
-        txt = txt[:i] + block + (txt[j + 1:] if j >= 0 else "")
-    else:
-        txt = txt.rstrip() + "\n\n" + block
-    with open(path, "w") as f:
-        f.write(txt)
-    print(f"wrote SCALING.md dedup-decade section ({len(targets)} targets)")
+        *rows,
+    ])
 
 
 if __name__ == "__main__":
