@@ -30,14 +30,56 @@ def graph(spark, sf_dir):
     return PropertyGraph(vertices=g.vertices.cache(), edges=g.edges.cache())
 
 
+# Forced regimes: each fixture sets one name in torcdb_spark/regime.py,
+# which every size-dependent plan choice reads at call time.
+
+
 @pytest.fixture
 def shuffle_regime(monkeypatch):
     """Force every superstep loop out of the broadcast regime: no broadcast
     hints, and the edge side is laid out on its join key before the first
     superstep."""
-    from torcdb_spark import analytics
+    from torcdb_spark import regime
 
-    monkeypatch.setattr(analytics, "_BCAST_ROWS", 0)
+    monkeypatch.setattr(regime, "BCAST_ROWS", 0)
+
+
+@pytest.fixture
+def finishers_off(monkeypatch):
+    """Force the decomposition operators onto their distributed rounds:
+    no single-task finisher unless the caller passes ``local_threshold``.
+    Returns the list of row counts the finisher test was asked about."""
+    from torcdb_spark import regime
+
+    monkeypatch.setattr(regime, "LOCAL_ROWS_LINEAR", 0)
+    monkeypatch.setattr(regime, "LOCAL_ROWS", 0)
+    asked, local = [], regime.local
+
+    def spy(rows, *args, **kwargs):
+        asked.append(rows)
+        return local(rows, *args, **kwargs)
+
+    monkeypatch.setattr(regime, "local", spy)
+    return asked
+
+
+@pytest.fixture
+def salt_regime(monkeypatch):
+    """Force salted_join onto its salt-replicated shuffle join."""
+    from torcdb_spark import regime
+
+    monkeypatch.setattr(regime, "broadcast_fits", lambda df: False)
+
+
+@pytest.fixture
+def spread_off(monkeypatch):
+    """Make ``spread`` a no-op: inputs keep their scan partitioning.
+    Returns the list of frames it was called on."""
+    from torcdb_spark import regime
+
+    seen = []
+    monkeypatch.setattr(regime, "spread", lambda df: seen.append(df) or df)
+    return seen
 
 
 def call_with_fixtures(fn, request):

@@ -132,6 +132,96 @@ def test_query_matches_in_shuffle_regime(name, spark, sf_dir, ddb, shuffle_regim
     check_query(name, spark, sf_dir, ddb)
 
 
+# Declared queries that reach a decomposition operator's single-task
+# finisher (a ``local_threshold`` operator in analytics).
+FINISHER_QUERIES = (
+    "g_connected_components",
+    "d13_dedup_clusters",
+    "g_cc_doubling",
+    "g_mst",
+    "g_mst2_kruskal_witness",
+    "g_lpa_communities",
+    "g_lpa2_integer_votes",
+    "scc1_navigation_core",
+    "mis1_independent_set",
+    "gc1_graph_coloring",
+    "g_ktruss",
+    "g_diameter",
+    "e16_semantic_dedup_exact",
+)
+
+
+@pytest.mark.parametrize("name", FINISHER_QUERIES)
+def test_query_matches_with_finishers_off(name, spark, sf_dir, ddb, finishers_off):
+    """The same result with every default single-task finisher off."""
+    check_query(name, spark, sf_dir, ddb)
+    assert finishers_off, f"{name} never reached a local_threshold operator"
+
+
+def test_query_matches_in_salt_regime(spark, sf_dir, ddb, salt_regime):
+    """q_salted_join's result through the salt-replicated shuffle join."""
+    sdf = QUERIES["q_salted_join"](spark, sf_dir)
+    assert "_salt" in sdf._jdf.queryExecution().analyzed().toString()
+    check_oracle("q_salted_join", sdf.collect(), sdf.columns, ddb)
+
+
+# Declared queries that call regime.spread, directly or in an operator.
+SPREAD_QUERIES = (
+    "ai1_arrow_ipc_ingest",
+    "d14_simhash_near_dups",
+    "d16_repetition_signals",
+    "d26_containment_join",
+    "d29_winnowing_md5",
+    "d30_minhash_md5",
+    "d31_simhash_md5",
+    "d4_simhash_groups",
+    "d7_embedding_near_dups",
+    "d8_winnowing",
+    "e10_mmr_rerank",
+    "e11_matryoshka_topk",
+    "e12_knn_graph",
+    "e13_ivf_exact_cells",
+    "e14_lsh_rademacher",
+    "e15_pq_adc_exact",
+    "e16_semantic_dedup_exact",
+    "e1_cosine_topk",
+    "e2_cosine_lsh",
+    "e4_ivf_topk",
+    "e7_pq_topk",
+    "e9_hard_negatives",
+    "ic1_iceberg_snapshot",
+    "km2_kmeans_lloyd",
+    "m11_progressive_jpeg",
+    "m13_webp_roundtrip",
+    "m1_media_features",
+    "m20_ogg_page_census",
+    "m3_image_decode",
+    "m3b_image_decode_census",
+    "m6_jpeg_roundtrip",
+    "m7_phash_near_dups",
+    "m7b_whash_exact",
+    "m8_video_frames",
+    "m9_gif_roundtrip",
+    "mime1_magic_sniff",
+    "p2_pdf_text_extract",
+    "p3_epub_extract",
+    "p6_docx_extract",
+    "p7_xlsx_census",
+    "p8_pptx_extract",
+    "p9_markdown_extract",
+    "pm1_parquet_footer_census",
+    "pm2_page_census",
+    "x_minhash_near_dups",
+)
+
+
+@pytest.mark.parametrize("name", SPREAD_QUERIES)
+def test_query_matches_with_spread_off(name, spark, sf_dir, ddb, spread_off):
+    """The same result on the scan's own partitioning."""
+    check_query(name, spark, sf_dir, ddb)
+    assert spread_off, f"{name} never called regime.spread"
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()

@@ -38,12 +38,10 @@ A loop supplies only:
 The kernel owns the rest:
 
 - the regime: ``bc(df, rows=None)`` broadcasts ``df`` while the row count
-  (the latest probe's, or the one given) passes ``_fits``, so a superstep
-  probes the edge side map-side and never shuffles it; without a count
-  no hint is given and AQE plans the joins. ``_fits`` is the one place
-  ``_BCAST_ROWS`` is compared: the kernel, connected_components' finisher
-  guard, SCC's trim/peel joins and e16 (queries.py) all decide through
-  it (``_bc``);
+  (the latest probe's, or the one given) passes ``regime.fits``, so a
+  superstep probes the edge side map-side and never shuffles it; without
+  a count no hint is given and AQE plans the joins. torcdb_spark/regime.py
+  owns this and every other size threshold;
 - leaving the broadcast regime lays the edge side out ONCE on its join key
   (``_relayout_edges``), so later supersteps shuffle only the state;
 - a LAZY localCheckpoint at the cadence: lineage stays bounded (without
@@ -65,8 +63,9 @@ and active edges), and SCC's and Borůvka's rounds also hold a finisher
 test and a nested superstep loop; fitting them to the kernel would either
 grow its contract or stop their edge side from shrinking.
 
-Below a ``local_threshold``, the decomposition operators finish in ONE
-task instead: ``_finish_local`` runs a sequential kernel (union-find,
+At or below a ``local_threshold`` (``regime.local``; None takes
+regime.py's size for the operator), the decomposition operators finish in
+ONE task instead: ``_finish_local`` runs a sequential kernel (union-find,
 Tarjan, Kruskal, Luby, ...) over the edge rows inside a single
 mapInPandas, returning exactly what the distributed loop computes.
 """
@@ -74,18 +73,11 @@ mapInPandas, returning exactly what the distributed loop computes.
 from __future__ import annotations
 
 import functools
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Rows at or below which per-superstep state/frontier frames broadcast
-# (map-side joins against the cached edge set; the edge side never
-# shuffles). Above it the loops take the shuffle-join regime and
-# pre-partition the edge side once (_relayout_edges). Parameterized for
-# cluster deployments and for forcing the shuffle regime in tests/plan
-# dumps; the default matches the threshold every operator shipped with.
-_BCAST_ROWS = int(os.environ.get("TORCDB_BCAST_ROWS", "500000"))
+from torcdb_spark import regime
 
 
 def _relayout_edges(e: DataFrame, key: str) -> DataFrame:
@@ -146,19 +138,6 @@ def _stats_barrier(df: DataFrame) -> DataFrame:
         return ck
 
 
-def _fits(rows: int | None) -> bool:
-    """THE broadcast-regime predicate, the one place ``_BCAST_ROWS`` is
-    compared: a frame bounded by ``rows`` rows broadcasts iff the count
-    is known and at most the bar."""
-    return rows is not None and rows <= _BCAST_ROWS
-
-
-def _bc(df: DataFrame, rows: int | None) -> DataFrame:
-    """``df`` with a broadcast hint iff ``_fits(rows)``; without a count
-    no hint is given and AQE plans the join."""
-    return F.broadcast(df) if _fits(rows) else df
-
-
 def _supersteps(edges: DataFrame | None, key: str | None, state: DataFrame,
                 rows: int | None, step, max_iter: int | None, probe=None,
                 every: int = 1, checkpoint=_ck_lazy, release: bool = True):
@@ -172,10 +151,10 @@ def _supersteps(edges: DataFrame | None, key: str | None, state: DataFrame,
     halted = rows == 0
     i = 0
     while not halted and (max_iter is None or i < max_iter):
-        if not relaid and rows is not None and not _fits(rows):
+        if not relaid and rows is not None and not regime.fits(rows):
             edges, relaid = _relayout_edges(edges, key), True
         state = step(i, state, edges,
-                     lambda df, n=None: _bc(df, rows if n is None else n))
+                     lambda df, n=None: regime.bc(df, rows if n is None else n))
         i += 1
         if i % every == 0 or i == max_iter:
             state = checkpoint(state)
@@ -394,7 +373,7 @@ def connected_components(
     max_iter: int = 20,
     src_col: str = "src",
     dst_col: str = "dst",
-    local_threshold: int = 1_000_000,
+    local_threshold: int | None = None,
 ) -> DataFrame:
     """Undirected connected components via iterative label propagation
     (small-label-wins) → (id, component). Converges in O(diameter)
@@ -413,7 +392,9 @@ def connected_components(
     # superstep would have paid for anyway); under the threshold one
     # union-find task replaces the whole flood, with the identical
     # min-id-per-component result.
-    if _fits(n) and und.count() <= local_threshold:
+    if regime.fits(n) and regime.local(
+        und.count(), local_threshold, linear=True
+    ):
         out = _checkpointed(_finish_local(
             und, ("a", "b"), _cc_union_find, "id {id}, component {id}",
         ))
@@ -743,7 +724,7 @@ def connected_components_doubling(
     max_rounds: int = 16,
     src_col: str = "src",
     dst_col: str = "dst",
-    local_threshold: int = 1_000_000,
+    local_threshold: int | None = None,
 ) -> DataFrame:
     """Undirected connected components in O(log n) ROUNDS via alternating
     large-star / small-star edge rewriting (the MapReduce-and-Beyond
@@ -807,7 +788,7 @@ def connected_components_doubling(
     cur = _ck_lazy(e)
     sig = checksum(cur)
     # small-core finisher: the initial checksum already carries |E|
-    if sig[0] <= local_threshold:
+    if regime.local(sig[0], local_threshold, linear=True):
         return _finish_local(
             cur, ("u", "v"), _cc_union_find, "id {id}, component {id}"
         )
@@ -1165,7 +1146,7 @@ def label_propagation(
     max_iter: int = 5,
     src_col: str = "src",
     dst_col: str = "dst",
-    local_threshold: int = 100_000,
+    local_threshold: int | None = None,
 ) -> DataFrame:
     """Community detection via SYNCHRONOUS label propagation (Raghavan
     et al. 2007) → (id, community): every vertex starts as its own
@@ -1187,7 +1168,7 @@ def label_propagation(
     ``max_iter`` supersteps run as one lazy chain, checkpointed every
     superstep (pagerank's interval-2 cadence measured 40% slower here)."""
     und = _symmetric(edges, src_col, dst_col).persist()
-    if und.count() <= local_threshold:
+    if regime.local(und.count(), local_threshold):
         # eager checkpoint: the kernel runs against the live edge cache
         out = _checkpointed(_finish_local(
             und, ("a", "b"),
@@ -1292,7 +1273,7 @@ def boruvka_mst(
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: str = "w",
-    local_threshold: int = 1_000_000,
+    local_threshold: int | None = None,
 ) -> DataFrame:
     """Minimum spanning forest via distributed Borůvka → the MST edge set
     (src, dst, w), one row per chosen edge, deterministic.
@@ -1344,10 +1325,10 @@ def boruvka_mst(
             break
         # small-core finisher: sequential Kruskal under the SAME (w, u, v)
         # order (strict total order ⇒ the forest is unique, so both paths
-        # choose identical edges). Threshold sizing: 1M (u,v,w,cu,cv) rows ≈ 40 MB — one task's
-        # working set; a 100 TB edge set runs distributed rounds until
-        # contraction shrinks the inter-component remainder under it
-        if n_keyed <= local_threshold:
+        # choose identical edges). A 100 TB edge set runs distributed
+        # rounds until contraction shrinks the inter-component remainder
+        # under the threshold
+        if regime.local(n_keyed, local_threshold, linear=True):
             tail = _stats_barrier(_finish_local(
                 keyed, ("u", "v", "w", "cu", "cv"), _kruskal_local,
                 "u {id}, v {id}, w double",
@@ -1531,7 +1512,7 @@ def strongly_connected_components(
     max_prop: int = 30,
     src_col: str = "src",
     dst_col: str = "dst",
-    local_threshold: int = 1_000_000,
+    local_threshold: int | None = None,
 ) -> DataFrame:
     """Strongly connected components of a DIRECTED graph → (id, scc_id)
     with ``scc_id`` = the smallest member id (deterministic). The one
@@ -1622,7 +1603,7 @@ def strongly_connected_components(
                 F.col("id").alias("src"), F.col("id").alias("dst")
             )
         )
-        if core.count() <= local_threshold:
+        if regime.local(core.count(), local_threshold, linear=True):
             done_parts.append(_stats_barrier(_finish_local(
                 core, ("src", "dst"), _tarjan_local, "id {id}, scc_id {id}"
             )))
@@ -1645,8 +1626,8 @@ def strongly_connected_components(
                 .withColumn("_i", F.lit(True))
             )
             flagged = _stats_barrier(
-                active_v.join(_bc(has_out, n_v), "id", "left")
-                .join(_bc(has_in, n_v), "id", "left")
+                active_v.join(regime.bc(has_out, n_v), "id", "left")
+                .join(regime.bc(has_in, n_v), "id", "left")
                 .select(
                     "id",
                     (
@@ -1661,7 +1642,7 @@ def strongly_connected_components(
                 break
             done_parts.append(trimmed)
             active_v = flagged.where(F.col("_cyc")).select("id")
-            live = _bc(active_v, n_v)
+            live = regime.bc(active_v, n_v)
             active_e = active_e.join(
                 live, active_e["src"] == live["id"], "left_semi"
             ).join(live, active_e["dst"] == live["id"], "left_semi")
@@ -1692,7 +1673,7 @@ def strongly_connected_components(
             )
         )
         done_parts.append(peeled)
-        gone = _bc(peeled, n_v)
+        gone = regime.bc(peeled, n_v)
         active_v = _stats_barrier(active_v.join(gone, "id", "left_anti"))
         active_e = _stats_barrier(
             active_e.join(gone, active_e["src"] == gone["id"], "left_anti")
@@ -1782,7 +1763,7 @@ def maximal_independent_set(
     max_rounds: int = 40,
     src_col: str = "src",
     dst_col: str = "dst",
-    local_threshold: int = 100_000,
+    local_threshold: int | None = None,
 ) -> DataFrame:
     """Maximal independent set via Luby's algorithm → (id) — one row per
     selected vertex, deterministic.
@@ -1821,7 +1802,7 @@ def maximal_independent_set(
     sym = _ck_lazy(_symmetric(edges, src_col, dst_col, loops=False))
     # small-core finisher: the IDENTICAL algorithm sequentially (md5
     # priorities; both paths select the same set, pytest-pinned)
-    if sym.count() <= local_threshold:
+    if regime.local(sym.count(), local_threshold):
         return _finish_local(
             sym, ("a", "b"),
             lambda rows: [(v,) for v in sorted(_luby_local(rows))], "id {id}",
@@ -1888,7 +1869,7 @@ def greedy_coloring(
     max_rounds: int = 64,
     src_col: str = "src",
     dst_col: str = "dst",
-    local_threshold: int = 100_000,
+    local_threshold: int | None = None,
 ) -> DataFrame:
     """Proper vertex coloring via Jones-Plassmann → (id, color): draw a
     fixed md5 priority per vertex; each round, every uncolored vertex
@@ -1919,7 +1900,7 @@ def greedy_coloring(
     )
     # small-core finisher: sequential greedy in priority order IS the
     # JP fixed-priority result (same md5 order; pytest-pinned equal)
-    if sym.count() <= local_threshold:
+    if regime.local(sym.count(), local_threshold):
         return _finish_local(
             sym, ("a", "b"), _greedy_color_local, "id {id}, color long"
         )
@@ -2109,7 +2090,7 @@ def k_truss(
     max_rounds: int = 30,
     src_col: str = "src",
     dst_col: str = "dst",
-    local_threshold: int = 100_000,
+    local_threshold: int | None = None,
 ) -> DataFrame:
     """k-truss decomposition → the maximal subgraph's edge set (a, b)
     with a < b, where every edge participates in ≥ k−2 triangles WITHIN
@@ -2135,7 +2116,7 @@ def k_truss(
     thresh = k - 2
     n = e.count()
     # small-core finisher: identical fixpoint, peeling order cannot matter
-    if n <= local_threshold:
+    if regime.local(n, local_threshold):
         return _finish_local(
             e, ("a", "b"), lambda rows: sorted(_ktruss_local(rows, k)),
             "a {id}, b {id}",
@@ -2222,7 +2203,7 @@ def _diameter_start(edges, seed, src_col, dst_col, local_threshold, kernel, sche
     sym = _ck_lazy(
         _symmetric(edges, src_col, dst_col, "src", "dst", loops=False)
     )
-    if sym.count() > local_threshold:
+    if not regime.local(sym.count(), local_threshold):
         return sym, None
     # orderBy before limit: without it the seed subset (and hence the
     # sweep-1 start) would depend on partition order.
@@ -2250,7 +2231,7 @@ def double_sweep_diameter(
     max_depth: int = 32,
     src_col: str = "src",
     dst_col: str = "dst",
-    local_threshold: int = 100_000,
+    local_threshold: int | None = None,
 ) -> DataFrame:
     """Double-sweep diameter estimate (Magnien/Latapy/Habib 2009) of the
     UNDIRECTED graph → one row (sweep1_ecc, diameter_lb, peripheral_id):
@@ -2334,7 +2315,7 @@ def ifub_diameter(
     seed: DataFrame,
     src_col: str = "src",
     dst_col: str = "dst",
-    local_threshold: int = 100_000,
+    local_threshold: int | None = None,
     max_ecc_bfs: int = 16,
 ) -> DataFrame:
     """iFUB exact-diameter refinement of the double sweep → ONE row

@@ -22,6 +22,7 @@ import pandas as pd  # module-level: pandas_udf resolves stringified type hints
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from torcdb_spark import regime
 from torcdb_spark.operators.text import fingerprint, normalize_text, shingles
 
 # Mersenne prime 2^31-1 for the universal-hash permutation family — small
@@ -343,13 +344,12 @@ def simhash_near_dup_pairs(
     standard Charikar/Manku-Jain-Sarma web-dedup layout; at 100 TB use
     bands = max_hamming + 1 tables exactly as published). The only Python
     is the Arrow-batched sign-vote shared with simhash_dedup."""
-    # Repartition before the Arrow vote (a small parquet arrives as 1-2
+    # Spread before the Arrow vote (a small parquet arrives as 1-2
     # splits, which would serialize the UDF), and persist the signatures:
     # BOTH sides of the band self-join read them, so without the persist
     # the whole shingle+vote pipeline executes twice (measured 29 s → 2 s
     # at sf0.1 from these two lines).
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    normed = docs.repartition(par).select(
+    normed = regime.spread(docs).select(
         F.col(id_col), normalize_text(F.col(text_col)).alias("_nt")
     )
     hashed = normed.select(

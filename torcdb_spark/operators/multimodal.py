@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from torcdb_spark import regime
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -3153,9 +3155,8 @@ def phash_near_dup_pairs(
     all pairs, verification is one JVM bit_count(xor)."""
     from torcdb_spark.operators.dedup import hamming_near_dup_pairs
 
-    par = media.sparkSession.sparkContext.defaultParallelism
     hashes = (
-        image_phash(media.repartition(par))
+        image_phash(regime.spread(media))
         .where(F.col("phash").isNotNull())
         .persist()
     )

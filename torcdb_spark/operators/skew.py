@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from torcdb_spark import regime
+
 
 def salted_join(
     big: DataFrame,
@@ -63,7 +65,7 @@ def salted_join(
     # this split it broadcast a 1.2M-row replicated build side (3.2 s)
     # where the unreplicated broadcast (no explode, no salt hash) and the
     # salted SHJ both run ~1.5 s.
-    if _fits_broadcast(small):
+    if regime.broadcast_fits(small):
         return big.join(F.broadcast(small), on, how)
     if salt_source is None:
         # spread rows of the same key: hash the partition-local row id so
@@ -82,42 +84,3 @@ def salted_join(
     # big side. Reached only when the small side exceeds the broadcast
     # bar, so the hint never displaces a size-based broadcast.
     return b.join(s.hint("shuffle_hash"), [on, "_salt"], how).drop("_salt")
-
-
-def _fits_broadcast(small: DataFrame) -> bool:
-    """True when ``small`` (unreplicated) is estimated to fit
-    ``spark.sql.autoBroadcastJoinThreshold`` — the regime where a plain
-    broadcast join is the skew-proof optimum and salting is pure cost.
-    Uses Catalyst's own compile-time size estimate, the same statistic the
-    planner's broadcast decision reads; when auto-broadcast is disabled or
-    the estimate is unavailable, stays in the salted-shuffle regime."""
-    try:
-        thresh = _parse_bytes(
-            small.sparkSession.conf.get(
-                "spark.sql.autoBroadcastJoinThreshold", "10485760"
-            )
-        )
-        if thresh <= 0:  # auto-broadcast disabled
-            return False
-        est = int(
-            small._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        return est <= thresh
-    except Exception:  # pragma: no cover — internal API moved; stay salted
-        return False
-
-
-def _parse_bytes(v: str) -> int:
-    """Parse a Spark byte-size conf value ('67108864', '10MB', '-1')."""
-    s = str(v).strip().lower()
-    mult = 1
-    for suffix, m in (
-        ("kb", 1024), ("mb", 1024**2), ("gb", 1024**3), ("tb", 1024**4),
-        ("k", 1024), ("m", 1024**2), ("g", 1024**3), ("t", 1024**4),
-        ("b", 1),
-    ):
-        if s.endswith(suffix):
-            s = s[: -len(suffix)]
-            mult = m
-            break
-    return int(float(s)) * mult

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from torcdb_spark import algebra
+from torcdb_spark import algebra, regime
 from torcdb_spark.graph import PropertyGraph
 from torcdb_spark.ids import id_lower
 from torcdb_spark.operators.dedup import exact_dedup, minhash_lsh_dedup
@@ -55,28 +55,6 @@ def _register(name: str, oracle: str | None = None):
         return fn
 
     return deco
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Fixture-spread hint for the Python-kernel / per-row-codec queries:
-    the sf fixtures are one row group -> ONE scan partition, which would
-    serialize every Arrow mapInPandas kernel and per-row byte-walk on a
-    single core. One round-robin repartition to defaultParallelism moves
-    the (tiny) fixture rows once and unlocks the full cluster for the
-    kernel (guide §2.5 "input skew: repartition immediately after the
-    read"). Splits-aware guard: when the scan already arrives in at least
-    defaultParallelism splits (any real corpus does), the repartition is
-    skipped outright — a round-robin repartition of a 100 TB corpus would
-    be a full payload shuffle with zero placement value. The partition
-    probe is plan-side only (no job runs for a narrow scan plan)."""
-    sc = df.sparkSession.sparkContext
-    par = sc.defaultParallelism
-    try:
-        if df.rdd.getNumPartitions() >= par:
-            return df
-    except Exception:
-        pass
-    return df.repartition(par)
 
 
 def _graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:
@@ -630,12 +608,7 @@ def d2_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def e1_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k similarity search: broadcast query batch ×
     corpus, JVM-side dot products, per-query window top-k."""
-    # the sf fixtures are one row group → one scan partition; spread the
-    # O(|Q|·|corpus|) scoring across the cluster (a real 100 TB corpus
-    # arrives in thousands of partitions and needs no such hint)
-    emb = load_table(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    emb = regime.spread(load_table(spark, sf_dir, "embeddings"))
     queries = emb.where(F.col("vec_id") < 10)
     out = cosine_topk_bruteforce(emb, queries, k=5)
     return out.select(
@@ -648,9 +621,7 @@ def x_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-duplicate pairs (rows-only check: the xxhash64-based
     permutation family has no DuckDB equivalent). 32 permutations / 8 bands
     — same band width as the 64/16 default at half the signature cost."""
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = regime.spread(load_table(spark, sf_dir, "documents"))
     return minhash_lsh_dedup(docs, num_perm=32, bands=8, jaccard_threshold=0.5)
 
 
@@ -863,9 +834,7 @@ def d4_simhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash bucketing (64-bit sign-vote hash over shingle hashes)."""
     from torcdb_spark.operators.dedup import simhash_dedup
 
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = regime.spread(load_table(spark, sf_dir, "documents"))
     return simhash_dedup(docs)
 
 
@@ -875,9 +844,7 @@ def e2_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact re-ranking) — the scale path for similarity search."""
     from torcdb_spark.operators.similarity import cosine_topk_lsh
 
-    emb = load_table(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    emb = regime.spread(load_table(spark, sf_dir, "embeddings"))
     queries = emb.where(F.col("vec_id") < 10)
     return cosine_topk_lsh(emb, queries, k=5, num_bits=8, num_tables=4)
 
@@ -1176,7 +1143,7 @@ def m1_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_features,
     )
 
-    docs = _spread(load_table(spark, sf_dir, "documents"))
+    docs = regime.spread(load_table(spark, sf_dir, "documents"))
     feats = extract_features(documents_as_media(docs))
     return feats.select(
         "media_id",
@@ -1306,9 +1273,7 @@ def d7_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     within buckets only."""
     from torcdb_spark.operators.similarity import cosine_near_dup_pairs
 
-    emb = load_table(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    emb = regime.spread(load_table(spark, sf_dir, "embeddings"))
     return cosine_near_dup_pairs(emb, threshold=0.3)
 
 
@@ -1318,9 +1283,7 @@ def d8_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     the overlap-detection sketch; (doc_id, fp) pairs."""
     from torcdb_spark.operators.text import winnowing_fingerprints
 
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = regime.spread(load_table(spark, sf_dir, "documents"))
     return winnowing_fingerprints(docs)
 
 
@@ -1331,9 +1294,7 @@ def e4_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     hyperplane LSH (e2). Tests assert recall ≥ 0.5 vs the exact top-k."""
     from torcdb_spark.operators.similarity import ivf_topk
 
-    emb = load_table(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    emb = regime.spread(load_table(spark, sf_dir, "embeddings"))
     queries = emb.where(F.col("vec_id") < 10)
     return ivf_topk(emb, queries, k=5, num_centroids=16, nprobe=4)
 
@@ -2225,7 +2186,7 @@ def m3_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     known pixel arrays."""
     from torcdb_spark.operators.multimodal import decode_and_featurize
 
-    docs = _spread(load_table(spark, sf_dir, "documents"))
+    docs = regime.spread(load_table(spark, sf_dir, "documents"))
     w, h = 16, 8
     header = F.encode(F.lit(f"P6\n{w} {h}\n255\n"), "utf-8")
     body = F.encode(F.rpad(F.col("text"), w * h * 3, " "), "utf-8")
@@ -2543,7 +2504,7 @@ def p2_pdf_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from torcdb_spark.operators.pdf import encode_pdf_text, extract_pdf_text
 
     docs = (
-        _spread(load_table(spark, sf_dir, "documents")
+        regime.spread(load_table(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull())  # symmetric with the oracle
         .select("doc_id", "text"))
     )
@@ -2659,7 +2620,7 @@ def p3_epub_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from torcdb_spark.sources.warc import zip_members
 
     docs = (
-        _spread(load_table(spark, sf_dir, "documents")
+        regime.spread(load_table(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull())  # symmetric with the oracle
         .select("doc_id", "text"))
     )
@@ -4736,12 +4697,7 @@ def e7_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebooks + one Lloyd step, no random init)."""
     from torcdb_spark.operators.similarity import pq_topk
 
-    emb = load_table(spark, sf_dir, "embeddings").repartition(
-        # single-row-group fixture -> 1 scan partition; spread the Arrow
-        # train/encode/ADC kernels across the cluster (a 100 TB corpus
-        # arrives in thousands of splits and needs no such hint)
-        spark.sparkContext.defaultParallelism
-    )
+    emb = regime.spread(load_table(spark, sf_dir, "embeddings"))
     qs = emb.where(F.col("vec_id") < 10)
     return pq_topk(
         emb, qs, k=5, m_subspaces=4, k_sub=64, rerank_factor=20,
@@ -5279,12 +5235,7 @@ def d16_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     measure relationally via UNNEST + GROUP BY."""
     from torcdb_spark.operators.text import repetition_signals
 
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        # single-row-group fixture -> 1 scan partition; spread the heavy
-        # per-row n-gram array expressions across the cluster (a 100 TB
-        # corpus arrives in thousands of splits and needs no such hint)
-        spark.sparkContext.defaultParallelism
-    )
+    docs = regime.spread(load_table(spark, sf_dir, "documents"))
     return repetition_signals(docs)
 
 
@@ -6552,7 +6503,7 @@ def m6_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from torcdb_spark.operators.jpeg import decode_jpeg, encode_jpeg_baseline
 
-    docs = _spread(load_table(spark, sf_dir, "documents").where(
+    docs = regime.spread(load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") < 200
     ).select("doc_id"))
 
@@ -6629,7 +6580,7 @@ def m13_webp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_webp_lossless,
     )
 
-    docs = _spread(load_table(spark, sf_dir, "documents").where(
+    docs = regime.spread(load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") < 200
     ).select("doc_id"))
 
@@ -6957,14 +6908,10 @@ def m8_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the production shape (the full-corpus pass is the same plan at 10×
     # the Python-codec cost — the pure-numpy baseline JPEG coder prices
     # each 16×16 frame at ~1 ms where a native lib is ~10 µs)
-    docs = (
+    docs = regime.spread(
         load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") % 10 == 0)
         .select("doc_id")
-        # single-row-group fixture -> 1 scan partition; spread the Python
-        # fixture-build + parse kernels across the cluster (a 100 TB input
-        # arrives in thousands of splits and needs no such hint)
-        .repartition(spark.sparkContext.defaultParallelism)
     )
 
     def synth(batches):
@@ -7069,7 +7016,7 @@ def m9_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from torcdb_spark.operators.multimodal import decode_image
 
     docs = (
-        _spread(load_table(spark, sf_dir, "documents")
+        regime.spread(load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") % 10 == 0)
         .select("doc_id"))
     )
@@ -7303,9 +7250,7 @@ def e9_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     into a partition-parallel corpus scan, JVM cosine, windowed top-k."""
     from torcdb_spark.operators.similarity import hard_negative_mining
 
-    emb = load_table(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    emb = regime.spread(load_table(spark, sf_dir, "embeddings"))
     anchors = emb.where(F.col("vec_id") < 20)
     return hard_negative_mining(emb, anchors, k=3)
 
@@ -8803,9 +8748,7 @@ def e10_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     greedy trajectory and value-checks every selection."""
     from torcdb_spark.operators.similarity import mmr_rerank
 
-    emb = load_table(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    emb = regime.spread(load_table(spark, sf_dir, "embeddings"))
     queries = emb.where(F.col("vec_id") < 6)
     return mmr_rerank(emb, queries, k=4, pool=10, lam=0.7)
 
@@ -9316,9 +9259,7 @@ def e11_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from torcdb_spark.functions.vector import cosine_similarity
 
-    emb = load_table(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    emb = regime.spread(load_table(spark, sf_dir, "embeddings"))
     half = emb.select(
         "vec_id",
         F.slice(
@@ -10764,7 +10705,7 @@ def m11_progressive_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_jpeg_progressive,
     )
 
-    docs = _spread(load_table(spark, sf_dir, "documents").where(
+    docs = regime.spread(load_table(spark, sf_dir, "documents").where(
         (F.col("doc_id") % 5 == 0) & (F.col("doc_id") < 500)
     ).select("doc_id"))
 
@@ -11062,9 +11003,7 @@ def d26_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter by design, integer-rational τ so the decision is bit-exact."""
     from torcdb_spark.operators.setjoin import containment_pairs_exact
 
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = regime.spread(load_table(spark, sf_dir, "documents"))
     return containment_pairs_exact(docs, tau_num=2, tau_den=3, shingle=3)
 
 
@@ -11142,10 +11081,9 @@ def e12_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     mutual-join stage is unchanged."""
     from torcdb_spark.operators.similarity import cosine_topk_bruteforce
 
-    emb = (
+    emb = regime.spread(
         load_table(spark, sf_dir, "embeddings")
         .where(F.col("vec_id") < 500)
-        .repartition(spark.sparkContext.defaultParallelism)
     )
     topk = cosine_topk_bruteforce(emb, emb, k=5).select(
         F.col("query_id").alias("qid"),
@@ -11700,9 +11638,7 @@ def km2_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan, per-vector argmin window, one (cell, dim) aggregate."""
     from torcdb_spark.operators.similarity import kmeans_lloyd_quantized
 
-    emb = load_table(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    emb = regime.spread(load_table(spark, sf_dir, "embeddings"))
     out = kmeans_lloyd_quantized(emb, k=8, iters=2)
     return out.groupBy(F.col("cid").alias("cluster")).agg(
         F.count("*").cast("long").alias("n_members"),
@@ -11773,9 +11709,7 @@ def e13_ivf_exact_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     unverifiable state."""
     from torcdb_spark.operators.similarity import ivf_topk_exact_cells
 
-    emb = load_table(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    emb = regime.spread(load_table(spark, sf_dir, "embeddings"))
     queries = emb.where(F.col("vec_id") < 10)
     return ivf_topk_exact_cells(
         emb, queries, k=5, num_centroids=8, nprobe=3, lloyd_iters=2
@@ -11818,9 +11752,7 @@ def d29_winnowing_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB; this witness hash-checks the ALGORITHM the pair shares."""
     from torcdb_spark.operators.text import winnowing_fingerprints
 
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = regime.spread(load_table(spark, sf_dir, "documents"))
     return winnowing_fingerprints(docs, hash_fn="md5")
 
 
@@ -11872,9 +11804,7 @@ def d30_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     started)."""
     from torcdb_spark.operators.dedup import minhash_lsh_dedup
 
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = regime.spread(load_table(spark, sf_dir, "documents"))
     return minhash_lsh_dedup(
         docs, num_perm=32, bands=8, jaccard_threshold=0.5, hash_fn="md5"
     )
@@ -11917,9 +11847,7 @@ def d31_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     d29/d30)."""
     from torcdb_spark.operators.dedup import simhash_dedup
 
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = regime.spread(load_table(spark, sf_dir, "documents"))
     return simhash_dedup(docs, hash_fn="md5")
 
 
@@ -12005,9 +11933,7 @@ def e14_lsh_rademacher(spark: SparkSession, sf_dir: str) -> DataFrame:
     form with a hash-checked structural twin."""
     from torcdb_spark.operators.similarity import lsh_rademacher_topk
 
-    emb = load_table(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    emb = regime.spread(load_table(spark, sf_dir, "embeddings"))
     queries = emb.where(F.col("vec_id") < 10)
     return lsh_rademacher_topk(
         emb, queries, k=5, num_bits=8, num_tables=4
@@ -12102,9 +12028,7 @@ def e15_pq_adc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin the driver hash-checks."""
     from torcdb_spark.operators.similarity import pq_adc_exact
 
-    emb = load_table(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    emb = regime.spread(load_table(spark, sf_dir, "embeddings"))
     queries = emb.where(F.col("vec_id") < 10)
     return pq_adc_exact(emb, queries, k=5, m=4, ksub=8, lloyd_iters=1)
 
@@ -12169,7 +12093,7 @@ def e16_semantic_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from torcdb_spark.operators.similarity import kmeans_lloyd_quantized
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # repartition ONLY the Lloyd input (the sf fixtures are one row
+    # spread ONLY the Lloyd input (the sf fixtures are one row
     # group; the iterative assignment is the parallel work) — the r10
     # plan audit showed the old whole-query repartition surviving as
     # pure waste everywhere else: an Exchange under each
@@ -12178,8 +12102,7 @@ def e16_semantic_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # final vec_id join (plan nodes 2/3, re-shuffled immediately by the
     # join's own hash exchange)
     cells = kmeans_lloyd_quantized(
-        emb.repartition(spark.sparkContext.defaultParallelism),
-        k=8, iters=2,
+        regime.spread(emb), k=8, iters=2,
     ).localCheckpoint(eager=True)
     # one materialization of the assignment: both self-join branches and
     # the CC otherwise re-run the full Lloyd lineage (2 windows + 2
@@ -12190,11 +12113,11 @@ def e16_semantic_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         l2_norm(F.col("embedding")).alias("_n"),
     )
     # spread the PROBE side's cells scan (narrow checkpoint scan — the
-    # _spread partition probe is free there; probing the joined frame
+    # spread partition probe is free there; probing the joined frame
     # would force AQE to execute its stages at build time) so the pair
     # scoring runs at full width even though the checkpointed assignment
     # lands in a handful of AQE-coalesced partitions
-    a = _spread(cells).select(F.col("id").alias("ia"), "cid").join(
+    a = regime.spread(cells).select(F.col("id").alias("ia"), "cid").join(
         raw.selectExpr("vec_id AS ia", "_r AS ra", "_n AS na"), "ia"
     )
     b = cells.select(F.col("id").alias("ib"), "cid").join(
@@ -12207,8 +12130,7 @@ def e16_semantic_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the spread scan). Above the bar — a corpus too big to broadcast —
     # the shuffle join stands unchanged; the count is a free read of the
     # already-eager checkpoint, never a recompute.
-    from torcdb_spark.analytics import _bc
-    b = _bc(b, cells.count())
+    b = regime.bc(b, cells.count())
     denom = F.col("na") * F.col("nb")
     cos = F.when(denom != 0.0, dot(F.col("ra"), F.col("rb")) / denom)
     pairs = (
@@ -12708,7 +12630,7 @@ def m3b_image_decode_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     path (Arrow batching, schema, error channel) to a value hash."""
     from torcdb_spark.operators.multimodal import decode_and_featurize
 
-    docs = _spread(load_table(spark, sf_dir, "documents"))
+    docs = regime.spread(load_table(spark, sf_dir, "documents"))
     w, h = 16, 8
     header = F.encode(F.lit(f"P6\n{w} {h}\n255\n"), "utf-8")
     body = F.encode(F.rpad(F.col("text"), w * h * 3, " "), "utf-8")
@@ -12801,9 +12723,8 @@ def m7b_whash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("media_id"),
         F.concat(header, body).alias("payload"),
     )
-    par = spark.sparkContext.defaultParallelism
     hashes = (
-        image_whash(media.repartition(par))
+        image_whash(regime.spread(media))
         .where(F.col("whash").isNotNull())
         .persist()
     )
@@ -12869,7 +12790,7 @@ def m1b_media_features_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_features,
     )
 
-    # No _spread here: m1b's declared contract (tests/test_plans.py
+    # No spread here: m1b's declared contract (tests/test_plans.py
     # test_media_features_twin_single_arrow_stage) is ONE Arrow kernel over
     # ONE scan with no shuffle; m1 keeps the fixture-spread for the family.
     docs = load_table(spark, sf_dir, "documents")
@@ -13267,7 +13188,7 @@ def m20_ogg_page_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented out-of-scope (decode_wav's contract)."""
     from torcdb_spark.operators.multimodal import ogg_census, ogg_synth_udf
 
-    docs = _spread(load_table(spark, sf_dir, "documents"))
+    docs = regime.spread(load_table(spark, sf_dir, "documents"))
     synth = ogg_synth_udf()
     opus = F.col("doc_id") % 2 == 0
     media = docs.select(
@@ -13855,7 +13776,7 @@ def p6_docx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from torcdb_spark.sources.warc import zip_members
 
     docs = (
-        _spread(load_table(spark, sf_dir, "documents")
+        regime.spread(load_table(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull())  # symmetric with the oracle
         .select("doc_id", "text"))
     )
@@ -13979,7 +13900,7 @@ def p7_xlsx_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     from torcdb_spark.sources.warc import zip_members
 
     docs = (
-        _spread(load_table(spark, sf_dir, "documents")
+        regime.spread(load_table(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull())  # symmetric with the oracle
         .select("doc_id", "text"))
     )
@@ -14283,14 +14204,10 @@ def p8_pptx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from torcdb_spark.operators.ooxml import pptx_text
     from torcdb_spark.sources.warc import zip_members
 
-    docs = (
+    docs = regime.spread(
         load_table(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull())  # symmetric with the oracle
         .select("doc_id", "text")
-        # single-row-group fixture -> 1 scan partition; spread the zip
-        # build + regex extraction across the cluster (a 100 TB input
-        # arrives in thousands of splits and needs no such hint)
-        .repartition(spark.sparkContext.defaultParallelism)
     )
 
     def build(batches):
@@ -14435,7 +14352,7 @@ def ic1_iceberg_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_manifest_list,
     )
 
-    docs = _spread(load_table(spark, sf_dir, "documents").select("doc_id"))
+    docs = regime.spread(load_table(spark, sf_dir, "documents").select("doc_id"))
 
     def build(batches):
         import pandas as pd
@@ -14536,11 +14453,8 @@ def ai1_arrow_ipc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_arrow_ipc,
     )
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").repartition(
-        # single-row-group fixture -> 1 scan partition; spread the Python
-        # fixture-build + parse kernels across the cluster (a 100 TB input
-        # arrives in thousands of splits and needs no such hint)
-        spark.sparkContext.defaultParallelism
+    docs = regime.spread(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
 
     def build(batches):
@@ -14608,7 +14522,7 @@ def p9_markdown_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from torcdb_spark.operators.text import markdown_to_text
 
     docs = (
-        _spread(load_table(spark, sf_dir, "documents")
+        regime.spread(load_table(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull())  # symmetric with the oracle
         .select("doc_id", "text"))
     )
@@ -14705,12 +14619,7 @@ def pm1_parquet_footer_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_parquet_bytes,
     )
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(
-        # single-row-group fixture -> 1 scan partition; spread the Python
-        # fixture-build + parse kernels across the cluster (a 100 TB input
-        # arrives in thousands of splits and needs no such hint)
-        spark.sparkContext.defaultParallelism
-    )
+    docs = regime.spread(load_table(spark, sf_dir, "documents").select("doc_id"))
 
     def build(batches):
         import pandas as pd
@@ -14799,12 +14708,7 @@ def pm2_page_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_parquet_bytes,
     )
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(
-        # single-row-group fixture -> 1 scan partition; spread the Python
-        # fixture-build + parse kernels across the cluster (a 100 TB input
-        # arrives in thousands of splits and needs no such hint)
-        spark.sparkContext.defaultParallelism
-    )
+    docs = regime.spread(load_table(spark, sf_dir, "documents").select("doc_id"))
 
     def build(batches):
         import pandas as pd
@@ -15089,7 +14993,7 @@ def mime1_magic_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from torcdb_spark.sources.ingest import content_type_sniff
 
-    docs = _spread(load_table(spark, sf_dir, "documents").select("doc_id"))
+    docs = regime.spread(load_table(spark, sf_dir, "documents").select("doc_id"))
 
     def build(batches):
         import gzip as _gzip

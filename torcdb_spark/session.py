@@ -79,9 +79,9 @@ def get_spark(
         # to cover a full bench pass (>15k stages) made the app status
         # store a per-event cost for every stage-heavy query — measured
         # 17x on g_triangle_count, 7.7x on e12_knn_graph at sf0.1, gone
-        # the moment the default was restored. The bench's task-time
-        # probe now reads the executor summary's cumulative totalDuration
-        # (never evicted) instead of iterating retained stages.
+        # the moment the default was restored. bench.py's task time sums
+        # executorRunTime over the last attempt of each stage in the
+        # query's own job group, so it reads only that query's stages.
         # stdout hygiene: the driver harness parses bench.py's final stdout
         # line as JSON — progress bars would interleave with it.
         .config("spark.ui.showConsoleProgress", "false")
