@@ -46,8 +46,9 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
     from torcdb_spark.operators.multimodal import (
         decode_and_featurize,
         audio_features,
+        encode_wav_pcm,
         phash_near_dup_pairs,
-        wav_wrap_udf,
+        synth_udf,
     )
     from torcdb_spark.operators.similarity import semantic_dedup
     from torcdb_spark.operators.text import benchmark_overlap
@@ -133,9 +134,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
     # -- 3. audio: wrap bytes as 8-bit PCM WAV, real RIFF parse ----------
     wav = docs.select(
         F.col("doc_id").alias("media_id"),
-        wav_wrap_udf(sample_rate=8000, bits=8)(F.encode("text", "utf-8")).alias(
-            "payload"
-        ),
+        synth_udf(encode_wav_pcm)(F.encode("text", "utf-8")).alias("payload"),
     )
     au = audio_features(wav)
     log(f"audio clips with rms: {au.where(F.col('rms').isNotNull()).count()}")

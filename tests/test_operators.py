@@ -1186,6 +1186,68 @@ def test_mp3_frame_census():
             mp3_frame_census(bad)
 
 
+def test_payload_rows_skips_malformed_and_fans_out(spark):
+    """The census kernel at the DataFrame boundary: a dict parser gives
+    one row per valid payload, a list parser one row per item, and a
+    payload whose parser raises ValueError (truncated, junk) is dropped.
+    An input with no rows, or with no valid row, gives an empty frame
+    with the schema's columns."""
+    from torcdb_spark.operators.multimodal import (
+        ID3_TAGS_SCHEMA,
+        MP3_CENSUS_SCHEMA,
+        encode_id3v2,
+        encode_mp3_stream,
+        id3v2_text_frames,
+        mp3_frame_census,
+        payload_rows,
+    )
+
+    mp3 = encode_mp3_stream(3, bitrate_idx=9)
+    tagged = encode_id3v2(
+        [("TIT2", "title", 0), ("TPE1", "artist", 1), ("TALB", "album", 3)]
+    ) + mp3
+    ddl = "media_id long, payload binary"
+    media = spark.createDataFrame(
+        [(1, mp3), (2, mp3[:3]), (3, b"junk"), (4, tagged), (5, tagged[:20])],
+        ddl,
+    )
+    c = mp3_frame_census(mp3)
+    rows = payload_rows(media, mp3_frame_census, MP3_CENSUS_SCHEMA)
+    assert rows.columns == [f.split()[0] for f in MP3_CENSUS_SCHEMA.split(",")]
+    got = {r.media_id: r for r in rows.collect()}
+    assert sorted(got) == [1, 4]  # 2 truncated, 3 junk, 5 no frame left
+    assert (got[1].n_frames, got[1].bitrate_kbps, got[1].sample_rate,
+            got[1].total_bytes, got[1].duration_ms) == (
+        c["n_frames"], c["bitrate_kbps"], c["sample_rate"],
+        c["total_bytes"], c["duration_ms"])
+    tags = payload_rows(media, id3v2_text_frames, ID3_TAGS_SCHEMA)
+    assert sorted(tuple(r) for r in tags.collect()) == [
+        (4, "TALB", "album"), (4, "TIT2", "title"), (4, "TPE1", "artist"),
+    ]  # 5's tag overruns its payload; 1-3 carry no tag
+    empty = spark.createDataFrame([], ddl)
+    bad = spark.createDataFrame([(2, mp3[:3]), (3, b"junk")], ddl)
+    for frame in (empty, bad):
+        out = payload_rows(frame, mp3_frame_census, MP3_CENSUS_SCHEMA)
+        assert out.columns == rows.columns
+        assert out.collect() == []
+
+
+def test_synth_udf_passes_python_values(spark):
+    """synth_udf calls its encoder once per row with Python ints, bools,
+    strs and bytes, so an encoder needs no casts."""
+    from torcdb_spark.operators.multimodal import synth_udf
+
+    df = spark.createDataFrame(
+        [(7, 3, True, "a", b"\x01")],
+        "l long, i int, b boolean, s string, p binary",
+    )
+    synth = synth_udf(lambda *row: repr(
+        [(type(v).__name__, v) for v in row]).encode())
+    out = df.select(synth("l", "i", "b", "s", "p").alias("x")).first().x
+    assert bytes(out) == repr([("int", 7), ("int", 3), ("bool", True),
+                               ("str", "a"), ("bytes", b"\x01")]).encode()
+
+
 def test_aac_adts_census():
     """ADTS header-walk census against hand-computed ISO 13818-7 §6.2
     arithmetic: 13-bit frame length, profile/rate/channel extraction,

@@ -898,6 +898,22 @@ def test_mp3_census_two_python_stages_no_shuffle(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
+@pytest.mark.parametrize("name", [
+    "m21_h264_nal_census", "m22_ogg_comment_tags", "m23_webm_census",
+    "m24_av1_obu_census", "m25_hevc_nal_census", "m26_opus_packet_census",
+])
+def test_media_census_two_python_stages_no_shuffle(spark, sf_dir, name):
+    """m21-m26 share m14's shape: synth (pandas_udf) → parse
+    (mapInPandas) over a single documents scan, no exchange."""
+    from torcdb_spark.queries import queries
+
+    plan = explain_str(queries()[name](spark, sf_dir), "simple")
+    assert plan.count("MapInPandas") == 1
+    assert plan.count("ArrowEvalPython") == 1
+    assert "Exchange" not in plan
+    assert "CartesianProduct" not in plan
+
+
 def test_media_features_twin_single_arrow_stage(spark, sf_dir):
     """m1b is one Arrow kernel over one scan: a single MapInPandas, no
     shuffle — the integer inversion of the float features is pure JVM

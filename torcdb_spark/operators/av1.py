@@ -15,10 +15,6 @@ same contract as every other census's essence line.
 
 from __future__ import annotations
 
-import pandas as pd  # module-level: pandas_udf resolves stringified hints
-
-from pyspark.sql import DataFrame
-
 # OBU types, spec §6.2.2
 OBU_SEQUENCE_HEADER = 1
 OBU_TEMPORAL_DELIMITER = 2
@@ -344,66 +340,9 @@ def encode_av1_stream(
     return b"".join(out)
 
 
-def av1_census(media: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Arrow-batched :func:`av1_obu_census` over opaque AV1 payloads —
-    same mapInPandas shape and skip-malformed contract as the H.264
-    census."""
-    import pandas as pd  # noqa: F401
-
-    schema = (
-        "media_id long, n_obus long, n_seq_hdr long, "
-        "n_temporal_delim long, n_frames long, n_tile_groups long, "
-        "n_metadata long, n_padding long, width long, height long, "
-        "seq_profile long, seq_level_idx long, total_bytes long"
-    )
-    cols = ("n_obus", "n_seq_hdr", "n_temporal_delim", "n_frames",
-            "n_tile_groups", "n_metadata", "n_padding", "width",
-            "height", "seq_profile", "seq_level_idx", "total_bytes")
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"media_id": []}
-            for c in cols:
-                out[c] = []
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                try:
-                    c = av1_obu_census(bytes(payload))
-                except ValueError:
-                    continue
-                out["media_id"].append(mid)
-                for k in cols:
-                    out[k].append(c[k])
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(kernel, schema=schema)
-
-
-def av1_synth_udf():
-    """pandas_udf synthesizing structurally valid AV1 streams from
-    per-row parameter columns via :func:`encode_av1_stream`."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def synth(
-        width: pd.Series,
-        height: pd.Series,
-        n_frames: pd.Series,
-        tile_bytes: pd.Series,
-        seq_level_idx: pd.Series,
-        reduced: pd.Series,
-        with_timing: pd.Series,
-    ) -> pd.Series:
-        return pd.Series(
-            [
-                encode_av1_stream(int(w), int(h), int(f), int(t),
-                                  int(lv), bool(r), bool(ti))
-                for w, h, f, t, lv, r, ti in zip(
-                    width, height, n_frames, tile_bytes,
-                    seq_level_idx, reduced, with_timing
-                )
-            ]
-        )
-
-    return synth
+AV1_CENSUS_SCHEMA = (
+    "media_id long, n_obus long, n_seq_hdr long, "
+    "n_temporal_delim long, n_frames long, n_tile_groups long, "
+    "n_metadata long, n_padding long, width long, height long, "
+    "seq_profile long, seq_level_idx long, total_bytes long"
+)

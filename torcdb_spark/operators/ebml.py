@@ -16,10 +16,6 @@ from __future__ import annotations
 
 import struct
 
-import pandas as pd  # module-level: pandas_udf resolves stringified hints
-
-from pyspark.sql import DataFrame
-
 # Element IDs (marker bit retained, as written on disk)
 _EBML_HEADER = 0x1A45DFA3
 _DOCTYPE = 0x4282
@@ -233,72 +229,8 @@ def encode_webm_stub(
     return header + _elem(_SEGMENT, info + tracks + clusters)
 
 
-def webm_media_census(
-    media: DataFrame, payload_col: str = "payload"
-) -> DataFrame:
-    """Arrow-batched :func:`webm_census` over opaque Matroska/WebM
-    payloads — same mapInPandas shape and skip-malformed contract as
-    mp4_census."""
-    import pandas as pd  # noqa: F401
-
-    schema = (
-        "media_id long, doctype string, timescale long, duration_ms long, "
-        "n_tracks long, n_video long, n_audio long, width long, "
-        "height long, n_clusters long"
-    )
-    cols = ("doctype", "timescale", "duration_ms", "n_tracks", "n_video",
-            "n_audio", "n_clusters")
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"media_id": [], "width": [], "height": []}
-            for c in cols:
-                out[c] = []
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                try:
-                    c = webm_census(bytes(payload))
-                except ValueError:
-                    continue
-                out["media_id"].append(mid)
-                out["width"].append(c["width"] or 0)
-                out["height"].append(c["height"] or 0)
-                for k in cols:
-                    out[k].append(c[k])
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(kernel, schema=schema)
-
-
-def webm_synth_udf():
-    """pandas_udf synthesizing structurally valid Matroska/WebM
-    containers from per-row parameter columns via
-    :func:`encode_webm_stub` — the fixture-synthesis step for the WebM
-    census pipeline."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def synth(
-        doctype: pd.Series,
-        duration_ms: pd.Series,
-        n_video: pd.Series,
-        n_audio: pd.Series,
-        width: pd.Series,
-        height: pd.Series,
-        n_clusters: pd.Series,
-    ) -> pd.Series:
-        return pd.Series(
-            [
-                encode_webm_stub(
-                    str(d), 1_000_000, int(dm), int(nv), int(na),
-                    int(w), int(h), int(nc),
-                )
-                for d, dm, nv, na, w, h, nc in zip(
-                    doctype, duration_ms, n_video, n_audio,
-                    width, height, n_clusters
-                )
-            ]
-        )
-
-    return synth
+WEBM_CENSUS_SCHEMA = (
+    "media_id long, doctype string, timescale long, duration_ms long, "
+    "n_tracks long, n_video long, n_audio long, width long, "
+    "height long, n_clusters long"
+)

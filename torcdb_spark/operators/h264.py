@@ -18,10 +18,6 @@ contract as the audio censuses' PCM boundary.
 
 from __future__ import annotations
 
-import pandas as pd  # module-level: pandas_udf resolves stringified hints
-
-from pyspark.sql import DataFrame
-
 # profiles whose SPS carries the chroma/bit-depth/scaling-matrix block
 # (spec §7.3.2.1.1 "if( profile_idc == 100 || ... )")
 _HIGH_PROFILES = frozenset(
@@ -348,65 +344,8 @@ def encode_h264_stream(
     return b"".join(out)
 
 
-def h264_census(media: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Arrow-batched :func:`h264_nal_census` over opaque H.264
-    payloads — same mapInPandas shape and skip-malformed contract as
-    the audio censuses (operators/multimodal.py)."""
-    import pandas as pd  # noqa: F401
-
-    schema = (
-        "media_id long, n_nalus long, n_slices long, n_idr long, "
-        "n_sps long, n_pps long, width long, height long, "
-        "profile_idc long, level_idc long, total_bytes long"
-    )
-    cols = ("n_nalus", "n_slices", "n_idr", "n_sps", "n_pps",
-            "width", "height", "profile_idc", "level_idc", "total_bytes")
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"media_id": []}
-            for c in cols:
-                out[c] = []
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                try:
-                    c = h264_nal_census(bytes(payload))
-                except ValueError:
-                    continue
-                out["media_id"].append(mid)
-                for k in cols:
-                    out[k].append(c[k])
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(kernel, schema=schema)
-
-
-def h264_synth_udf():
-    """pandas_udf synthesizing structurally valid H.264 streams from
-    per-row parameter columns via :func:`encode_h264_stream` — the
-    fixture-synthesis step for the H.264 census pipeline."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def synth(
-        width: pd.Series,
-        height: pd.Series,
-        n_gops: pd.Series,
-        p_per_gop: pd.Series,
-        slice_bytes: pd.Series,
-        level_idc: pd.Series,
-        avcc: pd.Series,
-    ) -> pd.Series:
-        return pd.Series(
-            [
-                encode_h264_stream(int(w), int(h), int(g), int(p),
-                                   int(s), int(lv), bool(a))
-                for w, h, g, p, s, lv, a in zip(
-                    width, height, n_gops, p_per_gop,
-                    slice_bytes, level_idc, avcc
-                )
-            ]
-        )
-
-    return synth
+H264_CENSUS_SCHEMA = (
+    "media_id long, n_nalus long, n_slices long, n_idr long, "
+    "n_sps long, n_pps long, width long, height long, "
+    "profile_idc long, level_idc long, total_bytes long"
+)

@@ -16,10 +16,6 @@ Exp-Golomb bit reader/writer (the two specs share §9.2's ue(v) and
 
 from __future__ import annotations
 
-import pandas as pd  # module-level: pandas_udf resolves stringified hints
-
-from pyspark.sql import DataFrame
-
 from torcdb_spark.operators.h264 import (
     _add_emulation,
     _BitReader,
@@ -255,65 +251,8 @@ def encode_hevc_stream(
     return b"".join(out)
 
 
-def hevc_census(media: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Arrow-batched :func:`hevc_nal_census` over opaque HEVC payloads
-    — same mapInPandas shape and skip-malformed contract as the H.264
-    and AV1 censuses."""
-    import pandas as pd  # noqa: F401
-
-    schema = (
-        "media_id long, n_nalus long, n_slices long, n_irap long, "
-        "n_idr long, n_vps long, n_sps long, n_pps long, width long, "
-        "height long, profile_idc long, level_idc long, total_bytes long"
-    )
-    cols = ("n_nalus", "n_slices", "n_irap", "n_idr", "n_vps", "n_sps",
-            "n_pps", "width", "height", "profile_idc", "level_idc",
-            "total_bytes")
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"media_id": []}
-            for c in cols:
-                out[c] = []
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                try:
-                    c = hevc_nal_census(bytes(payload))
-                except ValueError:
-                    continue
-                out["media_id"].append(mid)
-                for k in cols:
-                    out[k].append(c[k])
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(kernel, schema=schema)
-
-
-def hevc_synth_udf():
-    """pandas_udf synthesizing structurally valid HEVC streams from
-    per-row parameter columns via :func:`encode_hevc_stream`."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def synth(
-        width: pd.Series,
-        height: pd.Series,
-        n_gops: pd.Series,
-        p_per_gop: pd.Series,
-        slice_bytes: pd.Series,
-        level_idc: pd.Series,
-        avcc: pd.Series,
-    ) -> pd.Series:
-        return pd.Series(
-            [
-                encode_hevc_stream(int(w), int(h), int(g), int(p),
-                                   int(s), int(lv), bool(a))
-                for w, h, g, p, s, lv, a in zip(
-                    width, height, n_gops, p_per_gop,
-                    slice_bytes, level_idc, avcc
-                )
-            ]
-        )
-
-    return synth
+HEVC_CENSUS_SCHEMA = (
+    "media_id long, n_nalus long, n_slices long, n_irap long, "
+    "n_idr long, n_vps long, n_sps long, n_pps long, width long, "
+    "height long, profile_idc long, level_idc long, total_bytes long"
+)

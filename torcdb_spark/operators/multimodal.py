@@ -55,6 +55,47 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
+def payload_rows(media: DataFrame, parse, schema: str) -> DataFrame:
+    """The one Arrow-batched kernel of the structural censuses:
+    ``parse(payload)`` per ``(media_id, payload)`` row via mapInPandas.
+    ``schema`` is flat DDL whose first column is ``media_id``.  A dict
+    from ``parse`` gives one row, its keys naming the other columns; a
+    list gives one row per item, each item a dict or a tuple in column
+    order.  A payload whose ``parse`` raises ValueError is dropped (the
+    skip-malformed contract)."""
+    names = [field.split()[0] for field in schema.split(",")]
+
+    def kernel(batches):
+        for pdf in batches:
+            rows = []
+            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
+                try:
+                    parsed = parse(bytes(payload))
+                except ValueError:
+                    continue
+                for item in parsed if isinstance(parsed, list) else [parsed]:
+                    if isinstance(item, dict):
+                        item = [item[k] for k in names[1:]]
+                    rows.append((mid, *item))
+            yield pd.DataFrame(rows, columns=names)
+
+    return media.mapInPandas(kernel, schema=schema)
+
+
+def synth_udf(encode):
+    """The one fixture-synthesis UDF: a binary pandas_udf whose output
+    row is ``encode(*row)`` over its argument columns.  ``tolist()``
+    hands ``encode`` Python ints, bools, strs and bytes."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("binary")
+    def synth(*cols: pd.Series) -> pd.Series:
+        rows = zip(*(c.tolist() for c in cols))
+        return pd.Series([encode(*row) for row in rows])
+
+    return synth
+
+
 def documents_as_media(docs: DataFrame) -> DataFrame:
     """Adapter: wrap the documents fixture as a media table (text bytes as
     the opaque payload) so the multimodal plumbing is exercised by real
@@ -1197,20 +1238,6 @@ def audio_features(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     return media.mapInPandas(kernel, schema=AUDIO_FEATURE_SCHEMA)
 
 
-def wav_wrap_udf(sample_rate: int = 8000, bits: int = 8):
-    """pandas_udf wrapping a binary column of raw PCM bytes into canonical
-    WAV payloads via :func:`encode_wav_pcm` — the fixture-synthesis step
-    for the audio pipeline (defined here so the stringified type hints
-    resolve against this module's pandas import)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def wrap(payload: pd.Series) -> pd.Series:
-        return payload.map(lambda b: encode_wav_pcm(bytes(b), sample_rate, bits))
-
-    return wrap
-
-
 # ---------------------------------------------------------------------------
 # MP3: structural frame-header walk (no PCM decode — documented scope:
 # full MPEG audio synthesis needs a codec library; the header walk alone
@@ -1394,36 +1421,6 @@ MP3_CENSUS_SCHEMA = (
 )
 
 
-def mp3_census(media: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Arrow-batched :func:`mp3_frame_census` over opaque MP3 payloads —
-    the same mapInPandas shape as audio_features, with the same
-    skip-malformed degradation (undecodable rows dropped)."""
-    import pandas as pd  # noqa: F401
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "media_id": [], "n_frames": [], "bitrate_kbps": [],
-                "sample_rate": [], "total_bytes": [], "duration_ms": [],
-            }
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                try:
-                    c = mp3_frame_census(bytes(payload))
-                except ValueError:
-                    continue
-                out["media_id"].append(mid)
-                out["n_frames"].append(c["n_frames"])
-                out["bitrate_kbps"].append(c["bitrate_kbps"])
-                out["sample_rate"].append(c["sample_rate"])
-                out["total_bytes"].append(c["total_bytes"])
-                out["duration_ms"].append(c["duration_ms"])
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(kernel, schema=MP3_CENSUS_SCHEMA)
-
-
 # ADTS sampling-frequency table (ISO/IEC 13818-7 / 14496-3), index 0..12
 _ADTS_RATES = [96000, 88200, 64000, 48000, 44100, 32000, 24000, 22050,
                16000, 12000, 11025, 8000, 7350]
@@ -1517,40 +1514,10 @@ def encode_adts_stream(
     return (h + bytes(body_bytes)) * n_frames
 
 
-def aac_census(media: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Arrow-batched :func:`aac_adts_census` over opaque ADTS payloads —
-    same mapInPandas shape and skip-malformed contract as mp3_census."""
-    import pandas as pd  # noqa: F401
-
-    schema = (
-        "media_id long, n_frames long, profile long, sample_rate long, "
-        "channels long, total_bytes long, duration_ms long"
-    )
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "media_id": [], "n_frames": [], "profile": [],
-                "sample_rate": [], "channels": [], "total_bytes": [],
-                "duration_ms": [],
-            }
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                try:
-                    c = aac_adts_census(bytes(payload))
-                except ValueError:
-                    continue
-                out["media_id"].append(mid)
-                out["n_frames"].append(c["n_frames"])
-                out["profile"].append(c["profile"])
-                out["sample_rate"].append(c["sample_rate"])
-                out["channels"].append(c["channels"])
-                out["total_bytes"].append(c["total_bytes"])
-                out["duration_ms"].append(c["duration_ms"])
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(kernel, schema=schema)
+AAC_CENSUS_SCHEMA = (
+    "media_id long, n_frames long, profile long, sample_rate long, "
+    "channels long, total_bytes long, duration_ms long"
+)
 
 
 def _id3_deunsync(data: bytes) -> bytes:
@@ -1719,105 +1686,26 @@ def encode_id3v2(
     return b"ID3" + bytes([version, 0, flags]) + size + bytes(body)
 
 
-def id3_tags(media: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Arrow-batched :func:`id3v2_text_frames` over opaque MP3
-    payloads, one row per text frame — the metadata-enrichment step a
-    crawl pipeline runs before audio decode (same mapInPandas shape
-    and skip-malformed contract as the censuses)."""
-    import pandas as pd  # noqa: F401
-
-    schema = "media_id long, frame_id string, value string"
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"media_id": [], "frame_id": [], "value": []}
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                try:
-                    frames = id3v2_text_frames(bytes(payload))
-                except ValueError:
-                    continue
-                for fid, text in frames:
-                    out["media_id"].append(mid)
-                    out["frame_id"].append(fid)
-                    out["value"].append(text)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(kernel, schema=schema)
+ID3_TAGS_SCHEMA = "media_id long, frame_id string, value string"
 
 
-def id3_synth_udf():
-    """pandas_udf prepending a real ID3v2 tag (title/artist/album text
-    frames, per-row encodings) to a structurally valid MP3 stream —
-    fixture synthesis for the id3_tags pipeline.  version=2 rows emit
-    v2.2 tags (TT2/TP1/TAL three-char IDs, encoding clamped to the
-    0/1 the old spec allows); the unsync column sets tag-wide
-    unsynchronisation on v2.2/2.3 rows (ignored for v2.4, whose
-    fixture writer does not emit per-frame unsync)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def synth(
-        title: pd.Series,
-        artist: pd.Series,
-        album: pd.Series,
-        encoding: pd.Series,
-        version: pd.Series,
-        unsync: pd.Series,
-    ) -> pd.Series:
-        out = []
-        for t, a, al, e, v, u in zip(
-            title, artist, album, encoding, version, unsync
-        ):
-            v = int(v)
-            e = int(e)
-            if v == 2:
-                ids = ("TT2", "TP1", "TAL")
-                e = e % 2
-            else:
-                ids = ("TIT2", "TPE1", "TALB")
-            out.append(
-                encode_id3v2(
-                    [(ids[0], t, e), (ids[1], a, e), (ids[2], al, e)],
-                    version=v,
-                    unsync=bool(u) and v < 4,
-                )
-                + encode_mp3_stream(1, 9, 0, 1, 3, 0)
-            )
-        return pd.Series(out)
-
-    return synth
-
-
-def mp3_synth_udf():
-    """pandas_udf synthesizing structurally valid MP3 streams from
-    per-row parameter columns via :func:`encode_mp3_stream` — the
-    fixture-synthesis step for the MP3 census pipeline (defined here so
-    the stringified type hints resolve against this module's pandas
-    import, same as wav_wrap_udf)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def synth(
-        n_frames: pd.Series,
-        bitrate_idx: pd.Series,
-        samplerate_idx: pd.Series,
-        version: pd.Series,
-        id3_body: pd.Series,
-    ) -> pd.Series:
-        return pd.Series(
-            [
-                encode_mp3_stream(
-                    int(n), int(b), int(s), int(v), 3, int(t)
-                )
-                for n, b, s, v, t in zip(
-                    n_frames, bitrate_idx, samplerate_idx, version, id3_body
-                )
-            ]
-        )
-
-    return synth
+def encode_id3_mp3(title: str, artist: str, album: str, encoding: int,
+                   version: int, unsync: bool) -> bytes:
+    """One MP3 frame behind an ID3v2 tag of title/artist/album text
+    frames: the per-row fixture for :func:`id3v2_text_frames`.
+    version=2 writes the three-char v2.2 IDs and clamps ``encoding`` to
+    the 0/1 that spec allows; ``unsync`` applies to v2.2/2.3 only, since
+    :func:`encode_id3v2` writes no per-frame v2.4 unsynchronisation."""
+    if version == 2:
+        ids = ("TT2", "TP1", "TAL")
+        encoding %= 2
+    else:
+        ids = ("TIT2", "TPE1", "TALB")
+    frames = [(fid, text, encoding)
+              for fid, text in zip(ids, (title, artist, album))]
+    tag = encode_id3v2(frames, version=version,
+                       unsync=unsync and version < 4)
+    return tag + encode_mp3_stream(1, 9, 0, 1, 3, 0)
 
 
 # ---------------------------------------------------------------------------
@@ -2007,41 +1895,10 @@ def encode_mp4_stub(
     return ftyp + moov + mdat
 
 
-def mp4_census(media: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Arrow-batched :func:`mp4_box_census` over opaque BMFF payloads —
-    same mapInPandas shape and skip-malformed contract as mp3_census."""
-    import pandas as pd  # noqa: F401
-
-    schema = (
-        "media_id long, n_tracks long, n_video long, n_audio long, "
-        "width long, height long, duration_ms long, total_bytes long"
-    )
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "media_id": [], "n_tracks": [], "n_video": [],
-                "n_audio": [], "width": [], "height": [],
-                "duration_ms": [], "total_bytes": [],
-            }
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                try:
-                    c = mp4_box_census(bytes(payload))
-                except ValueError:
-                    continue
-                out["media_id"].append(mid)
-                out["n_tracks"].append(c["n_tracks"])
-                out["n_video"].append(c["n_video"])
-                out["n_audio"].append(c["n_audio"])
-                out["width"].append(c["width"] or 0)
-                out["height"].append(c["height"] or 0)
-                out["duration_ms"].append(c["duration_ms"])
-                out["total_bytes"].append(c["total_bytes"])
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(kernel, schema=schema)
+MP4_CENSUS_SCHEMA = (
+    "media_id long, n_tracks long, n_video long, n_audio long, "
+    "width long, height long, duration_ms long, total_bytes long"
+)
 
 
 def flac_streaminfo_census(payload: bytes) -> dict:
@@ -2129,189 +1986,11 @@ def encode_flac_stub(
     return out + bytes(frame_bytes)
 
 
-def flac_census(media: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Arrow-batched :func:`flac_streaminfo_census` over opaque FLAC
-    payloads — same mapInPandas shape and skip-malformed contract as
-    the other censuses."""
-    import pandas as pd  # noqa: F401
-
-    schema = (
-        "media_id long, sample_rate long, channels long, "
-        "bits_per_sample long, total_samples long, duration_ms long, "
-        "n_metadata_blocks long, total_bytes long"
-    )
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "media_id": [], "sample_rate": [], "channels": [],
-                "bits_per_sample": [], "total_samples": [],
-                "duration_ms": [], "n_metadata_blocks": [],
-                "total_bytes": [],
-            }
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                try:
-                    c = flac_streaminfo_census(bytes(payload))
-                except ValueError:
-                    continue
-                out["media_id"].append(mid)
-                for k in ("sample_rate", "channels", "bits_per_sample",
-                          "total_samples", "duration_ms",
-                          "n_metadata_blocks", "total_bytes"):
-                    out[k].append(c[k])
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(kernel, schema=schema)
-
-
-def flac_synth_udf():
-    """pandas_udf building structurally valid FLAC containers from
-    per-row parameter columns via :func:`encode_flac_stub`."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def synth(
-        sample_rate: pd.Series,
-        channels: pd.Series,
-        bits: pd.Series,
-        total_samples: pd.Series,
-        padding: pd.Series,
-        frame_bytes: pd.Series,
-    ) -> pd.Series:
-        return pd.Series(
-            [
-                encode_flac_stub(
-                    int(sr), int(ch), int(b), int(ts), int(p), int(fb)
-                )
-                for sr, ch, b, ts, p, fb in zip(
-                    sample_rate, channels, bits, total_samples, padding,
-                    frame_bytes,
-                )
-            ]
-        )
-
-    return synth
-
-
-def mp4_synth_udf():
-    """pandas_udf building structurally valid MP4 containers from
-    per-row parameter columns via :func:`encode_mp4_stub` (see
-    mp3_synth_udf for the pandas-import note)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def synth(
-        timescale: pd.Series,
-        duration: pd.Series,
-        n_video: pd.Series,
-        n_audio: pd.Series,
-        width: pd.Series,
-        height: pd.Series,
-        mdat_bytes: pd.Series,
-    ) -> pd.Series:
-        return pd.Series(
-            [
-                encode_mp4_stub(
-                    int(t), int(d), int(nv), int(na), int(w), int(h), int(m)
-                )
-                for t, d, nv, na, w, h, m in zip(
-                    timescale, duration, n_video, n_audio, width, height,
-                    mdat_bytes,
-                )
-            ]
-        )
-
-    return synth
-
-
-def adts_synth_udf():
-    """pandas_udf building structurally valid ADTS streams from per-row
-    parameter columns via :func:`encode_adts_stream` (see
-    mp3_synth_udf for the pattern and the pandas-import note)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def synth(
-        n_frames: pd.Series,
-        profile: pd.Series,
-        samplerate_idx: pd.Series,
-        channels: pd.Series,
-        body_bytes: pd.Series,
-    ) -> pd.Series:
-        return pd.Series(
-            [
-                encode_adts_stream(int(n), int(p), int(s), int(c), int(b))
-                for n, p, s, c, b in zip(
-                    n_frames, profile, samplerate_idx, channels, body_bytes
-                )
-            ]
-        )
-
-    return synth
-
-
-def webp_lossy_synth_udf():
-    """pandas_udf building structurally valid lossy-WebP containers from
-    per-row dimension columns (operators/webp.encode_webp_lossy_stub)."""
-    from pyspark.sql.functions import pandas_udf
-
-    from torcdb_spark.operators.webp import encode_webp_lossy_stub
-
-    @pandas_udf("binary")
-    def synth(
-        width: pd.Series,
-        height: pd.Series,
-        version: pd.Series,
-        body_fill: pd.Series,
-    ) -> pd.Series:
-        return pd.Series(
-            [
-                encode_webp_lossy_stub(int(w), int(h), int(v), int(b))
-                for w, h, v, b in zip(width, height, version, body_fill)
-            ]
-        )
-
-    return synth
-
-
-def webp_lossy_census(media: DataFrame,
-                      payload_col: str = "payload") -> DataFrame:
-    """Arrow-batched :func:`torcdb_spark.operators.webp.webp_lossy_info`
-    over opaque WebP payloads — same mapInPandas shape and
-    skip-malformed contract as mp3_census/aac_census."""
-    import pandas as pd  # noqa: F401
-
-    from torcdb_spark.operators.webp import webp_lossy_info
-
-    schema = (
-        "media_id long, width long, height long, version long, "
-        "first_part_size long, vp8_bytes long"
-    )
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "media_id": [], "width": [], "height": [], "version": [],
-                "first_part_size": [], "vp8_bytes": [],
-            }
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                try:
-                    c = webp_lossy_info(bytes(payload))
-                except (ValueError, NotImplementedError):
-                    continue
-                out["media_id"].append(mid)
-                out["width"].append(c["width"])
-                out["height"].append(c["height"])
-                out["version"].append(c["version"])
-                out["first_part_size"].append(c["first_part_size"])
-                out["vp8_bytes"].append(c["vp8_bytes"])
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(kernel, schema=schema)
+FLAC_CENSUS_SCHEMA = (
+    "media_id long, sample_rate long, channels long, "
+    "bits_per_sample long, total_samples long, duration_ms long, "
+    "n_metadata_blocks long, total_bytes long"
+)
 
 
 # ---------------------------------------------------------------------------
@@ -2594,122 +2273,14 @@ def ogg_comment_tags(payload: bytes) -> list:
     return out
 
 
-def ogg_tags(media: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Arrow-batched :func:`ogg_comment_tags` over opaque Ogg payloads,
-    one row per user comment — same mapInPandas shape and
-    skip-malformed contract as id3_tags."""
-    import pandas as pd  # noqa: F401
-
-    schema = "media_id long, tag string, value string"
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"media_id": [], "tag": [], "value": []}
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                try:
-                    tags = ogg_comment_tags(bytes(payload))
-                except ValueError:
-                    continue
-                for k, v in tags:
-                    out["media_id"].append(mid)
-                    out["tag"].append(k)
-                    out["value"].append(v)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(kernel, schema=schema)
+OGG_TAGS_SCHEMA = "media_id long, tag string, value string"
 
 
-def ogg_tags_synth_udf():
-    """pandas_udf synthesizing Ogg streams carrying real comment
-    headers (title/artist/date entries) — fixture synthesis for the
-    ogg_tags pipeline."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def synth(
-        codec: pd.Series,
-        title: pd.Series,
-        artist: pd.Series,
-        date: pd.Series,
-    ) -> pd.Series:
-        return pd.Series(
-            [
-                encode_ogg_stub(
-                    str(c),
-                    comments=[("TITLE", t), ("ARTIST", a), ("DATE", d)],
-                )
-                for c, t, a, d in zip(codec, title, artist, date)
-            ]
-        )
-
-    return synth
-
-
-def ogg_census(media: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Arrow-batched :func:`ogg_page_census` over opaque Ogg payloads —
-    same mapInPandas shape and skip-malformed contract as
-    mp3_census/flac_census."""
-    import pandas as pd  # noqa: F401
-
-    schema = (
-        "media_id long, codec string, n_pages long, n_packets long, "
-        "channels long, pre_skip long, sample_rate long, "
-        "last_granule long, duration_ms long, total_bytes long"
-    )
-    cols = ("codec", "n_pages", "n_packets", "channels", "pre_skip",
-            "sample_rate", "last_granule", "duration_ms", "total_bytes")
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"media_id": []}
-            for c in cols:
-                out[c] = []
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                try:
-                    c = ogg_page_census(bytes(payload))
-                except ValueError:
-                    continue
-                out["media_id"].append(mid)
-                for k in cols:
-                    out[k].append(c[k])
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(kernel, schema=schema)
-
-
-def ogg_synth_udf():
-    """pandas_udf synthesizing structurally valid Ogg Opus/Vorbis
-    containers from per-row parameter columns via
-    :func:`encode_ogg_stub` — the fixture-synthesis step for the Ogg
-    census pipeline."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def synth(
-        codec: pd.Series,
-        channels: pd.Series,
-        sample_rate: pd.Series,
-        pre_skip: pd.Series,
-        n_audio_pages: pd.Series,
-        packets_per_page: pd.Series,
-        packet_size: pd.Series,
-    ) -> pd.Series:
-        return pd.Series(
-            [
-                encode_ogg_stub(str(c), int(ch), int(sr), int(ps),
-                                int(np_), int(pp), int(sz))
-                for c, ch, sr, ps, np_, pp, sz in zip(
-                    codec, channels, sample_rate, pre_skip,
-                    n_audio_pages, packets_per_page, packet_size
-                )
-            ]
-        )
-
-    return synth
+OGG_CENSUS_SCHEMA = (
+    "media_id long, codec string, n_pages long, n_packets long, "
+    "channels long, pre_skip long, sample_rate long, "
+    "last_granule long, duration_ms long, total_bytes long"
+)
 
 
 # RFC 6716 §3.1 Table 2: TOC config number → (mode, bandwidth,
@@ -2822,30 +2393,19 @@ def encode_opus_packets(
     return b"".join(out)
 
 
-def opus_packet_synth_udf():
-    """pandas_udf synthesizing per-row Ogg Opus streams whose packet
-    TOCs follow the closed-form (doc_id, j) arithmetic the m26 oracle
-    replays: packet j of doc d has config (d + 3j) mod 32, stereo
-    (d + j) mod 2, frame-count code j mod 4, and code-3 packets carry
-    M = 1 + j mod 2 frames."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def synth(doc_id: pd.Series, n_packets: pd.Series) -> pd.Series:
-        out = []
-        for d, n in zip(doc_id, n_packets):
-            d, n = int(d), int(n)
-            tocs = []
-            for j in range(n):
-                fcode = j % 4
-                n_frames = (1 + j % 2) if fcode == 3 else (
-                    1 if fcode == 0 else 2)
-                tocs.append(((d + 3 * j) % 32, (d + j) % 2 == 1,
-                             fcode, n_frames))
-            out.append(encode_opus_packets(tocs))
-        return pd.Series(out)
-
-    return synth
+def encode_opus_toc_stream(doc_id: int, n_packets: int) -> bytes:
+    """Per-row Ogg Opus fixture for :func:`opus_packet_census` whose
+    packet TOCs follow closed-form (doc_id, j) arithmetic that SQL can
+    replay: packet j has config (doc_id + 3j) mod 32, stereo
+    (doc_id + j) mod 2, frame-count code j mod 4, and a code-3 packet
+    carries M = 1 + j mod 2 frames."""
+    tocs = []
+    for j in range(n_packets):
+        fcode = j % 4
+        n_frames = (1 + j % 2) if fcode == 3 else (1 if fcode == 0 else 2)
+        tocs.append(((doc_id + 3 * j) % 32, (doc_id + j) % 2 == 1, fcode,
+                     n_frames))
+    return encode_opus_packets(tocs)
 
 
 def opus_census(media: DataFrame, payload_col: str = "payload") -> DataFrame:

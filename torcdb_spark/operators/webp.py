@@ -620,6 +620,12 @@ def encode_webp_lossy_stub(
     return b"RIFF" + len(body).to_bytes(4, "little") + body
 
 
+WEBP_LOSSY_SCHEMA = (
+    "media_id long, width long, height long, version long, "
+    "first_part_size long, vp8_bytes long"
+)
+
+
 # ---------------------------------------------------------------------------
 # encoder
 # ---------------------------------------------------------------------------

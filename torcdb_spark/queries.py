@@ -65,6 +65,28 @@ def _customers(g: PropertyGraph) -> DataFrame:
     return g.vertices.where(F.col("label") == "customer").select("id")
 
 
+def _synth_media(docs: DataFrame, encode, *params) -> DataFrame:
+    """One synthesized payload per document, ``(doc_id AS media_id,
+    encode(*params) AS payload)``, computed by the Arrow synth UDF: the
+    media frame the census and audio kernels read."""
+    from torcdb_spark.operators.multimodal import synth_udf
+
+    return docs.select(
+        F.col("doc_id").alias("media_id"),
+        synth_udf(encode)(*params).alias("payload"),
+    )
+
+
+def _zero_dims(parse):
+    """``parse`` with a missing width/height (no video track) read as 0."""
+
+    def row(payload: bytes) -> dict:
+        c = parse(payload)
+        return {**c, "width": c["width"] or 0, "height": c["height"] or 0}
+
+    return row
+
+
 # ---------------------------------------------------------------------------
 # §2.1 sources — point lookup (S5); full scan is the trivial case
 # ---------------------------------------------------------------------------
@@ -4442,23 +4464,17 @@ def e6_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
        FROM documents""",
 )
 def m4_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio column plumbing with a REAL RIFF/WAVE PCM parser
-    (operators/multimodal.py decode_wav — proper chunk walking, 8/16-bit,
-    mono/stereo; compressed codecs raise by documented design): fixture
-    text bytes are wrapped as 8-bit PCM WAV (synthesis UDF), decoded by
-    the real parser, and the STRUCTURAL outputs (sample_rate, n_samples,
-    duration_ms) are oracle-checked byte-for-byte against the documents
-    table; the signal features (rms, zcr) are exact-tested in pytest on
-    hand-computed waveforms."""
-    from torcdb_spark.operators.multimodal import audio_features, wav_wrap_udf
+    """Audio features over RIFF/WAVE payloads (operators/multimodal.py
+    audio_features over decode_wav): each document's UTF-8 bytes are
+    wrapped as 8-bit 8 kHz mono PCM by encode_wav_pcm and decoded back.
+    The oracle checks the structural columns (sample_rate, n_samples,
+    floor-division duration_ms); rms and zcr are exact-tested in
+    pytest on hand-computed waveforms."""
+    from torcdb_spark.operators import multimodal as mm
 
-    wav_wrap = wav_wrap_udf(8000, 8)
     docs = load_table(spark, sf_dir, "documents")
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        wav_wrap(F.encode("text", "utf-8")).alias("payload"),
-    )
-    return audio_features(media).select(
+    media = _synth_media(docs, mm.encode_wav_pcm, F.encode("text", "utf-8"))
+    return mm.audio_features(media).select(
         "media_id", "sample_rate", "n_samples", "duration_ms"
     )
 
@@ -4852,23 +4868,18 @@ def g_path_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
 def m5_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FFT spectral audio features (operators/multimodal.py
     audio_spectral_features) over WAV payloads synthesized from document
-    bytes (same wav_wrap fixture path as m4): dominant frequency, spectral
+    bytes (the encode_wav_pcm fixture of m4): dominant frequency, spectral
     centroid and bandwidth via numpy rfft inside the Arrow-batched kernel.
     The oracle checks the STRUCTURAL columns (which rows decode, their
     sample rate); the spectral math itself is pytest-exact against a pure
     sine (tests/test_operators.py)."""
-    from torcdb_spark.operators.multimodal import (
-        audio_spectral_features,
-        wav_wrap_udf,
-    )
+    from torcdb_spark.operators import multimodal as mm
 
     docs = load_table(spark, sf_dir, "documents")
-    wrap = wav_wrap_udf(sample_rate=8000, bits=8)
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        wrap(F.encode(F.trim(F.col("text")), "utf-8")).alias("payload"),
+    media = _synth_media(
+        docs, mm.encode_wav_pcm, F.encode(F.trim(F.col("text")), "utf-8")
     )
-    return audio_spectral_features(media).select("media_id", "sample_rate")
+    return mm.audio_spectral_features(media).select("media_id", "sample_rate")
 
 
 @_register(
@@ -6265,37 +6276,29 @@ def jl1_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
        FROM documents GROUP BY source""",
 )
 def jl2_jsonl_gz_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-member ``.jsonl.gz`` shard ingestion (VERDICT r12 ask #5)
-    — the wire form open-web text dumps actually arrive in: one
-    physical shard per source holding MANY independently-gzipped
-    members (5 JSONL lines each) concatenated, per RFC 1952's
-    multi-member allowance.  A naive single-member gunzip reads only
-    the first 5 records and silently drops the rest; the
-    sources/ingest.py gzip_member_lines walk (the warc.py
-    decompressobj/unused_data loop) recovers every member with its
-    index, then the jl1 JVM path (split + explode + from_json under an
-    explicit schema) parses records.  The oracle replays the member
-    arithmetic (ceil(n/5)) and the parsed census per source — a
-    dropped member, mis-framed line, or lost record hash-mismatches
-    immediately."""
-    from torcdb_spark.sources.ingest import (
-        gzip_member_lines,
-        jsonl_gz_synth_udf,
-    )
+    """Multi-member ``.jsonl.gz`` ingestion (RFC 1952 §2.2 allows a gzip
+    file to be a series of members): one shard per source, every 5 JSONL
+    lines an independent gzip member (sources/ingest.py jsonl_gz_shard).
+    sources/ingest.py gzip_member_lines recovers every member with its
+    index, where a single-member gunzip would read only the first; the
+    JVM then splits, explodes and parses the records under an explicit
+    schema.  The oracle replays ceil(n/5) members and the parsed census
+    per source."""
+    from torcdb_spark.operators.multimodal import synth_udf
+    from torcdb_spark.sources import ingest
 
     docs = load_table(spark, sf_dir, "documents")
     lines = docs.select(
         "source",
         F.to_json(F.struct("doc_id", "text", "lang")).alias("line"),
     )
-    synth = jsonl_gz_synth_udf(lines_per_member=5)
     shards = lines.groupBy("source").agg(
         F.concat_ws("\n", F.collect_list("line")).alias("blob")
     ).select(
         F.concat(F.lit("src_"), F.col("source")).alias("path"),
-        synth(F.col("blob")).alias("content"),
+        synth_udf(ingest.jsonl_gz_shard)(F.col("blob")).alias("content"),
     )
-    members = gzip_member_lines(shards)
+    members = ingest.gzip_member_lines(shards)
     rec_schema = "doc_id bigint, text string, lang string"
     parsed = members.select(
         F.regexp_replace("path", "^src_", "").alias("source"),
@@ -12847,34 +12850,30 @@ def m1b_media_features_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
        FROM derived""",
 )
 def m14_mp3_frame_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MP3 structural metadata at scale (VERDICT r9 ask #6, the lossy-
-    decode on-ramp): synthesize a structurally valid MPEG audio stream
-    per document (frame count / bitrate index / sample-rate index /
-    MPEG version / ID3v2 tag size all derived from fixture columns),
-    then walk the real bytes with the frame-header census
-    (operators/multimodal.py mp3_frame_census via Arrow-batched
-    mapInPandas) — ID3v2 syncsafe skip, per-frame length arithmetic
-    (144·kbps/sr MPEG1 Layer III, 72·kbps/sr MPEG2), floor-division
-    duration.  The oracle replays the ISO 11172-3/13818-3 arithmetic in
-    SQL from the same fixture columns, so every census column is value-
-    hashed; PCM decode stays documented out-of-scope (decode_wav)."""
-    from torcdb_spark.operators.multimodal import mp3_census, mp3_synth_udf
+    """MP3 frame-header census (operators/multimodal.py
+    mp3_frame_census; ISO/IEC 11172-3 and 13818-3): per-document MPEG
+    audio streams whose frame count, bitrate index, sample-rate index,
+    version and ID3v2 tag size derive from fixture columns.  The walk
+    skips the syncsafe-sized ID3v2 tag and sums per-frame lengths
+    (144·kbps/sr for MPEG1 Layer III, 72·kbps/sr for MPEG2); duration
+    is a floor division.  The oracle replays the arithmetic in SQL."""
+    from torcdb_spark.operators import multimodal as mm
 
     docs = load_table(spark, sf_dir, "documents")
-    synth = mp3_synth_udf()
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        synth(
-            (F.lit(1) + F.length("text") % 7).cast("int"),
-            (F.col("doc_id") % 14 + 1).cast("int"),
-            (F.col("doc_id") % 3).cast("int"),
-            F.when(F.col("doc_id") % 2 == 0, F.lit(1))
-            .otherwise(F.lit(2))
-            .cast("int"),
-            ((F.col("doc_id") % 5) * 17).cast("int"),
-        ).alias("payload"),
+    media = _synth_media(
+        docs,
+        lambda n, kbps_idx, sr_idx, version, id3_body: mm.encode_mp3_stream(
+            n, kbps_idx, sr_idx, version, 3, id3_body
+        ),
+        (F.lit(1) + F.length("text") % 7).cast("int"),
+        (F.col("doc_id") % 14 + 1).cast("int"),
+        (F.col("doc_id") % 3).cast("int"),
+        F.when(F.col("doc_id") % 2 == 0, F.lit(1))
+        .otherwise(F.lit(2))
+        .cast("int"),
+        ((F.col("doc_id") % 5) * 17).cast("int"),
     )
-    return mp3_census(media)
+    return mm.payload_rows(media, mm.mp3_frame_census, mm.MP3_CENSUS_SCHEMA)
 
 
 @_register(
@@ -12897,30 +12896,25 @@ def m14_mp3_frame_census(spark: SparkSession, sf_dir: str) -> DataFrame:
        FROM documents""",
 )
 def m15_aac_adts_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AAC ADTS structural census — the second lossy on-ramp beside m14:
-    per-document ADTS streams (frame count / profile / sampling index /
-    channel config / payload size all fixture-derived) walked by the
-    7-byte-header arithmetic of ISO/IEC 13818-7 §6.2
-    (operators/multimodal.py aac_adts_census, Arrow-batched
-    mapInPandas); the oracle replays the table lookups and the
-    1024-samples-per-frame duration floor-division in SQL.  Spectral
-    decode stays documented out-of-scope, same contract as decode_wav's
-    MP3/AAC raise."""
-    from torcdb_spark.operators.multimodal import aac_census, adts_synth_udf
+    """AAC ADTS census (operators/multimodal.py aac_adts_census;
+    ISO/IEC 13818-7 §6.2): per-document ADTS streams whose frame count,
+    profile, sampling index, channel configuration and body size derive
+    from fixture columns, walked by the 7-byte header arithmetic.  The
+    oracle replays the table lookups and the 1024-samples-per-frame
+    floor-division duration in SQL."""
+    from torcdb_spark.operators import multimodal as mm
 
     docs = load_table(spark, sf_dir, "documents")
-    synth = adts_synth_udf()
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        synth(
-            (F.lit(1) + F.length("text") % 5).cast("int"),
-            (F.col("doc_id") % 4).cast("int"),
-            (F.col("doc_id") % 13).cast("int"),
-            (F.lit(1) + F.col("doc_id") % 7).cast("int"),
-            (F.lit(32) + F.length("text") % 100).cast("int"),
-        ).alias("payload"),
+    media = _synth_media(
+        docs,
+        mm.encode_adts_stream,
+        (F.lit(1) + F.length("text") % 5).cast("int"),
+        (F.col("doc_id") % 4).cast("int"),
+        (F.col("doc_id") % 13).cast("int"),
+        (F.lit(1) + F.col("doc_id") % 7).cast("int"),
+        (F.lit(32) + F.length("text") % 100).cast("int"),
     )
-    return aac_census(media)
+    return mm.payload_rows(media, mm.aac_adts_census, mm.AAC_CENSUS_SCHEMA)
 
 
 @_register(
@@ -12934,32 +12928,24 @@ def m15_aac_adts_census(spark: SparkSession, sf_dir: str) -> DataFrame:
        FROM documents""",
 )
 def m16_webp_lossy_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lossy-WebP structural census (the third lossy on-ramp): VP8
-    keyframe headers per RFC 6386 §9.1 — frame tag (keyframe/version/
-    show_frame/first-partition size), 0x9d012a start code, 14-bit
-    dimensions — parsed from per-document synthesized containers by
-    operators/webp.webp_lossy_info via Arrow-batched mapInPandas.
-    Pixel decode of VP8 stays the documented NotImplementedError in
-    decode_webp; this query pins that a real crawl's lossy WebPs
-    produce metadata rows, with every column replayed by the oracle
-    from the same fixture arithmetic."""
-    from torcdb_spark.operators.multimodal import (
-        webp_lossy_census,
-        webp_lossy_synth_udf,
-    )
+    """Lossy-WebP census (operators/webp.py webp_lossy_info; RFC 6386
+    §9.1): the VP8 keyframe frame tag (keyframe, version, show_frame,
+    first-partition size), the 0x9d012a start code and the 14-bit
+    dimensions of per-document synthesized containers.  The oracle
+    replays every column from the same fixture arithmetic."""
+    from torcdb_spark.operators import webp
+    from torcdb_spark.operators.multimodal import payload_rows
 
     docs = load_table(spark, sf_dir, "documents")
-    synth = webp_lossy_synth_udf()
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        synth(
-            (F.lit(16) + F.col("doc_id") % 1200).cast("int"),
-            (F.lit(16) + F.length("text") % 800).cast("int"),
-            (F.col("doc_id") % 4).cast("int"),
-            (F.col("doc_id") % 50).cast("int"),
-        ).alias("payload"),
+    media = _synth_media(
+        docs,
+        webp.encode_webp_lossy_stub,
+        (F.lit(16) + F.col("doc_id") % 1200).cast("int"),
+        (F.lit(16) + F.length("text") % 800).cast("int"),
+        (F.col("doc_id") % 4).cast("int"),
+        (F.col("doc_id") % 50).cast("int"),
     )
-    return webp_lossy_census(media)
+    return payload_rows(media, webp.webp_lossy_info, webp.WEBP_LOSSY_SCHEMA)
 
 
 @_register(
@@ -12985,35 +12971,30 @@ def m16_webp_lossy_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
        FROM params""",
 )
 def m17_mp4_box_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ISO-BMFF (MP4) structural census — the video-container on-ramp
-    completing the lossy family (m14 MP3, m15 ADTS, m16 VP8): walk the
-    box tree of per-document synthesized containers (ftyp + moov(mvhd +
-    n traks(tkhd + mdia(mdhd + hdlr))) + mdat, ISO/IEC 14496-12) for
-    movie duration, track counts by handler type, and the first video
-    track's 16.16 fixed-point dimensions
-    (operators/multimodal.py mp4_box_census via Arrow-batched
-    mapInPandas).  The oracle replays the closed-form box-size
-    arithmetic (trak = 173 bytes at this layout) and the
-    floor-division duration from the same fixture columns; sample
-    decode is out of scope by the same contract as the other
-    censuses."""
-    from torcdb_spark.operators.multimodal import mp4_census, mp4_synth_udf
+    """ISO-BMFF (MP4) box census (operators/multimodal.py
+    mp4_box_census; ISO/IEC 14496-12): ftyp + moov(mvhd + traks(tkhd +
+    mdia(mdhd + hdlr))) + mdat containers synthesized per document,
+    walked for movie duration, track counts by handler type and the
+    first video track's 16.16 fixed-point dimensions (0 without a video
+    track).  The oracle replays the closed-form box sizes (173 bytes per
+    trak at this layout) and the floor-division duration."""
+    from torcdb_spark.operators import multimodal as mm
 
     docs = load_table(spark, sf_dir, "documents")
-    synth = mp4_synth_udf()
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        synth(
-            (F.lit(600) + (F.col("doc_id") % 5) * 100).cast("int"),
-            (F.length("text") * 37).cast("int"),
-            (F.col("doc_id") % 2).cast("int"),
-            (F.col("doc_id") % 3).cast("int"),
-            (F.lit(160) + (F.col("doc_id") % 8) * 80).cast("int"),
-            (F.lit(90) + (F.length("text") % 6) * 90).cast("int"),
-            (F.lit(16) + F.col("doc_id") % 64).cast("int"),
-        ).alias("payload"),
+    media = _synth_media(
+        docs,
+        mm.encode_mp4_stub,
+        (F.lit(600) + (F.col("doc_id") % 5) * 100).cast("int"),
+        (F.length("text") * 37).cast("int"),
+        (F.col("doc_id") % 2).cast("int"),
+        (F.col("doc_id") % 3).cast("int"),
+        (F.lit(160) + (F.col("doc_id") % 8) * 80).cast("int"),
+        (F.lit(90) + (F.length("text") % 6) * 90).cast("int"),
+        (F.lit(16) + F.col("doc_id") % 64).cast("int"),
     )
-    return mp4_census(media)
+    return mm.payload_rows(
+        media, _zero_dims(mm.mp4_box_census), mm.MP4_CENSUS_SCHEMA
+    )
 
 
 @_register(
@@ -13045,38 +13026,36 @@ def m17_mp4_box_census(spark: SparkSession, sf_dir: str) -> DataFrame:
        FROM params""",
 )
 def m18_flac_streaminfo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FLAC STREAMINFO census (RFC 9639) — the lossless-audio container
-    walked structurally like the other censuses: per-document
-    synthesized streams (fixture-derived rate/channels/bit-depth/sample
-    count, optional PADDING block exercising the metadata chain) parsed
-    by operators/multimodal.py flac_streaminfo_census via Arrow-batched
-    mapInPandas — the 20/3/5/36-bit packed STREAMINFO fields and the
-    last-metadata-block walk.  The oracle replays the bit-field inputs
-    and the closed-form block-size arithmetic; frame decode stays out
-    of scope by the same contract as the other compressed formats."""
-    from torcdb_spark.operators.multimodal import flac_census, flac_synth_udf
+    """FLAC STREAMINFO census (operators/multimodal.py
+    flac_streaminfo_census; RFC 9639): per-document streams with
+    fixture-derived rate, channels, bit depth and sample count, and an
+    optional PADDING block that exercises the metadata-block chain.  The
+    walk unpacks the 20/3/5/36-bit STREAMINFO fields and stops at the
+    last-metadata-block flag.  The oracle replays the fields and the
+    closed-form block sizes."""
+    from torcdb_spark.operators import multimodal as mm
 
     docs = load_table(spark, sf_dir, "documents")
-    synth = flac_synth_udf()
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        synth(
-            F.element_at(
-                F.array(*[F.lit(v) for v in
-                          (8000, 16000, 22050, 44100, 48000)]),
-                (F.col("doc_id") % 5 + 1).cast("int"),
-            ).cast("int"),
-            (F.lit(1) + F.col("doc_id") % 2).cast("int"),
-            F.when(F.col("doc_id") % 3 == 0, 16)
-            .when(F.col("doc_id") % 3 == 1, 24)
-            .otherwise(8)
-            .cast("int"),
-            (F.length("text").cast("long") * 997).cast("long").cast("int"),
-            ((F.col("doc_id") % 4) * 11).cast("int"),
-            (F.lit(32) + F.length("text") % 50).cast("int"),
-        ).alias("payload"),
+    media = _synth_media(
+        docs,
+        mm.encode_flac_stub,
+        F.element_at(
+            F.array(*[F.lit(v) for v in
+                      (8000, 16000, 22050, 44100, 48000)]),
+            (F.col("doc_id") % 5 + 1).cast("int"),
+        ).cast("int"),
+        (F.lit(1) + F.col("doc_id") % 2).cast("int"),
+        F.when(F.col("doc_id") % 3 == 0, 16)
+        .when(F.col("doc_id") % 3 == 1, 24)
+        .otherwise(8)
+        .cast("int"),
+        (F.length("text").cast("long") * 997).cast("long").cast("int"),
+        ((F.col("doc_id") % 4) * 11).cast("int"),
+        (F.lit(32) + F.length("text") % 50).cast("int"),
     )
-    return flac_census(media)
+    return mm.payload_rows(
+        media, mm.flac_streaminfo_census, mm.FLAC_CENSUS_SCHEMA
+    )
 
 
 @_register(
@@ -13102,41 +13081,33 @@ def m18_flac_streaminfo(spark: SparkSession, sf_dir: str) -> DataFrame:
              FROM documents) q""",
 )
 def m19_id3_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ID3v2 text-frame extraction — the metadata-enrichment pass a
-    crawl pipeline runs over its audio before any decode: per-document
-    MP3 streams carrying REAL ID3v2.2/2.3/2.4 tags (title/artist/album
-    text frames — TT2/TP1/TAL three-char v2.2 IDs on every third doc,
-    TIT2/TPE1/TALB otherwise; text encoding rotating through latin-1 /
-    utf-16+BOM / utf-16-be / utf-8 by doc id, clamped to the 0/1 the
-    v2.2 spec allows; tag version rotating v2 six-byte-header / v3
-    plain / v4 syncsafe frame sizes; every fifth v2.2/2.3 doc written
-    with tag-wide UNSYNCHRONISATION and a 'ÿ' appended to the title so
-    the 0xFF→0xFF00 stuffing is actually present in the bytes) parsed
-    back by operators/multimodal.py id3v2_text_frames via
-    Arrow-batched mapInPandas.  One row per frame; the oracle replays
-    the three tag strings per document in plain SQL, so a wrong
-    syncsafe shift, six-byte-header walk, encoding mix-up, unsync
-    reversal, or terminator-handling bug hash-mismatches
-    immediately."""
-    from torcdb_spark.operators.multimodal import id3_synth_udf, id3_tags
+    """ID3v2 text-frame extraction (operators/multimodal.py
+    id3v2_text_frames; the id3.org v2.2/2.3/2.4 specs), one row per
+    frame.  Per document, an MP3 stream carries title/artist/album
+    frames (encode_id3_mp3).  The tag version rotates v2.2 (six-byte
+    frame headers, three-char IDs) / v2.3 (plain sizes) / v2.4
+    (syncsafe sizes).  The encoding rotates latin-1 / utf-16+BOM /
+    utf-16-be / utf-8, clamped to 0/1 on v2.2.  Every fifth v2.2/2.3
+    document is written with tag-wide unsynchronisation and a 'ÿ'
+    appended to its title, so the 0xFF→0xFF00 stuffing is in the bytes.
+    The oracle replays the three tag strings per document in SQL."""
+    from torcdb_spark.operators import multimodal as mm
 
     docs = load_table(spark, sf_dir, "documents")
-    synth = id3_synth_udf()
     unsync = (F.col("doc_id") % 5 == 0) & (F.col("doc_id") % 3 < 2)
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        synth(
-            F.when(
-                unsync, F.concat(F.substring("text", 1, 24), F.lit("ÿ"))
-            ).otherwise(F.substring("text", 1, 24)),
-            F.concat(F.lit("artist_"), (F.col("doc_id") % 7).cast("string")),
-            F.concat(F.lit("album "), F.length("text").cast("string")),
-            (F.col("doc_id") % 4).cast("int"),
-            (F.lit(2) + F.col("doc_id") % 3).cast("int"),
-            unsync.cast("boolean"),
-        ).alias("payload"),
+    media = _synth_media(
+        docs,
+        mm.encode_id3_mp3,
+        F.when(
+            unsync, F.concat(F.substring("text", 1, 24), F.lit("ÿ"))
+        ).otherwise(F.substring("text", 1, 24)),
+        F.concat(F.lit("artist_"), (F.col("doc_id") % 7).cast("string")),
+        F.concat(F.lit("album "), F.length("text").cast("string")),
+        (F.col("doc_id") % 4).cast("int"),
+        (F.lit(2) + F.col("doc_id") % 3).cast("int"),
+        unsync.cast("boolean"),
     )
-    return id3_tags(media)
+    return mm.payload_rows(media, mm.id3v2_text_frames, mm.ID3_TAGS_SCHEMA)
 
 
 @_register(
@@ -13173,42 +13144,34 @@ def m19_id3_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
        FROM p""",
 )
 def m20_ogg_page_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ogg container census (VERDICT r10 ask #5 — the one major crawl
-    audio container that had no on-ramp): per-document Ogg Opus/Vorbis
-    streams (codec, channel count, sample rate, Opus pre-skip, audio
-    page count, packets per page, packet size all fixture-derived;
-    real RFC 3533 page CRCs and granule progression) walked by
-    operators/multimodal.py ogg_page_census via Arrow-batched
-    mapInPandas — capture-pattern/BOS validation, segment-table lacing
-    → packet counts, OpusHead (RFC 7845) / Vorbis identification-
-    header field extraction, 48 kHz-clock minus pre-skip (Opus) vs
-    own-rate (Vorbis) duration.  The oracle replays the page-size and
-    granule arithmetic in closed-form SQL from the same fixture
-    columns, so every census column is value-hashed; PCM decode stays
-    documented out-of-scope (decode_wav's contract)."""
-    from torcdb_spark.operators.multimodal import ogg_census, ogg_synth_udf
+    """Ogg page census (operators/multimodal.py ogg_page_census;
+    RFC 3533, OpusHead per RFC 7845, Vorbis identification header per
+    the Xiph spec §4.2): per-document Opus/Vorbis streams with real page
+    CRCs and granule progression, walked for capture pattern and BOS
+    validity, lacing → packet counts, identification-header fields, and
+    the 48 kHz-clock-minus-pre-skip (Opus) or own-rate (Vorbis)
+    duration.  The oracle replays page sizes and granules in SQL."""
+    from torcdb_spark.operators import multimodal as mm
 
     docs = regime.spread(load_table(spark, sf_dir, "documents"))
-    synth = ogg_synth_udf()
     opus = F.col("doc_id") % 2 == 0
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        synth(
-            F.when(opus, F.lit("opus")).otherwise(F.lit("vorbis")),
-            (F.lit(1) + F.col("doc_id") % 7).cast("int"),
-            F.element_at(
-                F.array(F.lit(48000), F.lit(44100),
-                        F.lit(16000), F.lit(8000)),
-                (F.col("doc_id") % 4 + 1).cast("int"),
-            ).cast("int"),
-            F.when(opus, F.lit(312) + F.col("doc_id") % 100)
-            .otherwise(F.lit(0)).cast("int"),
-            (F.lit(1) + F.length("text") % 6).cast("int"),
-            (F.lit(1) + F.col("doc_id") % 4).cast("int"),
-            (F.lit(20) + F.length("text") % 50).cast("int"),
-        ).alias("payload"),
+    media = _synth_media(
+        docs,
+        mm.encode_ogg_stub,
+        F.when(opus, F.lit("opus")).otherwise(F.lit("vorbis")),
+        (F.lit(1) + F.col("doc_id") % 7).cast("int"),
+        F.element_at(
+            F.array(F.lit(48000), F.lit(44100),
+                    F.lit(16000), F.lit(8000)),
+            (F.col("doc_id") % 4 + 1).cast("int"),
+        ).cast("int"),
+        F.when(opus, F.lit(312) + F.col("doc_id") % 100)
+        .otherwise(F.lit(0)).cast("int"),
+        (F.lit(1) + F.length("text") % 6).cast("int"),
+        (F.lit(1) + F.col("doc_id") % 4).cast("int"),
+        (F.lit(20) + F.length("text") % 50).cast("int"),
     )
-    return ogg_census(media)
+    return mm.payload_rows(media, mm.ogg_page_census, mm.OGG_CENSUS_SCHEMA)
 
 
 @_register(
@@ -13236,40 +13199,34 @@ def m20_ogg_page_census(spark: SparkSession, sf_dir: str) -> DataFrame:
        FROM p""",
 )
 def m21_h264_nal_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """H.264 NAL-unit census (VERDICT r10 stretch #8 — doing for video
-    essence what m14 did for audio): per-document H.264 elementary
-    streams (display dimensions, GOP count, non-IDR slices per GOP,
-    level_idc all fixture-derived; framing alternating Annex-B start
-    codes / AVCC length prefixes by doc id; non-multiple-of-16
-    dimensions encoded via SPS frame cropping) walked by
-    operators/h264.py h264_nal_census via Arrow-batched mapInPandas —
-    NAL-type histogram, IDR count, and a REAL Exp-Golomb SPS decode
-    (macroblock grid minus 4:2:0 crop units, ITU-T H.264 §7.3.2.1.1/
-    §7.4.2.1.1) with emulation-prevention stripping.  The oracle
-    replays the stream-shape arithmetic in closed-form SQL from the
-    same fixture columns, so a wrong ue(v) shift, crop-unit factor, or
-    framing walk hash-mismatches immediately; slice decode stays
-    documented out-of-scope like every census's codec boundary."""
-    from torcdb_spark.operators.h264 import h264_census, h264_synth_udf
+    """H.264 NAL-unit census (operators/h264.py h264_nal_census; ITU-T
+    H.264 §7.3.2.1.1 and §7.4.2.1.1): per-document elementary streams
+    with fixture-derived dimensions, GOP count, non-IDR slices per GOP
+    and level_idc, framed as Annex-B start codes or AVCC length prefixes
+    by doc id, with non-multiple-of-16 sizes encoded via SPS frame
+    cropping.  The walk gives the NAL-type histogram and an Exp-Golomb
+    SPS decode after emulation-prevention stripping.  The oracle
+    replays the stream shape in SQL."""
+    from torcdb_spark.operators import h264
+    from torcdb_spark.operators.multimodal import payload_rows
 
     docs = load_table(spark, sf_dir, "documents")
-    synth = h264_synth_udf()
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        synth(
-            (F.lit(16) + F.lit(2) * (F.col("doc_id") % 620)).cast("int"),
-            (F.lit(16) + F.lit(2) * (F.length("text") % 350)).cast("int"),
-            (F.lit(1) + F.length("text") % 4).cast("int"),
-            (F.col("doc_id") % 3).cast("int"),
-            (F.lit(16) + F.col("doc_id") % 40).cast("int"),
-            F.element_at(
-                F.array(F.lit(30), F.lit(31), F.lit(40), F.lit(42)),
-                (F.col("doc_id") % 4 + 1).cast("int"),
-            ).cast("int"),
-            (F.col("doc_id") % 2 == 1).cast("boolean"),
-        ).alias("payload"),
+    media = _synth_media(
+        docs,
+        h264.encode_h264_stream,
+        (F.lit(16) + F.lit(2) * (F.col("doc_id") % 620)).cast("int"),
+        (F.lit(16) + F.lit(2) * (F.length("text") % 350)).cast("int"),
+        (F.lit(1) + F.length("text") % 4).cast("int"),
+        (F.col("doc_id") % 3).cast("int"),
+        (F.lit(16) + F.col("doc_id") % 40).cast("int"),
+        F.element_at(
+            F.array(F.lit(30), F.lit(31), F.lit(40), F.lit(42)),
+            (F.col("doc_id") % 4 + 1).cast("int"),
+        ).cast("int"),
+        (F.col("doc_id") % 2 == 1).cast("boolean"),
     )
-    return h264_census(media).drop("total_bytes")
+    census = payload_rows(media, h264.h264_nal_census, h264.H264_CENSUS_SCHEMA)
+    return census.drop("total_bytes")
 
 
 @_register(
@@ -13284,36 +13241,29 @@ def m21_h264_nal_census(spark: SparkSession, sf_dir: str) -> DataFrame:
               CAST(1960 + doc_id % 60 AS VARCHAR) FROM documents""",
 )
 def m22_ogg_comment_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vorbis-comment extraction — the Ogg world's ID3 (m19's audio-
-    metadata analogue): per-document Opus/Vorbis streams carrying REAL
-    comment headers (OpusTags per RFC 7845 §5.2 / 0x03'vorbis' per the
-    Xiph spec, TITLE/ARTIST/DATE entries, codec alternating by doc id)
-    parsed back by operators/multimodal.py ogg_comment_tags via
-    Arrow-batched mapInPandas — logical-packet reassembly across
-    RFC 3533 lacing boundaries (comment packets legitimately span
-    multiple 255-byte segments), little-endian length-prefixed entry
-    walk, first-'=' key/value split.  One row per comment; the oracle
-    replays the three tag strings per document in plain SQL, so a
-    wrong lacing reassembly, length offset, or separator split
-    hash-mismatches immediately."""
-    from torcdb_spark.operators.multimodal import (
-        ogg_tags,
-        ogg_tags_synth_udf,
-    )
+    """Vorbis-comment extraction (operators/multimodal.py
+    ogg_comment_tags; OpusTags per RFC 7845 §5.2, 0x03'vorbis' per the
+    Xiph Vorbis-comment spec), one row per comment.  Per document, an
+    Opus or Vorbis stream carries TITLE/ARTIST/DATE entries.  The walk
+    reassembles the comment packet across RFC 3533 lacing boundaries,
+    reads the little-endian length-prefixed entries and splits each at
+    its first '='.  The oracle replays the three tags per document."""
+    from torcdb_spark.operators import multimodal as mm
 
     docs = load_table(spark, sf_dir, "documents")
-    synth = ogg_tags_synth_udf()
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        synth(
-            F.when(F.col("doc_id") % 2 == 0, F.lit("opus"))
-            .otherwise(F.lit("vorbis")),
-            F.substring("text", 1, 20),
-            F.concat(F.lit("artist_"), (F.col("doc_id") % 7).cast("string")),
-            (F.lit(1960) + F.col("doc_id") % 60).cast("string"),
-        ).alias("payload"),
+    media = _synth_media(
+        docs,
+        lambda codec, title, artist, date: mm.encode_ogg_stub(
+            codec,
+            comments=[("TITLE", title), ("ARTIST", artist), ("DATE", date)],
+        ),
+        F.when(F.col("doc_id") % 2 == 0, F.lit("opus"))
+        .otherwise(F.lit("vorbis")),
+        F.substring("text", 1, 20),
+        F.concat(F.lit("artist_"), (F.col("doc_id") % 7).cast("string")),
+        (F.lit(1960) + F.col("doc_id") % 60).cast("string"),
     )
-    return ogg_tags(media)
+    return mm.payload_rows(media, mm.ogg_comment_tags, mm.OGG_TAGS_SCHEMA)
 
 
 @_register(
@@ -13336,36 +13286,35 @@ def m22_ogg_comment_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
        FROM documents""",
 )
 def m23_webm_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matroska/WebM container census — the EBML half of crawl video
-    beside m17's ISO-BMFF walk: per-document WebM/Matroska containers
-    (doctype, duration, video/audio track mix, first-video dimensions,
-    cluster count all fixture-derived) walked by operators/ebml.py
-    webm_census via Arrow-batched mapInPandas — real RFC 8794 vint
-    decoding (marker-retaining IDs, marker-stripped sizes, unknown-size
-    escape), DocType from the EBML header, Segment>Info TimestampScale
-    + float64 Duration → floor-division milliseconds, TrackEntry
-    type classification with Video>PixelWidth/PixelHeight.  The oracle
-    replays every census column in closed-form SQL from the same
-    fixture arithmetic; block/codec payload decode stays documented
-    out-of-scope like m17's mdat."""
-    from torcdb_spark.operators.ebml import webm_media_census, webm_synth_udf
+    """Matroska/WebM census (operators/ebml.py webm_census; RFC 8794
+    EBML, RFC 9559 Matroska): per-document containers with
+    fixture-derived doctype, duration, video/audio track mix, first-video
+    dimensions (0 without a video track) and cluster count.  The walk
+    decodes vints (marker-retaining IDs, marker-stripped sizes, the
+    unknown-size escape), the DocType, TimestampScale and float64
+    Duration → floor-division ms, and TrackEntry types with
+    PixelWidth/PixelHeight.  The oracle replays every column in SQL."""
+    from torcdb_spark.operators import ebml
+    from torcdb_spark.operators.multimodal import payload_rows
 
     docs = load_table(spark, sf_dir, "documents")
-    synth = webm_synth_udf()
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        synth(
-            F.when(F.col("doc_id") % 2 == 0, F.lit("webm"))
-            .otherwise(F.lit("matroska")),
-            (F.lit(1000) + F.col("doc_id") % 100000).cast("long"),
-            (F.col("doc_id") % 2).cast("int"),
-            (F.lit(1) + F.col("doc_id") % 3).cast("int"),
-            (F.lit(16) + F.col("doc_id") % 1904).cast("int"),
-            (F.lit(16) + F.length("text") % 1064).cast("int"),
-            (F.lit(1) + F.length("text") % 5).cast("int"),
-        ).alias("payload"),
+    media = _synth_media(
+        docs,
+        lambda doctype, duration_ms, *rest: ebml.encode_webm_stub(
+            doctype, 1_000_000, duration_ms, *rest
+        ),
+        F.when(F.col("doc_id") % 2 == 0, F.lit("webm"))
+        .otherwise(F.lit("matroska")),
+        (F.lit(1000) + F.col("doc_id") % 100000).cast("long"),
+        (F.col("doc_id") % 2).cast("int"),
+        (F.lit(1) + F.col("doc_id") % 3).cast("int"),
+        (F.lit(16) + F.col("doc_id") % 1904).cast("int"),
+        (F.lit(16) + F.length("text") % 1064).cast("int"),
+        (F.lit(1) + F.length("text") % 5).cast("int"),
     )
-    return webm_media_census(media)
+    return payload_rows(
+        media, _zero_dims(ebml.webm_census), ebml.WEBM_CENSUS_SCHEMA
+    )
 
 
 @_register(
@@ -13394,38 +13343,30 @@ def m23_webm_census(spark: SparkSession, sf_dir: str) -> DataFrame:
        FROM r""",
 )
 def tf1_tfrecord_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TFRecord + tf.train.Example ingestion — the ML world's dominant
-    training-data container, decoded stdlib-only: per-document TFRecord
-    shards (record count, token counts, text slices all
-    fixture-derived) framed with REAL masked-CRC32C length/data words
-    and real protobuf wire format (packed Int64List varints, BytesList
-    submessages, map entries), parsed back by sources/tfrecord.py
-    parse_tfrecords + parse_example via Arrow-batched mapInPandas —
-    both CRCs verified per record, unknown fields skipped per the
-    protobuf contract, one row per (record, feature).  The oracle
-    replays the token arithmetic (m·(b+i·m)+m(m−1)/2) and text slices
-    in closed-form SQL, so a wrong varint shift, CRC mask, or map-entry
-    walk hash-mismatches immediately; poisoned shards degrade to
-    '_error' rows (pytest-pinned), the WARC-path contract."""
-    from torcdb_spark.sources.tfrecord import (
-        tfrecord_examples,
-        tfrecord_synth_udf,
-    )
+    """TFRecord + tf.train.Example ingestion (sources/tfrecord.py
+    tfrecord_examples; the TFRecord framing with masked CRC32C, and the
+    protobuf wire format): per-document shards (sources/tfrecord.py
+    tfrecord_shard) of records with a packed 'tokens' Int64List and a
+    'text' BytesList.  Both CRCs are verified per record, unknown fields
+    are skipped, and each (record, feature) is one row; a malformed
+    shard gives an '_error' row.  The oracle replays the token sums
+    m·(b+i·m)+m(m−1)/2 and the text slices in SQL."""
+    from torcdb_spark.operators.multimodal import synth_udf
+    from torcdb_spark.sources import tfrecord
 
     docs = load_table(spark, sf_dir, "documents")
-    synth = tfrecord_synth_udf()
     shards = docs.select(
         F.concat(F.lit("doc_"), F.col("doc_id").cast("string")).alias(
             "path"
         ),
-        synth(
+        synth_udf(tfrecord.tfrecord_shard)(
             (F.col("doc_id") % 1000).cast("long"),
             (F.lit(1) + F.col("doc_id") % 4).cast("int"),
             (F.lit(1) + F.length("text") % 6).cast("int"),
             F.substring("text", 1, 40),
         ).alias("content"),
     )
-    return tfrecord_examples(shards)
+    return tfrecord.tfrecord_examples(shards)
 
 
 @_register(
@@ -13461,29 +13402,25 @@ def tf1_tfrecord_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
        FROM r""",
 )
 def av1_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Avro Object Container File ingestion — the data lake's row-
-    interchange format, decoded stdlib-only: per-document OCF shards
-    ({id: long, score: double, text: ["null","string"]} records, codec
-    alternating null / raw-deflate, every-seventh doc exercising the
-    union's null branch) parsed back by sources/avro.py parse_avro via
-    Arrow-batched mapInPandas — header metadata-map walk, embedded
-    JSON writer schema, zigzag-varint block framing with per-block
-    sync-marker verification, RFC 1951 inflate, schema-driven
-    recursive record decode.  One row per (record, field) with typed
-    value columns; the oracle replays ids, quarter-valued doubles, and
-    text slices in closed-form SQL, so a wrong zigzag shift, union
-    index, or block frame hash-mismatches immediately; corrupt files
-    degrade to '_error' rows (pytest-pinned), the WARC-path
-    contract."""
-    from torcdb_spark.sources.avro import avro_records, avro_synth_udf
+    """Avro Object Container File ingestion (sources/avro.py
+    avro_records; Apache Avro 1.11 spec, object container files):
+    per-document OCF shards (sources/avro.py avro_doc_shard) of
+    {id: long, score: double, text: ["null","string"]} records, the
+    codec alternating null / raw deflate and every seventh document
+    taking the union's null branch.  The reader walks the header map and
+    the embedded writer schema, the zigzag-varint block framing with
+    per-block sync markers, and inflates RFC 1951 blocks; one row per
+    (record, field), and a corrupt file gives an '_error' row.  The
+    oracle replays ids, quarter-valued scores and text slices in SQL."""
+    from torcdb_spark.operators.multimodal import synth_udf
+    from torcdb_spark.sources import avro
 
     docs = load_table(spark, sf_dir, "documents")
-    synth = avro_synth_udf()
     shards = docs.select(
         F.concat(F.lit("doc_"), F.col("doc_id").cast("string")).alias(
             "path"
         ),
-        synth(
+        synth_udf(avro.avro_doc_shard)(
             F.col("doc_id").cast("long"),
             (F.lit(1) + F.col("doc_id") % 3).cast("int"),
             (F.col("doc_id") % 100).cast("long"),
@@ -13492,7 +13429,7 @@ def av1_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") % 2 == 1).cast("boolean"),
         ).alias("content"),
     )
-    return avro_records(shards)
+    return avro.avro_records(shards)
 
 
 @_register(
@@ -13528,21 +13465,22 @@ def av1_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
        FROM r""",
 )
 def av2_snappy_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snappy-coded Avro OCF ingestion (VERDICT r12 ask #4) — the wire
-    form real-world Avro predominantly ships with.  Same container walk
-    as av1_avro_ingest, but every data block is compressed with the
-    pure-Python raw-snappy codec (sources/snappy.py: varint preamble,
-    literal/copy-1/copy-2/copy-4 tags, overlapping-copy RLE) and
-    carries the Avro spec's 4-byte big-endian CRC32 of the
-    uncompressed block, verified on read.  The oracle replays ids,
-    quarter-valued doubles, and text slices in closed-form SQL, so a
-    wrong copy offset, length split, or CRC byte order
-    hash-mismatches immediately; corrupt preambles degrade to
-    '_error' rows (pytest-pinned), the WARC-path contract."""
-    from torcdb_spark.sources.avro import avro_records, avro_synth_udf
+    """Snappy-coded Avro OCF ingestion (Apache Avro spec's snappy codec:
+    raw snappy plus a 4-byte big-endian CRC32 of the uncompressed
+    block): the container walk of av1_avro_ingest, with every block
+    compressed by sources/snappy.py (varint preamble, literal and
+    copy-1/2/4 tags, overlapping-copy RLE) and its CRC verified on read.
+    The oracle replays ids, quarter-valued scores and text slices in
+    SQL; a corrupt preamble gives an '_error' row."""
+    from functools import partial
+
+    from torcdb_spark.operators.multimodal import synth_udf
+    from torcdb_spark.sources import avro
 
     docs = load_table(spark, sf_dir, "documents")
-    synth = avro_synth_udf(codec_pair=("snappy", "snappy"))
+    synth = synth_udf(
+        partial(avro.avro_doc_shard, codecs=("snappy", "snappy"))
+    )
     shards = docs.select(
         F.concat(F.lit("doc_"), F.col("doc_id").cast("string")).alias(
             "path"
@@ -13556,7 +13494,7 @@ def av2_snappy_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") % 2 == 1).cast("boolean"),
         ).alias("content"),
     )
-    return avro_records(shards)
+    return avro.avro_records(shards)
 
 
 @_register(
@@ -14001,39 +13939,35 @@ def p7_xlsx_census(spark: SparkSession, sf_dir: str) -> DataFrame:
        FROM p""",
 )
 def m24_av1_obu_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AV1 OBU census (VERDICT r11 stretch #8 — the growing-share crawl
-    video codec, for the WebM/MP4 payloads m23/m17 already expose):
-    per-document low-overhead AV1 streams (dimensions, frame count,
-    level, reduced-still-picture vs full operating-point header form,
-    optional timing_info block, extension headers on alternate frames
-    — all fixture-derived) walked by operators/av1.py av1_obu_census
-    via Arrow-batched mapInPandas — OBU-type histogram with validated
-    headers and leb128 size fields, plus a REAL bit-decoded sequence
-    header (profile / seq_level_idx / exact max frame dimensions per
-    AV1 spec §5.5.1, including the timing-info skip widths).  The
-    oracle replays the stream-shape arithmetic in closed-form SQL from
-    the same fixture columns; tile-data decode stays the documented
-    essence boundary like every census."""
-    from torcdb_spark.operators.av1 import av1_census, av1_synth_udf
+    """AV1 OBU census (operators/av1.py av1_obu_census; AV1 Bitstream &
+    Decoding Process spec §5.3 and §5.5.1): per-document low-overhead
+    streams with fixture-derived dimensions, frame count, level,
+    reduced-still-picture or full operating-point header form, optional
+    timing_info, and extension headers on alternate frames.  The walk
+    gives the OBU-type histogram with validated headers and leb128
+    sizes, and a bit-decoded sequence header (profile, seq_level_idx,
+    max frame dimensions).  The oracle replays the stream shape in
+    SQL."""
+    from torcdb_spark.operators import av1
+    from torcdb_spark.operators.multimodal import payload_rows
 
     docs = load_table(spark, sf_dir, "documents")
-    synth = av1_synth_udf()
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        synth(
-            (F.lit(2) + F.col("doc_id") % 3838).cast("int"),
-            (F.lit(2) + F.length("text") % 2158).cast("int"),
-            (F.lit(1) + F.length("text") % 5).cast("int"),
-            (F.lit(16) + F.col("doc_id") % 40).cast("int"),
-            F.element_at(
-                F.array(F.lit(5), F.lit(8), F.lit(9), F.lit(12)),
-                (F.col("doc_id") % 4 + 1).cast("int"),
-            ).cast("int"),
-            (F.col("doc_id") % 5 == 0).cast("boolean"),
-            (F.col("doc_id") % 2 == 1).cast("boolean"),
-        ).alias("payload"),
+    media = _synth_media(
+        docs,
+        av1.encode_av1_stream,
+        (F.lit(2) + F.col("doc_id") % 3838).cast("int"),
+        (F.lit(2) + F.length("text") % 2158).cast("int"),
+        (F.lit(1) + F.length("text") % 5).cast("int"),
+        (F.lit(16) + F.col("doc_id") % 40).cast("int"),
+        F.element_at(
+            F.array(F.lit(5), F.lit(8), F.lit(9), F.lit(12)),
+            (F.col("doc_id") % 4 + 1).cast("int"),
+        ).cast("int"),
+        (F.col("doc_id") % 5 == 0).cast("boolean"),
+        (F.col("doc_id") % 2 == 1).cast("boolean"),
     )
-    return av1_census(media).drop("total_bytes")
+    census = payload_rows(media, av1.av1_obu_census, av1.AV1_CENSUS_SCHEMA)
+    return census.drop("total_bytes")
 
 
 @_register(
@@ -14063,39 +13997,34 @@ def m24_av1_obu_census(spark: SparkSession, sf_dir: str) -> DataFrame:
        FROM p""",
 )
 def m25_hevc_nal_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HEVC NAL-unit census (operators/hevc.py) — closing the
-    crawl-video census family next to H.264 (m21) and AV1 (m24):
-    per-document HEVC elementary streams (even display dimensions
-    encoded via the 8-px luma grid + conformance-window crop, GOP and
-    TRAIL_R counts, level_idc, alternating Annex-B / length-prefixed
-    framing — all fixture-derived) walked via Arrow-batched
-    mapInPandas: validated 2-byte NAL headers, type histogram with
-    IRAP/IDR classification, and a REAL bit decode of the SPS through
-    the full profile_tier_level block (ITU-T H.265 §7.3.3, including
-    sub-layer flag alignment) to exact conformance-cropped dimensions
-    (§7.4.3.2.1 crop units).  The oracle replays the stream-shape
-    arithmetic in closed-form SQL; slice decode stays the documented
-    essence boundary."""
-    from torcdb_spark.operators.hevc import hevc_census, hevc_synth_udf
+    """HEVC NAL-unit census (operators/hevc.py hevc_nal_census; ITU-T
+    H.265 §7.3.3 and §7.4.3.2.1): per-document elementary streams with
+    even display dimensions (8-px luma grid plus conformance-window
+    crop), fixture-derived GOP and TRAIL_R counts and level_idc, framed
+    as Annex-B or length prefixes by doc id.  The walk validates 2-byte
+    NAL headers, counts types with IRAP/IDR classification, and decodes
+    the SPS through profile_tier_level to the cropped dimensions.  The
+    oracle replays the stream shape in SQL."""
+    from torcdb_spark.operators import hevc
+    from torcdb_spark.operators.multimodal import payload_rows
 
     docs = load_table(spark, sf_dir, "documents")
-    synth = hevc_synth_udf()
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        synth(
-            (F.lit(2) + F.lit(2) * (F.col("doc_id") % 1912)).cast("int"),
-            (F.lit(2) + F.lit(2) * (F.length("text") % 1072)).cast("int"),
-            (F.lit(1) + F.length("text") % 4).cast("int"),
-            (F.col("doc_id") % 3).cast("int"),
-            (F.lit(16) + F.col("doc_id") % 40).cast("int"),
-            F.element_at(
-                F.array(F.lit(63), F.lit(93), F.lit(120), F.lit(153)),
-                (F.col("doc_id") % 4 + 1).cast("int"),
-            ).cast("int"),
-            (F.col("doc_id") % 2 == 1).cast("boolean"),
-        ).alias("payload"),
+    media = _synth_media(
+        docs,
+        hevc.encode_hevc_stream,
+        (F.lit(2) + F.lit(2) * (F.col("doc_id") % 1912)).cast("int"),
+        (F.lit(2) + F.lit(2) * (F.length("text") % 1072)).cast("int"),
+        (F.lit(1) + F.length("text") % 4).cast("int"),
+        (F.col("doc_id") % 3).cast("int"),
+        (F.lit(16) + F.col("doc_id") % 40).cast("int"),
+        F.element_at(
+            F.array(F.lit(63), F.lit(93), F.lit(120), F.lit(153)),
+            (F.col("doc_id") % 4 + 1).cast("int"),
+        ).cast("int"),
+        (F.col("doc_id") % 2 == 1).cast("boolean"),
     )
-    return hevc_census(media).drop("total_bytes")
+    census = payload_rows(media, hevc.hevc_nal_census, hevc.HEVC_CENSUS_SCHEMA)
+    return census.drop("total_bytes")
 
 
 @_register(
@@ -14143,32 +14072,26 @@ def m25_hevc_nal_census(spark: SparkSession, sf_dir: str) -> DataFrame:
        FROM s""",
 )
 def m26_opus_packet_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Opus per-packet TOC census (VERDICT r12 stretch #8) — one level
-    below m20's Ogg page/granule walk: every audio packet's TOC byte
-    decoded per RFC 6716 §3.1 Table 2 (config → SILK/Hybrid/CELT mode,
-    NB..FB bandwidth, 2.5-60 ms frame duration on the 48 kHz clock),
-    stereo flag, frame-count code incl. the code-3 count byte with its
-    §3.2.5 M x duration <= 120 ms bound, plus a granule cross-check:
-    the summed TOC durations must equal the container's (last granule
-    − pre-skip) — two independent duration sources a broken TOC shift
-    would desynchronize.  Fixture packets carry real TOC bytes from
-    closed-form (doc_id, j) arithmetic the oracle replays exactly;
-    frame payload decode stays the documented essence boundary."""
-    from torcdb_spark.operators.multimodal import (
-        opus_census,
-        opus_packet_synth_udf,
-    )
+    """Opus per-packet TOC census (operators/multimodal.py opus_census
+    over opus_packet_census; RFC 6716 §3.1 Table 2 and §3.2.5): each
+    audio packet's TOC byte gives config → SILK/Hybrid/CELT mode, NB..FB
+    bandwidth and frame duration on the 48 kHz clock, the stereo flag
+    and the frame-count code, including the code-3 count byte and its
+    120 ms bound.  granule_match checks the summed TOC durations against
+    the container's last granule minus pre-skip.  Packets follow the
+    closed-form (doc_id, j) arithmetic of encode_opus_toc_stream, which
+    the oracle replays."""
+    from torcdb_spark.operators import multimodal as mm
 
     docs = load_table(spark, sf_dir, "documents")
-    synth = opus_packet_synth_udf()
     media = docs.select(
         F.col("doc_id"),
-        synth(
+        mm.synth_udf(mm.encode_opus_toc_stream)(
             F.col("doc_id").cast("long"),
             (F.lit(2) + F.col("doc_id") % 5).cast("long"),
         ).alias("payload"),
     )
-    return opus_census(media)
+    return mm.opus_census(media)
 
 
 @_register(

@@ -26,7 +26,7 @@ import json
 import struct
 import zlib
 
-import pandas as pd  # module-level: pandas_udf resolves stringified hints
+import pandas as pd
 
 from pyspark.sql import DataFrame
 
@@ -412,51 +412,32 @@ def avro_records(
     return shards.mapInPandas(kernel, schema=schema)
 
 
-def avro_synth_udf(codec_pair: tuple[str, str] = ("null", "deflate")):
-    """pandas_udf synthesizing per-row Avro OCF shards ({id: long,
-    score: double, text: ["null","string"]} records, codec alternating
-    ``codec_pair[0]``/``codec_pair[1]`` on the final boolean column —
-    fixture synthesis for the Avro ingestion pipeline.  The default
-    pair keeps av1's null/deflate bytes stable; av2 passes
-    ("snappy", "snappy") so every block rides the snappy path."""
-    from pyspark.sql.functions import pandas_udf
+_DOC_SCHEMA = {
+    "type": "record",
+    "name": "doc",
+    "fields": [
+        {"name": "id", "type": "long"},
+        {"name": "score", "type": "double"},
+        {"name": "text", "type": ["null", "string"]},
+    ],
+}
 
-    SCHEMA = {
-        "type": "record",
-        "name": "doc",
-        "fields": [
-            {"name": "id", "type": "long"},
-            {"name": "score", "type": "double"},
-            {"name": "text", "type": ["null", "string"]},
-        ],
-    }
 
-    @pandas_udf("binary")
-    def synth(
-        base: pd.Series,
-        n_records: pd.Series,
-        score_base: pd.Series,
-        text: pd.Series,
-        null_text: pd.Series,
-        deflate: pd.Series,
-    ) -> pd.Series:
-        out = []
-        for b, n, sb, t, nt, df in zip(
-            base, n_records, score_base, text, null_text, deflate
-        ):
-            b, n, sb = int(b), int(n), int(sb)
-            recs = [
-                {
-                    "id": b * 10 + i,
-                    "score": (sb + i) / 4.0,
-                    "text": None if nt else t[i * 6 : i * 6 + 6] or "pad",
-                }
-                for i in range(n)
-            ]
-            out.append(write_avro(
-                SCHEMA, recs,
-                codec=codec_pair[1] if df else codec_pair[0],
-            ))
-        return pd.Series(out)
-
-    return synth
+def avro_doc_shard(base: int, n_records: int, score_base: int, text: str,
+                   null_text: bool, second_codec: bool,
+                   codecs: tuple[str, str] = ("null", "deflate")) -> bytes:
+    """Per-row Avro OCF fixture for :func:`avro_records`: record i is
+    ``{id: base*10 + i, score: (score_base + i) / 4, text: the i-th
+    6-char slice of text, 'pad' past its end, or null when null_text}``,
+    written with ``codecs[1]`` when ``second_codec`` else
+    ``codecs[0]``."""
+    recs = [
+        {
+            "id": base * 10 + i,
+            "score": (score_base + i) / 4.0,
+            "text": None if null_text else text[i * 6 : i * 6 + 6] or "pad",
+        }
+        for i in range(n_records)
+    ]
+    return write_avro(_DOC_SCHEMA, recs,
+                      codec=codecs[1] if second_codec else codecs[0])

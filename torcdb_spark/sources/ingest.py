@@ -11,7 +11,7 @@ inferSchema on production data — schema inference is a full extra pass over
 
 from __future__ import annotations
 
-import pandas as pd  # module-level: pandas_udf resolves stringified hints
+import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -211,33 +211,20 @@ def gzip_member_lines(
     return files.mapInPandas(kernel, schema=schema)
 
 
-def jsonl_gz_synth_udf(lines_per_member: int = 5):
-    """pandas_udf synthesizing a multi-member ``.jsonl.gz`` shard from
-    a newline-joined block of JSONL lines: every ``lines_per_member``
-    lines become one INDEPENDENT gzip member (mtime pinned to 0 so
-    the bytes are deterministic), members concatenated — fixture
-    synthesis for :func:`gzip_member_lines`."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+def jsonl_gz_shard(blob: str, lines_per_member: int = 5) -> bytes:
+    """Per-row multi-member ``.jsonl.gz`` fixture for
+    :func:`gzip_member_lines`: every ``lines_per_member`` lines of the
+    newline-joined ``blob`` become one independent gzip member (mtime 0,
+    so the bytes are deterministic), members concatenated."""
+    import gzip
+    import io
 
-    @pandas_udf("binary")
-    def synth(lines_blob: pd.Series) -> pd.Series:
-        import gzip
-        import io
-
-        out = []
-        for blob in lines_blob:
-            lines = str(blob).split("\n")
-            shard = bytearray()
-            for i in range(0, len(lines), lines_per_member):
-                member = "\n".join(lines[i : i + lines_per_member])
-                bio = io.BytesIO()
-                with gzip.GzipFile(
-                    fileobj=bio, mode="wb", mtime=0
-                ) as gz:
-                    gz.write(member.encode("utf-8"))
-                shard += bio.getvalue()
-            out.append(bytes(shard))
-        return pd.Series(out)
-
-    return synth
+    lines = blob.split("\n")
+    shard = bytearray()
+    for i in range(0, len(lines), lines_per_member):
+        member = "\n".join(lines[i : i + lines_per_member])
+        bio = io.BytesIO()
+        with gzip.GzipFile(fileobj=bio, mode="wb", mtime=0) as gz:
+            gz.write(member.encode("utf-8"))
+        shard += bio.getvalue()
+    return bytes(shard)

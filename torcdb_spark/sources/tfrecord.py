@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import struct
 
-import pandas as pd  # module-level: pandas_udf resolves stringified hints
+import pandas as pd
 
 from pyspark.sql import DataFrame
 
@@ -333,31 +333,18 @@ def tfrecord_examples(
     return shards.mapInPandas(kernel, schema=schema)
 
 
-def tfrecord_synth_udf():
-    """pandas_udf synthesizing per-row TFRecord shards of
-    tf.train.Example records (a 'tokens' Int64List and a 'text'
-    BytesList per record) — fixture synthesis for the TFRecord
-    ingestion pipeline."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def synth(
-        base: pd.Series,
-        n_records: pd.Series,
-        tokens_per_record: pd.Series,
-        text: pd.Series,
-    ) -> pd.Series:
-        out = []
-        for b, n, m, t in zip(base, n_records, tokens_per_record, text):
-            b, n, m = int(b), int(n), int(m)
-            recs = [
-                encode_example({
-                    "tokens": [b + i * m + j for j in range(m)],
-                    "text": [t[i * 8 : i * 8 + 8] or "pad"],
-                })
-                for i in range(n)
-            ]
-            out.append(write_tfrecords(recs))
-        return pd.Series(out)
-
-    return synth
+def tfrecord_shard(base: int, n_records: int, tokens_per_record: int,
+                   text: str) -> bytes:
+    """Per-row TFRecord fixture for :func:`tfrecord_examples`: record i
+    is a tf.train.Example whose 'tokens' Int64List holds
+    ``base + i*m + j`` for j < m (m = ``tokens_per_record``) and whose
+    'text' BytesList holds the i-th 8-char slice of ``text``, or 'pad'
+    past its end."""
+    m = tokens_per_record
+    return write_tfrecords([
+        encode_example({
+            "tokens": [base + i * m + j for j in range(m)],
+            "text": [text[i * 8 : i * 8 + 8] or "pad"],
+        })
+        for i in range(n_records)
+    ])
