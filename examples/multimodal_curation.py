@@ -43,12 +43,12 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
     import pyspark.sql.functions as F
 
     from torcdb_spark import get_spark
+    from torcdb_spark.functions.payload import synth_udf
     from torcdb_spark.operators.multimodal import (
         decode_and_featurize,
         audio_features,
         encode_wav_pcm,
         phash_near_dup_pairs,
-        synth_udf,
     )
     from torcdb_spark.operators.similarity import semantic_dedup
     from torcdb_spark.operators.text import benchmark_overlap

@@ -1192,6 +1192,7 @@ def test_payload_rows_skips_malformed_and_fans_out(spark):
     payload whose parser raises ValueError (truncated, junk) is dropped.
     An input with no rows, or with no valid row, gives an empty frame
     with the schema's columns."""
+    from torcdb_spark.functions.payload import payload_rows
     from torcdb_spark.operators.multimodal import (
         ID3_TAGS_SCHEMA,
         MP3_CENSUS_SCHEMA,
@@ -1199,7 +1200,6 @@ def test_payload_rows_skips_malformed_and_fans_out(spark):
         encode_mp3_stream,
         id3v2_text_frames,
         mp3_frame_census,
-        payload_rows,
     )
 
     mp3 = encode_mp3_stream(3, bitrate_idx=9)
@@ -1235,7 +1235,7 @@ def test_payload_rows_skips_malformed_and_fans_out(spark):
 def test_synth_udf_passes_python_values(spark):
     """synth_udf calls its encoder once per row with Python ints, bools,
     strs and bytes, so an encoder needs no casts."""
-    from torcdb_spark.operators.multimodal import synth_udf
+    from torcdb_spark.functions.payload import synth_udf
 
     df = spark.createDataFrame(
         [(7, 3, True, "a", b"\x01")],

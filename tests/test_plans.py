@@ -873,13 +873,14 @@ def test_srt_pipeline_is_jvm_only(spark, sf_dir):
 
 
 def test_epub_pipeline_single_arrow_stage_each(spark, sf_dir):
-    """p3 composes two Arrow kernels (EPUB builder, zip fan-out) and a
-    JVM extraction chain — the plan carries exactly those two Python
-    stages and equi-joins only."""
+    """p3 composes two Arrow stages (the EPUB synth UDF, the zip
+    fan-out kernel) and a JVM extraction chain — the plan carries
+    exactly those two Python stages and equi-joins only."""
     from torcdb_spark.queries import queries
 
     plan = explain_str(queries()["p3_epub_extract"](spark, sf_dir), "simple")
-    assert plan.count("MapInPandas") == 2
+    assert plan.count("ArrowEvalPython") == 1
+    assert plan.count("MapInPandas") == 1
     assert "CartesianProduct" not in plan
 
 

@@ -410,39 +410,9 @@ class PropertyGraph:
         evaluated only on matched rows — the vertex scan itself stays
         JVM-side.
         """
-        from torcdb_spark import serde
-
-        vals = F.collect_list("value")
-        if not dict(updates.dtypes)["value"].startswith("map"):
-            # maps aren't orderable in Spark — map-valued batches keep
-            # arrival order (callers should supply one map per id)
-            vals = F.sort_array(vals)
-        upd = (
-            updates.select("id", "value")
-            .groupBy("id")
-            .agg(vals.alias("_new_vals"))
-        )
-        v = self.vertices.join(upd, "id", "left")
-        merged = serde.merge_prop_col(
-            F.col("props").getItem(key), F.col("_new_vals"),
-            cardinality.value,
-        )
-        new_props = F.when(
-            F.col("_new_vals").isNull(), F.col("props")
-        ).otherwise(
-            F.map_concat(
-                F.map_filter(
-                    F.coalesce(
-                        F.col("props"),
-                        F.create_map().cast("map<string,string>"),
-                    ),
-                    lambda k, _: k != F.lit(key),
-                ),
-                F.create_map(F.lit(key), merged),
-            )
-        )
         return PropertyGraph(
-            vertices=v.select("id", "label", new_props.alias("props")),
+            vertices=_merge_props(self.vertices, updates, ["id"], key,
+                                  cardinality),
             edges=self.edges,
         )
 
@@ -461,41 +431,10 @@ class PropertyGraph:
         semantics and serde are identical to the vertex form. One groupBy
         of the updates and one left join against the edge set on the full
         edge key."""
-        from torcdb_spark import serde
-
-        vals = F.collect_list("value")
-        if not dict(updates.dtypes)["value"].startswith("map"):
-            vals = F.sort_array(vals)
-        upd = (
-            updates.select("src", "dst", "label", "value")
-            .groupBy("src", "dst", "label")
-            .agg(vals.alias("_new_vals"))
-        )
-        e = self.edges.join(upd, ["src", "dst", "label"], "left")
-        merged = serde.merge_prop_col(
-            F.col("props").getItem(key), F.col("_new_vals"),
-            cardinality.value,
-        )
-        new_props = F.when(
-            F.col("_new_vals").isNull(), F.col("props")
-        ).otherwise(
-            F.map_concat(
-                F.map_filter(
-                    F.coalesce(
-                        F.col("props"),
-                        F.create_map().cast("map<string,string>"),
-                    ),
-                    lambda k, _: k != F.lit(key),
-                ),
-                F.create_map(F.lit(key), merged),
-            )
-        )
         return PropertyGraph(
             vertices=self.vertices,
-            edges=e.select(
-                "src", "src_label", "dst", "dst_label", "label",
-                new_props.alias("props"),
-            ),
+            edges=_merge_props(self.edges, updates, ["src", "dst", "label"],
+                               key, cardinality),
         )
 
     def add_vertices(self, new: DataFrame) -> "PropertyGraph":
@@ -584,3 +523,48 @@ class PropertyGraph:
         return e.groupBy(F.col(key).alias("v")).agg(
             F.count("*").alias("degree")
         )
+
+
+def _merge_props(
+    items: DataFrame,
+    updates: DataFrame,
+    keys: list[str],
+    key: str,
+    cardinality: Cardinality,
+) -> DataFrame:
+    """``items`` (vertices or edges) with property ``key`` of every row
+    that ``updates`` (``keys`` + ``value``) matches merged under
+    ``cardinality``: one groupBy of the updates, one left join on
+    ``keys``, and the serde merge evaluated only on matched rows."""
+    from torcdb_spark import serde
+
+    vals = F.collect_list("value")
+    if not dict(updates.dtypes)["value"].startswith("map"):
+        # maps aren't orderable in Spark — map-valued batches keep
+        # arrival order (callers should supply one map per id)
+        vals = F.sort_array(vals)
+    upd = (
+        updates.select(*keys, "value")
+        .groupBy(*keys)
+        .agg(vals.alias("_new_vals"))
+    )
+    merged = serde.merge_prop_col(
+        F.col("props").getItem(key), F.col("_new_vals"), cardinality.value
+    )
+    new_props = F.when(
+        F.col("_new_vals").isNull(), F.col("props")
+    ).otherwise(
+        F.map_concat(
+            F.map_filter(
+                F.coalesce(
+                    F.col("props"),
+                    F.create_map().cast("map<string,string>"),
+                ),
+                lambda k, _: k != F.lit(key),
+            ),
+            F.create_map(F.lit(key), merged),
+        )
+    )
+    return items.join(upd, keys, "left").select(
+        *[new_props.alias(c) if c == "props" else c for c in items.columns]
+    )

@@ -1,10 +1,11 @@
 """Multimodal column operators: opaque binary payloads + typed metadata.
 
 Images/audio/video ride through the engine as ``binary`` columns with a
-metadata struct; transforms run as Arrow-batched Pandas UDFs over
-``mapInPandas`` so payload bytes never round-trip through Python row
-objects. Decode kernels are REAL for every format decodable without codec
-libraries — PPM(P6 8/16-bit), BMP incl. 4/8-bit palette + RLE8, 1/2/4/8/16-bit PNG
+metadata struct; every per-payload transform is one ``parse`` function
+run by the one Arrow-batched kernel, ``payload_rows``
+(torcdb_spark/functions/payload.py), so payload bytes never round-trip
+through Python row objects. Decode kernels are REAL for every format
+decodable without codec libraries — PPM(P6 8/16-bit), BMP incl. 4/8-bit palette + RLE8, 1/2/4/8/16-bit PNG
 incl. paletted +
 Adam7 interlaced (stdlib zlib), 8/16-bit TIFF incl. LZW/Deflate/
 PackBits strips + horizontal predictor, baseline +
@@ -25,14 +26,12 @@ executor memory.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from torcdb_spark import regime
+from torcdb_spark.functions.payload import payload_rows
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -53,47 +52,6 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("feature", T.ArrayType(T.FloatType()), True),
     ]
 )
-
-
-def payload_rows(media: DataFrame, parse, schema: str) -> DataFrame:
-    """The one Arrow-batched kernel of the structural censuses:
-    ``parse(payload)`` per ``(media_id, payload)`` row via mapInPandas.
-    ``schema`` is flat DDL whose first column is ``media_id``.  A dict
-    from ``parse`` gives one row, its keys naming the other columns; a
-    list gives one row per item, each item a dict or a tuple in column
-    order.  A payload whose ``parse`` raises ValueError is dropped (the
-    skip-malformed contract)."""
-    names = [field.split()[0] for field in schema.split(",")]
-
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    parsed = parse(bytes(payload))
-                except ValueError:
-                    continue
-                for item in parsed if isinstance(parsed, list) else [parsed]:
-                    if isinstance(item, dict):
-                        item = [item[k] for k in names[1:]]
-                    rows.append((mid, *item))
-            yield pd.DataFrame(rows, columns=names)
-
-    return media.mapInPandas(kernel, schema=schema)
-
-
-def synth_udf(encode):
-    """The one fixture-synthesis UDF: a binary pandas_udf whose output
-    row is ``encode(*row)`` over its argument columns.  ``tolist()``
-    hands ``encode`` Python ints, bools, strs and bytes."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def synth(*cols: pd.Series) -> pd.Series:
-        rows = zip(*(c.tolist() for c in cols))
-        return pd.Series([encode(*row) for row in rows])
-
-    return synth
 
 
 def documents_as_media(docs: DataFrame) -> DataFrame:
@@ -132,7 +90,7 @@ def decode_image(payload: bytes):
     incl. predictor/cross-color/subtract-green/color-indexing
     transforms, color cache, LZ77, meta prefix codes). Lossy WebP
     (VP8) / arithmetic coding raise NotImplementedError — a deployment
-    installs pillow/opencv and extends the dispatch. The Spark-side plumbing (mapInPandas batching, binary
+    installs pillow/opencv and extends the dispatch. The Spark-side plumbing (payload_rows batching, binary
     Arrow buffers) is format-agnostic.
     """
     import numpy as np
@@ -834,11 +792,13 @@ def resize_bilinear(img, out_h: int, out_w: int):
 
 
 def decode_and_featurize(media: DataFrame, hist_bins: int = 8) -> DataFrame:
-    """REAL image decode → per-image features via mapInPandas: dimensions,
+    """REAL image decode → per-image features via payload_rows: dimensions,
     per-channel means, and a luminance histogram. Undecodable payloads
     (unsupported format / corrupt bytes) yield NULL feature columns rather
     than failing the batch — at 100 TB some fraction of a crawl corpus is
     always undecodable and must not kill the job."""
+    import numpy as np
+
     schema = T.StructType(
         [
             T.StructField("media_id", T.LongType(), False),
@@ -853,74 +813,48 @@ def decode_and_featurize(media: DataFrame, hist_bins: int = 8) -> DataFrame:
         ]
     )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def parse(payload):
+        try:
+            img = decode_image(payload)
+            h, w, c = img.shape
+            rgb = img[:, :, :3].astype(np.float64)
+            luma = rgb @ np.array([0.299, 0.587, 0.114])
+            hist = np.histogram(luma, bins=hist_bins, range=(0, 256))[0]
+            tot = hist.sum() or 1
+            return (
+                int(w), int(h), int(c),
+                *(round(float(rgb[:, :, i].mean()), 4) for i in range(3)),
+                (hist / tot).round(6).tolist(), None,
+            )
+        except (NotImplementedError, ValueError) as exc:
+            return (None,) * 7 + (type(exc).__name__,)
 
-        for pdf in batches:
-            out = {k: [] for k in schema.names}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                out["media_id"].append(mid)
-                try:
-                    img = decode_image(None if p is None else bytes(p))
-                    h, w, c = img.shape
-                    rgb = img[:, :, :3].astype(np.float64)
-                    luma = rgb @ np.array([0.299, 0.587, 0.114])
-                    hist = np.histogram(luma, bins=hist_bins, range=(0, 256))[0]
-                    tot = hist.sum() or 1
-                    out["width"].append(int(w))
-                    out["height"].append(int(h))
-                    out["channels"].append(int(c))
-                    out["mean_r"].append(round(float(rgb[:, :, 0].mean()), 4))
-                    out["mean_g"].append(round(float(rgb[:, :, 1].mean()), 4))
-                    out["mean_b"].append(round(float(rgb[:, :, 2].mean()), 4))
-                    out["luma_hist"].append((hist / tot).round(6).tolist())
-                    out["decode_err"].append(None)
-                except (NotImplementedError, ValueError) as exc:
-                    for k in ("width", "height", "channels", "mean_r",
-                              "mean_g", "mean_b", "luma_hist"):
-                        out[k].append(None)
-                    out["decode_err"].append(type(exc).__name__)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(kernel, schema=schema)
+    return payload_rows(media.select("media_id", "payload"), parse, schema)
 
 
 def extract_features(media: DataFrame, feature_dim: int = 8) -> DataFrame:
-    """Per-payload feature extraction via mapInPandas (Arrow batches).
+    """Per-payload feature extraction via payload_rows (Arrow batches).
 
     The feature kernel is a deterministic fake (byte histogram moments) so
     the full distributed path — batch iteration, binary columns through
-    Arrow, schema of the result — is real and testable without media libs."""
+    Arrow, schema of the result — is real and testable without media libs.
+    A NULL payload gives zero features."""
+    import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def parse(payload):
+        if payload is None:
+            return (0, 0.0, [0.0] * feature_dim)
+        arr = np.frombuffer(payload, dtype=np.uint8)
+        # deterministic fake embedding: bucketed byte histogram
+        hist = np.histogram(arr, bins=feature_dim, range=(0, 256))[0]
+        total = hist.sum() or 1
+        return (
+            int(arr.size),
+            float(arr.mean()) if arr.size else 0.0,
+            (hist / total).astype("float32").tolist(),
+        )
 
-        for pdf in batches:
-            payloads = pdf["payload"]
-            n_bytes, means, feats = [], [], []
-            for p in payloads:
-                if p is None:
-                    n_bytes.append(0)
-                    means.append(0.0)
-                    feats.append([0.0] * feature_dim)
-                    continue
-                arr = np.frombuffer(p, dtype=np.uint8)
-                n_bytes.append(int(arr.size))
-                means.append(float(arr.mean()) if arr.size else 0.0)
-                # deterministic fake embedding: bucketed byte histogram
-                hist = np.histogram(arr, bins=feature_dim, range=(0, 256))[0]
-                total = hist.sum() or 1
-                feats.append((hist / total).astype("float32").tolist())
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_bytes": n_bytes,
-                    "byte_mean": means,
-                    "feature": feats,
-                }
-            )
-
-    return media.mapInPandas(kernel, schema=FEATURE_SCHEMA)
+    return payload_rows(media.select("media_id", "payload"), parse, FEATURE_SCHEMA)
 
 
 def frame_sample(media: DataFrame, every_n: int = 10) -> DataFrame:
@@ -1197,45 +1131,34 @@ AUDIO_FEATURE_SCHEMA = (
 )
 
 
-def audio_features(media: DataFrame, payload_col: str = "payload") -> DataFrame:
+def audio_features(media: DataFrame) -> DataFrame:
     """Arrow-batched audio feature extraction over opaque WAV payloads:
     (sample_rate, n_samples, duration_ms, rms, zero-crossing rate) per
-    item via mapInPandas — one decode per row inside a columnar batch, the
+    item via payload_rows — one decode per row inside a columnar batch, the
     same partition-parallel shape as the image kernels. Undecodable rows
     are dropped (same skip-malformed contract as media_features)."""
-    import pandas as pd  # noqa: F401 (type hints at runtime)
+    import numpy as np
 
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
+    def parse(payload):
+        try:
+            rate, x = decode_wav(payload)
+        except (ValueError, NotImplementedError):
+            return []
+        n = len(x)
+        return (
+            rate,
+            n,
+            # floor division: exact integer semantics both here and in
+            # any SQL oracle (round() would hit half-even vs half-up)
+            int(n * 1000 // rate),
+            round(float(np.sqrt(np.mean(x * x))), 4) if n else 0.0,
+            round(float(np.mean(np.signbit(x[1:]) != np.signbit(x[:-1]))), 4)
+            if n > 1 else 0.0,
+        )
 
-        for pdf in batches:
-            out = {
-                "media_id": [], "sample_rate": [], "n_samples": [],
-                "duration_ms": [], "rms": [], "zcr": [],
-            }
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                try:
-                    rate, x = decode_wav(bytes(payload))
-                except (ValueError, NotImplementedError):
-                    continue
-                n = len(x)
-                out["media_id"].append(mid)
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(n)
-                # floor division: exact integer semantics both here and in
-                # any SQL oracle (round() would hit half-even vs half-up)
-                out["duration_ms"].append(int(n * 1000 // rate))
-                out["rms"].append(
-                    round(float(np.sqrt(np.mean(x * x))), 4) if n else 0.0
-                )
-                out["zcr"].append(
-                    round(float(np.mean(np.signbit(x[1:]) != np.signbit(x[:-1]))), 4)
-                    if n > 1 else 0.0
-                )
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(kernel, schema=AUDIO_FEATURE_SCHEMA)
+    return payload_rows(
+        media.select("media_id", "payload"), parse, AUDIO_FEATURE_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2408,7 +2331,7 @@ def encode_opus_toc_stream(doc_id: int, n_packets: int) -> bytes:
     return encode_opus_packets(tocs)
 
 
-def opus_census(media: DataFrame, payload_col: str = "payload") -> DataFrame:
+def opus_census(media: DataFrame) -> DataFrame:
     """DataFrame boundary for :func:`opus_packet_census`: one row per
     (file, audio packet) with the TOC decode and the granule
     cross-check, Arrow-batched; a malformed stream degrades to a
@@ -2420,29 +2343,13 @@ def opus_census(media: DataFrame, payload_col: str = "payload") -> DataFrame:
         "granule_match boolean"
     )
 
-    def kernel(batches):
-        for pdf in batches:
-            out = []
-            for did, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                did = int(did)
-                try:
-                    for row in opus_packet_census(bytes(payload)):
-                        out.append({"doc_id": did, **row})
-                except ValueError as exc:
-                    out.append({
-                        "doc_id": did, "pkt_idx": -1, "config": 0,
-                        "stereo": None, "fcode": 0, "n_frames": 0,
-                        "frame_samples": 0, "pkt_samples": 0,
-                        "mode": f"_error: {exc}", "bandwidth": None,
-                        "granule_match": None,
-                    })
-            yield pd.DataFrame(out, columns=[
-                "doc_id", "pkt_idx", "config", "stereo", "fcode",
-                "n_frames", "frame_samples", "pkt_samples", "mode",
-                "bandwidth", "granule_match",
-            ])
+    def parse(payload):
+        try:
+            return opus_packet_census(payload)
+        except ValueError as exc:
+            return [(-1, 0, None, 0, 0, 0, 0, f"_error: {exc}", None, None)]
 
-    return media.mapInPandas(kernel, schema=schema)
+    return payload_rows(media.select("doc_id", "payload"), parse, schema)
 
 
 def encode_tiff_rgb(img, compression: int = 1, predictor: int = 1) -> bytes:
@@ -2517,57 +2424,41 @@ def encode_tiff_rgb(img, compression: int = 1, predictor: int = 1) -> bytes:
     )
 
 
-def audio_spectral_features(
-    media: DataFrame, payload_col: str = "payload"
-) -> DataFrame:
+def audio_spectral_features(media: DataFrame) -> DataFrame:
     """FFT-based spectral features per WAV payload: dominant frequency
     (argmax of the rFFT magnitude, DC excluded), spectral centroid and
     bandwidth in Hz — the standard audio-quality/content signals computed
-    with numpy's FFT inside the same Arrow-batched mapInPandas shape as
+    with numpy's FFT inside the same payload_rows kernel as
     audio_features. Undecodable rows drop (skip-malformed contract)."""
+    import numpy as np
+
     schema = (
         "media_id long, sample_rate long, dominant_hz double, "
         "centroid_hz double, bandwidth_hz double"
     )
 
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
+    def parse(payload):
+        try:
+            rate, x = decode_wav(payload)
+        except (ValueError, NotImplementedError):
+            return []
+        if len(x) < 4:
+            return []
+        mag = np.abs(np.fft.rfft(x))
+        freqs = np.fft.rfftfreq(len(x), d=1.0 / rate)
+        mag[0] = 0.0  # exclude DC from all three measures
+        total = mag.sum()
+        if total <= 0:
+            # constant signal: no spectral content above DC — report
+            # zeros rather than dropping (the row DID decode)
+            dom = cent = bw = 0.0
+        else:
+            dom = float(freqs[int(mag.argmax())])
+            cent = float((freqs * mag).sum() / total)
+            bw = float(np.sqrt((((freqs - cent) ** 2) * mag).sum() / total))
+        return (rate, round(dom, 2), round(cent, 2), round(bw, 2))
 
-        for pdf in batches:
-            out = {
-                "media_id": [], "sample_rate": [], "dominant_hz": [],
-                "centroid_hz": [], "bandwidth_hz": [],
-            }
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                try:
-                    rate, x = decode_wav(bytes(payload))
-                except (ValueError, NotImplementedError):
-                    continue
-                if len(x) < 4:
-                    continue
-                mag = np.abs(np.fft.rfft(x))
-                freqs = np.fft.rfftfreq(len(x), d=1.0 / rate)
-                mag[0] = 0.0  # exclude DC from all three measures
-                total = mag.sum()
-                if total <= 0:
-                    # constant signal: no spectral content above DC — report
-                    # zeros rather than dropping (the row DID decode)
-                    dom = cent = bw = 0.0
-                else:
-                    dom = float(freqs[int(mag.argmax())])
-                    cent = float((freqs * mag).sum() / total)
-                    bw = float(
-                        np.sqrt((((freqs - cent) ** 2) * mag).sum() / total)
-                    )
-                out["media_id"].append(mid)
-                out["sample_rate"].append(rate)
-                out["dominant_hz"].append(round(dom, 2))
-                out["centroid_hz"].append(round(cent, 2))
-                out["bandwidth_hz"].append(round(bw, 2))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(kernel, schema=schema)
+    return payload_rows(media.select("media_id", "payload"), parse, schema)
 
 
 def _dct_mat_n(n: int):
@@ -2658,50 +2549,36 @@ def whash64(img) -> int:
     return h
 
 
+def _image_hash(media: DataFrame, hash64, col: str) -> DataFrame:
+    """(media_id, ``col``): ``hash64`` of each decoded image in one
+    payload_rows pass; a payload that fails to decode or hash gives
+    NULL."""
+
+    def parse(payload):
+        try:
+            return (hash64(decode_image(payload)),)
+        except Exception:
+            return (None,)
+
+    return payload_rows(
+        media.select("media_id", "payload"), parse, f"media_id long, {col} long"
+    )
+
+
 def image_whash(media: DataFrame) -> DataFrame:
     """(media_id, whash): integer WHT perceptual hash per image via the
-    real decode path in one Arrow-batched mapInPandas pass (the
+    real decode path in one Arrow-batched payload_rows pass (the
     ``image_phash`` layout with the hash kernel swapped). Undecodable
     payloads yield NULL."""
-    import numpy as np  # noqa: F401  (kernel dependency, imported eagerly)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    img = decode_image(bytes(payload))
-                    out.append({"media_id": mid, "whash": whash64(img)})
-                except Exception:
-                    out.append({"media_id": mid, "whash": None})
-            yield pd.DataFrame(out, columns=["media_id", "whash"])
-
-    return media.select("media_id", "payload").mapInPandas(
-        kernel, "media_id long, whash long"
-    )
+    return _image_hash(media, whash64, "whash")
 
 
 def image_phash(media: DataFrame) -> DataFrame:
     """(media_id, phash): perceptual hash per image via the real decode
-    path inside one Arrow-batched mapInPandas pass — payload bytes never
+    path inside one Arrow-batched payload_rows pass — payload bytes never
     leave the executor. Undecodable payloads yield NULL phash (same
     decode_err contract as decode_and_featurize)."""
-    import numpy as np  # noqa: F401  (kernel dependency, imported eagerly)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    img = decode_image(bytes(payload))
-                    out.append({"media_id": mid, "phash": phash64(img)})
-                except Exception:
-                    out.append({"media_id": mid, "phash": None})
-            yield pd.DataFrame(out, columns=["media_id", "phash"])
-
-    return media.select("media_id", "payload").mapInPandas(
-        kernel, "media_id long, phash long"
-    )
+    return _image_hash(media, phash64, "phash")
 
 
 def phash_near_dup_pairs(
@@ -2825,63 +2702,36 @@ def decode_avi_mjpeg(payload: bytes):
     return meta, frames
 
 
-def video_frame_features(
-    media: DataFrame, every_n: int = 2, payload_col: str = "payload"
-) -> DataFrame:
+def video_frame_features(media: DataFrame, every_n: int = 2) -> DataFrame:
     """REAL video frame sampling: parse the AVI container, decode every
     ``every_n``-th MJPEG frame (unsampled frames are never JPEG-decoded —
     container-aware seek, the whole point of frame sampling at 100 TB),
     and emit per-frame (media_id, frame_idx, width, height, mean_luma,
-    decode_err). One Arrow-batched mapInPandas pass; payloads never leave
-    the executor."""
-    import numpy as np
-
+    decode_err). One payload_rows pass; payloads never leave the
+    executor.  A malformed container or frame appends one
+    ``frame_idx=-1`` error row after the frames already decoded."""
     from torcdb_spark.operators.jpeg import decode_jpeg
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                try:
-                    _meta, frames = decode_avi_mjpeg(bytes(payload))
-                    for idx in range(0, len(frames), every_n):
-                        img = decode_jpeg(frames[idx])
-                        luma = (
-                            0.299 * img[:, :, 0]
-                            + 0.587 * img[:, :, 1]
-                            + 0.114 * img[:, :, 2]
-                        ).mean()
-                        rows.append(
-                            {
-                                "media_id": mid,
-                                "frame_idx": idx,
-                                "width": img.shape[1],
-                                "height": img.shape[0],
-                                "mean_luma": round(float(luma), 3),
-                                "decode_err": None,
-                            }
-                        )
-                except Exception as exc:  # malformed container/frame
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "frame_idx": -1,
-                            "width": None,
-                            "height": None,
-                            "mean_luma": None,
-                            "decode_err": str(exc)[:80],
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "width", "height",
-                    "mean_luma", "decode_err",
-                ],
-            )
+    def parse(payload):
+        rows = []
+        try:
+            _meta, frames = decode_avi_mjpeg(payload)
+            for idx in range(0, len(frames), every_n):
+                img = decode_jpeg(frames[idx])
+                luma = (
+                    0.299 * img[:, :, 0]
+                    + 0.587 * img[:, :, 1]
+                    + 0.114 * img[:, :, 2]
+                ).mean()
+                rows.append((idx, img.shape[1], img.shape[0],
+                             round(float(luma), 3), None))
+        except Exception as exc:  # malformed container/frame
+            rows.append((-1, None, None, None, str(exc)[:80]))
+        return rows
 
-    return media.mapInPandas(
-        kernel,
+    return payload_rows(
+        media.select("media_id", "payload"),
+        parse,
         "media_id long, frame_idx long, width long, height long, "
         "mean_luma double, decode_err string",
     )

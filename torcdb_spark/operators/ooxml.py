@@ -61,12 +61,7 @@ def pptx_text(slide_xml: Column) -> Column:
     )
 
 
-def xlsx_sheet_census(
-    members: DataFrame,
-    path_col: str = "path",
-    member_col: str = "member",
-    payload_col: str = "payload",
-) -> DataFrame:
+def xlsx_sheet_census(members: DataFrame) -> DataFrame:
     """ZIP-member rows (from sources.warc.zip_members) -> one census
     row per workbook: ``path, n_sheets, n_cells, n_string_cells,
     n_number_cells, a1_text, b2_value`` -- sheet count from the
@@ -79,8 +74,8 @@ def xlsx_sheet_census(
     shuffle, and no self-join recomputation of the upstream fan-out
     (the original three-way path join re-ran the ZIP explode once per
     branch)."""
-    xml = F.decode(F.col(payload_col), "utf-8")
-    member = F.col(member_col)
+    xml = F.decode(F.col("payload"), "utf-8")
+    member = F.col("member")
 
     n_sheets = F.when(
         member == "xl/workbook.xml",
@@ -111,7 +106,7 @@ def xlsx_sheet_census(
 
     on_sheet = member == "xl/worksheets/sheet1.xml"
     per_member = members.select(
-        F.col(path_col).alias("path"),
+        "path",
         n_sheets.alias("_n_sheets"),
         strings.alias("_strings"),
         F.when(on_sheet, F.size(cells).cast("long")).alias("_n_cells"),

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from torcdb_spark.functions.vector import cosine_similarity
+from torcdb_spark.operators.topk import topk_per_group
 
 
 def cosine_topk_bruteforce(
@@ -57,14 +58,9 @@ def cosine_topk_bruteforce(
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "score", "rnk")
-    )
+    return topk_per_group(
+        scored, ["query_id"], [F.desc("score"), F.asc("neighbor_id")], k
+    ).select("query_id", "neighbor_id", "score", "rnk")
 
 
 def cosine_near_dup_pairs(
@@ -249,12 +245,9 @@ def cosine_topk_lsh(
         )
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "score", "rnk")
-    )
+    return topk_per_group(
+        cand, ["query_id"], [F.desc("score"), F.asc("neighbor_id")], k
+    ).select("query_id", "neighbor_id", "score", "rnk")
 
 
 def ivf_topk(
@@ -369,12 +362,9 @@ def ivf_topk(
         )
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "score", "rnk")
-    )
+    return topk_per_group(
+        cand, ["query_id"], [F.desc("score"), F.asc("neighbor_id")], k
+    ).select("query_id", "neighbor_id", "score", "rnk")
 
 
 def quantize_unit_vectors(
@@ -440,12 +430,9 @@ def cosine_topk_quantized(
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "score", "rnk")
-    )
+    return topk_per_group(
+        scored, ["query_id"], [F.desc("score"), F.asc("neighbor_id")], k
+    ).select("query_id", "neighbor_id", "score", "rnk")
 
 
 def pq_topk(
@@ -646,11 +633,9 @@ def pq_topk(
             ).alias("_adc"),
         )
     )
-    wa = Window.partitionBy("query_id").orderBy(
-        F.desc("_adc"), F.asc("neighbor_id")
-    )
-    shortlist = cand.withColumn("_rk", F.row_number().over(wa)).where(
-        F.col("_rk") <= k * rerank_factor
+    shortlist = topk_per_group(
+        cand, ["query_id"], [F.desc("_adc"), F.asc("neighbor_id")],
+        k * rerank_factor, "_rk",
     )
 
     # ---- exact re-rank of the shortlist --------------------------------
@@ -667,14 +652,9 @@ def pq_topk(
             ).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        exact.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "score", "rnk")
-    )
+    return topk_per_group(
+        exact, ["query_id"], [F.desc("score"), F.asc("neighbor_id")], k
+    ).select("query_id", "neighbor_id", "score", "rnk")
 
 
 def semantic_dedup(
@@ -858,14 +838,9 @@ def hard_negative_mining(
             ).alias("score"),
         )
     )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("anchor_id", "neighbor_id", "score", "rnk")
-    )
+    return topk_per_group(
+        scored, ["anchor_id"], [F.desc("score"), F.asc("neighbor_id")], k
+    ).select("anchor_id", "neighbor_id", "score", "rnk")
 
 
 def mmr_rerank(
@@ -911,10 +886,7 @@ def mmr_rerank(
     c0 = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
     )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    cand = (
+    cand = topk_per_group(
         F.broadcast(q)
         .crossJoin(c0)
         .where(F.col("query_id") != F.col("neighbor_id"))
@@ -924,11 +896,9 @@ def mmr_rerank(
             _r6(
                 cosine_similarity(F.col("_qv"), F.col("_cv"))
             ).alias("score"),
-        )
-        .withColumn("rnk", F.row_number().over(wc))
-        .where(F.col("rnk") <= pool)
-        .localCheckpoint(eager=True)  # consumed by sims + every round
-    )
+        ),
+        ["query_id"], [F.desc("score"), F.asc("neighbor_id")], pool,
+    ).localCheckpoint(eager=True)  # consumed by sims + every round
 
     vecs = corpus.select(
         F.col(id_col).alias("_vid"), F.col(vec_col).alias("_vv")
@@ -956,9 +926,6 @@ def mmr_rerank(
         F.lit(1).cast("long").alias("sel_rank"),
     )
     out = sel
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("_mmr"), F.asc("neighbor_id")
-    )
     for i in range(2, k + 1):
         rem = cand.join(
             out.select("query_id", "neighbor_id"),
@@ -988,8 +955,10 @@ def mmr_rerank(
             ).alias("_mmr"),
         )
         pick = (
-            scored.withColumn("_rk", F.row_number().over(w))
-            .where(F.col("_rk") == 1)
+            topk_per_group(
+                scored, ["query_id"], [F.desc("_mmr"), F.asc("neighbor_id")],
+                1, "_rk",
+            )
             .select(
                 "query_id",
                 "neighbor_id",
@@ -1378,16 +1347,10 @@ def ivf_topk_exact_cells(
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.asc("_pd2"), F.asc("cid")
-    )
-    probes = (
-        qq.crossJoin(F.broadcast(cents))
-        .withColumn("_pd2", qd2)
-        .withColumn("_prk", F.row_number().over(w_probe))
-        .where(F.col("_prk") <= nprobe)
-        .select("query_id", "_qraw", "cid")
-    )
+    probes = topk_per_group(
+        qq.crossJoin(F.broadcast(cents)).withColumn("_pd2", qd2),
+        ["query_id"], [F.asc("_pd2"), F.asc("cid")], nprobe, "_prk",
+    ).select("query_id", "_qraw", "cid")
     members = assign_df.select(
         F.col("id").alias("neighbor_id"), "cid"
     ).join(
@@ -1407,15 +1370,11 @@ def ivf_topk_exact_cells(
             cosine_similarity(F.col("_qraw"), F.col("_craw")), 3
         ).alias("score"),
     )
-    w_top = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("rnk", F.row_number().over(w_top))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "score",
-                F.col("rnk").cast("long").alias("rnk"))
+    return topk_per_group(
+        scored.dropDuplicates(["query_id", "neighbor_id"]),
+        ["query_id"], [F.desc("score"), F.asc("neighbor_id")], k,
+    ).select(
+        "query_id", "neighbor_id", "score", F.col("rnk").cast("long").alias("rnk")
     )
 
 
@@ -1517,14 +1476,10 @@ def lsh_rademacher_topk(
         )
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "score",
-                F.col("rnk").cast("long").alias("rnk"))
+    return topk_per_group(
+        cand, ["query_id"], [F.desc("score"), F.asc("neighbor_id")], k
+    ).select(
+        "query_id", "neighbor_id", "score", F.col("rnk").cast("long").alias("rnk")
     )
 
 
@@ -1638,12 +1593,8 @@ def pq_adc_exact(
         .agg(F.sum("d2").alias("est_d2"))
         .where(F.col("query_id") != F.col("nid"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("est_d2"), F.asc("nid")
-    )
     return (
-        est.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
+        topk_per_group(est, ["query_id"], [F.asc("est_d2"), F.asc("nid")], k)
         .select(
             "query_id",
             F.col("nid").alias("neighbor_id"),

@@ -18,6 +18,7 @@ Determinism rules (driver hashes values order-insensitively but exactly):
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from torcdb_spark import algebra, regime
+from torcdb_spark.functions.payload import payload_rows, synth_udf
 from torcdb_spark.graph import PropertyGraph
 from torcdb_spark.ids import id_lower
 from torcdb_spark.operators.dedup import exact_dedup, minhash_lsh_dedup
@@ -57,6 +59,17 @@ def _register(name: str, oracle: str | None = None):
     return deco
 
 
+# Fixture-synthesis constants shared by the OOXML and text-extraction
+# queries: the JAVA \s class (not Python's all-of-Unicode str.split(),
+# so a no-break space stays inside its word on both sides of a round
+# trip) and the one-line [Content_Types].xml part.
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+_OOXML_TYPES = (
+    '<?xml version="1.0"?><Types><Default Extension="xml" '
+    'ContentType="application/xml"/></Types>'
+)
+
+
 def _graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:
     return PropertyGraph.open(spark, sf_dir)
 
@@ -69,8 +82,6 @@ def _synth_media(docs: DataFrame, encode, *params) -> DataFrame:
     """One synthesized payload per document, ``(doc_id AS media_id,
     encode(*params) AS payload)``, computed by the Arrow synth UDF: the
     media frame the census and audio kernels read."""
-    from torcdb_spark.operators.multimodal import synth_udf
-
     return docs.select(
         F.col("doc_id").alias("media_id"),
         synth_udf(encode)(*params).alias("payload"),
@@ -2636,10 +2647,10 @@ def p3_epub_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode, whitespace collapse). Escape → archive → unzip → de-markup
     is lossless up to whitespace collapse, so the oracle replays
     character counts with one regexp from the documents table."""
-    import pandas as pd
+    from html import escape
 
     from torcdb_spark.operators.text import html_to_text
-    from torcdb_spark.sources.warc import zip_members
+    from torcdb_spark.sources.warc import write_zip, zip_members
 
     docs = (
         regime.spread(load_table(spark, sf_dir, "documents")
@@ -2647,50 +2658,26 @@ def p3_epub_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text"))
     )
 
-    def build(batches):
-        import io
-        import zipfile
+    def epub(text):
+        return write_zip([
+            ("mimetype", "application/epub+zip"),
+            ("META-INF/container.xml",
+             '<?xml version="1.0"?><container><rootfiles>'
+             '<rootfile full-path="OEBPS/content.opf"/>'
+             "</rootfiles></container>"),
+            ("OEBPS/content.opf",
+             '<package><manifest><item href="text.xhtml"/>'
+             "</manifest></package>"),
+            ("OEBPS/text.xhtml",
+             "<html><head><title></title>"
+             "<style>p { margin: 0 }</style></head>"
+             f"<body><p>{escape(text, quote=False)}</p></body></html>"),
+        ])
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                esc = (
-                    str(text)
-                    .replace("&", "&amp;")
-                    .replace("<", "&lt;")
-                    .replace(">", "&gt;")
-                )
-                xhtml = (
-                    "<html><head><title></title>"
-                    "<style>p { margin: 0 }</style></head>"
-                    f"<body><p>{esc}</p></body></html>"
-                )
-                buf = io.BytesIO()
-                with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-                    zf.writestr(
-                        "mimetype", "application/epub+zip",
-                        compress_type=zipfile.ZIP_STORED,
-                    )
-                    zf.writestr(
-                        "META-INF/container.xml",
-                        '<?xml version="1.0"?><container><rootfiles>'
-                        '<rootfile full-path="OEBPS/content.opf"/>'
-                        "</rootfiles></container>",
-                    )
-                    zf.writestr(
-                        "OEBPS/content.opf",
-                        "<package><manifest>"
-                        '<item href="text.xhtml"/>'
-                        "</manifest></package>",
-                    )
-                    zf.writestr("OEBPS/text.xhtml", xhtml)
-                rows.append(
-                    {"path": f"doc_{int(did)}.epub",
-                     "content": buf.getvalue()}
-                )
-            yield pd.DataFrame(rows)
-
-    archives = docs.mapInPandas(build, "path string, content binary")
+    archives = docs.select(
+        F.format_string("doc_%d.epub", "doc_id").alias("path"),
+        synth_udf(epub)("text").alias("content"),
+    )
     chapters = zip_members(archives).where(
         F.col("member").endswith(".xhtml")
     )
@@ -6284,7 +6271,6 @@ def jl2_jsonl_gz_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM then splits, explodes and parses the records under an explicit
     schema.  The oracle replays ceil(n/5) members and the parsed census
     per source."""
-    from torcdb_spark.operators.multimodal import synth_udf
     from torcdb_spark.sources import ingest
 
     docs = load_table(spark, sf_dir, "documents")
@@ -6902,6 +6888,8 @@ def m8_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle pins the structural contract (each doc yields exactly
     frames 0 and 2 at 16×16, cleanly decoded); frame pixel fidelity is
     pytest-exact (tests/test_operators.py)."""
+    import numpy as np
+
     from torcdb_spark.operators.multimodal import (
         encode_avi_mjpeg,
         video_frame_features,
@@ -6917,36 +6905,22 @@ def m8_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def synth(batches):
-        import numpy as np
-        import pandas as pd
+    def avi(d):
+        yy, xx = np.mgrid[0:16, 0:16]
+        frames = []
+        for fi in range(4):
+            img = np.stack(
+                [
+                    128 + 100 * np.sin((xx + d + 3 * fi) / 5.0),
+                    128 + 80 * np.cos((yy + fi) / 4.0),
+                    128 + 60 * np.sin((xx + yy + d) / 7.0),
+                ],
+                axis=-1,
+            )
+            frames.append(np.clip(np.round(img), 0, 255).astype(np.uint8))
+        return encode_avi_mjpeg(frames, quality=90)
 
-        for pdf in batches:
-            rows = []
-            yy, xx = np.mgrid[0:16, 0:16]
-            for d in pdf["doc_id"]:
-                frames = []
-                for fi in range(4):
-                    img = np.stack(
-                        [
-                            128 + 100 * np.sin((xx + d + 3 * fi) / 5.0),
-                            128 + 80 * np.cos((yy + fi) / 4.0),
-                            128 + 60 * np.sin((xx + yy + d) / 7.0),
-                        ],
-                        axis=-1,
-                    )
-                    frames.append(
-                        np.clip(np.round(img), 0, 255).astype(np.uint8)
-                    )
-                rows.append(
-                    {
-                        "media_id": d,
-                        "payload": encode_avi_mjpeg(frames, quality=90),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = docs.mapInPandas(synth, "media_id long, payload binary")
+    media = _synth_media(docs, avi, "doc_id")
     feats = video_frame_features(media, every_n=2)
     return feats.select(
         "media_id",
@@ -12873,7 +12847,7 @@ def m14_mp3_frame_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("int"),
         ((F.col("doc_id") % 5) * 17).cast("int"),
     )
-    return mm.payload_rows(media, mm.mp3_frame_census, mm.MP3_CENSUS_SCHEMA)
+    return payload_rows(media, mm.mp3_frame_census, mm.MP3_CENSUS_SCHEMA)
 
 
 @_register(
@@ -12914,7 +12888,7 @@ def m15_aac_adts_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(1) + F.col("doc_id") % 7).cast("int"),
         (F.lit(32) + F.length("text") % 100).cast("int"),
     )
-    return mm.payload_rows(media, mm.aac_adts_census, mm.AAC_CENSUS_SCHEMA)
+    return payload_rows(media, mm.aac_adts_census, mm.AAC_CENSUS_SCHEMA)
 
 
 @_register(
@@ -12934,7 +12908,6 @@ def m16_webp_lossy_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimensions of per-document synthesized containers.  The oracle
     replays every column from the same fixture arithmetic."""
     from torcdb_spark.operators import webp
-    from torcdb_spark.operators.multimodal import payload_rows
 
     docs = load_table(spark, sf_dir, "documents")
     media = _synth_media(
@@ -12992,7 +12965,7 @@ def m17_mp4_box_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(90) + (F.length("text") % 6) * 90).cast("int"),
         (F.lit(16) + F.col("doc_id") % 64).cast("int"),
     )
-    return mm.payload_rows(
+    return payload_rows(
         media, _zero_dims(mm.mp4_box_census), mm.MP4_CENSUS_SCHEMA
     )
 
@@ -13053,7 +13026,7 @@ def m18_flac_streaminfo(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("doc_id") % 4) * 11).cast("int"),
         (F.lit(32) + F.length("text") % 50).cast("int"),
     )
-    return mm.payload_rows(
+    return payload_rows(
         media, mm.flac_streaminfo_census, mm.FLAC_CENSUS_SCHEMA
     )
 
@@ -13107,7 +13080,7 @@ def m19_id3_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(2) + F.col("doc_id") % 3).cast("int"),
         unsync.cast("boolean"),
     )
-    return mm.payload_rows(media, mm.id3v2_text_frames, mm.ID3_TAGS_SCHEMA)
+    return payload_rows(media, mm.id3v2_text_frames, mm.ID3_TAGS_SCHEMA)
 
 
 @_register(
@@ -13171,7 +13144,7 @@ def m20_ogg_page_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(1) + F.col("doc_id") % 4).cast("int"),
         (F.lit(20) + F.length("text") % 50).cast("int"),
     )
-    return mm.payload_rows(media, mm.ogg_page_census, mm.OGG_CENSUS_SCHEMA)
+    return payload_rows(media, mm.ogg_page_census, mm.OGG_CENSUS_SCHEMA)
 
 
 @_register(
@@ -13208,7 +13181,6 @@ def m21_h264_nal_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     SPS decode after emulation-prevention stripping.  The oracle
     replays the stream shape in SQL."""
     from torcdb_spark.operators import h264
-    from torcdb_spark.operators.multimodal import payload_rows
 
     docs = load_table(spark, sf_dir, "documents")
     media = _synth_media(
@@ -13263,7 +13235,7 @@ def m22_ogg_comment_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("artist_"), (F.col("doc_id") % 7).cast("string")),
         (F.lit(1960) + F.col("doc_id") % 60).cast("string"),
     )
-    return mm.payload_rows(media, mm.ogg_comment_tags, mm.OGG_TAGS_SCHEMA)
+    return payload_rows(media, mm.ogg_comment_tags, mm.OGG_TAGS_SCHEMA)
 
 
 @_register(
@@ -13295,7 +13267,6 @@ def m23_webm_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     Duration → floor-division ms, and TrackEntry types with
     PixelWidth/PixelHeight.  The oracle replays every column in SQL."""
     from torcdb_spark.operators import ebml
-    from torcdb_spark.operators.multimodal import payload_rows
 
     docs = load_table(spark, sf_dir, "documents")
     media = _synth_media(
@@ -13351,7 +13322,6 @@ def tf1_tfrecord_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
     are skipped, and each (record, feature) is one row; a malformed
     shard gives an '_error' row.  The oracle replays the token sums
     m·(b+i·m)+m(m−1)/2 and the text slices in SQL."""
-    from torcdb_spark.operators.multimodal import synth_udf
     from torcdb_spark.sources import tfrecord
 
     docs = load_table(spark, sf_dir, "documents")
@@ -13412,7 +13382,6 @@ def av1_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-block sync markers, and inflates RFC 1951 blocks; one row per
     (record, field), and a corrupt file gives an '_error' row.  The
     oracle replays ids, quarter-valued scores and text slices in SQL."""
-    from torcdb_spark.operators.multimodal import synth_udf
     from torcdb_spark.sources import avro
 
     docs = load_table(spark, sf_dir, "documents")
@@ -13474,7 +13443,6 @@ def av2_snappy_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL; a corrupt preamble gives an '_error' row."""
     from functools import partial
 
-    from torcdb_spark.operators.multimodal import synth_udf
     from torcdb_spark.sources import avro
 
     docs = load_table(spark, sf_dir, "documents")
@@ -13708,10 +13676,10 @@ def p6_docx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     lossless up to whitespace collapse, so the oracle replays character
     counts with one regexp from the documents table and the `exact`
     flag pins byte equality."""
-    import pandas as pd
+    from html import escape
 
     from torcdb_spark.operators.text import docx_text
-    from torcdb_spark.sources.warc import zip_members
+    from torcdb_spark.sources.warc import write_zip, zip_members
 
     docs = (
         regime.spread(load_table(spark, sf_dir, "documents")
@@ -13719,74 +13687,42 @@ def p6_docx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text"))
     )
 
-    def build(batches):
-        import io
-        import re as _re
-        import zipfile
+    def docx(did, text):
+        words = [w for w in _JAVA_WS.split(text) if w]
+        paras = [words[i:i + 12] for i in range(0, len(words), 12)]
+        body = []
+        for pi, ws in enumerate(paras):
+            k = (len(ws) + 1) // 2
+            r1, r2 = " ".join(ws[:k]), " ".join(ws[k:])
+            runs = ['<w:pPr><w:jc w:val="left"/></w:pPr>']
+            if pi == 0:
+                # field code: extractor must NOT surface this
+                runs.append("<w:r><w:instrText> PAGE </w:instrText></w:r>")
+            runs.append(f"<w:r><w:rPr><w:b/></w:rPr><w:t>"
+                        f"{escape(r1, quote=False)}</w:t></w:r>")
+            if r2:
+                if (did + pi) % 3 == 0:
+                    runs.append("<w:r><w:tab/></w:r>")
+                else:
+                    runs.append('<w:r><w:t xml:space="preserve"> </w:t></w:r>')
+                runs.append(f"<w:r><w:t>{escape(r2, quote=False)}</w:t></w:r>")
+            body.append("<w:p>" + "".join(runs) + "</w:p>")
+        return write_zip([
+            ("[Content_Types].xml", _OOXML_TYPES),
+            ("_rels/.rels",
+             '<?xml version="1.0"?><Relationships><Relationship Id="rId1" '
+             'Target="word/document.xml"/></Relationships>'),
+            ("word/document.xml",
+             '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
+             '<w:document xmlns:w="http://schemas.openxmlformats.org/'
+             'wordprocessingml/2006/main"><w:body>'
+             + "".join(body) + "<w:sectPr/></w:body></w:document>"),
+        ])
 
-        def esc(s):
-            return (s.replace("&", "&amp;").replace("<", "&lt;")
-                     .replace(">", "&gt;"))
-
-        # split on the JAVA \s class exactly ([ \t\n\x0b\f\r]), not
-        # Python str.split()'s all-of-Unicode whitespace: a   in a
-        # document must stay inside its word on both sides of the
-        # round trip or the exact-equality flag diverges
-        _ws = _re.compile(r"[ \t\n\x0b\f\r]+")
-
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                words = [w for w in _ws.split(str(text)) if w]
-                paras = [words[i:i + 12] for i in range(0, len(words), 12)]
-                body = []
-                for pi, ws in enumerate(paras):
-                    k = (len(ws) + 1) // 2
-                    r1, r2 = " ".join(ws[:k]), " ".join(ws[k:])
-                    runs = ['<w:pPr><w:jc w:val="left"/></w:pPr>']
-                    if pi == 0:
-                        # field code: extractor must NOT surface this
-                        runs.append("<w:r><w:instrText> PAGE "
-                                    "</w:instrText></w:r>")
-                    runs.append(
-                        f"<w:r><w:rPr><w:b/></w:rPr><w:t>{esc(r1)}</w:t>"
-                        "</w:r>"
-                    )
-                    if r2:
-                        if (int(did) + pi) % 3 == 0:
-                            runs.append("<w:r><w:tab/></w:r>")
-                        else:
-                            runs.append('<w:r><w:t xml:space="preserve">'
-                                        " </w:t></w:r>")
-                        runs.append(f"<w:r><w:t>{esc(r2)}</w:t></w:r>")
-                    body.append("<w:p>" + "".join(runs) + "</w:p>")
-                xml = (
-                    '<?xml version="1.0" encoding="UTF-8" standalone='
-                    '"yes"?><w:document xmlns:w="http://schemas.openxml'
-                    'formats.org/wordprocessingml/2006/main"><w:body>'
-                    + "".join(body) + "<w:sectPr/></w:body></w:document>"
-                )
-                buf = io.BytesIO()
-                with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-                    zf.writestr(
-                        "[Content_Types].xml",
-                        '<?xml version="1.0"?><Types><Default Extension='
-                        '"xml" ContentType="application/xml"/></Types>',
-                    )
-                    zf.writestr(
-                        "_rels/.rels",
-                        '<?xml version="1.0"?><Relationships>'
-                        '<Relationship Id="rId1" Target="word/document.'
-                        'xml"/></Relationships>',
-                    )
-                    zf.writestr("word/document.xml", xml)
-                rows.append(
-                    {"path": f"doc_{int(did)}.docx",
-                     "content": buf.getvalue()}
-                )
-            yield pd.DataFrame(rows)
-
-    archives = docs.mapInPandas(build, "path string, content binary")
+    archives = docs.select(
+        F.format_string("doc_%d.docx", "doc_id").alias("path"),
+        synth_udf(docx)("doc_id", "text").alias("content"),
+    )
     parts = zip_members(archives).where(
         F.col("member") == "word/document.xml"
     )
@@ -13832,10 +13768,10 @@ def p7_xlsx_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     (A1's index resolved through the string table, entity round trip
     included), and a parsed number cell, all replayed by the oracle in
     closed-form SQL."""
-    import pandas as pd
+    from html import escape
 
     from torcdb_spark.operators.ooxml import xlsx_sheet_census
-    from torcdb_spark.sources.warc import zip_members
+    from torcdb_spark.sources.warc import write_zip, zip_members
 
     docs = (
         regime.spread(load_table(spark, sf_dir, "documents")
@@ -13843,62 +13779,38 @@ def p7_xlsx_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text"))
     )
 
-    def build(batches):
-        import io
-        import zipfile
+    def xlsx(did, text):
+        sheets = "".join(
+            f'<sheet name="Sheet{i+1}" sheetId="{i+1}" r:id="rId{i+1}"/>'
+            for i in range(1 + did % 3)
+        )
+        extra = "".join(
+            f'<c r="{chr(68 + j)}3"><v>{did + j}</v></c>'
+            for j in range(did % 3)
+        )
+        return write_zip([
+            ("[Content_Types].xml", _OOXML_TYPES),
+            ("xl/workbook.xml",
+             f'<?xml version="1.0"?><workbook><sheets>{sheets}</sheets>'
+             "</workbook>"),
+            ("xl/sharedStrings.xml",
+             '<?xml version="1.0"?><sst count="2" uniqueCount="2">'
+             f'<si><t xml:space="preserve">{escape(text[:8], quote=False)}'
+             f"</t></si><si><t>w{did % 7}</t></si></sst>"),
+            ("xl/worksheets/sheet1.xml",
+             '<?xml version="1.0"?><worksheet><sheetData>'
+             f'<row r="1"><c r="A1" t="s"><v>0</v></c>'
+             f'<c r="B1"><v>{did}</v></c></row>'
+             f'<row r="2"><c r="A2" t="s"><v>1</v></c>'
+             f'<c r="B2"><v>{did * 2 + 1}</v></c><c r="C2"/></row>'
+             + (f'<row r="3">{extra}</row>' if extra else "")
+             + "</sheetData></worksheet>"),
+        ])
 
-        def esc(s):
-            return (s.replace("&", "&amp;").replace("<", "&lt;")
-                     .replace(">", "&gt;"))
-
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                n_sheets = 1 + did % 3
-                sheets = "".join(
-                    f'<sheet name="Sheet{i+1}" sheetId="{i+1}" '
-                    f'r:id="rId{i+1}"/>'
-                    for i in range(n_sheets)
-                )
-                workbook = (
-                    '<?xml version="1.0"?><workbook><sheets>'
-                    + sheets + "</sheets></workbook>"
-                )
-                sst = (
-                    '<?xml version="1.0"?><sst count="2" uniqueCount="2">'
-                    f'<si><t xml:space="preserve">{esc(str(text)[:8])}'
-                    f"</t></si><si><t>w{did % 7}</t></si></sst>"
-                )
-                extra = "".join(
-                    f'<c r="{chr(68 + j)}3"><v>{did + j}</v></c>'
-                    for j in range(did % 3)
-                )
-                sheet1 = (
-                    '<?xml version="1.0"?><worksheet><sheetData>'
-                    f'<row r="1"><c r="A1" t="s"><v>0</v></c>'
-                    f'<c r="B1"><v>{did}</v></c></row>'
-                    f'<row r="2"><c r="A2" t="s"><v>1</v></c>'
-                    f'<c r="B2"><v>{did * 2 + 1}</v></c><c r="C2"/></row>'
-                    + (f'<row r="3">{extra}</row>' if extra else "")
-                    + "</sheetData></worksheet>"
-                )
-                buf = io.BytesIO()
-                with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-                    zf.writestr(
-                        "[Content_Types].xml",
-                        '<?xml version="1.0"?><Types><Default Extension='
-                        '"xml" ContentType="application/xml"/></Types>',
-                    )
-                    zf.writestr("xl/workbook.xml", workbook)
-                    zf.writestr("xl/sharedStrings.xml", sst)
-                    zf.writestr("xl/worksheets/sheet1.xml", sheet1)
-                rows.append(
-                    {"path": f"doc_{did}.xlsx", "content": buf.getvalue()}
-                )
-            yield pd.DataFrame(rows)
-
-    archives = docs.mapInPandas(build, "path string, content binary")
+    archives = docs.select(
+        F.format_string("doc_%d.xlsx", "doc_id").alias("path"),
+        synth_udf(xlsx)("doc_id", "text").alias("content"),
+    )
     census = xlsx_sheet_census(zip_members(archives))
     return census.select(
         F.regexp_extract("path", r"doc_(\d+)\.xlsx", 1)
@@ -13949,7 +13861,6 @@ def m24_av1_obu_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     max frame dimensions).  The oracle replays the stream shape in
     SQL."""
     from torcdb_spark.operators import av1
-    from torcdb_spark.operators.multimodal import payload_rows
 
     docs = load_table(spark, sf_dir, "documents")
     media = _synth_media(
@@ -14006,7 +13917,6 @@ def m25_hevc_nal_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SPS through profile_tier_level to the cropped dimensions.  The
     oracle replays the stream shape in SQL."""
     from torcdb_spark.operators import hevc
-    from torcdb_spark.operators.multimodal import payload_rows
 
     docs = load_table(spark, sf_dir, "documents")
     media = _synth_media(
@@ -14086,7 +13996,7 @@ def m26_opus_packet_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     media = docs.select(
         F.col("doc_id"),
-        mm.synth_udf(mm.encode_opus_toc_stream)(
+        synth_udf(mm.encode_opus_toc_stream)(
             F.col("doc_id").cast("long"),
             (F.lit(2) + F.col("doc_id") % 5).cast("long"),
         ).alias("payload"),
@@ -14122,10 +14032,10 @@ def p8_pptx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     reassembly (slide count + order-preserving text concat via a
     sorted collect_list) must reproduce the whitespace-normalized
     original — slide count AND byte equality both oracle-replayed."""
-    import pandas as pd
+    from html import escape
 
     from torcdb_spark.operators.ooxml import pptx_text
-    from torcdb_spark.sources.warc import zip_members
+    from torcdb_spark.sources.warc import write_zip, zip_members
 
     docs = regime.spread(
         load_table(spark, sf_dir, "documents")
@@ -14133,74 +14043,42 @@ def p8_pptx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
     )
 
-    def build(batches):
-        import io
-        import re as _re
-        import zipfile
+    def slide_xml(sw):
+        paras = []
+        for pi in range(0, len(sw), 12):
+            ws = sw[pi:pi + 12]
+            k = (len(ws) + 1) // 2
+            r1, r2 = " ".join(ws[:k]), " ".join(ws[k:])
+            runs = (f'<a:r><a:rPr lang="en-US"/>'
+                    f"<a:t>{escape(r1, quote=False)}</a:t></a:r>")
+            if r2:
+                if pi % 24 == 0:
+                    runs += "<a:br/>"
+                else:
+                    runs += '<a:r><a:t xml:space="preserve"> </a:t></a:r>'
+                runs += f"<a:r><a:t>{escape(r2, quote=False)}</a:t></a:r>"
+            paras.append(f"<a:p>{runs}</a:p>")
+        return ('<?xml version="1.0"?><p:sld><p:cSld><p:spTree><p:sp>'
+                "<p:txBody>" + "".join(paras) + "</p:txBody></p:sp>"
+                "</p:spTree></p:cSld></p:sld>")
 
-        def esc(s):
-            return (s.replace("&", "&amp;").replace("<", "&lt;")
-                     .replace(">", "&gt;"))
+    def pptx(text):
+        words = [w for w in _JAVA_WS.split(text) if w]
+        slides = [words[i:i + 48] for i in range(0, len(words), 48)] or [[]]
+        ids = "".join(f'<p:sldId id="{256 + i}"/>' for i in range(len(slides)))
+        return write_zip([
+            ("[Content_Types].xml", _OOXML_TYPES),
+            ("ppt/presentation.xml",
+             '<?xml version="1.0"?><p:presentation>'
+             f"<p:sldIdLst>{ids}</p:sldIdLst></p:presentation>"),
+            *((f"ppt/slides/slide{si + 1}.xml", slide_xml(sw))
+              for si, sw in enumerate(slides)),
+        ])
 
-        _ws = _re.compile(r"[ \t\n\x0b\f\r]+")  # the JAVA \s class
-
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                words = [w for w in _ws.split(str(text)) if w]
-                slides = [words[i:i + 48]
-                          for i in range(0, len(words), 48)] or [[]]
-                buf = io.BytesIO()
-                with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-                    zf.writestr(
-                        "[Content_Types].xml",
-                        '<?xml version="1.0"?><Types><Default Extension='
-                        '"xml" ContentType="application/xml"/></Types>',
-                    )
-                    zf.writestr(
-                        "ppt/presentation.xml",
-                        '<?xml version="1.0"?><p:presentation>'
-                        "<p:sldIdLst>" + "".join(
-                            f'<p:sldId id="{256 + i}"/>'
-                            for i in range(len(slides))
-                        ) + "</p:sldIdLst></p:presentation>",
-                    )
-                    for si, sw in enumerate(slides):
-                        paras = []
-                        for pi in range(0, len(sw), 12):
-                            ws = sw[pi:pi + 12]
-                            k = (len(ws) + 1) // 2
-                            r1 = " ".join(ws[:k])
-                            r2 = " ".join(ws[k:])
-                            runs = (
-                                f"<a:r><a:rPr lang=\"en-US\"/>"
-                                f"<a:t>{esc(r1)}</a:t></a:r>"
-                            )
-                            if r2:
-                                if pi % 24 == 0:
-                                    runs += "<a:br/>"
-                                else:
-                                    runs += ('<a:r><a:t xml:space='
-                                             '"preserve"> </a:t></a:r>')
-                                runs += f"<a:r><a:t>{esc(r2)}</a:t></a:r>"
-                            paras.append(f"<a:p>{runs}</a:p>")
-                        slide = (
-                            '<?xml version="1.0"?><p:sld><p:cSld>'
-                            "<p:spTree><p:sp><p:txBody>"
-                            + "".join(paras)
-                            + "</p:txBody></p:sp></p:spTree>"
-                            "</p:cSld></p:sld>"
-                        )
-                        zf.writestr(
-                            f"ppt/slides/slide{si + 1}.xml", slide
-                        )
-                rows.append(
-                    {"path": f"doc_{int(did)}.pptx",
-                     "content": buf.getvalue()}
-                )
-            yield pd.DataFrame(rows)
-
-    archives = docs.mapInPandas(build, "path string, content binary")
+    archives = docs.select(
+        F.format_string("doc_%d.pptx", "doc_id").alias("path"),
+        synth_udf(pptx)("text").alias("content"),
+    )
     slides = zip_members(archives).where(
         F.col("member").rlike(r"^ppt/slides/slide\d+\.xml$")
     )
@@ -14366,11 +14244,8 @@ def ai1_arrow_ipc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ARROW1 magic + footer) and STREAM framing by doc id, and the
     per-(batch, column) census — dtype, row/null counts, integer sums,
     leading string — is replayed by the oracle in closed-form SQL.
-    The decode runs inside the same Arrow mapInPandas boundary as
-    every binary source; a poisoned shard degrades to an '_error'
-    row."""
-    import pandas as pd
-
+    The decode runs inside the payload kernel every binary source
+    shares; a poisoned shard degrades to an '_error' row."""
     from torcdb_spark.sources.arrow_ipc import (
         arrow_ipc_columns,
         write_arrow_ipc,
@@ -14380,32 +14255,21 @@ def ai1_arrow_ipc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
 
-    def build(batches):
-        import pandas as pd
+    def ipc(did, text):
+        n = 3 + did % 5
+        t = str(text)
+        txt = []
+        for bi in range(2):
+            txt += [t[4 * bi : 4 * bi + 4],
+                    *(f"r{did}_{bi}_{i}" for i in range(n - 2)), None]
+        return write_arrow_ipc({"ids": list(range(did, did + 2 * n)),
+                                "txt": txt}, [n, n],
+                               file_format=(did % 2 == 0))
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                n = 3 + did % 5
-                t = str(text)
-                ids = list(range(did, did + 2 * n))
-                txt = []
-                for bi in range(2):
-                    vals = [t[4 * bi : 4 * bi + 4]] + [
-                        f"r{did}_{bi}_{i}" for i in range(n - 2)
-                    ] + [None]
-                    txt.extend(vals)
-                rows.append({
-                    "path": f"doc_{did}.arrow",
-                    "content": write_arrow_ipc(
-                        {"ids": ids, "txt": txt}, [n, n],
-                        file_format=(did % 2 == 0),
-                    ),
-                })
-            yield pd.DataFrame(rows)
-
-    shards = docs.mapInPandas(build, "path string, content binary")
+    shards = docs.select(
+        F.format_string("doc_%d.arrow", "doc_id").alias("path"),
+        synth_udf(ipc)("doc_id", "text").alias("content"),
+    )
     census = arrow_ipc_columns(shards)
     return census.select(
         F.regexp_extract("path", r"doc_(\d+)\.arrow", 1)
@@ -14535,8 +14399,6 @@ def pm1_parquet_footer_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-group-statistics fold (min/max/null counts) a planner prunes
     with.  O(files) not O(bytes); the oracle replays every census
     column in closed-form SQL."""
-    import pandas as pd
-
     from torcdb_spark.sources.parquet_meta import (
         parquet_footer_census,
         write_parquet_bytes,
@@ -14544,29 +14406,20 @@ def pm1_parquet_footer_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = regime.spread(load_table(spark, sf_dir, "documents").select("doc_id"))
 
-    def build(batches):
-        import pandas as pd
+    def parquet(did):
+        n = 20 + did % 30
+        ids = list(range(did, did + n))
+        # one null in the id column on every third file so the
+        # statistics fold has a non-zero branch to get wrong
+        if did % 3 == 0:
+            ids[1] = None
+        s = [f"v{did}_{i}" for i in range(n)]
+        return write_parquet_bytes({"id": ids, "s": s}, row_group_size=8)
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 20 + did % 30
-                ids = list(range(did, did + n))
-                # one null in the id column on every third file so the
-                # statistics fold has a non-zero branch to get wrong
-                if did % 3 == 0:
-                    ids[1] = None
-                s = [f"v{did}_{i}" for i in range(n)]
-                rows.append({
-                    "path": f"doc_{did}.parquet",
-                    "content": write_parquet_bytes(
-                        {"id": ids, "s": s}, row_group_size=8
-                    ),
-                })
-            yield pd.DataFrame(rows)
-
-    shards = docs.mapInPandas(build, "path string, content binary")
+    shards = docs.select(
+        F.format_string("doc_%d.parquet", "doc_id").alias("path"),
+        synth_udf(parquet)("doc_id").alias("content"),
+    )
     census = parquet_footer_census(shards)
     return census.select(
         F.regexp_extract("path", r"doc_(\d+)\.parquet", 1)
@@ -14624,8 +14477,6 @@ def pm2_page_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal uncompressed — size_eq pins that relation; it is NULL under
     SNAPPY where entropy decides).  The oracle replays the row-group
     arithmetic and every census column in closed-form SQL."""
-    import pandas as pd
-
     from torcdb_spark.sources.parquet_meta import (
         parquet_page_census,
         write_parquet_bytes,
@@ -14633,28 +14484,21 @@ def pm2_page_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = regime.spread(load_table(spark, sf_dir, "documents").select("doc_id"))
 
-    def build(batches):
-        import pandas as pd
+    def parquet(did):
+        n = 12 + did % 20
+        dict_ = did % 3 == 0
+        return write_parquet_bytes(
+            {"id": list(range(did, did + n)),
+             "s": [f"v{did}_{i}" for i in range(n)]},
+            row_group_size=8,
+            compression="snappy" if dict_ else "NONE",
+            use_dictionary=dict_,
+        )
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 12 + did % 20
-                dict_ = did % 3 == 0
-                rows.append({
-                    "path": f"doc_{did}.parquet",
-                    "content": write_parquet_bytes(
-                        {"id": list(range(did, did + n)),
-                         "s": [f"v{did}_{i}" for i in range(n)]},
-                        row_group_size=8,
-                        compression="snappy" if dict_ else "NONE",
-                        use_dictionary=dict_,
-                    ),
-                })
-            yield pd.DataFrame(rows)
-
-    shards = docs.mapInPandas(build, "path string, content binary")
+    shards = docs.select(
+        F.format_string("doc_%d.parquet", "doc_id").alias("path"),
+        synth_udf(parquet)("doc_id").alias("content"),
+    )
     return parquet_page_census(shards)
 
 
@@ -14912,76 +14756,59 @@ def mime1_magic_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the doc→format mapping in closed-form SQL, so one wrong or
     shadowed signature (e.g. RIFF before its format tag, ID3 before
     bare MPEG sync) hash-mismatches immediately."""
-    import pandas as pd
+    import gzip
 
+    import numpy as np
+
+    from torcdb_spark.operators.ebml import encode_webm_stub
+    from torcdb_spark.operators.gif import encode_gif
+    from torcdb_spark.operators.h264 import encode_h264_stream
+    from torcdb_spark.operators.jpeg import encode_jpeg_baseline
+    from torcdb_spark.operators.multimodal import (
+        encode_flac_stub,
+        encode_mp3_stream,
+        encode_ogg_stub,
+        encode_png,
+    )
+    from torcdb_spark.operators.pdf import encode_pdf_text
+    from torcdb_spark.sources.avro import write_avro
     from torcdb_spark.sources.ingest import content_type_sniff
+    from torcdb_spark.sources.warc import write_zip
 
     docs = regime.spread(load_table(spark, sf_dir, "documents").select("doc_id"))
+    img = (np.arange(48, dtype=np.uint8).reshape(4, 4, 3) * 5) % 256
 
-    def build(batches):
-        import gzip as _gzip
-        import io
-        import zipfile
-
-        import numpy as np
-        import pandas as pd
-
-        from torcdb_spark.operators.ebml import encode_webm_stub
-        from torcdb_spark.operators.gif import encode_gif
-        from torcdb_spark.operators.h264 import encode_h264_stream
-        from torcdb_spark.operators.jpeg import encode_jpeg_baseline
-        from torcdb_spark.operators.multimodal import (
-            encode_flac_stub,
-            encode_mp3_stream,
-            encode_ogg_stub,
-            encode_png,
+    def make(did):
+        k = did % 12
+        if k == 0:
+            return encode_png(img)
+        if k == 1:
+            return encode_jpeg_baseline(np.repeat(np.repeat(img, 2, 0), 2, 1))
+        if k == 2:
+            return encode_gif(img)  # RGB input, palette derived
+        if k == 3:
+            return encode_pdf_text([f"doc {did}"])
+        if k == 4:
+            return write_zip([("a.txt", f"payload {did}")])
+        if k == 5:
+            return gzip.compress(f"body {did}".encode())
+        if k == 6:
+            return encode_mp3_stream(2, 3)
+        if k == 7:
+            return encode_flac_stub()
+        if k == 8:
+            return encode_ogg_stub()
+        if k == 9:
+            return encode_webm_stub()
+        if k == 10:
+            return encode_h264_stream(64, 48)
+        return write_avro(
+            {"type": "record", "name": "r",
+             "fields": [{"name": "x", "type": "long"}]},
+            [{"x": did}],
         )
-        from torcdb_spark.operators.pdf import encode_pdf_text
-        from torcdb_spark.sources.avro import write_avro
 
-        img = (np.arange(48, dtype=np.uint8).reshape(4, 4, 3) * 5) % 256
-
-        def make(did):
-            k = did % 12
-            if k == 0:
-                return encode_png(img)
-            if k == 1:
-                return encode_jpeg_baseline(
-                    np.repeat(np.repeat(img, 2, 0), 2, 1))
-            if k == 2:
-                return encode_gif(img)  # RGB input, palette derived
-            if k == 3:
-                return encode_pdf_text([f"doc {did}"])
-            if k == 4:
-                buf = io.BytesIO()
-                with zipfile.ZipFile(buf, "w") as zf:
-                    zf.writestr("a.txt", f"payload {did}")
-                return buf.getvalue()
-            if k == 5:
-                return _gzip.compress(f"body {did}".encode())
-            if k == 6:
-                return encode_mp3_stream(2, 3)
-            if k == 7:
-                return encode_flac_stub()
-            if k == 8:
-                return encode_ogg_stub()
-            if k == 9:
-                return encode_webm_stub()
-            if k == 10:
-                return encode_h264_stream(64, 48)
-            return write_avro(
-                {"type": "record", "name": "r",
-                 "fields": [{"name": "x", "type": "long"}]},
-                [{"x": did}],
-            )
-
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": [int(d) for d in pdf["doc_id"]],
-                "payload": [make(int(d)) for d in pdf["doc_id"]],
-            })
-
-    payloads = docs.mapInPandas(build, "doc_id long, payload binary")
+    payloads = docs.select("doc_id", synth_udf(make)("doc_id").alias("payload"))
     EXPECT = ["png", "jpeg", "gif", "pdf", "zip", "gzip", "mp3",
               "flac", "ogg", "webm", "h264_annexb", "avro"]
     want = F.element_at(

@@ -9,88 +9,63 @@ with type, row/null counts, integer sums, and the leading string value
 committing a foreign dump to a table.  Both framings parse: the file
 format (``ARROW1`` magic, footer with block index) and the bare stream
 format (schema message first), auto-detected per shard.  pyarrow does
-the decoding inside the same Arrow ``mapInPandas`` boundary every
-other binary source uses, so there is no row-at-a-time Python and a
+the decoding inside the payload kernel every other binary source uses
+(``payload_rows``, torcdb_spark/functions/payload.py), so there is no row-at-a-time Python and a
 poisoned shard degrades to an ``_error`` row instead of sinking the
 job (the WARC-path contract).
 """
 
 from __future__ import annotations
 
-import pandas as pd  # module-level: pandas_udf resolves stringified hints
-
 from pyspark.sql import DataFrame
+
+from torcdb_spark.functions.payload import payload_rows
 
 _FILE_MAGIC = b"ARROW1\x00\x00"
 
 
-def arrow_ipc_columns(
-    shards: DataFrame,
-    path_col: str = "path",
-    content_col: str = "content",
-) -> DataFrame:
+def arrow_ipc_columns(shards: DataFrame) -> DataFrame:
     """binaryFile-shaped (path, content) rows → one row per
     (record batch, column): ``path, batch_idx, column, dtype, n_rows,
     null_count, long_sum, text_first`` — integer/unsigned columns
     report their non-null sum in long_sum, string columns their first
     value in text_first; other types carry the counts only.  A shard
-    that fails IPC framing degrades to a single ``column='_error'``
-    row."""
-    import pandas as pd  # noqa: F401
+    that fails IPC framing appends one ``column='_error'`` row."""
 
-    schema = (
-        "path string, batch_idx long, column string, dtype string, "
-        "n_rows long, null_count long, long_sum long, text_first string"
-    )
-    keys = ("path", "batch_idx", "column", "dtype", "n_rows",
-            "null_count", "long_sum", "text_first")
-
-    def kernel(batches):
-        import pandas as pd
+    def parse(raw):
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.ipc as ipc
 
-        for pdf in batches:
-            out = {k: [] for k in keys}
+        rows = []
+        try:
+            buf = pa.BufferReader(raw)
+            if raw[:8] == _FILE_MAGIC:
+                reader = ipc.open_file(buf)
+                rbs = [reader.get_batch(i)
+                       for i in range(reader.num_record_batches)]
+            else:
+                rbs = list(ipc.open_stream(buf))
+            for bi, rb in enumerate(rbs):
+                for name, col in zip(rb.schema.names, rb.columns):
+                    ls = tf = None
+                    if pa.types.is_integer(col.type):
+                        s = pc.sum(col).as_py()
+                        ls = int(s) if s is not None else 0
+                    elif pa.types.is_string(col.type) and len(col):
+                        tf = col[0].as_py()
+                    rows.append((bi, name, str(col.type), len(col),
+                                 col.null_count, ls, tf))
+        except Exception as exc:  # framing/decode failure
+            rows.append((-1, "_error", str(exc)[:100], 0, 0, None, None))
+        return rows
 
-            def emit(path, bi, col, dt, nr, nc, ls, tf):
-                for k, v in zip(keys, (path, bi, col, dt, nr, nc, ls, tf)):
-                    out[k].append(v)
-
-            for path, content in zip(pdf[path_col], pdf[content_col]):
-                raw = bytes(content)
-                try:
-                    buf = pa.BufferReader(raw)
-                    reader = (
-                        ipc.open_file(buf)
-                        if raw[:8] == _FILE_MAGIC
-                        else ipc.open_stream(buf)
-                    )
-                    rbs = (
-                        [reader.get_batch(i)
-                         for i in range(reader.num_record_batches)]
-                        if hasattr(reader, "num_record_batches")
-                        else list(reader)
-                    )
-                    for bi, rb in enumerate(rbs):
-                        for name, col in zip(rb.schema.names, rb.columns):
-                            dt = str(col.type)
-                            ls = tf = None
-                            if pa.types.is_integer(col.type):
-                                s = pc.sum(col).as_py()
-                                ls = int(s) if s is not None else 0
-                            elif pa.types.is_string(col.type) and len(col):
-                                v = col[0].as_py()
-                                tf = v
-                            emit(path, bi, name, dt, len(col),
-                                 col.null_count, ls, tf)
-                except Exception as exc:  # framing/decode failure
-                    emit(path, -1, "_error", str(exc)[:100], 0, 0,
-                         None, None)
-            yield pd.DataFrame(out)
-
-    return shards.mapInPandas(kernel, schema=schema)
+    return payload_rows(
+        shards.select("path", "content"),
+        parse,
+        "path string, batch_idx long, column string, dtype string, "
+        "n_rows long, null_count long, long_sum long, text_first string",
+    )
 
 
 def write_arrow_ipc(columns: dict, batch_rows: list, file_format: bool,

@@ -26,10 +26,9 @@ import json
 import struct
 import zlib
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
 
+from torcdb_spark.functions.payload import payload_rows
 from torcdb_spark.sources.snappy import (
     snappy_compress as _snappy_compress,
     snappy_decompress as _snappy_decompress,
@@ -346,11 +345,7 @@ def parse_avro(payload: bytes) -> list:
 # ---------------------------------------------------------------------------
 
 
-def avro_records(
-    shards: DataFrame,
-    path_col: str = "path",
-    content_col: str = "content",
-) -> DataFrame:
+def avro_records(shards: DataFrame) -> DataFrame:
     """binaryFile-shaped (path, content) rows → one row per
     (record, field): ``path, rec_idx, field, kind, long_value,
     double_value, text`` — ints/longs/booleans populate long_value,
@@ -359,57 +354,34 @@ def avro_records(
     nested types (array/map/record/bytes/fixed) report their element
     or byte count in long_value.  A file that fails framing degrades
     to a single ``field='_error'`` row, the WARC-path contract."""
-    import pandas as pd  # noqa: F401
 
-    schema = (
+    def cell(v):
+        if v is None:
+            return "null", None, None, None
+        if isinstance(v, bool):
+            return "boolean", int(v), None, None
+        if isinstance(v, int):
+            return "long", v, None, None
+        if isinstance(v, float):
+            return "double", None, v, None
+        if isinstance(v, str):
+            return "string", None, None, v
+        return type(v).__name__, len(v), None, None  # bytes / list / dict
+
+    def parse(content):
+        try:
+            return [(idx, name, *cell(rec[name]))
+                    for idx, rec in enumerate(parse_avro(content))
+                    for name in sorted(rec)]
+        except ValueError as exc:
+            return [(-1, "_error", str(exc), None, None, None)]
+
+    return payload_rows(
+        shards.select("path", "content"),
+        parse,
         "path string, rec_idx long, field string, kind string, "
-        "long_value long, double_value double, text string"
+        "long_value long, double_value double, text string",
     )
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {k: [] for k in ("path", "rec_idx", "field", "kind",
-                                   "long_value", "double_value", "text")}
-
-            def emit(path, idx, field, kind, lv, dv, tx):
-                out["path"].append(path)
-                out["rec_idx"].append(idx)
-                out["field"].append(field)
-                out["kind"].append(kind)
-                out["long_value"].append(lv)
-                out["double_value"].append(dv)
-                out["text"].append(tx)
-
-            for path, content in zip(pdf[path_col], pdf[content_col]):
-                try:
-                    for idx, rec in enumerate(parse_avro(bytes(content))):
-                        for name in sorted(rec):
-                            v = rec[name]
-                            if v is None:
-                                emit(path, idx, name, "null",
-                                     None, None, None)
-                            elif isinstance(v, bool):
-                                emit(path, idx, name, "boolean",
-                                     int(v), None, None)
-                            elif isinstance(v, int):
-                                emit(path, idx, name, "long",
-                                     v, None, None)
-                            elif isinstance(v, float):
-                                emit(path, idx, name, "double",
-                                     None, v, None)
-                            elif isinstance(v, str):
-                                emit(path, idx, name, "string",
-                                     None, None, v)
-                            else:  # bytes / list / dict containers
-                                emit(path, idx, name, type(v).__name__,
-                                     len(v), None, None)
-                except ValueError as exc:
-                    emit(path, -1, "_error", str(exc), None, None, None)
-            yield pd.DataFrame(out)
-
-    return shards.mapInPandas(kernel, schema=schema)
 
 
 _DOC_SCHEMA = {

@@ -13,7 +13,8 @@ the whole action history).
 
 This module reads that tree with the repo's own stdlib Avro OCF
 decoder (sources/avro.py — zigzag varints, nested records, block sync
-verification) in two Arrow ``mapInPandas`` passes, then composes the
+verification) in two passes of the Arrow-batched payload kernel
+(``payload_rows``, torcdb_spark/functions/payload.py), then composes the
 snapshot relationally: manifest-list entries JOIN manifest entries on
 (table, manifest path), filter status != 2.  Manifests not referenced
 by the current list (older snapshots, compaction leftovers) drop out
@@ -24,11 +25,10 @@ the join shuffles only (table, path) keys, never file contents.
 
 from __future__ import annotations
 
-import pandas as pd  # module-level: pandas_udf resolves stringified hints
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from torcdb_spark.functions.payload import payload_rows
 from torcdb_spark.sources.avro import parse_avro, write_avro
 
 # Spec-shaped (simplified field subset) writer schemas for fixtures
@@ -58,84 +58,46 @@ MANIFEST_SCHEMA = {
 STATUS_EXISTING, STATUS_ADDED, STATUS_DELETED = 0, 1, 2
 
 
-def manifest_list_entries(
-    lists: DataFrame,
-    table_col: str = "table_id",
-    content_col: str = "content",
-) -> DataFrame:
+def manifest_list_entries(lists: DataFrame) -> DataFrame:
     """(table, manifest-list bytes) rows → one row per referenced
     manifest: ``table_id, manifest_path, added_snapshot_id``.
     Unparseable lists degrade to a ``manifest_path='_error'`` row."""
-    schema = "table_id long, manifest_path string, added_snapshot_id long"
 
-    def kernel(batches):
-        import pandas as pd
+    def parse(content):
+        try:
+            return [(rec["manifest_path"], rec["added_snapshot_id"])
+                    for rec in parse_avro(content)]
+        except ValueError:
+            return [("_error", -1)]
 
-        for pdf in batches:
-            out = {"table_id": [], "manifest_path": [],
-                   "added_snapshot_id": []}
-            for tid, content in zip(pdf[table_col], pdf[content_col]):
-                try:
-                    for rec in parse_avro(bytes(content)):
-                        out["table_id"].append(tid)
-                        out["manifest_path"].append(rec["manifest_path"])
-                        out["added_snapshot_id"].append(
-                            rec["added_snapshot_id"])
-                except ValueError as exc:
-                    out["table_id"].append(tid)
-                    out["manifest_path"].append("_error")
-                    out["added_snapshot_id"].append(-1)
-                    del exc
-            yield pd.DataFrame(out)
-
-    return lists.mapInPandas(kernel, schema=schema)
+    return payload_rows(
+        lists.select("table_id", "content"),
+        parse,
+        "table_id long, manifest_path string, added_snapshot_id long",
+    )
 
 
-def manifest_entries(
-    manifests: DataFrame,
-    table_col: str = "table_id",
-    name_col: str = "name",
-    content_col: str = "content",
-) -> DataFrame:
+def manifest_entries(manifests: DataFrame) -> DataFrame:
     """(table, manifest name, manifest bytes) rows → one row per entry:
     ``table_id, manifest_path, status, file_path, record_count,
     file_size_in_bytes`` with the nested data_file record flattened.
     Unparseable manifests degrade to a ``file_path='_error'`` row."""
-    schema = (
+
+    fields = ("file_path", "record_count", "file_size_in_bytes")
+
+    def parse(content):
+        try:
+            return [(rec["status"], *(rec["data_file"][k] for k in fields))
+                    for rec in parse_avro(content)]
+        except ValueError:
+            return [(-1, "_error", 0, 0)]
+
+    return payload_rows(
+        manifests.select("table_id", "name", "content"),
+        parse,
         "table_id long, manifest_path string, status int, "
-        "file_path string, record_count long, file_size_in_bytes long"
+        "file_path string, record_count long, file_size_in_bytes long",
     )
-
-    def kernel(batches):
-        import pandas as pd
-
-        cols = ("table_id", "manifest_path", "status", "file_path",
-                "record_count", "file_size_in_bytes")
-
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            for tid, name, content in zip(
-                    pdf[table_col], pdf[name_col], pdf[content_col]):
-                try:
-                    for rec in parse_avro(bytes(content)):
-                        df_ = rec["data_file"]
-                        out["table_id"].append(tid)
-                        out["manifest_path"].append(name)
-                        out["status"].append(rec["status"])
-                        out["file_path"].append(df_["file_path"])
-                        out["record_count"].append(df_["record_count"])
-                        out["file_size_in_bytes"].append(
-                            df_["file_size_in_bytes"])
-                except ValueError:
-                    out["table_id"].append(tid)
-                    out["manifest_path"].append(name)
-                    out["status"].append(-1)
-                    out["file_path"].append("_error")
-                    out["record_count"].append(0)
-                    out["file_size_in_bytes"].append(0)
-            yield pd.DataFrame(out)
-
-    return manifests.mapInPandas(kernel, schema=schema)
 
 
 def iceberg_live_files(

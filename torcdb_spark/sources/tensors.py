@@ -10,7 +10,8 @@ Both are public specs with trivial framing, so like the WARC/image/audio
 codecs the parse is REAL (no library stubs) and round-trips are testable
 byte-for-byte. Spark shape: dumps arrive as whole files via the
 binaryFile source; `vectors_from_npy` / `vectors_from_safetensors` fan a
-(path, content) frame out to one row per vector inside one Arrow pass —
+(path, content) frame out to one row per vector inside one pass of the
+payload kernel (``payload_rows``, torcdb_spark/functions/payload.py) —
 the unit of parallelism is the dump file, matching how embedding shards
 are written in practice.
 
@@ -24,7 +25,8 @@ import json
 import struct
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from torcdb_spark.functions.payload import payload_rows
 
 _NP_DESCR = {"<f4": "float32", "<f8": "float64", "<i4": "int32", "<i8": "int64"}
 _ST_DTYPE = {"F32": "float32", "F64": "float64", "I32": "int32", "I64": "int64"}
@@ -133,97 +135,59 @@ def parse_safetensors(payload: bytes) -> dict:
     return out
 
 
-def vectors_from_npy(
-    files: DataFrame, path_col: str = "path", content_col: str = "content"
-) -> DataFrame:
+def vectors_from_npy(files: DataFrame) -> DataFrame:
     """Fan (path, content) .npy dumps out to (path, row_idx, vec) — one
-    row per vector of a 2-D float array, float32-normalized. One Arrow
-    pass; malformed dumps degrade to a single row_idx=-1 error row."""
-    import pandas as pd
+    row per vector of a 2-D float array, float32-normalized. One
+    payload_rows pass; malformed dumps degrade to a single row_idx=-1
+    error row."""
+    import numpy as np
 
-    def kernel(batches):
-        import numpy as np
+    def parse(content):
+        try:
+            arr = parse_npy(content)
+            if arr.ndim != 2:
+                raise ValueError(f"expected 2-D, got {arr.ndim}-D")
+            return [(i, v.tolist(), None)
+                    for i, v in enumerate(np.asarray(arr, dtype=np.float32))]
+        except (ValueError, NotImplementedError) as exc:
+            return [(-1, None, str(exc)[:120])]
 
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf[path_col], pdf[content_col]):
-                try:
-                    arr = parse_npy(bytes(content))
-                    if arr.ndim != 2:
-                        raise ValueError(f"expected 2-D, got {arr.ndim}-D")
-                    for i, v in enumerate(np.asarray(arr, dtype=np.float32)):
-                        rows.append(
-                            {"path": path, "row_idx": i, "vec": v.tolist(),
-                             "err": None}
-                        )
-                except (ValueError, NotImplementedError) as exc:
-                    rows.append(
-                        {"path": path, "row_idx": -1, "vec": None,
-                         "err": str(exc)[:120]}
-                    )
-            yield pd.DataFrame(
-                rows, columns=["path", "row_idx", "vec", "err"]
-            )
-
-    return files.mapInPandas(
-        kernel, "path string, row_idx long, vec array<float>, err string"
+    return payload_rows(
+        files.select("path", "content"),
+        parse,
+        "path string, row_idx long, vec array<float>, err string",
     )
 
 
-def vectors_from_safetensors(
-    files: DataFrame, path_col: str = "path", content_col: str = "content"
-) -> DataFrame:
+def vectors_from_safetensors(files: DataFrame) -> DataFrame:
     """Fan (path, content) safetensors dumps out to
     (path, tensor, row_idx, vec) — one row per vector of each named 2-D
     float tensor in the file, float32-normalized. The safetensors
     counterpart of :func:`vectors_from_npy` (checkpoint shards and
-    embedding dumps increasingly ship in this format); one Arrow pass,
-    malformed dumps degrade to a single row_idx=-1 error row."""
-    import pandas as pd
+    embedding dumps increasingly ship in this format); one payload_rows
+    pass, a malformed dump appends one row_idx=-1 error row after the
+    tensors already read."""
+    import numpy as np
 
-    def kernel(batches):
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf[path_col], pdf[content_col]):
-                try:
-                    tensors = parse_safetensors(bytes(content))
-                    for name in sorted(tensors):
-                        arr = tensors[name]
-                        if arr.ndim != 2:
-                            raise ValueError(
-                                f"tensor {name}: expected 2-D, got "
-                                f"{arr.ndim}-D"
-                            )
-                        for i, v in enumerate(
-                            np.asarray(arr, dtype=np.float32)
-                        ):
-                            rows.append(
-                                {
-                                    "path": path,
-                                    "tensor": name,
-                                    "row_idx": i,
-                                    "vec": v.tolist(),
-                                    "err": None,
-                                }
-                            )
-                except (ValueError, NotImplementedError) as exc:
-                    rows.append(
-                        {
-                            "path": path,
-                            "tensor": "_error",
-                            "row_idx": -1,
-                            "vec": None,
-                            "err": str(exc)[:120],
-                        }
+    def parse(content):
+        rows = []
+        try:
+            tensors = parse_safetensors(content)
+            for name in sorted(tensors):
+                arr = tensors[name]
+                if arr.ndim != 2:
+                    raise ValueError(
+                        f"tensor {name}: expected 2-D, got {arr.ndim}-D"
                     )
-            yield pd.DataFrame(
-                rows, columns=["path", "tensor", "row_idx", "vec", "err"]
-            )
+                for i, v in enumerate(np.asarray(arr, dtype=np.float32)):
+                    rows.append((name, i, v.tolist(), None))
+        except (ValueError, NotImplementedError) as exc:
+            rows.append(("_error", -1, None, str(exc)[:120]))
+        return rows
 
-    return files.mapInPandas(
-        kernel,
+    return payload_rows(
+        files.select("path", "content"),
+        parse,
         "path string, tensor string, row_idx long, vec array<float>, "
         "err string",
     )

@@ -13,8 +13,9 @@ bytes_list / float_list / int64_list — so a crawl's .tfrecord shards
 fan out to typed per-feature rows without TensorFlow or protobuf
 libraries in the container.
 
-Spark side: :func:`tfrecord_examples` is the same one-Arrow-pass
-binaryFile fan-out shape as sources/warc.py's ``warc_records`` —
+Spark side: :func:`tfrecord_examples` is one ``parse`` function run by
+the payload kernel (``payload_rows``, torcdb_spark/functions/payload.py),
+the same binaryFile fan-out as sources/warc.py's ``warc_records`` —
 poisoned shards degrade to an ``_error`` row instead of sinking the
 job.  On a real 100 TB corpus the shards arrive pre-split (one
 ~100-500 MB file per task), so per-file Python parse cost amortizes the
@@ -25,9 +26,9 @@ from __future__ import annotations
 
 import struct
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
+
+from torcdb_spark.functions.payload import payload_rows
 
 # ---------------------------------------------------------------------------
 # CRC32C (Castagnoli, reflected poly 0x82F63B78) + TFRecord masking
@@ -275,62 +276,43 @@ def parse_example(data: bytes) -> dict:
 # ---------------------------------------------------------------------------
 
 
-def tfrecord_examples(
-    shards: DataFrame,
-    path_col: str = "path",
-    content_col: str = "content",
-) -> DataFrame:
+def tfrecord_examples(shards: DataFrame) -> DataFrame:
     """binaryFile-shaped (path, content) rows → one row per
     (record, feature): ``path, rec_idx, feature, kind, n_values,
     int_sum, text`` — int64 features report their count and sum,
     bytes features additionally their first value UTF-8-decoded (the
     text column a document pipeline reads), float features count only.
-    A shard that fails framing or CRC degrades to a single
-    ``feature='_error'`` row, the WARC-path contract."""
-    import pandas as pd  # noqa: F401
+    A shard that fails framing or CRC appends one ``feature='_error'``
+    row after the records already decoded, the WARC-path contract."""
 
-    schema = (
+    def first_text(kind, values):
+        if kind != "bytes" or not values:
+            return None
+        try:
+            return values[0].decode("utf-8")
+        except UnicodeDecodeError:
+            return None
+
+    def parse(content):
+        rows = []
+        try:
+            for idx, rec in enumerate(parse_tfrecords(content)):
+                for name, (kind, values) in sorted(parse_example(rec).items()):
+                    rows.append((
+                        idx, name, kind, len(values),
+                        sum(values) if kind == "int64" else 0,
+                        first_text(kind, values),
+                    ))
+        except ValueError as exc:
+            rows.append((-1, "_error", str(exc), 0, 0, None))
+        return rows
+
+    return payload_rows(
+        shards.select("path", "content"),
+        parse,
         "path string, rec_idx long, feature string, kind string, "
-        "n_values long, int_sum long, text string"
+        "n_values long, int_sum long, text string",
     )
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {k: [] for k in ("path", "rec_idx", "feature", "kind",
-                                   "n_values", "int_sum", "text")}
-
-            def emit(path, idx, feat, kind, n, isum, text):
-                out["path"].append(path)
-                out["rec_idx"].append(idx)
-                out["feature"].append(feat)
-                out["kind"].append(kind)
-                out["n_values"].append(n)
-                out["int_sum"].append(isum)
-                out["text"].append(text)
-
-            for path, content in zip(pdf[path_col], pdf[content_col]):
-                try:
-                    records = parse_tfrecords(bytes(content))
-                    for idx, rec in enumerate(records):
-                        for name, (kind, values) in sorted(
-                                parse_example(rec).items()):
-                            isum = (sum(values) if kind == "int64"
-                                    else 0)
-                            text = None
-                            if kind == "bytes" and values:
-                                try:
-                                    text = values[0].decode("utf-8")
-                                except UnicodeDecodeError:
-                                    text = None
-                            emit(path, idx, name, kind, len(values),
-                                 isum, text)
-                except ValueError as exc:
-                    emit(path, -1, "_error", str(exc), 0, 0, None)
-            yield pd.DataFrame(out)
-
-    return shards.mapInPandas(kernel, schema=schema)
 
 
 def tfrecord_shard(base: int, n_records: int, tokens_per_record: int,

@@ -11,9 +11,11 @@ reading the whole file.
 
 Spark shape: crawl archives arrive as whole files via the binaryFile
 source; `warc_records` fans file payloads out to (file, offset, headers,
-payload) rows inside one Arrow-batched mapInPandas pass — bytes never
-leave the executor, and at 100 TB the unit of parallelism is the archive
-file (CommonCrawl ships ~1 GB segments by design).
+payload) rows inside one pass of the payload kernel (`payload_rows`,
+torcdb_spark/functions/payload.py, the Arrow-batched boundary every
+binary reader shares) — bytes never leave the executor, and at 100 TB
+the unit of parallelism is the archive file (CommonCrawl ships ~1 GB
+segments by design).
 
 Reference parity note: TorcDB has no ingestion surface beyond its KV
 image loader (TorcGraph.java:756-820); this is extension surface for the
@@ -25,7 +27,8 @@ from __future__ import annotations
 import zlib
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from torcdb_spark.functions.payload import payload_rows
 
 
 def write_warc(records: list[tuple[dict, bytes]], gzip_members: bool = True) -> bytes:
@@ -111,103 +114,72 @@ WARC_ROW_SCHEMA = (
 )
 
 
-def warc_records(files: DataFrame, path_col: str = "path", content_col: str = "content") -> DataFrame:
+def warc_records(files: DataFrame) -> DataFrame:
     """Fan a binaryFile-sourced frame of WARC archives out to one row per
     record: (path, record_offset, warc_type, target_uri, content_length,
-    payload). One Arrow-batched mapInPandas pass; a malformed archive
-    yields a single row with warc_type='_error' carrying the message (a
-    poisoned crawl segment must not sink the job)."""
-    import pandas as pd
+    payload). One payload_rows pass; a malformed archive yields a single
+    row with warc_type='_error' carrying the message (a poisoned crawl
+    segment must not sink the job)."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf[path_col], pdf[content_col]):
-                try:
-                    for off, headers, body in parse_warc(bytes(content)):
-                        rows.append(
-                            {
-                                "path": path,
-                                "record_offset": off,
-                                "warc_type": headers.get("WARC-Type", ""),
-                                "target_uri": headers.get("WARC-Target-URI", ""),
-                                "content_length": len(body),
-                                "payload": body,
-                            }
-                        )
-                except ValueError as exc:
-                    rows.append(
-                        {
-                            "path": path,
-                            "record_offset": -1,
-                            "warc_type": "_error",
-                            "target_uri": str(exc)[:120],
-                            "content_length": 0,
-                            "payload": b"",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "path", "record_offset", "warc_type", "target_uri",
-                    "content_length", "payload",
-                ],
-            )
+    def parse(content):
+        try:
+            return [
+                (off, headers.get("WARC-Type", ""),
+                 headers.get("WARC-Target-URI", ""), len(body), body)
+                for off, headers, body in parse_warc(content)
+            ]
+        except ValueError as exc:
+            return [(-1, "_error", str(exc)[:120], 0, b"")]
 
-    return files.select(
-        F.col(path_col).alias(path_col), F.col(content_col).alias(content_col)
-    ).mapInPandas(kernel, WARC_ROW_SCHEMA)
+    return payload_rows(files.select("path", "content"), parse, WARC_ROW_SCHEMA)
 
 
-def zip_members(files: DataFrame, path_col: str = "path", content_col: str = "content") -> DataFrame:
-    """Fan a binaryFile-sourced frame of ZIP archives out to one row per
-    member: (path, member, n_bytes, payload) — document bundles and
-    dataset drops commonly arrive zipped. stdlib zipfile over an
-    in-memory buffer, one Arrow pass, same poisoned-archive contract as
-    warc_records (an unreadable archive yields one '_error' member
-    instead of sinking the job). Directories are skipped."""
+def write_zip(members: list[tuple[str, str | bytes]]) -> bytes:
+    """Serialize (name, data) pairs as a deflated ZIP archive, in order.
+    A member named ``mimetype`` is stored uncompressed, as the EPUB OCF
+    and ODF packages require of their first member."""
     import io
     import zipfile
 
-    import pandas as pd
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
+        for name, data in members:
+            zf.writestr(name, data, compress_type=(
+                zipfile.ZIP_STORED if name == "mimetype" else None))
+    return buf.getvalue()
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf[path_col], pdf[content_col]):
-                try:
-                    with zipfile.ZipFile(io.BytesIO(bytes(content))) as zf:
-                        for info in zf.infolist():
-                            if info.is_dir():
-                                continue
-                            body = zf.read(info)
-                            rows.append(
-                                {
-                                    "path": path,
-                                    "member": info.filename,
-                                    "n_bytes": len(body),
-                                    "payload": body,
-                                }
-                            )
-                except Exception as exc:
-                    rows.append(
-                        {
-                            "path": path,
-                            "member": "_error",
-                            "n_bytes": 0,
-                            "payload": str(exc)[:120].encode(),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["path", "member", "n_bytes", "payload"]
-            )
 
-    return files.mapInPandas(
-        kernel, "path string, member string, n_bytes long, payload binary"
+def zip_members(files: DataFrame) -> DataFrame:
+    """Fan a binaryFile-sourced frame of ZIP archives out to one row per
+    member: (path, member, n_bytes, payload) — document bundles and
+    dataset drops commonly arrive zipped. stdlib zipfile over an
+    in-memory buffer, one payload_rows pass, same poisoned-archive
+    contract as warc_records (an unreadable archive yields one '_error'
+    member, after any members already read, instead of sinking the
+    job). Directories are skipped."""
+    import io
+    import zipfile
+
+    def parse(content):
+        rows = []
+        try:
+            with zipfile.ZipFile(io.BytesIO(content)) as zf:
+                for info in zf.infolist():
+                    if not info.is_dir():
+                        body = zf.read(info)
+                        rows.append((info.filename, len(body), body))
+        except Exception as exc:
+            rows.append(("_error", 0, str(exc)[:120].encode()))
+        return rows
+
+    return payload_rows(
+        files.select("path", "content"),
+        parse,
+        "path string, member string, n_bytes long, payload binary",
     )
 
 
-def tar_members(files: DataFrame, path_col: str = "path", content_col: str = "content") -> DataFrame:
+def tar_members(files: DataFrame) -> DataFrame:
     """Fan a binaryFile-sourced frame of TAR archives out to one row per
     member: (path, member, key, n_bytes, payload) — the WebDataset shard
     layout (multimodal training corpora ship as .tar shards whose members
@@ -215,59 +187,30 @@ def tar_members(files: DataFrame, path_col: str = "path", content_col: str = "co
     ``key`` is the member basename with its final extension stripped, so a
     downstream ``groupBy(path, key)`` reassembles each sample's modalities
     without a shuffle-heavy parse. stdlib tarfile over an in-memory
-    buffer, one Arrow pass; same poisoned-archive contract as
+    buffer, one payload_rows pass; same poisoned-archive contract as
     warc_records/zip_members (an unreadable archive yields one '_error'
     member instead of sinking the job). Non-file members are skipped."""
     import io
     import tarfile
 
-    import pandas as pd
+    def parse(content):
+        rows = []
+        try:
+            with tarfile.open(fileobj=io.BytesIO(content), mode="r:*") as tf:
+                for info in tf:
+                    if not info.isfile():
+                        continue
+                    body = tf.extractfile(info).read()
+                    base = info.name.rsplit("/", 1)[-1]
+                    key = base.rsplit(".", 1)[0] if "." in base else base
+                    rows.append((info.name, key, len(body), body))
+        except Exception as exc:
+            rows.append(("_error", "_error", 0, str(exc)[:120].encode()))
+        return rows
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf[path_col], pdf[content_col]):
-                try:
-                    with tarfile.open(
-                        fileobj=io.BytesIO(bytes(content)), mode="r:*"
-                    ) as tf:
-                        for info in tf:
-                            if not info.isfile():
-                                continue
-                            body = tf.extractfile(info).read()
-                            name = info.name
-                            base = name.rsplit("/", 1)[-1]
-                            key = (
-                                base.rsplit(".", 1)[0]
-                                if "." in base
-                                else base
-                            )
-                            rows.append(
-                                {
-                                    "path": path,
-                                    "member": name,
-                                    "key": key,
-                                    "n_bytes": len(body),
-                                    "payload": body,
-                                }
-                            )
-                except Exception as exc:
-                    rows.append(
-                        {
-                            "path": path,
-                            "member": "_error",
-                            "key": "_error",
-                            "n_bytes": 0,
-                            "payload": str(exc)[:120].encode(),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["path", "member", "key", "n_bytes", "payload"],
-            )
-
-    return files.mapInPandas(
-        kernel,
+    return payload_rows(
+        files.select("path", "content"),
+        parse,
         "path string, member string, key string, n_bytes long, "
         "payload binary",
     )
