@@ -43,7 +43,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
     import pyspark.sql.functions as F
 
     from torcdb_spark import get_spark
-    from torcdb_spark.functions.payload import synth_udf
+    from torcdb_spark.functions.payload import payload_rows, synth_udf
     from torcdb_spark.operators.multimodal import (
         decode_and_featurize,
         audio_features,
@@ -79,7 +79,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
     # one site, WebP on another, TIFF from a scanner, lossless JPEG from
     # a medical archive — decode_image dispatches on magic bytes and the
     # downstream pipeline never branches on format)
-    def reencode(batches):
+    def reencode(payload):
         import numpy as np
 
         from torcdb_spark.operators.jpeg import encode_jpeg_lossless
@@ -90,36 +90,20 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
         )
         from torcdb_spark.operators.webp import encode_webp_lossless
 
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                src = decode_image(bytes(payload))
-                encoded = {
-                    "png16": encode_png(
-                        (src.astype(np.uint16) * 257), filter_type=1
-                    ),
-                    "webp": encode_webp_lossless(
-                        src, use_subtract_green=True, cache_bits=4
-                    ),
-                    "tiff_lzw": encode_tiff_rgb(
-                        src, compression=5, predictor=2
-                    ),
-                    "jpeg_ll": encode_jpeg_lossless(src, predictor=4),
-                }
-                ok = sum(
-                    int(np.array_equal(decode_image(p), src))
-                    for p in encoded.values()
-                )
-                rows.append({"media_id": int(mid), "formats_exact": ok})
-            yield pd.DataFrame(rows)
-
-    import pandas as pd
+        src = decode_image(payload)
+        encoded = (
+            encode_png(src.astype(np.uint16) * 257, filter_type=1),
+            encode_webp_lossless(src, use_subtract_green=True, cache_bits=4),
+            encode_tiff_rgb(src, compression=5, predictor=2),
+            encode_jpeg_lossless(src, predictor=4),
+        )
+        return {"formats_exact": sum(
+            int(np.array_equal(decode_image(p), src)) for p in encoded
+        )}
 
     fmt_ok = (
-        media.limit(64)
-        .mapInPandas(reencode, "media_id long, formats_exact long")
+        payload_rows(media.limit(64).select("media_id", "payload"), reencode,
+                     "media_id long, formats_exact long")
         .agg(F.sum("formats_exact"))
         .collect()[0][0]
     )
@@ -140,44 +124,28 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
     log(f"audio clips with rms: {au.where(F.col('rms').isNotNull()).count()}")
 
     # -- 4. video: 4-frame MJPEG/AVI per doc, sample every 2nd frame -----
-    import pandas as pd
-
     from torcdb_spark.operators.multimodal import (
         encode_avi_mjpeg,
         video_frame_features,
     )
 
-    def synth(batches):
+    def video(d):
         import numpy as np
 
-        for pdf in batches:
-            yy, xx = np.mgrid[0:16, 0:16]
-            rows = []
-            for d in pdf["doc_id"]:
-                frames = [
-                    np.clip(
-                        np.round(
-                            np.stack(
-                                [
-                                    128 + 100 * np.sin((xx + d + 3 * fi) / 5.0),
-                                    128 + 80 * np.cos((yy + fi) / 4.0),
-                                    128 + 60 * np.sin((xx + yy + d) / 7.0),
-                                ],
-                                axis=-1,
-                            )
-                        ),
-                        0,
-                        255,
-                    ).astype(np.uint8)
-                    for fi in range(4)
-                ]
-                rows.append(
-                    {"media_id": d, "payload": encode_avi_mjpeg(frames)}
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+        yy, xx = np.mgrid[0:16, 0:16]
+        frames = [
+            np.clip(np.round(np.stack([
+                128 + 100 * np.sin((xx + d + 3 * fi) / 5.0),
+                128 + 80 * np.cos((yy + fi) / 4.0),
+                128 + 60 * np.sin((xx + yy + d) / 7.0),
+            ], axis=-1)), 0, 255).astype(np.uint8)
+            for fi in range(4)
+        ]
+        return encode_avi_mjpeg(frames)
 
-    videos = docs.limit(50).select("doc_id").mapInPandas(
-        synth, "media_id long, payload binary"
+    videos = docs.limit(50).select(
+        F.col("doc_id").alias("media_id"),
+        synth_udf(video)(F.col("doc_id")).alias("payload"),
     )
     vf = video_frame_features(videos, every_n=2)
     log(f"video frames sampled: {vf.where(F.col('decode_err').isNull()).count()}")

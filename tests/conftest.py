@@ -1,4 +1,5 @@
 import os
+import uuid
 
 import pytest
 
@@ -28,6 +29,25 @@ def graph(spark, sf_dir):
     g = PropertyGraph.from_tables(spark, sf_dir)
     # cache: many tests reuse the same small graph
     return PropertyGraph(vertices=g.vertices.cache(), edges=g.edges.cache())
+
+
+@pytest.fixture
+def jobs_of(spark):
+    """``jobs_of(fn)`` -> (fn(), the number of Spark jobs fn ran), counted
+    through a job group once the listener bus has caught up."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs-of-{uuid.uuid4()}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 # Forced regimes: each fixture sets one name in torcdb_spark/regime.py,

@@ -99,6 +99,34 @@ def test_traverse_both_unions_directions(graph, spark):
     assert in_n > 0  # customers from nation 1
 
 
+@pytest.mark.parametrize("broadcast_frontier", [True, False])
+@pytest.mark.parametrize("fill_edge", [False, True])
+@pytest.mark.parametrize("direction", list(Direction))
+def test_traverse_repeated_frontier_ids(graph, spark, direction, fill_edge,
+                                        broadcast_frontier):
+    """A frontier that repeats every id 3x expands to exactly the rows of
+    its deduped form: the hop's join emits each edge once per call, as the
+    reference's per-call dedup map does (TorcGraph.java:538-571)."""
+    ids = [uint128_pair(LABEL_TAGS["customer"], k) for k in range(1, 11)]
+    ids += [uint128_pair(LABEL_TAGS["nation"], k) for k in range(3)]
+
+    def rows(frontier_ids):
+        frontier = spark.createDataFrame([(i,) for i in frontier_ids], ["id"])
+        tr = traverse(frontier, graph.edges, "fromNation", direction,
+                      fill_edge=fill_edge,
+                      broadcast_frontier=broadcast_frontier)
+        return sorted(
+            (bytes(r["src"]), bytes(r["dst"]),
+             tuple(sorted(r["props"].items())) if fill_edge else None)
+            for r in tr.collect()
+        )
+
+    once = rows(ids)
+    assert once
+    assert len(set(once)) == len(once)
+    assert rows(ids * 3) == once
+
+
 def test_fill_properties_and_projection(graph, spark):
     frontier = spark.createDataFrame(
         [(uint128_pair(LABEL_TAGS["customer"], 1),)], ["id"]

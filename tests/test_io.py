@@ -44,6 +44,17 @@ def test_graph_image_roundtrip(graph, spark, tmp_path_factory, fmt):
     assert _fingerprint(back) == _fingerprint(graph)
 
 
+def test_read_graph_parquet_runs_no_job(graph, spark, tmp_path_factory, jobs_of):
+    """The image's schema is pinned at read time: opening it lists files
+    but runs no schema-inference job."""
+    path = str(tmp_path_factory.mktemp("img_nojob"))
+    write_graph(graph, path, fmt="parquet")
+    back, jobs = jobs_of(lambda: read_graph(spark, path, fmt="parquet"))
+    assert jobs == 0
+    assert back.vertices.schema.names == graph.vertices.schema.names
+    assert back.edges.count() == graph.edges.count()
+
+
 def test_overwrite_is_delete_graph(graph, spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("img_ow"))
     write_graph(graph, path, fmt="parquet")

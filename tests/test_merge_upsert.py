@@ -3,8 +3,7 @@ new keys append, untouched partitions' files are left physically alone."""
 
 import glob
 import os
-
-import pyspark.sql.functions as F
+import threading
 
 from torcdb_spark.sources.maintenance import merge_upsert
 
@@ -55,7 +54,87 @@ def test_merge_upsert_leaves_untouched_partitions_alone(spark, tmp_path):
     assert after == before
     for f in after:
         assert os.path.getmtime(f) == mtimes[f]
-    # and the overwrite-mode conf is restored
+    # the dynamic mode is a per-write option; the session conf is untouched
     assert spark.conf.get(
         "spark.sql.sources.partitionOverwriteMode", "static"
     ) != "dynamic"
+
+
+def _rows(spark, path):
+    return {r["k"]: (str(r["day"]), r["v"]) for r in spark.read.parquet(path).collect()}
+
+
+def test_merge_upsert_concurrent_threads(spark, tmp_path):
+    """Two threads merge into different partitions at the same time: both
+    batches land and the third partition keeps its files. A session-wide
+    overwrite-mode flip would let one thread's write run in static mode
+    and replace the whole table."""
+    path = str(tmp_path / "tbl3")
+    _mk_base(spark, path)
+    untouched = {
+        f: os.path.getmtime(f) for f in glob.glob(f"{path}/day=2024-01-03/*.parquet")
+    }
+    batches = [
+        spark.createDataFrame([(1, "2024-01-01", 11.0), (6, "2024-01-01", 60.0)],
+                              "k long, day string, v double"),
+        spark.createDataFrame([(3, "2024-01-02", 33.0), (7, "2024-01-02", 70.0)],
+                              "k long, day string, v double"),
+    ]
+    start = threading.Barrier(len(batches))
+    errors = []
+
+    def merge(batch):
+        try:
+            start.wait()
+            merge_upsert(spark, path, batch, ["k"], "day")
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=merge, args=(b,)) for b in batches]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert errors == []
+    assert _rows(spark, path) == {
+        1: ("2024-01-01", 11.0),
+        2: ("2024-01-01", 20.0),
+        3: ("2024-01-02", 33.0),
+        4: ("2024-01-03", 40.0),
+        6: ("2024-01-01", 60.0),
+        7: ("2024-01-02", 70.0),
+    }
+    assert {
+        f: os.path.getmtime(f) for f in glob.glob(f"{path}/day=2024-01-03/*.parquet")
+    } == untouched
+    assert spark.conf.get(
+        "spark.sql.sources.partitionOverwriteMode", "static"
+    ) != "dynamic"
+
+
+def test_merge_upsert_runs_at_most_four_jobs(spark, tmp_path, jobs_of):
+    """Batch partition values, base schema, broadcast keys, the write: no
+    count, and no shuffle to find the touched partitions."""
+    path = str(tmp_path / "tbl4")
+    _mk_base(spark, path)
+    updates = spark.createDataFrame(
+        [(2, "2024-01-01", 99.0)], "k long, day string, v double"
+    )
+    _, jobs = jobs_of(lambda: merge_upsert(spark, path, updates, ["k"], "day"))
+    assert 1 <= jobs <= 4
+    assert _rows(spark, path)[2] == ("2024-01-01", 99.0)
+
+
+def test_merge_upsert_does_not_grow_file_count(spark, tmp_path):
+    """Repeated small merges into one partition keep it at one file: the
+    output is coalesced to the partition's size over maxPartitionBytes."""
+    path = str(tmp_path / "tbl5")
+    _mk_base(spark, path)
+    for i in range(3):
+        updates = spark.createDataFrame(
+            [(10 + i, "2024-01-01", float(i)), (11 + i, "2024-01-01", 1.0)],
+            "k long, day string, v double",
+        ).repartition(2)
+        merge_upsert(spark, path, updates, ["k"], "day")
+    assert len(glob.glob(f"{path}/day=2024-01-01/*.parquet")) == 1
+    assert len(_rows(spark, path)) == 4 + 4

@@ -712,6 +712,36 @@ def test_decode_and_featurize_spark_path(spark):
     assert out[3].width is None
 
 
+def test_decode_and_featurize_grayscale(spark):
+    """Gray (c=1) and gray+alpha (c=2) PNGs decode to real features: the
+    gray channel is each of R, G and B, and the luminance is the gray
+    level itself."""
+    import numpy as np
+    from torcdb_spark.operators.multimodal import (
+        MEDIA_SCHEMA,
+        decode_and_featurize,
+        encode_png,
+    )
+
+    rng = np.random.default_rng(7)
+    imgs = {c: rng.integers(0, 256, size=(8, 8, c), dtype=np.uint8) for c in (1, 2)}
+    media = spark.createDataFrame(
+        [(c, bytearray(encode_png(im)), "image/png", None, None, None)
+         for c, im in imgs.items()],
+        MEDIA_SCHEMA,
+    )
+    out = {r.media_id: r for r in decode_and_featurize(media).collect()}
+    for c, im in imgs.items():
+        r = out[c]
+        gray = im[:, :, 0].astype(np.float64)
+        mean = round(float(gray.mean()), 4)
+        hist = np.histogram(gray, bins=8, range=(0, 256))[0] / gray.size
+        assert r.decode_err is None
+        assert (r.width, r.height, r.channels) == (8, 8, c)
+        assert r.mean_r == r.mean_g == r.mean_b == mean
+        assert r.luma_hist == pytest.approx(hist.tolist(), abs=1e-6)
+
+
 def test_salted_join_equals_plain_join(spark):
     import pyspark.sql.functions as F
     from torcdb_spark.operators.skew import salted_join

@@ -191,13 +191,15 @@ def test_kernel_on_poisoned_payload(poisoned, name):
 
 
 def test_binary_readers_use_the_payload_kernel():
-    """No binary reader in sources/ or operators/multimodal.py calls
-    mapInPandas itself: each hands one parse function to payload_rows
-    (functions/payload.py).  The package has one binary pandas_udf,
-    synth_udf."""
+    """No binary reader in sources/ or operators/multimodal.py, and no
+    media stage of examples/multimodal_curation.py, calls mapInPandas
+    itself: each hands one parse function to payload_rows
+    (functions/payload.py) or one encoder to synth_udf.  The package has
+    one binary pandas_udf, synth_udf."""
     pkg = Path(__file__).resolve().parents[1] / "torcdb_spark"
     readers = [*sorted((pkg / "sources").glob("*.py")),
-               pkg / "operators" / "multimodal.py"]
+               pkg / "operators" / "multimodal.py",
+               pkg.parent / "examples" / "multimodal_curation.py"]
     assert [f.name for f in readers if ".mapInPandas(" in f.read_text()] == []
     assert sum(f.read_text().count('pandas_udf("binary")')
                for f in pkg.rglob("*.py")) == 1

@@ -63,15 +63,16 @@ def test_traverse_uses_broadcast_join(spark, sf_dir, graph):
 
 
 def test_traverse_shuffles_frontier_not_edges(spark, sf_dir):
-    """A broadcast-frontier hop may shuffle the (small) frontier for its
-    dedup, but must never shuffle the edge table — exactly one hash
-    exchange (frontier), and the join is broadcast."""
+    """A broadcast-frontier hop is one broadcast semi join: it shuffles
+    neither the edge table nor the frontier (the semi join needs no dedup
+    of the frontier), so the plan has no hash exchange at all."""
     g = PropertyGraph.from_tables(spark, sf_dir)
     frontier = g.vertices.where(F.col("label") == "customer").select("id")
     tr = traverse(frontier, g.edges, "placed", Direction.OUT)
     plan = explain_str(tr, "simple")
     assert "BroadcastHashJoin" in plan
-    assert plan.count("Exchange hashpartitioning") == 1
+    assert "LeftSemi" in plan
+    assert plan.count("Exchange hashpartitioning") == 0
 
 
 def test_q1_aggregate_is_partial_then_final(spark, sf_dir):

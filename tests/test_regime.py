@@ -21,19 +21,7 @@ def test_broadcast_predicate_reads_the_bar_at_call_time(monkeypatch):
     assert not regime.fits(1)
 
 
-def _probe_jobs(spark, df):
-    """(spread(df), the jobs its partition probe ran)."""
-    sc = spark.sparkContext
-    group = f"spread-probe-{id(df)}"
-    sc.setJobGroup(group, group)
-    try:
-        out = regime.spread(df)
-    finally:
-        sc.setJobGroup(None, None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_spread_probe_runs_no_job_on_its_callers_shapes(spark, sf_dir):
+def test_spread_probe_runs_no_job_on_its_callers_shapes(spark, sf_dir, jobs_of):
     from torcdb_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
@@ -42,6 +30,6 @@ def test_spread_probe_runs_no_job_on_its_callers_shapes(spark, sf_dir):
     ck = docs.select("doc_id").localCheckpoint(eager=True)
     par = spark.sparkContext.defaultParallelism
     for df in (narrow, ck):
-        out, jobs = _probe_jobs(spark, df)
+        out, jobs = jobs_of(lambda: regime.spread(df))
         assert jobs == 0
         assert out.rdd.getNumPartitions() == max(par, df.rdd.getNumPartitions())

@@ -15,18 +15,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from torcdb_spark import regime
+
 
 def fuse(a: DataFrame, b: DataFrame, dedup: bool = False) -> DataFrame:
     """Path join: 2-hop composition A ⋈ B on (A.dst = B.src), keeping
     (A.src → B.dst) — TorcHelper.fuse (TorcHelper.java:407-456).
 
     ``dedup`` distinct-ifies the composed neighbor lists, matching the
-    reference's boolean flag. Equi hash join; Catalyst/AQE picks broadcast
-    vs shuffle based on actual sizes.
+    reference's boolean flag. Equi hash join that streams the paths ``a``:
+    ``b`` gets the broadcast hint when Catalyst's estimate fits the
+    broadcast threshold (``regime.broadcast_fits``), so ``a``'s
+    partitioning on ``src`` (a traverse output's) carries through and the
+    dedup needs no exchange. Without the hint the planner broadcasts
+    whichever side estimates smaller, and two hops of similar size swap
+    sides with the data. Above the threshold AQE plans the join.
     """
+    hop = b.select(F.col("src").alias("_mid"), F.col("dst"))
+    if regime.broadcast_fits(hop):
+        hop = F.broadcast(hop)
     out = (
         a.select(F.col("src"), F.col("dst").alias("_mid"))
-        .join(b.select(F.col("src").alias("_mid"), F.col("dst")), "_mid", "inner")
+        .join(hop, "_mid", "inner")
         .select("src", "dst")
     )
     return out.dropDuplicates(["src", "dst"]) if dedup else out

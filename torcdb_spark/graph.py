@@ -187,10 +187,10 @@ class PropertyGraph:
         if g is None:
             out = _materialized_graph_dir(spark, sf_dir)
             g = PropertyGraph(
-                vertices=spark.read.parquet(f"{out}/vertices")
-                .select(*VERTEX_SCHEMA.names),
-                edges=spark.read.parquet(f"{out}/edges")
-                .select(*EDGE_SCHEMA.names),
+                vertices=spark.read.schema(VERTEX_SCHEMA)
+                .parquet(f"{out}/vertices").select(*VERTEX_SCHEMA.names),
+                edges=spark.read.schema(EDGE_SCHEMA)
+                .parquet(f"{out}/edges").select(*EDGE_SCHEMA.names),
             )
             _OPEN_GRAPHS[key] = g
         return g

@@ -596,7 +596,7 @@ def _decode_png(payload: bytes):
     w = int.from_bytes(ihdr[0:4], "big")
     h = int.from_bytes(ihdr[4:8], "big")
     bit_depth, color_type, _comp, _filt, interlace = ihdr[8:13]
-    nch = {0: 1, 2: 3, 3: 1, 6: 4}.get(color_type)
+    nch = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(color_type)
     sub_byte = bit_depth in (1, 2, 4) and color_type in (0, 3)
     ok_depth = (
         bit_depth == 8 or (bit_depth == 16 and color_type != 3) or sub_byte
@@ -605,7 +605,7 @@ def _decode_png(payload: bytes):
         raise NotImplementedError(
             f"PNG bit_depth={bit_depth} color_type={color_type} "
             f"interlace={interlace} "
-            "(8/16-bit gray/RGB/RGBA, 1/2/4/8-bit gray/palette, "
+            "(8/16-bit gray/gray+alpha/RGB/RGBA, 1/2/4/8-bit gray/palette, "
             "interlace 0/Adam7 only)"
         )
     if color_type == 3 and plte is None:
@@ -667,7 +667,7 @@ def encode_png(img, filter_type: int = 0, interlace: int = 0,
                bit_depth: int | None = None) -> bytes:
     """Minimal PNG encoder (test support + payload framing): 8-bit
     (uint8 input) or 16-bit (uint16 input, big-endian samples)
-    gray/RGB/RGBA, plus 1/2/4-bit grayscale via ``bit_depth`` (2-D
+    gray/gray+alpha/RGB/RGBA, plus 1/2/4-bit grayscale via ``bit_depth`` (2-D
     input holding raw sample values, packed MSB-first). One filter type
     for every scanline (0=None default; 1/2 exercised by the decoder
     tests — Sub/Up are invertible from the recon BYTES directly, left
@@ -689,7 +689,7 @@ def encode_png(img, filter_type: int = 0, interlace: int = 0,
     if a.ndim == 2:
         a = a[:, :, None]
     h, w, nch = a.shape
-    color_type = {1: 0, 3: 2, 4: 6}[nch]
+    color_type = {1: 0, 2: 4, 3: 2, 4: 6}[nch]
     bpp = nch * sample_bytes
 
     def filter_rows(sub) -> list:
@@ -793,7 +793,9 @@ def resize_bilinear(img, out_h: int, out_w: int):
 
 def decode_and_featurize(media: DataFrame, hist_bins: int = 8) -> DataFrame:
     """REAL image decode → per-image features via payload_rows: dimensions,
-    per-channel means, and a luminance histogram. Undecodable payloads
+    per-channel means, and a luminance histogram. A grayscale image (with
+    or without alpha) reports its gray mean as each of R, G and B, and its
+    gray levels as the luminance. Undecodable payloads
     (unsupported format / corrupt bytes) yield NULL feature columns rather
     than failing the batch — at 100 TB some fraction of a crawl corpus is
     always undecodable and must not kill the job."""
@@ -816,9 +818,15 @@ def decode_and_featurize(media: DataFrame, hist_bins: int = 8) -> DataFrame:
     def parse(payload):
         try:
             img = decode_image(payload)
+            if img.ndim == 2:  # a grayscale TIFF decodes to (h, w)
+                img = img[:, :, None]
             h, w, c = img.shape
-            rgb = img[:, :, :3].astype(np.float64)
-            luma = rgb @ np.array([0.299, 0.587, 0.114])
+            if c >= 3:
+                rgb = img[:, :, :3].astype(np.float64)
+                luma = rgb @ np.array([0.299, 0.587, 0.114])
+            else:  # gray (c=1), gray+alpha (c=2): gray is R, G, B and luma
+                luma = img[:, :, 0].astype(np.float64)
+                rgb = luma[:, :, None].repeat(3, axis=2)
             hist = np.histogram(luma, bins=hist_bins, range=(0, 256))[0]
             tot = hist.sum() or 1
             return (

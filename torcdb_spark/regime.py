@@ -14,8 +14,10 @@ forced-regime fixtures in tests/conftest.py do exactly that):
   argument wins; ``None`` resolves to ``LOCAL_ROWS_LINEAR`` for the
   near-linear finishers (connected_components, cc_doubling, Borůvka, SCC)
   and to ``LOCAL_ROWS`` for the rest.
-- ``broadcast_fits``: salted_join's test, Catalyst's size estimate against
-  ``spark.sql.autoBroadcastJoinThreshold``.
+- ``broadcast_fits``: Catalyst's size estimate against
+  ``spark.sql.autoBroadcastJoinThreshold``; salted_join's test, the
+  edge-side broadcast of a ``traverse`` hop whose frontier is not
+  broadcast, and the hop-side broadcast of ``algebra.fuse``.
 - ``spread``: a round-robin repartition to defaultParallelism for inputs
   that arrive in fewer splits.
 """

@@ -17,7 +17,10 @@ formats:
   the streaming-friendly interchange form.
 
 All writers shard automatically (one file per task), so a 100 TB image is
-written/read by every executor in parallel — no driver funnel. The bucketed
+written/read by every executor in parallel — no driver funnel. The
+columnar readers pin the image's schema at read time (``VERTEX_SCHEMA`` /
+``EDGE_SCHEMA``) instead of inferring it from parquet/orc footers, so
+opening an image lists its files and runs no Spark job. The bucketed
 variant additionally pre-shuffles edges by ``src`` into N buckets, so
 frontier⋈edges joins against a same-bucketed frontier need no exchange at
 read time (SURVEY §7.2 M8).
@@ -80,15 +83,19 @@ def write_graph(graph, path: str, fmt: str = "parquet", mode: str = "overwrite")
 def read_graph(spark: SparkSession, path: str, fmt: str = "parquet"):
     """Read a graph image written by :func:`write_graph` back into a
     PropertyGraph. Column order/nullability is re-canonicalized so a
-    round-trip is schema-identical regardless of format."""
+    round-trip is schema-identical regardless of format.
+
+    The parquet and orc images are read with their schema pinned to
+    ``VERTEX_SCHEMA``/``EDGE_SCHEMA`` (``label`` is the partition column),
+    so opening an image runs no Spark job: the reader skips the footer
+    inference job it would otherwise run per table. The file listing still
+    runs on every call, so a read sees every write that finished before
+    it."""
     from torcdb_spark.graph import EDGE_SCHEMA, PropertyGraph, VERTEX_SCHEMA
 
-    if fmt == "parquet":
-        v = spark.read.parquet(f"{path}/vertices")
-        e = spark.read.parquet(f"{path}/edges")
-    elif fmt == "orc":
-        v = spark.read.orc(f"{path}/vertices")
-        e = spark.read.orc(f"{path}/edges")
+    if fmt in ("parquet", "orc"):
+        v = spark.read.schema(VERTEX_SCHEMA).format(fmt).load(f"{path}/vertices")
+        e = spark.read.schema(EDGE_SCHEMA).format(fmt).load(f"{path}/edges")
     elif fmt == "csv":
         v = _decode_flat(
             spark.read.option("header", True).csv(f"{path}/vertices"), ["id"]

@@ -6,6 +6,9 @@ instead accretes small files from streaming sinks and incremental jobs, and
 at 100 TB an uncompacted table turns every scan into a metadata storm (one
 task + one footer read per tiny file). ``compact_files`` is the explicit
 OPTIMIZE job: rewrite a directory to ~target-sized files, atomically.
+``merge_upsert`` is the partition-scoped MERGE: its write is its only
+working action, and it sizes its output with the same bytes-over-target
+arithmetic, so repeated small merges do not accrete files either.
 """
 
 from __future__ import annotations
@@ -90,49 +93,42 @@ def merge_upsert(
     plain-parquet equivalent (atomicity is per-partition-directory — the
     manifest-level transaction is exactly what those formats add).
 
-    Returns {"touched_partitions": [...], "upserted_rows": n}.
+    The write is the only action that does work. The touched partition
+    values are collected from the batch with no shuffle (no job at all for
+    a driver-local batch); the update keys are broadcast into a left-anti
+    join, which needs no dedup of its keys; the output is coalesced to
+    ceil(touched-partition bytes / ``spark.sql.files.maxPartitionBytes``)
+    tasks, sized by a driver-side listing, so repeated small merges do not
+    grow the file count of a partition. The dynamic overwrite mode is a
+    per-write option, not a session setting, so merges into different
+    partitions may run from concurrent threads.
+
+    Returns {"touched_partitions": [...]}, the sorted distinct partition
+    values the batch wrote.
     """
-    touched = [
-        r[partition_col]
-        for r in updates.select(partition_col).distinct().collect()
-    ]
+    touched = sorted({r[0] for r in updates.select(partition_col).collect()})
     base = spark.read.format(fmt).load(base_path)
     current = base.where(F.col(partition_col).isin(touched))
     # latest-wins anti-join: keep current rows whose key is NOT updated
     survivors = current.join(
-        updates.select(*key_cols).dropDuplicates(), key_cols, "left_anti"
+        F.broadcast(updates.select(*key_cols)), key_cols, "left_anti"
     )
     merged = survivors.unionByName(updates.select(*current.columns))
-    n = merged.count()
-    with _dynamic_partition_overwrite(spark):
-        (
-            merged.write.format(fmt)
-            .mode("overwrite")
-            .partitionBy(partition_col)
-            .save(base_path)
-        )
-    return {"touched_partitions": sorted(touched), "upserted_rows": n}
-
-
-class _dynamic_partition_overwrite:
-    """Scoped spark.sql.sources.partitionOverwriteMode=dynamic: overwrite
-    replaces only the partitions present in the written data, not the whole
-    table — the setting the merge depends on, restored afterward."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    def __exit__(self, *exc):
-        self.spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", self.prev
-        )
-        return False
+    dirs = [os.path.join(base_path, f"{partition_col}={v}") for v in touched]
+    touched_bytes = sum(
+        table_file_stats(d, f".{fmt}")["total_bytes"]
+        for d in dirs if os.path.isdir(d)
+    )
+    target = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    (
+        merged.coalesce(max(1, math.ceil(touched_bytes / target)))
+        .write.format(fmt)
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .save(base_path)
+    )
+    return {"touched_partitions": touched}
 
 
 def incremental_backfill(

@@ -352,14 +352,9 @@ def maintain_rollup(
                 F.round(F.sum(value_col), 2).alias("s"),
             ],
         )
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            rolled.write.mode("overwrite").partitionBy("bucket").parquet(
-                rollup_path
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        rolled.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("bucket").parquet(rollup_path)
 
     stream = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", 1

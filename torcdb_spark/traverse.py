@@ -7,20 +7,31 @@ pMap (src → edge props) and vSet (distinct neighbors),
 TraversalResult.java:26-39.
 
 Spark-first formulation: a traversal result IS a DataFrame
-``(src, dst, props)``; the expansion is an equi hash join of the frontier
-against the edges table. vSet/vMap are derived views. The reference's
-client-side neighbor dedup map (TorcGraph.java:538-571) becomes
-``dropDuplicates``; its pipelined segment multireads
+``(src, dst, props)``; the expansion is a join of the frontier against the
+edges table. vSet/vMap are derived views. The reference's client-side
+neighbor dedup map (TorcGraph.java:538-571) becomes a ``left_semi`` join of
+the label-filtered edges against the frontier ids: a semi join emits each
+edge row at most once however often its id repeats in the frontier, so
+(src, dst) stays unique with no dedup step. Its pipelined segment multireads
 (TorcEdgeList.java:920-1401) are subsumed by the partitioned columnar scan.
 
 Scale notes (100 TB): the frontier is usually tiny relative to the edge set —
-we hint ``broadcast(frontier)`` so each hop is a broadcast hash join with NO
-shuffle of the edges table (mirrors the reference's assumption that frontiers
-are small, SURVEY §4.3). Label/direction predicates are plain filters that
-Catalyst pushes into the parquet scan (the analogue of the reference's
-key-space narrowing by (eLabel, dir, nLabel), TorcHelper.java:352-370).
-Multi-hop loops must checkpoint the frontier (see ``khop``) to stop lineage
-growth.
+we hint ``broadcast(frontier)`` so each hop is a broadcast semi join with NO
+exchange at all: neither the edges table nor the frontier is shuffled
+(mirrors the reference's assumption that frontiers are small, SURVEY §4.3).
+With ``broadcast_frontier=False`` the frontier may be large, so the hop
+keeps a deduped inner join that streams the frontier: its hash
+partitioning on ``id`` carries to the output's ``src``, so a later dedup
+on (src, ...) needs no exchange. The label-filtered edges get the broadcast
+hint when Catalyst's estimate fits the broadcast threshold
+(``regime.broadcast_fits``); otherwise AQE plans the join. Left to the
+planner, a frontier fed by a semi join estimates small and would be
+broadcast instead.
+
+Label/direction predicates are plain filters that Catalyst pushes into the
+parquet scan (the analogue of the reference's key-space narrowing by
+(eLabel, dir, nLabel), TorcHelper.java:352-370). Multi-hop loops must
+checkpoint the frontier (see ``khop``) to stop lineage growth.
 """
 
 from __future__ import annotations
@@ -30,6 +41,8 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from torcdb_spark import regime
 
 
 class Direction(enum.Enum):
@@ -42,9 +55,10 @@ class Direction(enum.Enum):
 
 
 def _frontier_ids(frontier: DataFrame) -> DataFrame:
-    """Normalize a frontier to a distinct single-column (id) DataFrame."""
+    """Normalize a frontier to a single-column (id) DataFrame; ids may
+    repeat."""
     col = "id" if "id" in frontier.columns else frontier.columns[0]
-    return frontier.select(F.col(col).alias("id")).dropDuplicates(["id"])
+    return frontier.select(F.col(col).alias("id"))
 
 
 def traverse(
@@ -64,13 +78,13 @@ def traverse(
     regardless of direction, matching the reference's vMap orientation.
 
     Duplicate (src, dst) pairs cannot arise within one direction (one edge
-    per (src,dst,label), TorcGraph.java:74-78); for BOTH the two orientations
-    are unioned and then deduped per (src, dst), matching the reference's
-    per-call dedup map (TorcGraph.java:538-571).
+    per (src,dst,label), TorcGraph.java:74-78, and a semi join emits each
+    edge once however often the frontier repeats its id); for BOTH the two
+    orientations are unioned and then deduped per (src, dst), matching the
+    reference's per-call dedup map (TorcGraph.java:538-571).
     """
     ids = _frontier_ids(frontier)
-    if broadcast_frontier:
-        ids = F.broadcast(ids)
+    ids = F.broadcast(ids) if broadcast_frontier else ids.dropDuplicates(["id"])
 
     e = edges.where(F.col("label") == edge_label)
 
@@ -83,6 +97,10 @@ def traverse(
         cols = [F.col(src_col).alias("src"), F.col(dst_col).alias("dst")]
         if fill_edge:
             cols.append(F.col("props").alias("props"))
+        if broadcast_frontier:
+            return h.join(ids, h[src_col] == ids["id"], "left_semi").select(*cols)
+        if regime.broadcast_fits(h):
+            h = F.broadcast(h)
         return ids.join(h, ids["id"] == h[src_col], "inner").select(*cols)
 
     if direction == Direction.OUT:
@@ -161,8 +179,10 @@ def khop(
     friend queries run (SURVEY §3.2). Each hop localCheckpoints the frontier
     to truncate lineage (SURVEY §7.4 'iterative plan growth'), the #1
     Spark-specific scaling risk for iterative traversals."""
-    cur = _frontier_ids(frontier)
-    for i in range(k):
+    if k == 0:
+        return _frontier_ids(frontier).dropDuplicates(["id"])
+    cur = frontier
+    for _ in range(k):
         tr = traverse(cur, edges, edge_label, direction,
                       neighbor_labels=neighbor_labels)
         cur = v_set(tr)
