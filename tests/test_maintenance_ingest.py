@@ -44,6 +44,35 @@ def test_compact_preserves_sort_layout(spark, tmp_path, sf_dir):
         assert vals == sorted(vals)
 
 
+def test_compact_partitioned_table_in_place(spark, tmp_path):
+    """Each partition directory is compacted in place: the partition
+    column stays a directory, with its type and its pruning."""
+    import glob
+    import os
+
+    path = str(tmp_path / "parts")
+    spark.range(3000).select(
+        F.col("id"), (F.col("id") % 3 + 1).cast("string").alias("day")
+    ).repartition(8).write.partitionBy("day").parquet(path)
+
+    def layout():
+        return {os.path.basename(d): len(glob.glob(f"{d}/*.parquet"))
+                for d in glob.glob(f"{path}/day=*")}
+
+    before = layout()
+    schema = spark.read.parquet(path).schema
+    rows = sorted(spark.read.parquet(path).collect())
+    compact_files(spark, path)
+    after = layout()
+    assert set(after) == set(before) == {"day=1", "day=2", "day=3"}
+    assert all(after[d] < before[d] for d in after)
+    back = spark.read.parquet(path)
+    assert back.schema == schema
+    assert sorted(back.collect()) == rows
+    plan = back.where("day = '1'")._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters: [" in plan and "PartitionFilters: []" not in plan
+
+
 def test_ingest_documents_jsonl_and_csv(spark, tmp_path, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "source", "lang", "n_chars", "text"

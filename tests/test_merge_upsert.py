@@ -1,9 +1,14 @@
-"""merge_upsert: partition-scoped MERGE semantics — updates win on key,
-new keys append, untouched partitions' files are left physically alone."""
+"""merge_upsert: MERGE semantics — updates win on key, new keys append —
+and its file-level write: a file the batch's keys cannot hit is left
+physically alone, the batch is evaluated once, and small files fold."""
 
 import glob
+import math
 import os
 import threading
+
+import pytest
+from pyspark.sql import functions as F
 
 from torcdb_spark.sources.maintenance import merge_upsert
 
@@ -54,7 +59,7 @@ def test_merge_upsert_leaves_untouched_partitions_alone(spark, tmp_path):
     assert after == before
     for f in after:
         assert os.path.getmtime(f) == mtimes[f]
-    # the dynamic mode is a per-write option; the session conf is untouched
+    # the merge writes files itself; the session conf is untouched
     assert spark.conf.get(
         "spark.sql.sources.partitionOverwriteMode", "static"
     ) != "dynamic"
@@ -112,16 +117,17 @@ def test_merge_upsert_concurrent_threads(spark, tmp_path):
     ) != "dynamic"
 
 
-def test_merge_upsert_runs_at_most_four_jobs(spark, tmp_path, jobs_of):
-    """Batch partition values, base schema, broadcast keys, the write: no
-    count, and no shuffle to find the touched partitions."""
+def test_merge_upsert_runs_at_most_three_jobs(spark, tmp_path, jobs_of):
+    """The batch's (partition, key) collect, the key broadcast and the
+    write: no count, no schema inference, no shuffle to find the touched
+    partitions."""
     path = str(tmp_path / "tbl4")
     _mk_base(spark, path)
     updates = spark.createDataFrame(
         [(2, "2024-01-01", 99.0)], "k long, day string, v double"
     )
     _, jobs = jobs_of(lambda: merge_upsert(spark, path, updates, ["k"], "day"))
-    assert 1 <= jobs <= 4
+    assert 1 <= jobs <= 3
     assert _rows(spark, path)[2] == ("2024-01-01", 99.0)
 
 
@@ -138,3 +144,167 @@ def test_merge_upsert_does_not_grow_file_count(spark, tmp_path):
         merge_upsert(spark, path, updates, ["k"], "day")
     assert len(glob.glob(f"{path}/day=2024-01-01/*.parquet")) == 1
     assert len(_rows(spark, path)) == 4 + 4
+
+
+def _files(path, part):
+    """path -> (size, mtime) of every data file of one partition."""
+    return {f: (os.stat(f).st_size, os.stat(f).st_mtime_ns)
+            for f in glob.glob(f"{path}/{part}/*.parquet")}
+
+
+def _mk_large_base(spark, path):
+    """One 1000-row file holding keys 0..999 of day=2024-01-01: large
+    enough that a 2-row batch's fold does not reach it."""
+    spark.range(1000).select(
+        F.col("id").alias("k"), F.lit("2024-01-01").alias("day"),
+        F.col("id").cast("double").alias("v"),
+    ).coalesce(1).write.partitionBy("day").parquet(path)
+
+
+def test_merge_upsert_leaves_files_outside_key_range_alone(spark, tmp_path):
+    path = str(tmp_path / "range")
+    _mk_large_base(spark, path)
+    base = _files(path, "day=2024-01-01")
+    updates = spark.createDataFrame(
+        [(5000, "2024-01-01", 1.0), (5001, "2024-01-01", 2.0)],
+        "k long, day string, v double",
+    )
+    stats = merge_upsert(spark, path, updates, ["k"], "day")
+    assert stats["replaced_files"] == []
+    after = _files(path, "day=2024-01-01")
+    assert {f: after[f] for f in base} == base  # same path, size and mtime
+    assert set(after) - set(base) == set(stats["written_files"])
+    rows = _rows(spark, path)
+    assert len(rows) == 1002 and rows[5001] == ("2024-01-01", 2.0)
+
+
+def test_merge_upsert_rewrites_the_file_an_update_hits(spark, tmp_path):
+    """An update to a key an earlier merge wrote replaces that merge's
+    file, and the key is held once, with the new value."""
+    path = str(tmp_path / "hit")
+    _mk_large_base(spark, path)
+    base = _files(path, "day=2024-01-01")
+    first = merge_upsert(spark, path, spark.createDataFrame(
+        [(5000, "2024-01-01", 1.0)], "k long, day string, v double"),
+        ["k"], "day")
+    second = merge_upsert(spark, path, spark.createDataFrame(
+        [(5000, "2024-01-01", 7.0)], "k long, day string, v double"),
+        ["k"], "day")
+    assert second["replaced_files"] == first["written_files"]
+    assert not any(os.path.exists(f) for f in first["written_files"])
+    after = _files(path, "day=2024-01-01")
+    assert {f: after[f] for f in base} == base
+    got = spark.read.parquet(path).where("k = 5000").collect()
+    assert [r["v"] for r in got] == [7.0]
+
+
+def test_merge_upsert_evaluates_the_batch_once(spark, tmp_path):
+    """A key column made by a Python UDF counts its evaluations in an
+    accumulator: the collect, the key broadcast and the write all read one
+    cached evaluation of the batch."""
+    path = str(tmp_path / "once")
+    _mk_base(spark, path)
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def key(i):
+        calls.add(1)
+        return i
+
+    updates = spark.range(2, 8).select(
+        key(F.col("id")).alias("k"), F.lit("2024-01-01").alias("day"),
+        F.lit(5.0).alias("v"),
+    )
+    merge_upsert(spark, path, updates, ["k"], "day")
+    assert calls.value == 6
+    rows = _rows(spark, path)
+    assert len(rows) == 7 and rows[2] == ("2024-01-01", 5.0)
+
+
+def test_merge_upsert_matches_keys_across_partitions(spark, tmp_path):
+    """With the partition column outside the key, a key moved to another
+    touched partition leaves its old partition."""
+    path = str(tmp_path / "across")
+    _mk_base(spark, path)
+    merge_upsert(spark, path, spark.createDataFrame(
+        [(3, "2024-01-01", 33.0), (9, "2024-01-02", 90.0)],
+        "k long, day string, v double"), ["k"], "day")
+    rows = spark.read.parquet(path).collect()
+    assert sorted((r["k"], str(r["day"]), r["v"]) for r in rows) == [
+        (1, "2024-01-01", 10.0), (2, "2024-01-01", 20.0),
+        (3, "2024-01-01", 33.0), (4, "2024-01-03", 40.0),
+        (9, "2024-01-02", 90.0),
+    ]
+
+
+def _pairs(spark, path, fmt="parquet"):
+    return sorted(
+        (repr(r["k"]), r["v"]) for r in spark.read.format(fmt).load(path).collect()
+    )
+
+
+@pytest.mark.parametrize("schema, base, batch, want", [
+    # a NULL key matches nothing, as in the anti-join: the NULL-keyed row
+    # is kept and the batch's NULL-keyed row is added
+    ("k long, day string, v double",
+     [(None, "d", 1.0), (1, "d", 2.0)], [(None, "d", 3.0), (1, "d", 4.0)],
+     [("1", 4.0), ("None", 1.0), ("None", 3.0)]),
+    # Spark's join matches NaN to NaN, so a NaN key replaces its row
+    ("k double, day string, v double",
+     [(float("nan"), "d", 1.0), (1.0, "d", 2.0)], [(float("nan"), "d", 3.0)],
+     [("1.0", 2.0), ("nan", 3.0)]),
+], ids=["null", "nan"])
+def test_merge_upsert_keys_no_footer_rules_out(spark, tmp_path, schema, base,
+                                               batch, want):
+    path = str(tmp_path / "tbl")
+    spark.createDataFrame(base, schema).coalesce(1) \
+        .write.partitionBy("day").parquet(path)
+    merge_upsert(spark, path, spark.createDataFrame(batch, schema), ["k"], "day")
+    assert _pairs(spark, path) == want
+
+
+def test_merge_upsert_binary_key(spark, tmp_path):
+    """The graph's case: binary ids. A key above the file's byte range
+    leaves it alone; a key inside it replaces its row."""
+    path = str(tmp_path / "binary")
+    schema = "k binary, day string, v double"
+    spark.createDataFrame(
+        [(b"\x00\x01", "d", 1.0), (b"\x00\x05", "d", 2.0)], schema
+    ).coalesce(1).write.partitionBy("day").parquet(path)
+    first = merge_upsert(spark, path, spark.createDataFrame(
+        [(b"\xff", "d", 3.0)], schema), ["k"], "day")
+    assert first["replaced_files"] == []
+    merge_upsert(spark, path, spark.createDataFrame(
+        [(b"\x00\x05", "d", 4.0)], schema), ["k"], "day")
+    assert _pairs(spark, path) == [
+        ("b'\\x00\\x01'", 1.0), ("b'\\x00\\x05'", 4.0), ("b'\\xff'", 3.0)]
+
+
+def test_merge_upsert_orc_rewrites_every_touched_file(spark, tmp_path):
+    path = str(tmp_path / "orc")
+    schema = "k long, day string, v double"
+    spark.createDataFrame(
+        [(1, "a", 1.0), (2, "a", 2.0), (3, "b", 3.0)], schema
+    ).write.partitionBy("day").orc(path)
+    touched = sorted(f for f in glob.glob(f"{path}/day=a/*.orc"))
+    untouched = sorted(glob.glob(f"{path}/day=b/*.orc"))
+    stats = merge_upsert(spark, path, spark.createDataFrame(
+        [(9, "a", 9.0)], schema), ["k"], "day", fmt="orc")
+    assert sorted(stats["replaced_files"]) == touched
+    assert sorted(glob.glob(f"{path}/day=b/*.orc")) == untouched
+    assert _pairs(spark, path, "orc") == [
+        ("1", 1.0), ("2", 2.0), ("3", 3.0), ("9", 9.0)]
+
+
+def test_merge_upsert_folds_small_files(spark, tmp_path):
+    """16 merges of disjoint keys into one partition: no merge hits an
+    earlier file, and the size-tiered fold keeps the partition at
+    O(log merges) files."""
+    path = str(tmp_path / "fold")
+    _mk_base(spark, path)
+    for i in range(16):
+        merge_upsert(spark, path, spark.createDataFrame(
+            [(100 + 2 * i, "2024-01-01", 1.0), (101 + 2 * i, "2024-01-01", 2.0)],
+            "k long, day string, v double"), ["k"], "day")
+    assert len(glob.glob(f"{path}/day=2024-01-01/*.parquet")) <= 1 + math.log2(16)
+    assert len(_rows(spark, path)) == 4 + 32

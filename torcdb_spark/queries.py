@@ -10517,12 +10517,12 @@ def wr1_upsert_census(spark: SparkSession, sf_dir: str) -> DataFrame:
        the census re-reads label counts AND the new vertices' props
        through the written graph, proving the append and the
        one-edge-per-(src,dst,label) invariant survived.
-    2. merge_upsert (sources/maintenance.py:74): the orders table is
+    2. merge_upsert (sources/maintenance.py): the orders table is
        laid out partitioned by o_orderpriority under a scratch dir,
        then a mixed batch — 100 key-updates (+1000.00 each) and 50
-       brand-new keys — is MERGEd with dynamic partition overwrite;
-       the census re-reads the merged table and emits latest-wins row
-       counts and integer-cents sums.
+       brand-new keys — is MERGEd, rewriting the files its keys can
+       hit; the census re-reads the merged table and emits latest-wins
+       row counts and integer-cents sums.
 
     Every census value is a BIGINT derived from fixture data, so the
     DuckDB oracle reproduces the exact post-write state with no float

@@ -378,14 +378,16 @@ def apply_cdc_stream(
 ):
     """Streaming CDC apply: drain a change feed into a partitioned parquet
     table via per-micro-batch MERGE (sources/maintenance.py merge_upsert
-    — latest-wins on key, only touched partitions rewritten).
+    — latest-wins on key, only the files the batch's keys can hit, plus
+    the small files it folds, rewritten).
 
     This composes the two batch/streaming halves the engine already
     verifies separately: the kafka-shaped decode/dedup path produces the
-    change rows; merge_upsert gives partition-scoped upsert semantics.
+    change rows; merge_upsert gives latest-wins upsert semantics.
     Idempotence story: a replayed micro-batch re-merges the same rows —
-    latest-wins makes the rewrite byte-identical, so failure between
-    partition write and offset commit cannot double-apply (the same
+    latest-wins leaves the table with identical rows (not identical
+    files: the replay writes new ones), so failure between the merge and
+    the offset commit cannot double-apply (the same
     contract maintain_rollup documents; manifest-level atomicity is what
     a table format would add).
 
