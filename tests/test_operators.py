@@ -2807,6 +2807,36 @@ def test_phash_pairs_match_bruteforce(spark):
     assert got == expected
 
 
+def test_cell_assignment_keeps_double_precision(spark):
+    """An array<double> column keeps its precision through the cosine cell
+    assignment of ivf_topk and semantic_dedup. The pair's cosine is
+    0.9495: 0.95 at three decimals, 0.949 once narrowed to float. With
+    one cell and one probe IVF is exact, so it must score like brute
+    force, and dedup at 0.95 must group the pair."""
+    import math
+
+    from torcdb_spark.operators.similarity import (
+        cosine_topk_bruteforce,
+        ivf_topk,
+        semantic_dedup,
+    )
+
+    t = math.acos(0.9495)
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [math.cos(t), math.sin(t)])],
+        "vec_id long, embedding array<double>",
+    )
+    exact = sorted(tuple(r) for r in cosine_topk_bruteforce(df, df, k=1).collect())
+    assert exact == [(0, 1, 0.95, 1), (1, 0, 0.95, 1)]
+    ivf = ivf_topk(df, df, k=1, num_centroids=1, nprobe=1)
+    assert sorted(tuple(r) for r in ivf.collect()) == exact
+    dedup = semantic_dedup(df, threshold=0.95, num_cells=1)
+    assert {r.vec_id: (r.rep_id, r.kept) for r in dedup.collect()} == {
+        0: (0, True),
+        1: (0, False),
+    }
+
+
 def test_semantic_dedup_matches_bruteforce(spark):
     import numpy as np
 

@@ -1,30 +1,222 @@
-"""Approximate-nearest-neighbor / similarity search over embedding columns.
+"""Similarity search, near-duplicate detection and k-means over
+embedding columns.
 
-Two tiers:
+The operators fall into four groups:
 
-- ``cosine_topk_bruteforce``: query set × corpus scored with JVM-side
-  higher-order functions, per-query top-k via a window. Correctness
-  baseline; the query side must be small (it is broadcast). Cost is
-  O(|Q|·|corpus|) but fully partition-parallel with NO shuffle of the
-  corpus — at 100 TB this is the right shape for small query batches.
-- ``cosine_topk_lsh``: random-hyperplane LSH — bucket corpus and queries by
-  sign-bit sketches, only score within matching buckets. Sub-linear
-  candidate generation for large query sets; recall tunable via
-  (num_bits, num_tables).
+- candidate generation + top-k: brute force (``cosine_topk_bruteforce``,
+  ``cosine_topk_quantized``, ``hard_negative_mining``), LSH
+  (``cosine_topk_lsh``, ``lsh_rademacher_topk``), IVF (``ivf_topk``,
+  ``ivf_topk_exact_cells``) and PQ (``pq_topk``, ``pq_adc_exact``);
+- near-duplicates: ``cosine_near_dup_pairs`` (blocked all-pairs) and
+  ``semantic_dedup`` (within-cell pairs + connected components);
+- diversification and statistics: ``mmr_rerank`` (+ its SQL oracle),
+  ``embedding_moments``, ``embedding_pca``;
+- integer-exact training: ``kmeans_lloyd_quantized``.
 
-Deterministic hyperplanes are derived from xxhash64 of (table, bit, dim) —
-no RNG state, so results are reproducible across runs and cluster sizes.
+They share five private pieces instead of per-operator copies:
+
+- ``_scan``: broadcast queries × corpus, the brute-force candidate set
+  (the corpus never shuffles);
+- ``_score``: drop self-pairs, score by rounded cosine (or a given score
+  column), optionally dedup pairs that several buckets or cells produced;
+- ``_rank``: per-query top-k on (score desc, neighbor asc), so output is
+  deterministic and oracle-comparable;
+- ``_cosine_cells`` + ``_nearest_cells``: the float cosine k-means
+  trainer and nearest-cell assigner of ``ivf_topk`` and
+  ``semantic_dedup``;
+- ``_quantize`` + ``_d2``: the floor(x·scale) BIGINT grid and the
+  integer squared-L2 fold of the hash-checkable operators.
+
+``_block_pairs`` is the numpy block-gram kernel of both near-duplicate
+operators. Two trainers stay separate: ``pq_topk``'s per-subspace L2
+codebooks and the integer ``kmeans_lloyd_quantized``.
+
+Everything is deterministic without RNG state: seeds are xxhash64
+buckets of the ids and hyperplanes are md5 of (table, bit, dim), so
+results reproduce across runs and cluster sizes.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd  # module-level: pandas_udf resolves stringified type hints
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from torcdb_spark.functions.vector import cosine_similarity
 from torcdb_spark.operators.topk import topk_per_group
+
+
+def _scan(
+    queries: DataFrame,
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    qid: str = "query_id",
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Broadcast queries × corpus → (qid, _qv, neighbor_id, _cv), plus
+    ``_q<c>``/``_c<c>`` for each carried column c. O(|Q|·|corpus|) but
+    partition-parallel with no shuffle of the corpus: the right shape for
+    small query batches at any corpus size."""
+
+    def side(df: DataFrame, key: str, p: str) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias(key),
+            F.col(vec_col).alias(f"_{p}v"),
+            *(F.col(c).alias(f"_{p}{c}") for c in carry),
+        )
+
+    return F.broadcast(side(queries, qid, "q")).crossJoin(
+        side(corpus, "neighbor_id", "c")
+    )
+
+
+def _score(
+    pairs: DataFrame,
+    decimals: int = 3,
+    dedup: bool = False,
+    qid: str = "query_id",
+    score: Column | None = None,
+) -> DataFrame:
+    """Candidate pairs → (qid, neighbor_id, score) without self-pairs.
+    The score is cosine(_qv, _cv) rounded to ``decimals`` unless a
+    ``score`` column is given; ``dedup`` keeps one row per pair that
+    several buckets or cells produced."""
+    if score is None:
+        score = F.round(cosine_similarity(F.col("_qv"), F.col("_cv")), decimals)
+    out = pairs.where(F.col(qid) != F.col("neighbor_id")).select(
+        qid, "neighbor_id", score.alias("score")
+    )
+    return out.dropDuplicates([qid, "neighbor_id"]) if dedup else out
+
+
+def _rank(
+    scored: DataFrame,
+    k: int,
+    qid: str = "query_id",
+    score: str = "score",
+    rnk: str = "rnk",
+) -> DataFrame:
+    """Per-query top-k on (score desc, neighbor_id asc): ties on the
+    rounded score break by id, so the output is deterministic."""
+    return topk_per_group(
+        scored, [qid], [F.desc(score), F.asc("neighbor_id")], k, rnk
+    )
+
+
+def _unit(mat):
+    """Rows of a float matrix scaled to unit L2 norm (zero rows stay 0)."""
+    return mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+
+
+def _quantize(vec: Column, scale: int) -> Column:
+    """floor(x·scale) BIGINT grid of an array column: exact integers
+    that any engine reproduces."""
+    return F.transform(
+        vec.cast("array<double>"), lambda x: F.floor(x * scale).cast("long")
+    )
+
+
+def _d2(a: Column, b: Column) -> Column:
+    """Integer squared L2 distance of two BIGINT arrays, a left fold
+    from 0L (order-exact, so an SQL oracle replays it)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+
+
+def _block_pairs(blocks, threshold: float, decimals: int) -> pd.DataFrame:
+    """The numpy block-gram kernel → (id_a < id_b, score) of every pair
+    whose rounded cosine is ≥ threshold, over ``(rows_a, rows_b, same)``
+    block pairs of (_id, _v) rows: one matmul per block pair, only
+    qualifying pairs emitted. ``same`` marks a block against itself, which
+    holds each unordered pair twice, so only its upper triangle counts.
+    One list passed as both sides is multiplied by its own transpose,
+    which numpy may compute with its symmetric routine rather than as the
+    product of two equal copies; the last bit can differ, so each caller
+    keeps the form its pinned results were computed with."""
+    out = []
+    for rows_a, rows_b, same in blocks:
+        ids_a = np.array([r["_id"] for r in rows_a], dtype=np.int64)
+        ma = np.asarray([r["_v"] for r in rows_a], dtype=np.float64)
+        ids_b, mb = (ids_a, ma) if rows_b is rows_a else (
+            np.array([r["_id"] for r in rows_b], dtype=np.int64),
+            np.asarray([r["_v"] for r in rows_b], dtype=np.float64),
+        )
+        denom = np.outer(np.linalg.norm(ma, axis=1), np.linalg.norm(mb, axis=1))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            scores = np.where(denom > 0, (ma @ mb.T) / denom, 0.0)
+        scores = np.round(scores, decimals)
+        hit = scores >= threshold
+        if same:
+            hit &= ids_a[:, None] < ids_b[None, :]
+        ii, jj = np.nonzero(hit)
+        # blocks are disjoint, so each unordered pair appears in exactly
+        # one block pair; (lo, hi) canonicalizes it
+        out.append((
+            np.minimum(ids_a[ii], ids_b[jj]),
+            np.maximum(ids_a[ii], ids_b[jj]),
+            scores[ii, jj],
+        ))
+    lo, hi, sc = (np.concatenate(c) for c in zip(*out)) if out else ([], [], [])
+    return pd.DataFrame({"id_a": lo, "id_b": hi, "score": sc})
+
+
+def _nearest_cells(df: DataFrame, cents: DataFrame, n_near: int = 1) -> DataFrame:
+    """(_id, _v) → (_id, _v, _c): each row once for each of its ``n_near``
+    nearest cells by cosine to the centroids of the packed row ``cents``
+    (broadcast, no driver collect). ``_v`` keeps the input's type."""
+
+    def assign(batches):
+        for pdf in batches:
+            cen = pdf["_cents"].iloc[0]
+            cids = np.array([c["_c"] for c in cen], dtype=np.int64)
+            cm = _unit(np.asarray([c["_mean"] for c in cen], dtype=np.float64))
+            mat = _unit(np.asarray(pdf["_v"].tolist(), dtype=np.float64))
+            # stable: a tie goes to the first centroid, as argmax does
+            order = np.argsort(-(mat @ cm.T), axis=1, kind="stable")[:, :n_near]
+            yield pd.DataFrame({
+                "_id": np.repeat(pdf["_id"].to_numpy(), n_near),
+                "_v": [v for v in pdf["_v"] for _ in range(n_near)],
+                "_c": cids[order].ravel(),
+            })
+
+    vtype = df.schema["_v"].dataType.simpleString()
+    return df.crossJoin(F.broadcast(cents)).mapInPandas(
+        assign, f"_id long, _v {vtype}, _c long"
+    )
+
+
+def _cosine_cells(base: DataFrame, num_cells: int, iters: int) -> DataFrame:
+    """Cosine k-means over (_id, _v) → ONE packed row ``_cents`` of cell
+    means. Deterministic seeding (the means of xxhash64 buckets of the
+    ids, no random init, so runs reproduce across partitionings), then
+    ``iters`` Lloyd rounds: a nearest-cell assignment plus a groupBy-mean
+    over at most ``num_cells`` keys each. The packed row is tiny, so the
+    eager localCheckpoint per round just truncates plan lineage."""
+
+    def bucket_mean(pdf: pd.DataFrame) -> pd.DataFrame:
+        m = np.asarray(pdf["_v"].tolist(), dtype=np.float64).mean(axis=0)
+        return pd.DataFrame({"_c": [int(pdf["_c"].iloc[0])], "_mean": [m.tolist()]})
+
+    def pack(assigned: DataFrame) -> DataFrame:
+        return (
+            assigned.groupBy("_c")
+            .applyInPandas(bucket_mean, "_c long, _mean array<double>")
+            .groupBy()
+            .agg(F.collect_list(F.struct("_c", "_mean")).alias("_cents"))
+        )
+
+    cents = pack(
+        base.withColumn("_c", F.pmod(F.xxhash64(F.col("_id")), F.lit(num_cells)))
+    )
+    for _ in range(iters):
+        cents = pack(_nearest_cells(base, cents)).localCheckpoint(eager=True)
+    return cents
 
 
 def cosine_topk_bruteforce(
@@ -35,32 +227,14 @@ def cosine_topk_bruteforce(
     vec_col: str = "embedding",
     score_decimals: int = 3,
 ) -> DataFrame:
-    """Exact cosine top-k: (query_id, neighbor_id, score), excluding self.
+    """Exact cosine top-k: (query_id, neighbor_id, score, rnk), excluding
+    self. The correctness baseline; the query side must be small (it is
+    broadcast into the corpus scan).
 
     Ties broken by neighbor id after rounding the score, so output is
     deterministic and oracle-comparable.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
-    )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine_similarity(F.col("_qv"), F.col("_cv")), score_decimals).alias(
-                "score"
-            ),
-        )
-    )
-    return topk_per_group(
-        scored, ["query_id"], [F.desc("score"), F.asc("neighbor_id")], k
-    ).select("query_id", "neighbor_id", "score", "rnk")
+    return _rank(_score(_scan(queries, corpus, id_col, vec_col), score_decimals), k)
 
 
 def cosine_near_dup_pairs(
@@ -86,9 +260,6 @@ def cosine_near_dup_pairs(
     for 2M pairs at sf0.1 vs ~2s for this form. All-pairs is still O(N²)
     by definition — at corpus scale, LSH-block candidates first
     (``cosine_topk_lsh``) and apply this exact scoring within buckets."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf  # noqa: F401  (doc link)
-
     packed = (
         vectors.select(
             F.col(id_col).alias("_id"),
@@ -108,39 +279,9 @@ def cosine_near_dup_pairs(
 
     def score_blocks(batches):
         for pdf in batches:
-            out_a, out_b, out_s = [], [], []
-            for rows_a, rows_b, same in zip(
-                pdf["rows_a"], pdf["rows_b"], pdf["blk_a"] == pdf["blk_b"]
-            ):
-                ids_a = np.array([r["_id"] for r in rows_a], dtype=np.int64)
-                ids_b = np.array([r["_id"] for r in rows_b], dtype=np.int64)
-                ma = np.asarray([r["_v"] for r in rows_a], dtype=np.float64)
-                mb = np.asarray([r["_v"] for r in rows_b], dtype=np.float64)
-                na = np.linalg.norm(ma, axis=1)
-                nb = np.linalg.norm(mb, axis=1)
-                denom = np.outer(na, nb)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    scores = np.where(denom > 0, (ma @ mb.T) / denom, 0.0)
-                scores = np.round(scores, score_decimals)
-                hit = scores >= threshold
-                if same:
-                    # A == B: the matrix holds each unordered pair twice —
-                    # keep the upper triangle only
-                    hit &= ids_a[:, None] < ids_b[None, :]
-                ii, jj = np.nonzero(hit)
-                lo = np.minimum(ids_a[ii], ids_b[jj])
-                hi = np.maximum(ids_a[ii], ids_b[jj])
-                # blocks are disjoint, so each unordered pair appears in
-                # exactly one block-pair task; (lo, hi) canonicalizes it
-                out_a.append(lo)
-                out_b.append(hi)
-                out_s.append(scores[ii, jj])
-            yield pd.DataFrame(
-                {
-                    "id_a": np.concatenate(out_a) if out_a else [],
-                    "id_b": np.concatenate(out_b) if out_b else [],
-                    "score": np.concatenate(out_s) if out_s else [],
-                }
+            yield _block_pairs(
+                zip(pdf["rows_a"], pdf["rows_b"], pdf["blk_a"] == pdf["blk_b"]),
+                threshold, score_decimals,
             )
 
     return block_pairs.mapInPandas(
@@ -173,7 +314,6 @@ def _sketch_all_tables_udf(num_bits: int, num_tables: int, dim: int):
     higher-order-function lambdas are evaluated interpreted (no codegen),
     so at 4 tables × 8 bits the JVM form did 32 interpreted array folds per
     row; the numpy form is two vectorized ops per batch."""
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     planes = np.array(
@@ -216,38 +356,20 @@ def cosine_topk_lsh(
     increase num_tables for higher recall."""
     sketcher = _sketch_all_tables_udf(num_bits, num_tables, dim)
 
-    def bucketize(df: DataFrame, role: str) -> DataFrame:
+    def bucketize(df: DataFrame, key: str, v: str) -> DataFrame:
         # one scan + one UDF pass; posexplode fans out to (table, sketch)
         # rows — vs the earlier num_tables-way self-union that re-scanned
         # and re-sketched the input once per table
-        sk = df.select(
-            F.col(id_col).alias(f"{role}_id"),
-            F.col(vec_col).alias(f"_{role}v"),
+        return df.select(
+            F.col(id_col).alias(key),
+            F.col(vec_col).alias(v),
             sketcher(F.col(vec_col)).alias("_sks"),
-        )
-        return sk.select(
-            f"{role}_id",
-            f"_{role}v",
-            F.posexplode(F.col("_sks")).alias("table", "sketch"),
-        )
+        ).select(key, v, F.posexplode("_sks").alias("table", "sketch"))
 
-    cq = bucketize(queries, "query")
-    cc = bucketize(corpus, "neighbor")
-    cand = (
-        cq.join(cc, ["table", "sketch"])
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine_similarity(F.col("_queryv"), F.col("_neighborv")), 3).alias(
-                "score"
-            ),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
+    cand = bucketize(queries, "query_id", "_qv").join(
+        bucketize(corpus, "neighbor_id", "_cv"), ["table", "sketch"]
     )
-    return topk_per_group(
-        cand, ["query_id"], [F.desc("score"), F.asc("neighbor_id")], k
-    ).select("query_id", "neighbor_id", "score", "rnk")
+    return _rank(_score(cand, dedup=True), k)
 
 
 def ivf_topk(
@@ -280,91 +402,20 @@ def ivf_topk(
     Lloyd iterations cost one corpus pass each (run them on a sample for
     build speed), the assignment join shuffles on centroid id, and cells
     are written partitioned by centroid for probe-side partition pruning."""
-    import numpy as np
+    base = corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+    cents = _cosine_cells(base, num_centroids, kmeans_iters)
 
-    # deterministic seed partition → centroid means, packed into one row
-    seeded = corpus.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(num_centroids)).alias("_c"),
-    )
-    def bucket_mean(pdf):
-        m = np.asarray(pdf["_v"].tolist(), dtype=np.float64).mean(axis=0)
-        return pd.DataFrame({"_c": [int(pdf["_c"].iloc[0])], "_mean": [m.tolist()]})
-
-    def pack(assigned: DataFrame) -> DataFrame:
-        """(_id, _v, _c) → one packed centroid row (cell means)."""
-        return (
-            assigned.groupBy("_c")
-            .applyInPandas(bucket_mean, "_c long, _mean array<double>")
-            .groupBy()
-            .agg(F.collect_list(F.struct("_c", "_mean")).alias("_cents"))
+    def cells(df: DataFrame, n_near: int, key: str, v: str) -> DataFrame:
+        return _nearest_cells(df, cents, n_near).select(
+            F.col("_id").alias(key), F.col("_v").alias(v), "_c"
         )
 
-    cents = pack(seeded)
-
-    def nearest(df: DataFrame, role: str, n_near: int) -> DataFrame:
-        """(id, vec, centroid) with the n_near best centroids exploded."""
-        packed = df.crossJoin(F.broadcast(cents))
-
-        def assign(batches):
-            for pdf in batches:
-                cen = pdf["_cents"].iloc[0]
-                cids = np.array([c["_c"] for c in cen], dtype=np.int64)
-                cm = np.asarray([c["_mean"] for c in cen], dtype=np.float64)
-                cm = cm / np.maximum(np.linalg.norm(cm, axis=1, keepdims=True), 1e-12)
-                mat = np.asarray(pdf["_v"].tolist(), dtype=np.float64)
-                mat_n = mat / np.maximum(
-                    np.linalg.norm(mat, axis=1, keepdims=True), 1e-12
-                )
-                sims = mat_n @ cm.T  # (n, C)
-                order = np.argsort(-sims, axis=1)[:, :n_near]
-                ids = pdf["_id"].to_numpy()
-                yield pd.DataFrame(
-                    {
-                        "_id": np.repeat(ids, n_near),
-                        "_v": [v for v in pdf["_v"] for _ in range(n_near)],
-                        "_cell": cids[order].ravel(),
-                    }
-                )
-
-        return packed.mapInPandas(assign, "_id long, _v array<float>, _cell long").select(
-            F.col("_id").alias(f"{role}_id"),
-            F.col("_v").alias(f"_{role}v"),
-            "_cell",
-        )
-
-    # Lloyd refinement: reassign → remean; the packed row is tiny, so the
-    # eager localCheckpoint per iteration just truncates plan lineage
-    for _ in range(kmeans_iters):
-        assigned = nearest(seeded.select("_id", "_v"), "x", 1).select(
-            F.col("x_id").alias("_id"),
-            F.col("_xv").alias("_v"),
-            F.col("_cell").alias("_c"),
-        )
-        cents = pack(assigned).localCheckpoint(eager=True)
-
-    cells = nearest(seeded.select("_id", "_v"), "neighbor", 1)
-    probes = nearest(
+    probes = cells(
         queries.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")),
-        "query", nprobe,
+        nprobe, "query_id", "_qv",
     )
-    cand = (
-        probes.join(cells, "_cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                cosine_similarity(F.col("_queryv"), F.col("_neighborv")),
-                score_decimals,
-            ).alias("score"),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    return topk_per_group(
-        cand, ["query_id"], [F.desc("score"), F.asc("neighbor_id")], k
-    ).select("query_id", "neighbor_id", "score", "rnk")
+    cand = probes.join(cells(base, 1, "neighbor_id", "_cv"), "_c")
+    return _rank(_score(cand, score_decimals, dedup=True), k)
 
 
 def quantize_unit_vectors(
@@ -409,30 +460,18 @@ def cosine_topk_quantized(
     integer dot product over 4×-smaller data; at 100 TB this is the
     scan-path variant that stays memory-bandwidth-bound instead of
     FLOP-bound. Recall vs the exact operator is pytest-asserted."""
-    qz = quantize_unit_vectors(queries, vec_col)
-    cz = quantize_unit_vectors(corpus, vec_col)
-    q = qz.select(F.col(id_col).alias("query_id"), F.col("qvec").alias("_qv"))
-    c = cz.select(F.col(id_col).alias("neighbor_id"), F.col("qvec").alias("_cv"))
+    pairs = _scan(
+        quantize_unit_vectors(queries, vec_col),
+        quantize_unit_vectors(corpus, vec_col),
+        id_col, "qvec",
+    )
     idot = F.aggregate(
         F.zip_with(F.col("_qv"), F.col("_cv"), lambda a, b: a * b),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(idot.cast("double") / (127.0 * 127.0), score_decimals).alias(
-                "score"
-            ),
-        )
-    )
-    return topk_per_group(
-        scored, ["query_id"], [F.desc("score"), F.asc("neighbor_id")], k
-    ).select("query_id", "neighbor_id", "score", "rnk")
+    score = F.round(idot.cast("double") / (127.0 * 127.0), score_decimals)
+    return _rank(_score(pairs, score=score), k)
 
 
 def pq_topk(
@@ -472,11 +511,6 @@ def pq_topk(
     m*k_sub centroids, which a small sample estimates as well as a full
     pass) while ENCODING still covers every vector.
     """
-    import numpy as np
-
-    def norm_rows(mat):
-        return mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-
     c = corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
     qn = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
     train = c
@@ -492,7 +526,7 @@ def pq_topk(
     )
 
     def sub_means(pdf: pd.DataFrame) -> pd.DataFrame:
-        mat = norm_rows(np.asarray(pdf["_v"].tolist(), dtype=np.float64))
+        mat = _unit(np.asarray(pdf["_v"].tolist(), dtype=np.float64))
         d_sub = mat.shape[1] // m_subspaces
         b = int(pdf["_b"].iloc[0])
         rows = []
@@ -519,7 +553,7 @@ def pq_topk(
         def encode(batches):
             for pdf in batches:
                 cm = unpack(pdf["_cents"].iloc[0])
-                mat = norm_rows(np.asarray(pdf["_v"].tolist(), dtype=np.float64))
+                mat = _unit(np.asarray(pdf["_v"].tolist(), dtype=np.float64))
                 d_sub = mat.shape[1] // m_subspaces
                 codes = np.empty((len(mat), m_subspaces), dtype=np.int64)
                 for s in range(m_subspaces):
@@ -592,7 +626,7 @@ def pq_topk(
                     "query_id": pdf["query_id"],
                     "_lut": [
                         (
-                            norm_rows(
+                            _unit(
                                 np.asarray([qv], dtype=np.float64)
                             )[0]
                             .reshape(m_subspaces, -1)[:, None, :]
@@ -633,28 +667,12 @@ def pq_topk(
             ).alias("_adc"),
         )
     )
-    shortlist = topk_per_group(
-        cand, ["query_id"], [F.desc("_adc"), F.asc("neighbor_id")],
-        k * rerank_factor, "_rk",
-    )
+    shortlist = _rank(cand, k * rerank_factor, score="_adc", rnk="_rk")
 
     # ---- exact re-rank of the shortlist --------------------------------
     cv = c.select(F.col("_id").alias("neighbor_id"), F.col("_v").alias("_cv"))
-    qv = qn.select("query_id", F.col("_qv").alias("_qvv"))
-    exact = (
-        shortlist.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                cosine_similarity(F.col("_qvv"), F.col("_cv")), score_decimals
-            ).alias("score"),
-        )
-    )
-    return topk_per_group(
-        exact, ["query_id"], [F.desc("score"), F.asc("neighbor_id")], k
-    ).select("query_id", "neighbor_id", "score", "rnk")
+    exact = shortlist.join(cv, "neighbor_id").join(F.broadcast(qn), "query_id")
+    return _rank(_score(exact, score_decimals), k)
 
 
 def semantic_dedup(
@@ -682,8 +700,8 @@ def semantic_dedup(
        accuracy-neutrally: duplicates at threshold 0.95 land in the same
        cell with overwhelming probability).
     2. within-cell exact pairs — per cell one numpy gram matrix emitting
-       cosine >= threshold pairs (the cell-bounded sibling of
-       cosine_near_dup_pairs; size num_cells ~ N/target so a cell fits an
+       cosine >= threshold pairs (cosine_near_dup_pairs's block kernel,
+       bounded by cells; size num_cells ~ N/target so a cell fits an
        executor, sub-block giant cells with that operator if needed).
     3. duplicate GROUPS, not just pairs — connected components over the
        pair graph (analytics.connected_components), so transitive chains
@@ -693,86 +711,22 @@ def semantic_dedup(
     At 100 TB: num_cells ~ N / 100k keeps cells executor-sized; stage 2's
     shuffle carries each vector exactly once (keyed by cell); stage 3 runs
     on the pair graph only, which duplicate-rate-bounds it far below N."""
-    import numpy as np
-
     from torcdb_spark.analytics import connected_components
 
     base = vectors.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-
-    def bucket_mean(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = np.asarray(pdf["_v"].tolist(), dtype=np.float64).mean(axis=0)
-        return pd.DataFrame({"_c": [int(pdf["_c"].iloc[0])], "_mean": [m.tolist()]})
-
-    def pack(assigned: DataFrame) -> DataFrame:
-        return (
-            assigned.groupBy("_c")
-            .applyInPandas(bucket_mean, "_c long, _mean array<double>")
-            .groupBy()
-            .agg(F.collect_list(F.struct("_c", "_mean")).alias("_cents"))
-        )
-
-    def nearest(df: DataFrame, cents: DataFrame) -> DataFrame:
-        packed = df.crossJoin(F.broadcast(cents))
-
-        def assign(batches):
-            for pdf in batches:
-                cen = pdf["_cents"].iloc[0]
-                cids = np.array([c["_c"] for c in cen], dtype=np.int64)
-                cm = np.asarray([c["_mean"] for c in cen], dtype=np.float64)
-                cm = cm / np.maximum(
-                    np.linalg.norm(cm, axis=1, keepdims=True), 1e-12
-                )
-                mat = np.asarray(pdf["_v"].tolist(), dtype=np.float64)
-                mat = mat / np.maximum(
-                    np.linalg.norm(mat, axis=1, keepdims=True), 1e-12
-                )
-                best = cids[np.argmax(mat @ cm.T, axis=1)]
-                yield pd.DataFrame(
-                    {"_id": pdf["_id"], "_v": pdf["_v"], "_c": best}
-                )
-
-        return packed.mapInPandas(assign, "_id long, _v array<float>, _c long")
-
-    seeded = base.withColumn(
-        "_c", F.pmod(F.xxhash64(F.col("_id")), F.lit(num_cells))
-    )
-    cents = pack(seeded)
-    assigned = seeded
-    for _ in range(kmeans_iters):
-        assigned = nearest(base, cents)
-        cents = pack(assigned)
-    assigned = nearest(base, cents)
-
+    assigned = _nearest_cells(base, _cosine_cells(base, num_cells, kmeans_iters))
     cells = assigned.groupBy("_c").agg(
         F.collect_list(F.struct("_id", "_v")).alias("_rows")
     )
 
     def cell_pairs(batches):
         for pdf in batches:
-            out_a, out_b = [], []
-            for rows in pdf["_rows"]:
-                if len(rows) < 2:
-                    continue
-                ids = np.array([r["_id"] for r in rows], dtype=np.int64)
-                mat = np.asarray([r["_v"] for r in rows], dtype=np.float64)
-                n = np.linalg.norm(mat, axis=1)
-                denom = np.outer(n, n)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    scores = np.where(denom > 0, (mat @ mat.T) / denom, 0.0)
-                hit = (np.round(scores, score_decimals) >= threshold) & (
-                    ids[:, None] < ids[None, :]
-                )
-                ii, jj = np.nonzero(hit)
-                out_a.append(ids[ii])
-                out_b.append(ids[jj])
-            yield pd.DataFrame(
-                {
-                    "id_a": np.concatenate(out_a) if out_a else [],
-                    "id_b": np.concatenate(out_b) if out_b else [],
-                }
+            yield _block_pairs(
+                ((rows, rows, True) for rows in pdf["_rows"]),
+                threshold, score_decimals,
             )
 
-    pairs = cells.mapInPandas(cell_pairs, "id_a long, id_b long")
+    pairs = cells.mapInPandas(cell_pairs, "id_a long, id_b long, score double")
     # label-flood CC: dedup pair graphs at threshold ~0.95 are near-
     # cliques (diameter 2-3), where the flood converges in a handful of
     # low-cost rounds and beats star contraction's heavier per-round work
@@ -813,34 +767,9 @@ def hard_negative_mining(
     inequality rides the join filter, so mismatched pairs are dropped
     before scoring. Swap the scan for the LSH/IVF candidate generators
     when anchors × corpus outgrows brute force."""
-    a = anchors.select(
-        F.col(id_col).alias("anchor_id"),
-        F.col(vec_col).alias("_av"),
-        F.col(label_col).alias("_al"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        F.col(label_col).alias("_cl"),
-    )
-    scored = (
-        F.broadcast(a)
-        .crossJoin(c)
-        .where(
-            (F.col("anchor_id") != F.col("neighbor_id"))
-            & (F.col("_al") != F.col("_cl"))
-        )
-        .select(
-            "anchor_id",
-            "neighbor_id",
-            F.round(
-                cosine_similarity(F.col("_av"), F.col("_cv")), score_decimals
-            ).alias("score"),
-        )
-    )
-    return topk_per_group(
-        scored, ["anchor_id"], [F.desc("score"), F.asc("neighbor_id")], k
-    ).select("anchor_id", "neighbor_id", "score", "rnk")
+    pairs = _scan(anchors, corpus, id_col, vec_col, "anchor_id", (label_col,))
+    mismatched = pairs.where(F.col(f"_q{label_col}") != F.col(f"_c{label_col}"))
+    return _rank(_score(mismatched, score_decimals, qid="anchor_id"), k, "anchor_id")
 
 
 def mmr_rerank(
@@ -880,24 +809,9 @@ def mmr_rerank(
     def _r6(c: Column) -> Column:
         return F.floor(c * 1_000_000 + F.lit(0.5)) / F.lit(1_000_000.0)
 
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
-    )
-    c0 = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
-    )
-    cand = topk_per_group(
-        F.broadcast(q)
-        .crossJoin(c0)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            _r6(
-                cosine_similarity(F.col("_qv"), F.col("_cv"))
-            ).alias("score"),
-        ),
-        ["query_id"], [F.desc("score"), F.asc("neighbor_id")], pool,
+    rel = _r6(cosine_similarity(F.col("_qv"), F.col("_cv")))
+    cand = _rank(
+        _score(_scan(queries, corpus, id_col, vec_col), score=rel), pool
     ).localCheckpoint(eager=True)  # consumed by sims + every round
 
     vecs = corpus.select(
@@ -955,10 +869,7 @@ def mmr_rerank(
             ).alias("_mmr"),
         )
         pick = (
-            topk_per_group(
-                scored, ["query_id"], [F.desc("_mmr"), F.asc("neighbor_id")],
-                1, "_rk",
-            )
+            _rank(scored, 1, score="_mmr", rnk="_rk")
             .select(
                 "query_id",
                 "neighbor_id",
@@ -1070,8 +981,6 @@ def embedding_moments(
 
     i, j are 1-based dimension indices (full matrix, not just the upper
     triangle, so downstream consumers index without reflection)."""
-    import numpy as np
-
     if dim is None:
         first = emb.select(F.size(vec_col).alias("d")).limit(1).collect()
         if not first:
@@ -1138,8 +1047,6 @@ def embedding_pca(
     each component's largest-|loading| coordinate is made positive, so
     two runs (or two engines) agree exactly. ``whiten`` divides each
     component by sqrt(eigenvalue) (the ANN-preprocessing form)."""
-    import numpy as np
-
     vc = vec_col
     moments = embedding_moments(emb, vc).collect()
     d = max(r["i"] for r in moments)
@@ -1214,11 +1121,7 @@ def kmeans_lloyd_quantized(
     (cell, dim)-keyed aggregate for the update. State between rounds is
     k·d integers on the driver-free broadcast path."""
     q = vectors.select(
-        F.col(id_col).alias("id"),
-        F.transform(
-            F.col(vec_col).cast("array<double>"),
-            lambda x: F.floor(x * scale).cast("long"),
-        ).alias("v"),
+        F.col(id_col).alias("id"), _quantize(F.col(vec_col), scale).alias("v")
     ).localCheckpoint(eager=False)
 
     w_seed = Window.orderBy("id")
@@ -1238,13 +1141,7 @@ def kmeans_lloyd_quantized(
         .select("cid", F.col("v").alias("cv"))
     ).localCheckpoint(eager=False)
 
-    d2_expr = F.aggregate(
-        F.zip_with(
-            F.col("v"), F.col("cv"), lambda a, b: (a - b) * (a - b)
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    d2_expr = _d2(F.col("v"), F.col("cv"))
 
     def assign(cent_df: DataFrame) -> DataFrame:
         # argmin via min(struct(d2, cid, v)): struct ordering compares
@@ -1334,48 +1231,24 @@ def ivf_topk_exact_cells(
     )
     qq = queries.select(
         F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qraw"),
-        F.transform(
-            F.col(vec_col).cast("array<double>"),
-            lambda x: F.floor(x * scale).cast("long"),
-        ).alias("_qv"),
+        F.col(vec_col).alias("_qv"),
+        _quantize(F.col(vec_col), scale).alias("_g"),
     )
-    qd2 = F.aggregate(
-        F.zip_with(
-            F.col("_qv"), F.col("cv"), lambda a, b: (a - b) * (a - b)
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    pd2 = _d2(F.col("_g"), F.col("cv")).alias("_pd2")
     probes = topk_per_group(
-        qq.crossJoin(F.broadcast(cents)).withColumn("_pd2", qd2),
+        qq.crossJoin(F.broadcast(cents)).select("*", pd2),
         ["query_id"], [F.asc("_pd2"), F.asc("cid")], nprobe, "_prk",
-    ).select("query_id", "_qraw", "cid")
+    ).select("query_id", "_qv", "cid")
     members = assign_df.select(
         F.col("id").alias("neighbor_id"), "cid"
     ).join(
         corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_craw"),
+            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
         ),
         "neighbor_id",
     )
-    cand = probes.join(members, "cid").where(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            cosine_similarity(F.col("_qraw"), F.col("_craw")), 3
-        ).alias("score"),
-    )
-    return topk_per_group(
-        scored.dropDuplicates(["query_id", "neighbor_id"]),
-        ["query_id"], [F.desc("score"), F.asc("neighbor_id")], k,
-    ).select(
-        "query_id", "neighbor_id", "score", F.col("rnk").cast("long").alias("rnk")
-    )
+    top = _rank(_score(probes.join(members, "cid"), dedup=True), k)
+    return top.withColumn("rnk", F.col("rnk").cast("long"))
 
 
 def _rademacher_plane(table: int, bit: int, dim: int) -> list[int]:
@@ -1419,68 +1292,42 @@ def lsh_rademacher_topk(
         for b in range(num_bits)
     }
 
-    def bucketize(df: DataFrame, role: str) -> DataFrame:
-        q = df.select(
-            F.col(id_col).alias(f"{role}_id"),
-            F.col(vec_col).alias(f"_{role}v"),
-            F.transform(
-                F.col(vec_col).cast("array<double>"),
-                lambda x: F.floor(x * scale).cast("long"),
-            ).alias("_qv"),
-        )
-        # One SQL string per table instead of per-element F.lit columns:
-        # the literal planes are 32×64 values, and building them as
-        # Column objects costs ~2k py4j round-trips — measured 12.5 s of
-        # DRIVER time before a single task ran (the whole query executes
-        # in <4 s). A parsed expression is one call per table and the
-        # IDENTICAL plan: same bigint literals, same left-fold aggregate,
-        # same >=0 tie rule.
-        def _bit_sql(t: int, b: int) -> str:
-            arr = ",".join(f"{s}L" for s in planes[(t, b)])
-            return (
-                f"(CASE WHEN aggregate(zip_with(_qv, array({arr}), "
-                f"(v, s) -> v * s), 0L, (a, x) -> a + x) >= 0 "
-                f"THEN {1 << b}L ELSE 0L END)"
-            )
-
-        buckets = []
-        for t in range(num_tables):
-            acc = F.expr(
-                " + ".join(_bit_sql(t, b) for b in range(num_bits))
-            )
-            buckets.append(
-                F.struct(F.lit(t).alias("table"), acc.alias("bucket"))
-            )
-        return q.select(
-            f"{role}_id",
-            f"_{role}v",
-            F.explode(F.array(*buckets)).alias("_tb"),
-        ).select(
-            f"{role}_id", f"_{role}v",
-            F.col("_tb.table").alias("table"),
-            F.col("_tb.bucket").alias("bucket"),
+    # One SQL string per table instead of per-element F.lit columns: the
+    # literal planes are 32×64 values, and building them as Column
+    # objects costs ~2k py4j round-trips — measured 12.5 s of DRIVER time
+    # before a single task ran (the whole query executes in <4 s). A
+    # parsed expression is one call per table and the IDENTICAL plan:
+    # same bigint literals, same left-fold aggregate, same >=0 tie rule.
+    def _bit_sql(t: int, b: int) -> str:
+        arr = ",".join(f"{s}L" for s in planes[(t, b)])
+        return (
+            f"(CASE WHEN aggregate(zip_with(_g, array({arr}), "
+            f"(v, s) -> v * s), 0L, (a, x) -> a + x) >= 0 "
+            f"THEN {1 << b}L ELSE 0L END)"
         )
 
-    cq = bucketize(queries, "query")
-    cc = bucketize(corpus, "neighbor")
-    cand = (
-        cq.join(cc, ["table", "bucket"])
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                cosine_similarity(F.col("_queryv"), F.col("_neighborv")),
-                3,
-            ).alias("score"),
+    buckets = F.array(*(
+        F.struct(
+            F.lit(t).alias("table"),
+            F.expr(" + ".join(_bit_sql(t, b) for b in range(num_bits))).alias("bucket"),
         )
-        .dropDuplicates(["query_id", "neighbor_id"])
+        for t in range(num_tables)
+    ))
+
+    def bucketize(df: DataFrame, key: str, v: str) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias(key),
+            F.col(vec_col).alias(v),
+            _quantize(F.col(vec_col), scale).alias("_g"),
+        ).select(key, v, F.explode(buckets).alias("_tb")).select(
+            key, v, "_tb.table", "_tb.bucket"
+        )
+
+    cand = bucketize(queries, "query_id", "_qv").join(
+        bucketize(corpus, "neighbor_id", "_cv"), ["table", "bucket"]
     )
-    return topk_per_group(
-        cand, ["query_id"], [F.desc("score"), F.asc("neighbor_id")], k
-    ).select(
-        "query_id", "neighbor_id", "score", F.col("rnk").cast("long").alias("rnk")
-    )
+    top = _rank(_score(cand, dedup=True), k)
+    return top.withColumn("rnk", F.col("rnk").cast("long"))
 
 
 def pq_adc_exact(
@@ -1520,6 +1367,10 @@ def pq_adc_exact(
     # instead of re-deriving the training lineage). Arithmetic and
     # results are per-subspace identical; only job overlap changes.
     from concurrent.futures import ThreadPoolExecutor
+    from functools import reduce
+
+    def _union(a: DataFrame, b: DataFrame) -> DataFrame:
+        return a.unionByName(b)
 
     def _train(s: int):
         sub = corpus.select(
@@ -1537,55 +1388,31 @@ def pq_adc_exact(
 
     with ThreadPoolExecutor(max_workers=m) as pool:
         trained = list(pool.map(_train, range(m)))
-    code_frames = []
-    cent_frames = []
-    for s, (assign_df, cents) in enumerate(trained):
-        code_frames.append(
-            assign_df.select(
-                F.col("id").alias("nid"),
-                F.lit(s).alias("s"),
-                F.col("cid").alias("code"),
-            )
+    codes = reduce(_union, (
+        assign_df.select(
+            F.col("id").alias("nid"), F.lit(s).alias("s"), F.col("cid").alias("code")
         )
-        cent_frames.append(
-            cents.select(
-                F.lit(s).alias("s"), "cid", "cv"
-            )
-        )
-    codes = code_frames[0]
-    for f in code_frames[1:]:
-        codes = codes.unionByName(f)
-    cents = cent_frames[0]
-    for f in cent_frames[1:]:
-        cents = cents.unionByName(f)
+        for s, (assign_df, _) in enumerate(trained)
+    ))
+    cents = reduce(_union, (
+        c.select(F.lit(s).alias("s"), "cid", "cv") for s, (_, c) in enumerate(trained)
+    ))
 
     qsubs = queries.select(
         F.col(id_col).alias("query_id"),
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(s).alias("s"),
-                    F.transform(
-                        F.slice(
-                            F.col(vec_col).cast("array<double>"),
-                            s * sub_dim + 1, sub_dim,
-                        ),
-                        lambda x: F.floor(x * scale).cast("long"),
-                    ).alias("qv"),
-                )
-                for s in range(m)
-            ])
-        ).alias("_sq"),
+        F.explode(F.array(*(
+            F.struct(
+                F.lit(s).alias("s"),
+                _quantize(
+                    F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim), scale
+                ).alias("qv"),
+            )
+            for s in range(m)
+        ))).alias("_sq"),
     ).select("query_id", F.col("_sq.s").alias("s"), F.col("_sq.qv").alias("qv"))
     lut = qsubs.join(F.broadcast(cents), "s").select(
         "query_id", "s", F.col("cid").alias("code"),
-        F.aggregate(
-            F.zip_with(
-                F.col("qv"), F.col("cv"), lambda a, b: (a - b) * (a - b)
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).alias("d2"),
+        _d2(F.col("qv"), F.col("cv")).alias("d2"),
     )
     est = (
         codes.join(F.broadcast(lut), ["s", "code"])

@@ -9056,50 +9056,19 @@ def km1_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     lowest-id vectors seed the codebook (broadcast as a tiny dimension
     table), and every vector takes its argmin squared-L2 cell with
     (distance, cell) tie-breaks — ALL integer arithmetic, so the
-    assignment (the inner loop of e4's IVF and e7's PQ training, there
-    checked by properties only) is value-verified cell by cell. One
-    broadcast nested-loop scan + one per-vector argmin + one cell-keyed
-    aggregate: the canonical distributed k-means round shape at any
-    scale."""
-    from pyspark.sql.window import Window as W
+    assignment is value-verified cell by cell. It is round zero of
+    kmeans_lloyd_quantized (iters=0), the trainer km2, e13, e15 and e16
+    share: one broadcast nested-loop scan + one per-vector argmin + one
+    cell-keyed aggregate, the canonical distributed k-means round shape
+    at any scale."""
+    from torcdb_spark.operators.similarity import kmeans_lloyd_quantized
 
     emb = load_table(spark, sf_dir, "embeddings")
-    qv = emb.select(
-        "vec_id",
-        F.transform(
-            F.col("embedding"),
-            lambda x: F.floor(x.cast("double") * 1000).cast("long"),
-        ).alias("v"),
-    )
-    seeds = (
-        qv.orderBy("vec_id")
-        .limit(8)
-        .select(
-            (
-                F.row_number().over(W.orderBy("vec_id")) - 1
-            ).alias("cid"),
-            F.col("v").alias("cv"),
-        )
-    )
-    dists = qv.crossJoin(F.broadcast(seeds)).select(
-        "vec_id",
-        "cid",
-        F.aggregate(
-            F.zip_with(
-                F.col("v"), F.col("cv"), lambda a, b: (a - b) * (a - b)
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).alias("d2"),
-    )
-    wv = W.partitionBy("vec_id").orderBy(F.asc("d2"), F.asc("cid"))
-    assign = dists.withColumn("rk", F.row_number().over(wv)).where(
-        F.col("rk") == 1
-    )
-    return assign.groupBy(F.col("cid").alias("cluster")).agg(
+    out = kmeans_lloyd_quantized(emb, k=8, iters=0)
+    return out.groupBy(F.col("cid").alias("cluster")).agg(
         F.count("*").cast("long").alias("n_members"),
         F.sum("d2").cast("long").alias("ssd"),
-        F.sum("vec_id").cast("long").alias("member_id_sum"),
+        F.sum("id").cast("long").alias("member_id_sum"),
     )
 
 
